@@ -25,8 +25,8 @@ from check import canon  # same normalization as the driver-mimic gate
 def run_gate(corpus_dir, out_dir, rnd, artifact_prefix="CORRECTNESS_null",
              corpus_desc=None, src=None):
     """Shared degenerate-corpus gate core (r14: unicode_gate.py reuses it
-    so the two gates' compare protocol cannot drift — the MinhashAB/
-    NgramAB lesson applied here preemptively). Returns the fail count."""
+    so the two gates' compare protocol cannot drift). Returns the fail
+    count."""
     con = duckdb.connect()
     for t in ["region", "nation", "customer", "supplier", "part", "orders",
               "lineitem", "events", "documents", "embeddings"]:

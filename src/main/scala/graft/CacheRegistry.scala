@@ -46,6 +46,11 @@ object CacheRegistry {
     * expensive to compute and (b) read by more than one exchange of the
     * same query. count() touches every partition and a persist boundary
     * materializes all cached columns regardless of the count's pruning.
+    *
+    * Cost: pinning runs one Spark job (the count()) while the plan is
+    * being BUILT, not when it is executed — a caller that only builds a
+    * plan containing a pinned frame (to explain it, say) still pays for
+    * computing that frame.
     */
   def pin(df: DataFrame): DataFrame = {
     val cached = track(df)

@@ -116,9 +116,9 @@ object ScaleSmoke {
 
   /** Amplify the sf0.1 tables N× into /tmp/graft_scale_{tag} (idempotent
     * via the _AMPLIFIED_v2 marker) and return the corpus dir. Extracted
-    * from main so harnesses that only need the corpus (SubstringAB,
-    * GenCorpus) can build it without running — and without re-recording
-    * entries into — a sweep artifact, which must stay single-era.
+    * from main so harnesses that only need the corpus (GenCorpus) can
+    * build it without running — and without re-recording entries
+    * into — a sweep artifact, which must stay single-era.
     */
   def ensureCorpus(spark: SparkSession, src: String, n: Int,
       skew: Boolean): String =

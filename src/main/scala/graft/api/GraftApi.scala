@@ -182,13 +182,12 @@ object GraftApi {
     // prevent. Cross-checked against the plan's own size when the frame
     // is driver-resident (free — no job runs), so a misuse that CAN be
     // caught fails fast instead of broadcasting.
-    knownRowBound.foreach { b =>
-      localRowCount(df).foreach { n =>
-        require(n <= b, s"adaptiveBroadcast: knownRowBound=$b understates " +
-          s"the frame's actual row count $n — the bound must be a proven " +
-          "upper bound, not an estimate")
-      }
+    def checkBound(n: Long): Unit = knownRowBound.foreach { b =>
+      require(n <= b, s"adaptiveBroadcast: knownRowBound=$b understates " +
+        s"the frame's actual row count $n — the bound must be a proven " +
+        "upper bound, not an estimate")
     }
+    localRowCount(df).foreach(checkBound)
     // a bound ABOVE the limit proves nothing (it is only a bound), so
     // fall through to the measured path
     if (knownRowBound.exists(_ <= limit)) return broadcast(df)
@@ -203,7 +202,11 @@ object GraftApi {
       case Some(n) => if (n <= limit) broadcast(df) else df
       case None =>
         val cached = graft.CacheRegistry.track(df)
-        if (cached.count() <= limit) broadcast(cached) else cached
+        // the count is paid for here anyway: hold a bound above the
+        // limit to the same contract as a driver-local frame
+        val n = cached.count()
+        checkBound(n)
+        if (n <= limit) broadcast(cached) else cached
     }
   }
 

@@ -41,8 +41,7 @@ object Dedup {
   // array_sort the arrays used to carry was a full ~per-text-word
   // string sort per document for nothing any consumer read; the r13
   // minhash A/B (minhash_ab_r13.jsonl) adjudicated its removal
-  // hash-identically. withShinglesSorted preserves the r12 form for
-  // that A/B harness.
+  // hash-identically.
   private[graft] def withShingles(df: DataFrame): DataFrame =
     // barrier on words: the ≥5-word gate otherwise pushdown-clones the
     // split into its own condition and the scan tokenizes every text
@@ -61,10 +60,6 @@ object Dedup {
         "transform(sequence(1, greatest(size(words)-4, 1))," +
           " i -> concat_ws(' ', try_element_at(words,i), try_element_at(words,i+1)," +
           " try_element_at(words,i+2), try_element_at(words,i+3), try_element_at(words,i+4)))")))
-
-  /** The r12 sorted form — A/B reference only (see the builder note). */
-  private[graft] def withShinglesSorted(df: DataFrame): DataFrame =
-    withShingles(df).withColumn("shingles", array_sort(col("shingles")))
 
   /** The per-doc DISTINCT gram posting stream (doc_id, g) for candidate
     * generation — slice/join built (see the builder note above) and
@@ -105,17 +100,10 @@ object Dedup {
     * sweep surfaced appear in ALL THREE forms INCLUDING the
     * byte-identical legacy plan that recorded 0 in the first-half
     * era — environmental, pinned in BASELINE.md, not plan-attributed.)
-    * The union+distinct legacy form is kept as the A/B reference
-    * (`lean = false`, the r12 incremental form).
     */
-  private[graft] def semiProbeIds(candHinted: DataFrame,
-      lean: Boolean = true): DataFrame =
-    if (lean)
-      candHinted.select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
-        .distinct()
-    else
-      candHinted.select(col("doc_a").as("doc_id"))
-        .union(candHinted.select(col("doc_b").as("doc_id"))).distinct()
+  private[graft] def semiProbeIds(candHinted: DataFrame): DataFrame =
+    candHinted.select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
+      .distinct()
 
   /** Same shingle construction in DuckDB SQL (1-based lists), over a
     * caller-chosen docs source — a table name or a parenthesized
@@ -230,30 +218,6 @@ object Dedup {
   private[graft] val ngramCoin: Column => Column =
     g => graft.functions.HashCoins.md5_nibble0(g) % 4 === 0
 
-  /** Hex-string form of the same coin — kept for the A/B harness. */
-  private[graft] val ngramCoinHex: Column => Column =
-    g => org.apache.spark.sql.functions
-      .substring(md5(g), 1, 1).isin("0", "4", "8", "c")
-
-  /** Coin-sampling A/B forms for [[graft.NgramAB]] — identical plans,
-    * differing only in the sampling predicate (or its absence).
-    * md5_expr and md5_hex are hash-identical by construction; unsampled
-    * changes candidate recall and is a cost reference only.
-    */
-  private[graft] val ngramForms
-      : Seq[(String, (SparkSession, DataFrame) => DataFrame)] = Seq(
-    "ngram_md5_hex" -> ((_: SparkSession, d: DataFrame) =>
-      ngramJaccardPlan(Some(ngramCoinHex))(d)),
-    "ngram_md5_expr" -> ((_: SparkSession, d: DataFrame) =>
-      ngramJaccardPlan(Some(ngramCoin))(d)),
-    "ngram_unsampled" -> ((_: SparkSession, d: DataFrame) =>
-      ngramJaccardPlan(None)(d)),
-    "ngram_fused" -> ((_: SparkSession, d: DataFrame) =>
-      ngramJaccardPlanFrom(fusedGramStream(4))(d)),
-    "ngram_fused_unsampled" -> ((_: SparkSession, d: DataFrame) =>
-      ngramJaccardPlanFrom(fusedGramStream(1))(d)),
-  )
-
   /** The fused sampled posting stream (doc_id, g) where g is the gram's
     * DIGEST hex, not the gram string ([[graft.functions.ShingleMd5Grams]]
     * — one byte-slice scan, the sampling coin inside the kernel, no
@@ -268,10 +232,9 @@ object Dedup {
       explode(graft.functions.ShingleSketch
         .shingle_md5_grams(col("text"), 5, mod)).as("g"))
 
-  /** The dedup_ngram_jaccard plan with a pluggable gram-sampling coin —
-    * the legacy composed posting stream, kept for the A/B harness forms
-    * (the registered op runs the fused stream via
-    * [[ngramJaccardPlanFrom]]).
+  /** The dedup_ngram_jaccard plan with a pluggable gram-sampling coin
+    * over the composed posting stream — the reference ShingleSketchSpec
+    * pins the registered fused stream ([[ngramJaccardPlanFrom]]) against.
     */
   private[graft] def ngramJaccardPlan(coin: Option[Column => Column])(
       docs: DataFrame): DataFrame =
@@ -397,8 +360,13 @@ object Dedup {
     * `jaccardMin`.
     */
   def minhashPairs(docs: DataFrame, jaccardMin: Double): DataFrame =
-    minhashPairsPlanFused(fusedSketchFrameGated, withShingles,
-      cacheSk = true)(docs, jaccardMin)
+    // The corpus-wide sketch (doc_id, 8 md5s) is tracked: the r17
+    // cache-vs-fused A/B (minhash_ab_r17.jsonl) read the uncached form
+    // — kernel fused straight into the bucket aggregation's map stage —
+    // ~0.2 s worse wall and ~0.25 s better cpu at sf0.1, hash-identical,
+    // so the cache stayed.
+    minhashPairsPlanFused(d => graft.CacheRegistry.track(fusedSketchFrameGated(d)),
+      withShingles)(docs, jaccardMin)
 
   /** The corpus-wide (doc_id, sketch) pass as ONE fused kernel
     * ([[graft.functions.ShingleMd5BottomK]]): no words array, no
@@ -446,43 +414,8 @@ object Dedup {
   private[graft] val sketchCol: Column =
     graft.functions.HashCoins.md5_bottom_k(col("shingles"), 8)
 
-  /** Sketch/builder variants for [[graft.MinhashAB]] — identical plans
-    * differing only in the shingle builder (sorted vs not) and the
-    * sketch expression (sort-all-slice vs bounded bottom-k). All forms
-    * are hash-identical by construction.
-    */
-  private[graft] val minhashForms
-      : Seq[(String, (SparkSession, DataFrame) => DataFrame)] = {
-    val sliceSketch: Column =
-      expr("slice(array_sort(transform(shingles, s -> md5(s))), 1, 8)")
-    Seq(
-      "mh_r12" -> ((_: SparkSession, d: DataFrame) =>
-        minhashPairsPlan(withShinglesSorted, sliceSketch)(d, 0.2)),
-      "mh_nosort_slice" -> ((_: SparkSession, d: DataFrame) =>
-        minhashPairsPlan(withShingles, sliceSketch)(d, 0.2)),
-      "mh_bottomk" -> ((_: SparkSession, d: DataFrame) =>
-        minhashPairsPlan(withShingles, sketchCol)(d, 0.2)),
-      // uncached sketch pass (kernel fused into the bucket map stage) —
-      // the r17 cache-vs-fused A/B reference: the 3-round interleaved AB
-      // (minhash_ab_r17.jsonl) read it ~0.2 s WORSE wall / ~0.25 s
-      // better cpu than the cached registered form at sf0.1,
-      // hash-identical, which is why the registered tail kept the cache
-      "mh_fused" -> ((_: SparkSession, d: DataFrame) =>
-        minhashPairsPlanFused(fusedSketchFrame, withShingles)(d, 0.2)),
-      // the REGISTERED r17 tail: gated sketch persisted, kernel
-      // single-eval via the optimizer barrier (r16's plan was this with
-      // the kernel cloned 2× into the gate)
-      "mh_r16cached" -> ((_: SparkSession, d: DataFrame) =>
-        minhashPairsPlanFused(fusedSketchFrameGated,
-          withShingles, cacheSk = true)(d, 0.2)),
-      // the r13/r14 registered tail: union+distinct probe ids — the
-      // lean-candIds A/B reference (see semiProbeIds)
-      "mh_unioncand" -> ((_: SparkSession, d: DataFrame) =>
-        minhashPairsPlanFused(fusedSketchFrame, withShingles,
-          leanCandIds = false)(d, 0.2)),
-    )
-  }
-
+  /** The composed-pass reference (shingle builder → `sketch` column)
+    * ShingleSketchSpec pins [[minhashPairs]] against. */
   private[graft] def minhashPairsPlan(shingleBuilder: DataFrame => DataFrame,
       sketch: Column)(docs: DataFrame, jaccardMin: Double): DataFrame =
     minhashPairsPlanFused(
@@ -493,31 +426,22 @@ object Dedup {
   /** The pairs plan over an arbitrary corpus-wide sketch pass
     * (`sketchFrame`: docs → (doc_id, sketch)) and a shingle builder
     * for the verify sliver. The registered op uses the fused kernel
-    * for the former; the A/B forms reproduce the composed passes.
+    * for the former, tracked; [[minhashPairsPlan]] reproduces the
+    * composed passes as the spec reference. The sketch frame is the
+    * bucket explode's only consumer, so whether it is cached is the
+    * caller's choice ([[composedRecallFrom]] passes one derived from
+    * an already-cached frame).
     */
   private[graft] def minhashPairsPlanFused(
       sketchFrame: DataFrame => DataFrame,
-      shingleBuilder: DataFrame => DataFrame,
-      leanCandIds: Boolean = true,
-      cacheSk: Boolean = false)(
+      shingleBuilder: DataFrame => DataFrame)(
       docs: DataFrame, jaccardMin: Double): DataFrame = {
-    // No corpus-wide cache at all (r17). History: the r12 form persisted
-    // the sketch sliver (doc_id, 8 md5s) because the verify joins read it
-    // a second time — and NEVER the shingle arrays (with shingles cached,
-    // the 24g uniform-1000x sweep read this op BIMODALLY — 740 vs 1954
-    // cpu-s across code-identical runs, borderline LRU eviction
-    // serializing wide array blocks mid-query). Since r13 the verify
-    // recomputes shingles over the candidate sliver, which left the
-    // bucket explode as the sketch's ONLY consumer: persisting a
-    // single-consumer frame buys nothing and costs an extra AQE
-    // materialization job plus a row copy into storage memory, so the
-    // sketch kernel now fuses straight into the bucket aggregation's map
-    // stage (plan: one WholeStageCodegen span from scan to partial agg).
-    // `cacheSk = true` is the r16 A/B reference form, kept so the swap
-    // stays re-adjudicable under the WarmSoloAB interleaved protocol.
-    val sk =
-      if (cacheSk) graft.CacheRegistry.track(sketchFrame(docs))
-      else sketchFrame(docs)
+    // The SHINGLE arrays are never cached corpus-wide: with them
+    // cached, the 24g uniform-1000x sweep read this op BIMODALLY — 740
+    // vs 1954 cpu-s across code-identical runs, borderline LRU eviction
+    // serializing wide array blocks mid-query. Since r13 the verify
+    // recomputes shingles over the candidate sliver instead.
+    val sk = sketchFrame(docs)
     // Candidates via one-shuffle posting lists (see ngramJaccard): group
     // doc ids per sketch hash, expand pairs in-group. Bucket sizes here
     // are near-dup cluster sizes (max 4 at sf0.1); a corpus with
@@ -550,8 +474,7 @@ object Dedup {
     // corpus sliver (pair-bounded, so the rebuild is O(candidate docs))
     // instead of caching corpus-wide arrays to serve a sliver of lookups
     val sliver = graft.CacheRegistry.track(
-      shingleBuilder(docs.join(semiProbeIds(candHinted, leanCandIds),
-          Seq("doc_id"), "left_semi"))
+      shingleBuilder(docs.join(semiProbeIds(candHinted), Seq("doc_id"), "left_semi"))
         .select("doc_id", "shingles"))
     candHinted
       .join(sliver.alias("sa"), col("sa.doc_id") === col("doc_a"))
@@ -834,36 +757,6 @@ object Dedup {
     * bucketed layout with no exchange (see BucketingSpec).
     */
   def incrementalPairs(corpusSk: DataFrame, deltaSk: DataFrame,
-      jaccardMin: Double): DataFrame =
-    incrementalPairsPlan(r12Form = false)(corpusSk, deltaSk, jaccardMin)
-
-  /** Plan variants for the r13 verify-sliver A/B (minhash_ab_r13.jsonl
-    * carries the adjudication): `r12Form = true` reproduces the r12
-    * shape — untracked corpus postings, un-hinted candidate side, and
-    * a verify that shuffles the FULL corpus∪delta shingle arrays
-    * through dropDuplicates; false is the registered r13 shape
-    * (tracked postings, adaptiveBroadcast cand, candidate-pruned
-    * verify sliver). Hash-identical by construction.
-    */
-  /** A/B forms over the registered shard split. Both arms sketch the
-    * corpus inline (identical cost on both sides — the A/B delta then
-    * isolates the PAIRS plan: posting cache, cand hint, verify
-    * sliver). Consumed by [[graft.MinhashAB]]'s shared form lookup.
-    */
-  private[graft] val incrementalForms
-      : Seq[(String, (SparkSession, DataFrame) => DataFrame)] = Seq(
-    "inc_r12" -> ((_: SparkSession, d: DataFrame) =>
-      incrementalPairsPlan(r12Form = true)(
-        sketchTable(d.filter(col("doc_id") % 10 =!= 0)),
-        sketchTable(d.filter(col("doc_id") % 10 === 0)), 0.2)),
-    "inc_sliver" -> ((_: SparkSession, d: DataFrame) =>
-      incrementalPairsPlan(r12Form = false)(
-        sketchTable(d.filter(col("doc_id") % 10 =!= 0)),
-        sketchTable(d.filter(col("doc_id") % 10 === 0)), 0.2)),
-  )
-
-  private[graft] def incrementalPairsPlan(r12Form: Boolean)(
-      corpusSk: DataFrame, deltaSk: DataFrame,
       jaccardMin: Double): DataFrame = {
     val dSk = graft.CacheRegistry.track(deltaSk)
     // tracked: two consumers (the union count and the cross-candidate
@@ -871,9 +764,8 @@ object Dedup {
     // postings are two narrow columns, the cache the warehouse analog
     // of the persisted (doc_id, h) posting table the scale note below
     // describes
-    val corpusBuckets0 = corpusSk.select(col("doc_id"), explode(col("sketch")).as("h"))
-    val corpusBuckets =
-      if (r12Form) corpusBuckets0 else graft.CacheRegistry.track(corpusBuckets0)
+    val corpusBuckets = graft.CacheRegistry.track(
+      corpusSk.select(col("doc_id"), explode(col("sketch")).as("h")))
     val deltaBuckets = graft.CacheRegistry.track(
       dSk.select(col("doc_id"), explode(col("sketch")).as("h")))
     // The bucket cap counts the DISTINCT doc_ids of the corpus+delta
@@ -892,22 +784,22 @@ object Dedup {
       .groupBy("h").agg(countDistinct(col("doc_id")).as("n"))
       .filter(col("n").between(2, 64)).select("h")
     val deltaKept = deltaBuckets.join(kept, "h")
-    incrementalVerifyTail(r12Form, corpusSk, dSk, Seq(corpusBuckets),
-      deltaKept, jaccardMin)
+    incrementalVerifyTail(corpusSk, dSk, Seq(corpusBuckets), deltaKept,
+      jaccardMin)
   }
 
   /** Shared candidate+verify tail of the incremental forms (cross and
     * in-delta candidates, bounded buckets, candidate-pruned verify) —
     * one copy so [[incrementalPairsFromIndex]], the upsert serve, and
-    * [[incrementalPairsPlan]] cannot drift on the scoring contract.
+    * [[incrementalPairs]] cannot drift on the scoring contract.
     * `corpusBucketFrames` arrive as SEPARATE frames (persisted
     * bucketed postings; a just-absorbed shard's fresh postings) so
     * each keeps its own join plan — unioning them first would strip
     * the persisted side's bucket partitioning and re-shuffle it.
     */
-  private def incrementalVerifyTail(r12Form: Boolean, corpusSk: DataFrame,
-      dSk: DataFrame, corpusBucketFrames: Seq[DataFrame],
-      deltaKept: DataFrame, jaccardMin: Double): DataFrame = {
+  private def incrementalVerifyTail(corpusSk: DataFrame, dSk: DataFrame,
+      corpusBucketFrames: Seq[DataFrame], deltaKept: DataFrame,
+      jaccardMin: Double): DataFrame = {
     // delta×corpus candidates: keyed equi-join on the sketch hash (a doc
     // in both frames must not pair with itself); one branch per corpus
     // frame, inner equi-join distributes over the union
@@ -930,25 +822,23 @@ object Dedup {
           " y -> struct(least(x, y) as doc_a, greatest(x, y) as doc_b))))")).as("p"))
       .select("p.doc_a", "p.doc_b")
     val cand = crossCand.union(deltaCand).distinct()
-    // candidate-pruned verify sliver (r13 — the minhashPairs pattern):
-    // the verify joins touch only docs named by candidate pairs, so the
-    // wide shingle columns semi-join down to that sliver BEFORE the
-    // dedup shuffle — the old form shuffled the FULL corpus's shingle
-    // arrays through dropDuplicates to serve a pair-bounded probe. The
-    // adaptiveBroadcast guard is the same curate/keep_best one: tiny
-    // cand broadcasts, a mega-dup crawl's cand runs un-hinted.
-    val candHinted =
-      if (r12Form) cand else graft.api.GraftApi.adaptiveBroadcast(cand)
-    val candIds = semiProbeIds(candHinted, lean = !r12Form)
+    // candidate-pruned verify sliver (r13, minhash_ab_r13.jsonl — the
+    // minhashPairs pattern): the verify joins touch only docs named by
+    // candidate pairs, so the wide shingle columns semi-join down to
+    // that sliver BEFORE the dedup shuffle — the old form shuffled the
+    // FULL corpus's shingle arrays through dropDuplicates to serve a
+    // pair-bounded probe. The adaptiveBroadcast guard is the same
+    // curate/keep_best one: tiny cand broadcasts, a mega-dup crawl's
+    // cand runs un-hinted.
+    val candHinted = graft.api.GraftApi.adaptiveBroadcast(cand)
+    val candIds = semiProbeIds(candHinted)
     // a doc_id in both frames is the SAME document (identical shingles
     // by id semantics) — keep one verify row so the join can't fan out
-    val allWide = corpusSk.select("doc_id", "shingles")
-      .union(dSk.select("doc_id", "shingles"))
-    val all =
-      if (r12Form) allWide.dropDuplicates("doc_id")
-      else graft.CacheRegistry.track(
-        allWide.join(candIds, Seq("doc_id"), "left_semi")
-          .dropDuplicates("doc_id"))
+    val all = graft.CacheRegistry.track(
+      corpusSk.select("doc_id", "shingles")
+        .union(dSk.select("doc_id", "shingles"))
+        .join(candIds, Seq("doc_id"), "left_semi")
+        .dropDuplicates("doc_id"))
     val interSz = size(array_intersect(col("sa.shingles"), col("sb.shingles")))
     val jac = interSz.cast("double") /
       (size(col("sa.shingles")) + size(col("sb.shingles")) - interSz)
@@ -968,7 +858,7 @@ object Dedup {
     *   - bucket cap: the delta's per-h distinct counts LEFT-join `hcnt`
     *     (n = dn + cn, cap 2..64) — only the delta side shuffles to the
     *     bucket layout; corpus-only hashes never produce delta pairs, so
-    *     delta-driven kept ≡ the union count of [[incrementalPairsPlan]];
+    *     delta-driven kept ≡ the union count of [[incrementalPairs]];
     *   - candidates: deltaKept joins `post` in its bucket partitioning —
     *     the corpus postings NEVER re-shuffle, the r13 sf0.1 finding
     *     (per-serve parquet decode + exchange of wide corpus state) gone;
@@ -976,6 +866,8 @@ object Dedup {
     * CONTRACT: frames must be doc_id-DISJOINT (an arriving shard is new
     * documents — the registered split is). Overlapping frames need the
     * general [[incrementalPairs]], whose union count dedups ids.
+    * Building the plan runs one Spark job: the delta sketch is pinned
+    * ([[graft.CacheRegistry.pin]]) before this returns.
     */
   def incrementalPairsFromIndex(corpusSk: DataFrame, corpusPost: DataFrame,
       corpusHcnt: DataFrame, deltaSk: DataFrame,
@@ -998,8 +890,8 @@ object Dedup {
       .filter((col("dn") + coalesce(col("cn"), lit(0L))).between(2, 64))
       .select("h")
     val deltaKept = deltaBuckets.join(kept, "h")
-    incrementalVerifyTail(r12Form = false, corpusSk, dSk,
-      Seq(corpusPost.hint("MERGE")), deltaKept, jaccardMin)
+    incrementalVerifyTail(corpusSk, dSk, Seq(corpusPost.hint("MERGE")),
+      deltaKept, jaccardMin)
   }
 
   /** Upsert-then-serve over the persisted sketch state (the
@@ -1022,6 +914,9 @@ object Dedup {
     * warehouse deployment compacts the absorbed shard back into the
     * bucket layout on its maintenance cadence; the serve path is what
     * this measures, per the upsert-accounting precedent.
+    * Building the plan runs two Spark jobs: the absorb and delta
+    * sketches are each pinned ([[graft.CacheRegistry.pin]]) before this
+    * returns.
     */
   def incrementalPairsUpsertServe(corpusSk: DataFrame,
       corpusPost: DataFrame, corpusHcnt: DataFrame, absorbSk0: DataFrame,
@@ -1044,7 +939,7 @@ object Dedup {
         coalesce(col("an"), lit(0L))).between(2, 64))
       .select("h")
     val deltaKept = deltaBuckets.join(kept, "h")
-    incrementalVerifyTail(r12Form = false,
+    incrementalVerifyTail(
       corpusSk.select("doc_id", "shingles")
         .unionByName(absorbSk.select("doc_id", "shingles")),
       dSk, Seq(corpusPost.hint("MERGE"), aPost), deltaKept, jaccardMin)
@@ -1195,35 +1090,22 @@ object Dedup {
     * on one machine; at 100 TB the same repeats surface as 8-gram
     * position keys with global occurrence count ≥ 2.
     *
-    * Three plan shapes were built and warm-solo A/B'd at uniform-1000x
-    * AND skew-1000x under ONE heap (24g, the r11 adjudication VERDICT
-    * r10 asked for; committed numbers in substring_ab_r11.jsonl, all
-    * three hash-identical):
-    *   - r9 "window" (THE REGISTERED WINNER): repartition(g) →
-    *     (g, doc_id) pre-count → sum OVER (partition by g) → doc
-    *     rollup. One full posting exchange, nothing persisted. Warm:
-    *     uniform 75.0 s / 2137 cpu-s, skew 75.8 s / 2043 cpu-s, zero
-    *     spill — best or tied-best on every axis. The ~6 GB sort spill
-    *     r10 attributed to this form was HEAP CONTEXT (an 8g sweep
-    *     slot), not the plan: at the adjudication heap it never spills,
-    *     and the (g, doc_id) pre-count collapses even the skew corpus's
-    *     hot-template grams map-side (posting stream ≈ distinct pairs).
-    *   - r10 "join+cache": persist the exchanged postings
-    *     (CacheRegistry), totals = groupBy(g).count over the cache,
-    *     join back over the same partitioning. Warm: uniform 81.6 s /
-    *     2367 cpu-s, skew 74.1 s / 2187 cpu-s — ≈tied on skew wall,
-    *     loses on cpu both ways, and the cache is ~8× corpus bytes: at
-    *     100 TB that cache IS the spill by another name. Its committed
-    *     r10 skew entry (126 s / 3501 cpu-s at 8g) also REGRESSED vs
-    *     r9's 85 s / 2266. Retired.
-    *   - r11 "join-fresh": no cache, no window — totals from a map-side
-    *     partial aggregate over a FRESH explode, second explode as the
-    *     join probe. Warm: uniform 127.8 s / 3735 cpu-s, skew 120.9 s /
-    *     3272 — the duplicated explode+scan is ~1.5× the whole window
-    *     form. Retired.
-    * [[substringScoredForms]] keeps all three builders; DedupSpec pins
-    * them result-equivalent, and graft.SubstringAB is the adjudication
-    * harness that produced the committed numbers.
+    * Plan shape ([[substringWindowFused]]): (g, doc_id) pre-count with
+    * map-side combine, ONE posting exchange by g, sum OVER (partition
+    * by g), doc rollup — nothing persisted. The r11 warm-solo A/B
+    * (uniform + skew 1000x under one 24g heap, all forms hash-identical;
+    * substring_ab_r11.jsonl) measured this window shape best or
+    * tied-best on every axis against two retired shapes:
+    *   - persisting the exchanged postings and joining per-gram totals
+    *     back: loses on cpu both ways, and the cache is ~8× corpus
+    *     bytes — at 100 TB that cache IS the spill by another name;
+    *   - totals from a second fresh explode joined to the first: the
+    *     duplicated explode+scan is ~1.5× the whole window form.
+    * The ~6 GB sort spill r10 attributed to the window form was HEAP
+    * CONTEXT (an 8g sweep slot), not the plan: the (g, doc_id)
+    * pre-count collapses even the skew corpus's hot-template grams
+    * map-side (posting stream ≈ distinct pairs). r14 fused the gram
+    * pass into one kernel (substring_ab_r14.jsonl).
     *
     * Every aggregate is a long count — bit-exact across engines and
     * parallelism, so the score (one final double division) oracles
@@ -1262,7 +1144,7 @@ object Dedup {
       s" i -> array_join(slice($wordsCol, i, $k), ' '))"
 
   /** The 8-word-gram posting stream (doc_id, g) — one row per span
-    * position, shared by the substring-dedup forms and the strip op. */
+    * position, the composed stream [[substringWindow]] reads. */
   private[graft] def substringGrams(docs: DataFrame): DataFrame = docs
     .withColumn("w", split(col("text"), " "))
     .filter(size(col("w")) >= 8)
@@ -1286,40 +1168,14 @@ object Dedup {
     graft.api.GraftApi.partitionsFor(spark, postEst)
   }
 
-  private def substringScore(scored: DataFrame): DataFrame = {
-    val dup = when(col("n_total") >= 2, lit(1L)).otherwise(lit(0L))
-    scored.groupBy("doc_id").agg(
-      count(lit(1)).cast("long").as("n_spans"),
-      sum(dup).cast("long").as("n_dup"),
-      (sum(dup).cast("double") / count(lit(1))).as("dup_frac"))
-  }
-
-  /** r11 A/B candidate (RETIRED — the duplicated explode measured ~1.5×
-    * the window form's whole cost; see [[substring]]'s scaladoc).
-    * Per-gram totals come from a straight groupBy over a FRESH explode
-    * (map-side partial aggregate: the wire carries (g, partial_count),
-    * never raw postings), and the probe stream is a second fresh explode
-    * paying the one data-sized posting exchange into a shuffled-hash
-    * join (build side = one counted row per distinct gram in the
-    * partition). Nothing is persisted and nothing sorts.
-    */
-  private[graft] def substringJoinFresh(spark: SparkSession,
-      docs: DataFrame): DataFrame = {
-    val parts = substringParts(spark, docs)
-    val totals = substringGrams(docs).groupBy("g")
-      .agg(count(lit(1)).as("n_total"))
-    val scored = substringGrams(docs).repartition(parts, col("g"))
-      .join(totals.hint("SHUFFLE_HASH"), Seq("g"))
-    substringScore(scored)
-  }
-
-  /** The registered form (r9 shape, re-adjudicated winner of the r11
-    * warm-solo A/B — see [[substring]]'s scaladoc): (g, doc_id)
-    * pre-count with map-side combine, then sum OVER (partition by g).
-    * The window sorts (g, doc_id) PAIRS within each partition — the
-    * pre-count already collapsed within-doc repeats, so the sorted
-    * stream is distinct pairs, not raw postings, and at executor-scale
-    * heaps it never spilled in either 1000x corpus. */
+  /** The composed window form (the r9 shape the r11 A/B kept — see
+    * [[substring]]'s scaladoc): (g, doc_id) pre-count with map-side
+    * combine, then sum OVER (partition by g). The window sorts
+    * (g, doc_id) PAIRS within each partition — the pre-count already
+    * collapsed within-doc repeats, so the sorted stream is distinct
+    * pairs, not raw postings, and at executor-scale heaps it never
+    * spilled in either 1000x corpus. The spec reference for the fused
+    * registered form and for the incremental faces. */
   private[graft] def substringWindow(spark: SparkSession,
       docs: DataFrame): DataFrame = {
     val parts = substringParts(spark, docs)
@@ -1335,8 +1191,8 @@ object Dedup {
     * carries distinct (g, doc_id) pairs exactly like the window form's
     * post-aggregation stream, with digests as keys per the
     * fusedGramStream injectivity argument). ≡ substringWindow
-    * (ShingleSketchSpec + the scored-forms equivalence spec pin it;
-    * substring_ab_r14.jsonl adjudicates the swap).
+    * (ShingleSketchSpec and DedupSpec pin it; substring_ab_r14.jsonl
+    * adjudicates the swap).
     */
   private[graft] def substringWindowFused(spark: SparkSession,
       docs: DataFrame): DataFrame = {
@@ -1362,26 +1218,6 @@ object Dedup {
       (sum(dupLocal).cast("double") / sum(col("n_local"))).as("dup_frac"))
   }
 
-  /** r10 form, kept for the A/B harness: persist the exchanged postings
-    * (CacheRegistry — the caller must drain), totals + join-back over
-    * the cached block. The cache is ~8× corpus bytes. */
-  private[graft] def substringJoinCache(spark: SparkSession,
-      docs: DataFrame): DataFrame = {
-    val parts = substringParts(spark, docs)
-    val keyed = graft.CacheRegistry.track(
-      substringGrams(docs).repartition(parts, col("g")))
-    val totals = keyed.groupBy("g").agg(count(lit(1)).as("n_total"))
-    substringScore(keyed.join(totals.hint("SHUFFLE_HASH"), Seq("g")))
-  }
-
-  /** name → builder, for the A/B harness and the equivalence spec. */
-  private[graft] val substringScoredForms
-      : Seq[(String, (SparkSession, DataFrame) => DataFrame)] = Seq(
-    "join_fresh" -> (substringJoinFresh _),
-    "window" -> (substringWindow _),
-    "window_fused" -> (substringWindowFused _),
-    "join_cache" -> (substringJoinCache _))
-
   /** Substring-dedup span REMOVAL — [[substring]] actually applied
     * (Lee et al. 2022, "Deduplicating Training Data Makes Language
     * Models Better": exact-substring dedup EXCISES the repeated spans,
@@ -1392,28 +1228,20 @@ object Dedup {
     * and every document rides through — a strip pass is a corpus
     * TRANSFORMATION, not a report.
     *
-    * Scale shape (r12 adjudication, substring_ab_r12.jsonl — four
-    * forms warm-solo A/B'd at uniform+skew 1000x under one 24 g heap,
-    * all hash-identical, zero spill): the registered plan is
-    * [[substringStripCopart]] — ONE position explode, ONE posting
-    * exchange materialized DISK_ONLY, both the dup-gram count and the
-    * co-partitioned shuffled-hash probe reading that single
-    * materialization, positions never sorted. Warm cpu-s:
-    *   - strip_copart (REGISTERED): uniform 3615, skew 2483/2447
-    *     (repeat run) — beats every other form on both corpora.
-    *   - strip_join (the r11 winner, now retired): uniform 4691, skew
-    *     5628 (same-file era re-baseline; its committed r11 numbers
-    *     were 5347/3882). Its second full gram explode for the dup set
-    *     is exactly what copart deletes; its skew number also proved
-    *     era-volatile.
-    *   - strip_rawwindow (r12 candidate, retired): count window over
-    *     raw positions, no join — uniform 3994, skew 3321 (a first
-    *     skew read of 2586 landed in a 0.530-canary era; the 0.378-era
-    *     repeat settled it). The flat-row sort is far cheaper than
-    *     strip_window's object baggage but still loses to not sorting
-    *     at all.
-    *   - strip_window (retired r11): 6933/6498 — collect_list arrays
-    *     riding the window sort.
+    * Scale shape: [[substringStripApply]]. Each retired form lost a
+    * warm-solo A/B at uniform+skew 1000x, all forms hash-identical:
+    *   - r11 (substring_ab_r11.jsonl): a window over (g, doc) position
+    *     lists lost DECISIVELY to a join form (6933/6498 vs 5347/3882
+    *     cpu-s) — unlike the scored op, where the pre-count collapses
+    *     a hot gram's replicas, the positions ARE the payload and ride
+    *     the window sort as array baggage;
+    *   - r12 (substring_ab_r12.jsonl): ONE position explode, ONE
+    *     posting exchange materialized DISK_ONLY and read by both the
+    *     dup-gram count and a co-partitioned probe (3615/2483) beat
+    *     the join form's second explode (4691/5628) and a count window
+    *     over raw positions (3994/3321);
+    *   - r14 (substring_ab_r14.jsonl): the fused kernels made a second
+    *     scan cheaper than that DISK_ONLY cache round-trip.
     * The per-doc removed-position set is bounded by the document's own
     * word count — the same order of per-task state as holding the
     * document row itself — and the reconstruction is one codegen'd
@@ -1452,26 +1280,8 @@ object Dedup {
     substringStripApply(spark, Tables.documents(spark, dir))
   }
 
-  /** [[substringStrip]]'s library face over any (doc_id, text) frame —
-    * delegates to the adjudicated form (see [[substringStripForms]]:
-    * strip_fused, the r14 warm-solo A/B winner — kernels made a second
-    * scan cheaper than the retired copart form's DISK_ONLY cache
-    * round-trip; substring_ab_r14.jsonl). */
-  def substringStripApply(spark: SparkSession, docs: DataFrame): DataFrame =
-    substringStripFused(spark, docs)
-
-  /** Words frame + position stream shared by the strip forms. */
-  private def stripPositions(docs: DataFrame): (DataFrame, DataFrame) = {
-    val d = docs.select(col("doc_id"),
-      split(coalesce(col("text"), lit("")), " ").as("w"))
-    val pos = d.filter(size(col("w")) >= 8)
-      .select(col("doc_id"), posexplode(expr(gramExpr("w", 8))))
-      .select(col("doc_id"), (col("pos") + 1).as("i"), col("col").as("g"))
-    (d, pos)
-  }
-
   /** Excise the words covered by any dup-gram start and emit the audit
-    * columns — shared tail of both strip forms. `covered` carries
+    * columns — the strip tail. `covered` carries
     * (doc_id, starts: array<int>); the mask expands from starts INSIDE
     * the row (pure codegen, no shuffle): shipping 8×-exploded covered
     * positions instead measured 10.9k cpu-s at uniform-1000x vs ~half
@@ -1489,123 +1299,12 @@ object Dedup {
           "filter(w, (x, p) -> NOT array_contains(rm, p + 1))"), " ")
           .as("text_stripped"))
 
-  /** Join-form strip (the r11 winner, RETIRED by the r12 A/B — kept
-    * for the harness): per-gram totals from a SECOND fresh explode
-    * (map-side partial aggregate), filtered to the dup set (the HAVING
-    * shrinks the join build side — typically ≪ distinct grams on an
-    * organic corpus), then the position stream pays the one data-sized
-    * exchange into a shuffled-hash join. The second explode is the
-    * cost [[substringStripCopart]] deletes.
-    */
-  private[graft] def substringStripJoin(spark: SparkSession,
-      docs: DataFrame): DataFrame = {
-    val (d, pos) = stripPositions(docs)
-    val dupg = substringGrams(docs).groupBy("g")
-      .agg(count(lit(1)).as("n_total"))
-      .filter(col("n_total") >= 2).select("g")
-    val parts = substringParts(spark, docs)
-    val covered = pos.repartition(parts, col("g"))
-      .join(dupg.hint("SHUFFLE_HASH"), Seq("g"))
-      .groupBy("doc_id").agg(collect_set(col("i")).as("starts"))
-    stripRebuild(d, covered)
-  }
-
-  /** Window-form strip (RETIRED by the r11 warm-solo A/B — kept for
-    * the harness): ONE position explode, one repartition(g) satisfying
-    * both the (g, doc_id) aggregation's clustering and the window's
-    * partitionBy(g), positions collected per (g, doc) so the window
-    * sorts distinct pairs. Measured DECISIVELY WORSE than the join
-    * form (warm 24 g: uniform-1000x 6933 vs 5347 cpu-s, skew 6498 vs
-    * 3882 — substring_ab_r11.jsonl): unlike the scored op, where the
-    * pre-count COLLAPSES a hot gram's replicas into one count, the
-    * positions ARE the payload — the (g, doc) stream carries every
-    * position through the sort as array baggage plus an explode-back,
-    * strictly more work than the SHJ probe the join form pays. The
-    * scored op's window lesson does not transfer when the per-pair
-    * payload grows with duplication.
-    */
-  private[graft] def substringStripWindow(spark: SparkSession,
-      docs: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val (d, pos) = stripPositions(docs)
-    val parts = substringParts(spark, docs)
-    val perDoc = pos.repartition(parts, col("g"))
-      .groupBy("g", "doc_id").agg(collect_list(col("i")).as("is"))
-    val covered = perDoc.withColumn("n_total",
-        sum(size(col("is")).cast("long")).over(Window.partitionBy(col("g"))))
-      .filter(col("n_total") >= 2)
-      .select(col("doc_id"), explode(col("is")).as("i"))
-      .groupBy("doc_id").agg(collect_set(col("i")).as("starts"))
-    stripRebuild(d, covered)
-  }
-
-  /** "strip_copart" — THE REGISTERED STRIP FORM (r12 warm-solo A/B
-    * winner: uniform 3615 / skew 2483 warm cpu-s vs the r11 join
-    * form's 4691 / 5628 — see [[substringStrip]]): ONE position
-    * explode, ONE posting exchange — the other forms' duplicated work
-    * removed at once. The position stream (doc_id, i, g) is repartitioned by g
-    * once and materialized DISK_ONLY (CacheRegistry — the caller
-    * drains); both consumers read that one materialization:
-    *   - dup-g set: groupBy(g).count over the partitioned blocks
-    *     (clustering already satisfied — no agg exchange), HAVING ≥ 2;
-    *   - probe: the SAME partitioned blocks into a shuffled-hash join
-    *     against that dup-g set — both sides hash(g, parts), so the
-    *     join adds NO exchange and positions never enter a sort.
-    * Why an explicit persist and not ReuseExchange: the two consumers
-    * need different columns, so the column pruner specializes each
-    * branch's exchange (one (g)-only, one (doc_id, i, g)) and the
-    * outer-join's isnotnull pushdown splits them further — the
-    * "identical exchange read twice" plan is not expressible
-    * declaratively here (measured r12: the naive form re-ran the
-    * explode per branch). DISK_ONLY is deliberate — unlike the retired
-    * r10 join_cache (default-level cache of the same stream), it holds
-    * the bytes a shuffle file would hold without taking unified memory
-    * away from the aggregations reading it; at executor scale it is
-    * the one-exchange dataflow spelled out as storage.
-    */
-  private[graft] def substringStripCopart(spark: SparkSession,
-      docs: DataFrame): DataFrame = {
-    val (d, pos) = stripPositions(docs)
-    val parts = substringParts(spark, docs)
-    val keyed = graft.CacheRegistry.track(
-      pos.repartition(parts, col("g")),
-      org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    val dupg = keyed.groupBy("g").agg(count(lit(1)).as("n_total"))
-      .filter(col("n_total") >= 2).select("g")
-    val covered = keyed.join(dupg.hint("SHUFFLE_HASH"), Seq("g"))
-      .groupBy("doc_id").agg(collect_set(col("i")).as("starts"))
-    stripRebuild(d, covered)
-  }
-
-  /** r12 A/B candidate "strip_rawwindow" (RETIRED — loses to copart
-    * on both corpora; kept for the harness): ONE explode, ONE exchange,
-    * NO join and no materialization — the per-gram total rides a count
-    * window directly over the raw position stream (partitionBy(g),
-    * whole-partition frame). The price is the window's sort of
-    * (g, doc_id, i) rows within each partition; the bet is that
-    * strip_window's measured loss came from its OBJECT baggage
-    * (collect_list arrays riding the sort + ObjectHashAggregate + a
-    * re-explode), not from sorting per se — here rows stay flat
-    * UnsafeRows, the frame needs no running state, and a hot gram's
-    * group spills to the window buffer instead of one task's heap.
-    */
-  private[graft] def substringStripRawWindow(spark: SparkSession,
-      docs: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val (d, pos) = stripPositions(docs)
-    val parts = substringParts(spark, docs)
-    val covered = pos.repartition(parts, col("g"))
-      .withColumn("n_total", count(lit(1)).over(Window.partitionBy(col("g"))))
-      .filter(col("n_total") >= 2)
-      .groupBy("doc_id").agg(collect_set(col("i")).as("starts"))
-    stripRebuild(d, covered)
-  }
-
-  /** r14 fused form (THE REGISTERED WINNER — substring_ab_r14.jsonl):
-    * the copart plan existed to avoid a second gram explode, paying a
-    * corpus-sized DISK_ONLY cache of the exploded position stream (~8×
-    * corpus bytes written + read back + deserialized — its 1000×
-    * cpu was the family's worst). The fused kernels make a second scan
+  /** [[substringStrip]]'s library face over any (doc_id, text) frame —
+    * the r14 fused form (substring_ab_r14.jsonl): the r12 plan existed
+    * to avoid a second gram explode, paying a corpus-sized DISK_ONLY
+    * cache of the exploded position stream (~8× corpus bytes written +
+    * read back + deserialized — its 1000× cpu was the family's
+    * worst). The fused kernels make a second scan
     * cheaper than one cache round-trip: the dup-gram set comes from a
     * [[graft.functions.ShingleMd5GramCounts]] pass (map-side combine
     * into a dup-rate-proportional sliver, SIZE-ADAPTIVE broadcast —
@@ -1616,8 +1315,7 @@ object Dedup {
     * per-position rows, no posting exchange, nothing persisted. The
     * only exchange left is the dup-position sliver's groupBy(doc_id).
     */
-  private[graft] def substringStripFused(spark: SparkSession,
-      docs: DataFrame): DataFrame = {
+  def substringStripApply(spark: SparkSession, docs: DataFrame): DataFrame = {
     val d = docs.select(col("doc_id"),
       split(coalesce(col("text"), lit("")), " ").as("w"))
     val dupg = graft.api.GraftApi.adaptiveBroadcast(
@@ -1639,15 +1337,6 @@ object Dedup {
     // corpus-sized covered set (3854 vs 2388 cpu-s at uniform-1000×)
     stripRebuild(d, covered)
   }
-
-  /** name → builder, for the A/B harness and the equivalence spec. */
-  private[graft] val substringStripForms
-      : Seq[(String, (SparkSession, DataFrame) => DataFrame)] = Seq(
-    "strip_join" -> (substringStripJoin _),
-    "strip_window" -> (substringStripWindow _),
-    "strip_copart" -> (substringStripCopart _),
-    "strip_rawwindow" -> (substringStripRawWindow _),
-    "strip_fused" -> (substringStripFused _))
 
   /** Per-gram occurrence-count table over a corpus: (g, n) — the
     * persisted state [[substringIncrementalScore]] joins deltas
@@ -2116,7 +1805,8 @@ object Dedup {
     * whole duplicated boilerplate paragraphs SHORTER than an 8-gram
     * span are invisible to [[substringStrip]] but exact hits here.
     *
-    * Scale shape is [[substringStripCopart]]'s, one granularity up:
+    * Scale shape is the r12 strip plan's (see [[substringStrip]]), one
+    * granularity up:
     * the (doc_id, p, h) paragraph stream — words/12, not words, rows —
     * is exchanged by h ONCE and materialized DISK_ONLY (caller
     * drains); the dup-hash set aggregates over those blocks with no
@@ -2126,58 +1816,35 @@ object Dedup {
     * size-adaptively broadcast into the corpus scan, which itself
     * never shuffles. Reconstruction is one codegen'd indexed filter
     * over the paragraph array (no UDF, no per-row join). The strip
-    * family's retire-the-cache play was TRIED here and lost
-    * (paragraphDedupPlan(cached = false), adjudicated r14: 1311 →
-    * 1511 cpu-s at uniform-1000× — this stream is 12× smaller than
-    * strip's and its hash projection has no fused kernel, so one
-    * cache round-trip beats building it twice); the fused form stays
-    * as the A/B reference.
+    * family's retire-the-cache play was TRIED here and lost (r14:
+    * building the hash stream twice with a map-side dup probe read
+    * 1311 → 1511 cpu-s at uniform-1000× — this stream is 12× smaller
+    * than strip's and its hash projection has no fused kernel, so one
+    * cache round-trip beats building it twice).
     */
   private[graft] def paragraphDedupFrame(spark: SparkSession,
       withParas: DataFrame, joiner: String,
-      rowEstimate: Option[Long] = None): DataFrame =
-    paragraphDedupPlan(cached = true)(spark, withParas, joiner, rowEstimate)
-
-  /** r14 A/B pair: `cached = true` is the REGISTERED shape (stream
-    * exchanged by h once, materialized DISK_ONLY, dup-set +
-    * co-partitioned probe over the same blocks); false applies the
-    * strip_fused retire-the-cache play (build the hash stream twice,
-    * map-side dup probe, nothing persisted) — adjudicated AGAINST at
-    * uniform-1000× (1311 → 1511 cpu-s; see [[paragraphDedupFrame]]'s
-    * scaladoc for why this family differs from strip).
-    */
-  private[graft] def paragraphDedupPlan(cached: Boolean)(spark: SparkSession,
-      withParas: DataFrame, joiner: String,
       rowEstimate: Option[Long] = None): DataFrame = {
     val d = withParas.withColumn("nb", size(col("paras")).cast("long"))
-    def stream = d.filter(col("nb") > 0)
+    val stream = d.filter(col("nb") > 0)
       .select(col("doc_id"),
         posexplode(expr("transform(paras, t -> md5(lower(t)))")))
       .select(col("doc_id"), col("pos").as("p"), col("col").as("h"))
-    val removed =
-      if (cached) {
-        // partition sizing: callers pass a CHEAP estimate (text length
-        // / ~chars-per-paragraph, the substringParts discipline) — the
-        // fallback sum(nb) is exact but evaluates the paras
-        // construction corpus-wide just to count it (small-frame path)
-        val est = rowEstimate.getOrElse(
-          Option(d.agg(sum(col("nb"))).head().get(0))
-            .map(_.asInstanceOf[Long]).getOrElse(0L))
-        val parts = graft.api.GraftApi.partitionsFor(spark, est)
-        val keyed = graft.CacheRegistry.track(
-          stream.repartition(parts, col("h")),
-          org.apache.spark.storage.StorageLevel.DISK_ONLY)
-        val duph = keyed.groupBy("h").agg(count(lit(1)).as("n"))
-          .filter(col("n") >= 2).select("h")
-        keyed.join(duph.hint("SHUFFLE_HASH"), Seq("h"))
-          .groupBy("doc_id").agg(collect_set(col("p")).as("rm0"))
-      } else {
-        val duph = graft.api.GraftApi.adaptiveBroadcast(
-          stream.groupBy("h").agg(count(lit(1)).as("n"))
-            .filter(col("n") >= 2).select("h"))
-        stream.join(duph, Seq("h"))
-          .groupBy("doc_id").agg(collect_set(col("p")).as("rm0"))
-      }
+    // partition sizing: callers pass a CHEAP estimate (text length
+    // / ~chars-per-paragraph, the substringParts discipline) — the
+    // fallback sum(nb) is exact but evaluates the paras
+    // construction corpus-wide just to count it (small-frame path)
+    val est = rowEstimate.getOrElse(
+      Option(d.agg(sum(col("nb"))).head().get(0))
+        .map(_.asInstanceOf[Long]).getOrElse(0L))
+    val parts = graft.api.GraftApi.partitionsFor(spark, est)
+    val keyed = graft.CacheRegistry.track(
+      stream.repartition(parts, col("h")),
+      org.apache.spark.storage.StorageLevel.DISK_ONLY)
+    val duph = keyed.groupBy("h").agg(count(lit(1)).as("n"))
+      .filter(col("n") >= 2).select("h")
+    val removed = keyed.join(duph.hint("SHUFFLE_HASH"), Seq("h"))
+      .groupBy("doc_id").agg(collect_set(col("p")).as("rm0"))
     d.join(graft.api.GraftApi.adaptiveBroadcast(removed),
         Seq("doc_id"), "left")
       .withColumn("rm", coalesce(col("rm0"),
@@ -2187,18 +1854,6 @@ object Dedup {
         array_join(expr("filter(paras, (x, i) -> NOT array_contains(rm, i))"),
           joiner).as("text_depara"))
   }
-
-  /** A/B forms over the registered pseudo-paragraph segmentation
-    * (consumed through [[graft.MinhashAB]]'s shared WarmSoloAB lookup).
-    */
-  private[graft] val paragraphForms
-      : Seq[(String, (SparkSession, DataFrame) => DataFrame)] = Seq(
-    "para_cached" -> ((s: SparkSession, d: DataFrame) =>
-      paragraphDedupPlan(cached = true)(s, pseudoParas(d), " ",
-        rowEstimate = Some(paragraphEstimate(d)))),
-    "para_fused" -> ((s: SparkSession, d: DataFrame) =>
-      paragraphDedupPlan(cached = false)(s, pseudoParas(d), " ")),
-  )
 
   /** The real-corpus face: paragraphs are newline-delimited segments
     * (CCNet's own boundary), rejoined by newline. The driver corpus
@@ -2256,7 +1911,7 @@ object Dedup {
   }
 
   /** The registered 12-word pseudo-paragraph segmentation (single-
-    * sourced: the op, the A/B forms, and specs share it — the oracle
+    * sourced: the op, the upsert, and specs share it — the oracle
     * mirrors it with w[(p*12+1):(p*12+12)] slices).
     */
   private[graft] def pseudoParas(docs: DataFrame): DataFrame =

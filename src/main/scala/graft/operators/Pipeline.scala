@@ -33,7 +33,7 @@ object Pipeline {
   ) { (spark, dir) => curateFrom(Tables.documents(spark, dir)) }
 
   /** The curate plan over any (doc_id, lang, text) frame — the Op binds
-    * the documents table; [[curateForms]] and specs feed frames directly.
+    * it to the documents table.
     */
   private[graft] def curateFrom(docs: DataFrame): DataFrame =
     curateQuality(docs.join(curateDropped(docs),
@@ -44,9 +44,7 @@ object Pipeline {
     * heavily-mirrored crawl — so the representative filter is a
     * SIZE-ADAPTIVE anti join (broadcast below the row threshold, plain
     * shuffled anti-join above; see GraftApi.adaptiveBroadcast). The full
-    * doc_id→cluster map (corpus-sized!) is never materialized. Shared
-    * with [[curateForms]] so the stage A/B always measures the
-    * registered op's own plan.
+    * doc_id→cluster map (corpus-sized!) is never materialized.
     */
   private def curateDropped(docs: DataFrame): DataFrame =
     graft.api.GraftApi.adaptiveBroadcast(
@@ -56,7 +54,7 @@ object Pipeline {
         .select(col("id").as("dropped_id")))
 
   /** The quality gate over any kept-docs frame — features computed in
-    * the same scan's project, no self-join. Shared with [[curateForms]].
+    * the same scan's project, no self-join.
     *
     * r15 kernel swap (pipeline_ab_r15.jsonl adjudicates, hash-identical):
     * the r14 form ran two regex engines per document
@@ -84,18 +82,6 @@ object Pipeline {
         tokens.as("tokens"), punctRatio.as("punct_ratio"))
       .filter(col("tokens") >= 10 && col("punct_ratio") < 0.2)
   }
-
-  /** The r14 two-regex quality scan — A/B reference for the kernel swap
-    * above (kept verbatim so the swap stays re-adjudicable).
-    */
-  private[graft] def curateQualityRegex(docs: DataFrame): DataFrame =
-    docs
-      .filter(length(col("text")) > 0)
-      .select(col("doc_id"), col("lang"),
-        size(expr("regexp_extract_all(text, '\\\\S+', 0)")).cast("long").as("tokens"),
-        (size(expr("regexp_extract_all(text, '[.,;:!?]', 0)")).cast("double") /
-          length(col("text"))).as("punct_ratio"))
-      .filter(col("tokens") >= 10 && col("punct_ratio") < 0.2)
 
   /** Rule-based quality gate with audit trail (the Gopher/C4-style filter
     * list): every document gets a verdict — the FIRST failing rule in a
@@ -739,30 +725,6 @@ object Pipeline {
         sum("is_empty").cast("long").as("n_empty"),
         (sum("tokens").cast("double") / count(lit(1))).as("mean_tokens"))
   }
-
-  /** Stage-isolating forms for [[graft.PipelineAB]] — pipeline_curate is
-    * the largest headline entry, and "which stage owns it" should be a
-    * measured number, not an attribution. `cur_full` is the registered
-    * plan; the others run one stage each over the same corpus:
-    * `cur_pairs` the near-dup pair generator, `cur_dropped` pairs +
-    * components + the losers sliver, `cur_quality` the quality-feature
-    * scan with no dedup join at all.
-    */
-  private[graft] val curateForms
-      : Seq[(String, (SparkSession, DataFrame) => DataFrame)] = Seq(
-    "cur_full" -> ((_: SparkSession, d: DataFrame) => curateFrom(d)),
-    "cur_pairs" -> ((_: SparkSession, d: DataFrame) =>
-      Dedup.minhashPairs(d, 0.2)),
-    "cur_dropped" -> ((_: SparkSession, d: DataFrame) => curateDropped(d)),
-    "cur_quality" -> ((_: SparkSession, d: DataFrame) => curateQuality(d)),
-    // the r14 registered quality scan (two regex engines/doc) — the
-    // kernel-swap A/B reference
-    "cur_quality_regex" -> ((_: SparkSession, d: DataFrame) =>
-      curateQualityRegex(d)),
-    "cur_full_regex" -> ((_: SparkSession, d: DataFrame) =>
-      curateQualityRegex(d.join(curateDropped(d),
-        col("doc_id") === col("dropped_id"), "left_anti"))),
-  )
 
   val ops: Seq[Op] =
     Seq(curate, qualityFilter, decontamNgram, keepBest, packSequences,

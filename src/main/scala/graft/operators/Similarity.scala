@@ -1644,7 +1644,7 @@ object Similarity {
 
   /** IVFADC serving parameters, shared by the Spark fns and the composed
     * oracles (one source of truth — a drifted pair would hash-mismatch).
-    * r15 re-tune (VERDICT r14 #4, adjudicated by graft.AnnRecallAB at
+    * r15 re-tune (VERDICT r14 #4, adjudicated by a recall sweep at
     * sf0.1 against exact brute force — ann_recall_ab_r15.jsonl, 10
     * configs over nprobe × m × codebookSize × shortlist): the r14
     * config (nprobe 4, m=4×16, cb=16, shortlist 4k) measured recall@5
@@ -1914,10 +1914,7 @@ object Similarity {
     * serving). The join/aggregate after them touches |Q|·k-row slivers.
     */
   /** Exact brute-force cosine top-k (q_id, cand_id) for the vec_id < 8
-    * query set — the ground-truth arm shared by [[annRecallAudit]] and
-    * the graft.AnnRecallAB tuning harness (ONE copy: a tie-break or
-    * norm-handling change forking the two would make the tuner measure
-    * against a different truth than the registered audit).
+    * query set — the ground-truth arm of [[annRecallAudit]].
     */
   private[graft] def exactCosineTopK(spark: SparkSession, dir: String,
       k: Int = 5): DataFrame = {

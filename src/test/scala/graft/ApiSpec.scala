@@ -699,4 +699,20 @@ class ApiSpec extends SparkSpec {
     assert(got(1).getLong(0) == 0L)
     assert(got(1).getString(1) == "no pii here, just 1.5 and v2.0")
   }
+
+  test("adaptiveBroadcast: an understated knownRowBound fails on the measured path too") {
+    // distributed frame, bound above the limit: the verb persists and
+    // counts — and must hold that count to the caller's bound
+    spark.conf.set("graft.adaptiveBroadcast.maxRows", "2")
+    try {
+      val e = intercept[IllegalArgumentException] {
+        GraftApi.adaptiveBroadcast(spark.range(10).toDF("id"),
+          knownRowBound = Some(5L))
+      }
+      assert(e.getMessage.contains("knownRowBound"), e.getMessage)
+    } finally {
+      spark.conf.unset("graft.adaptiveBroadcast.maxRows")
+      CacheRegistry.drain()
+    }
+  }
 }

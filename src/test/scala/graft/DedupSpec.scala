@@ -96,29 +96,11 @@ class DedupSpec extends SparkSpec {
     CacheRegistry.drain()
   }
 
-  test("incremental r12/sliver plan forms are result-identical at sf0.001") {
-    // the r13 verify-sliver A/B forms (minhash_ab_r13.jsonl adjudicated
-    // cost; this pins the equality durably on real near-dup structure)
-    val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-    val forms = Dedup.incrementalForms.toMap
-    def pairs(name: String) = {
-      val got = forms(name)(spark, docs)
-        .collect().map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"),
-          math.round(r.getAs[Double]("jaccard") * 1e9))).toSet
-      CacheRegistry.drain()
-      got
-    }
-    val a = pairs("inc_r12")
-    val b = pairs("inc_sliver")
-    assert(a == b, s"missing=${a -- b} extra=${b -- a}")
-    assert(a.nonEmpty)
-  }
-
-  test("substring dedup counts duplicated 8-word spans, incl. within-doc repeats") {
+  // A and B share exactly their first 8-word span; C repeats one
+  // 8-word phrase twice internally (9 spans, the repeated phrase at
+  // positions 1 and 9); D is too short to have any span
+  private lazy val spanDocsDir: String = {
     import spark.implicits._
-    // A and B share exactly their first 8-word span; C repeats one
-    // 8-word phrase twice internally (9 spans, the repeated phrase at
-    // positions 1 and 9); D is too short to have any span
     val docs = Seq(
       (0L, "a1 a2 a3 a4 a5 a6 a7 a8 a9 a10"),
       (1L, "a1 a2 a3 a4 a5 a6 a7 a8 b9 b10"),
@@ -126,8 +108,13 @@ class DedupSpec extends SparkSpec {
       (3L, "d1 d2 d3 d4 d5 d6 d7"),
     ).map { case (id, t) => (id, t, "en", s"s$id", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = tmpDir(); writeTable(dir, "documents", docs)
-    val got = Dedup.substring.fn(spark, dir).collect()
+    val dir = tmpDir()
+    writeTable(dir, "documents", docs)
+    dir
+  }
+
+  test("substring dedup counts duplicated 8-word spans, incl. within-doc repeats") {
+    val got = Dedup.substring.fn(spark, spanDocsDir).collect()
       .map(r => r.getAs[Long]("doc_id") ->
         ((r.getAs[Long]("n_spans"), r.getAs[Long]("n_dup"),
           r.getAs[Double]("dup_frac")))).toMap
@@ -138,35 +125,21 @@ class DedupSpec extends SparkSpec {
   }
 
   test("the substring plan forms (A/B candidates incl. fused) are result-identical") {
-    // r11 adjudication support: the registered op is the warm-solo A/B
-    // winner; this pins that the candidates never diverged on RESULTS, so
-    // the A/B measured plans, not semantics.
-    val docs = Tables.documents(spark, sfTiny)
-    val all = Dedup.substringScoredForms.map { case (name, fn) =>
-      name -> fn(spark, docs).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-          math.rint(r.getDouble(3) * 1e12)))
-        .sortBy(_._1).toSeq
+    // the registered fused op against the composed window reference it
+    // replaced (substring_ab_r14.jsonl adjudicated cost; this pins that
+    // the two never diverge on results)
+    def scores(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+        math.rint(r.getDouble(3) * 1e12)))
+      .sortBy(_._1).toSeq
+    def check(dir: String): Unit = {
+      val registered = scores(Dedup.substring.fn(spark, dir))
+      val reference = scores(Dedup.substringWindow(spark, Tables.documents(spark, dir)))
+      assert(registered == reference)
+      assert(registered.nonEmpty)
     }
-    all.sliding(2).foreach { case Seq((na, a), (nb, b)) =>
-      assert(a == b, s"$na vs $nb diverged")
-    }
-    assert(all.head._2.nonEmpty)
-    CacheRegistry.drain()
-  }
-
-  test("the substring STRIP plan forms (A/B candidates) are result-identical") {
-    val docs = Tables.documents(spark, sfTiny)
-    val all = Dedup.substringStripForms.map { case (name, fn) =>
-      name -> fn(spark, docs).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3)))
-        .sortBy(_._1).toSeq
-    }
-    all.sliding(2).foreach { case Seq((na, a), (nb, b)) =>
-      assert(a == b, s"$na vs $nb diverged")
-    }
-    assert(all.head._2.nonEmpty)
-    CacheRegistry.drain()
+    check(sfTiny)
+    check(spanDocsDir)
   }
 
   test("incremental substring score ≡ full recompute restricted to the delta") {
@@ -214,16 +187,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("substring strip excises every corpus-duplicated 8-word span") {
-    import spark.implicits._
-    val docs = Seq(
-      (0L, "a1 a2 a3 a4 a5 a6 a7 a8 a9 a10"),
-      (1L, "a1 a2 a3 a4 a5 a6 a7 a8 b9 b10"),
-      (2L, "c1 c2 c3 c4 c5 c6 c7 c8 c1 c2 c3 c4 c5 c6 c7 c8"),
-      (3L, "d1 d2 d3 d4 d5 d6 d7"),
-    ).map { case (id, t) => (id, t, "en", s"s$id", t.length.toLong) }
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = tmpDir(); writeTable(dir, "documents", docs)
-    val got = Dedup.substringStrip.fn(spark, dir).collect()
+    val got = Dedup.substringStrip.fn(spark, spanDocsDir).collect()
       .map(r => r.getAs[Long]("doc_id") ->
         ((r.getAs[Long]("n_words"), r.getAs[Long]("n_removed"),
           r.getAs[String]("text_stripped")))).toMap
@@ -994,22 +958,6 @@ class DedupSpec extends SparkSpec {
       .filter(col("q_id") === 0L).orderBy(desc("cosine")).head()
     assert(top.getAs[Long]("cand_id") == 1L)
     assert(top.getAs[Double]("cosine") > 0.999)
-  }
-
-  test("paragraph cached/fused plan forms are result-identical (sf0.001)") {
-    val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-    val forms = Dedup.paragraphForms.toMap
-    def rows(name: String) = {
-      val got = forms(name)(spark, docs).collect()
-        .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("n_paras"),
-          r.getAs[Long]("n_removed"), r.getAs[String]("text_depara"))).toSet
-      CacheRegistry.drain()
-      got
-    }
-    val a = rows("para_cached")
-    val b = rows("para_fused")
-    assert(a == b, s"missing=${a -- b} extra=${b -- a}")
-    assert(a.nonEmpty && a.exists(_._3 > 0L))
   }
 
   test("knn join: mutual top neighbors for the near pair, nothing for the singleton") {

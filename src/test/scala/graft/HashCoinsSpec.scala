@@ -59,21 +59,6 @@ class HashCoinsSpec extends SparkSpec {
     assert(dup == 0L)
   }
 
-  test("minhash sketch/builder forms are hash-identical at sf0.001") {
-    val dir = "/root/testdata/sf0.001"
-    val forms = graft.operators.Dedup.minhashForms.toMap
-    def fingerprint(name: String): (Long, Long) = {
-      val df = forms(name)(spark, Tables.documents(spark, dir))
-      val r = df.select(xxhash64(struct(df.columns.map(col): _*)).as("_h"))
-        .agg(count(lit(1)), coalesce(expr("bit_xor(_h)"), lit(0L))).head()
-      CacheRegistry.drain()
-      (r.getLong(0), r.getLong(1))
-    }
-    val fps = Seq("mh_r12", "mh_nosort_slice", "mh_bottomk").map(fingerprint)
-    assert(fps.distinct.size == 1, fps)
-    assert(fps.head._1 > 0, fps)
-  }
-
   test("null input yields null, not a crash") {
     import spark.implicits._
     val df = Seq(Some("x"), None).toDF("g")
@@ -110,17 +95,5 @@ class HashCoinsSpec extends SparkSpec {
     val n = Seq[Option[String]](None).toDF("text")
       .select(winnow_min_md5(col("text"), 8).as("f")).head()
     assert(n.isNullAt(0))
-  }
-
-  test("ngram md5_expr form is hash-identical to the hex form at sf0.001") {
-    val dir = "/root/testdata/sf0.001"
-    val forms = graft.operators.Dedup.ngramForms.toMap
-    def fingerprint(name: String): (Long, Long) = {
-      val df = forms(name)(spark, Tables.documents(spark, dir))
-      val r = df.select(xxhash64(struct(df.columns.map(col): _*)).as("_h"))
-        .agg(count(lit(1)), coalesce(expr("bit_xor(_h)"), lit(0L))).head()
-      (r.getLong(0), r.getLong(1))
-    }
-    assert(fingerprint("ngram_md5_expr") == fingerprint("ngram_md5_hex"))
   }
 }

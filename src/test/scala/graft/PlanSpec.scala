@@ -440,4 +440,76 @@ class PlanSpec extends SparkSpec {
     val exchanges = "Exchange hashpartitioning".r.findAllIn(p).size
     assert(exchanges == 2, s"expected band + distinct exchanges, got $exchanges:\n$p")
   }
+
+  test("minhash: gated sketch cached once before the buckets, lean probe ids for the verify sliver") {
+    import org.apache.spark.sql.catalyst.expressions.Explode
+    import org.apache.spark.sql.catalyst.plans.LeftSemi
+    import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, GenerateExec, SparkPlan, UnionExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.aggregate.{HashAggregateExec, ObjectHashAggregateExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    // children through AQE wrappers and into cached plans, unless the
+    // walk must stop at a cache boundary
+    def kids(n: SparkPlan, intoCache: Boolean): Seq[SparkPlan] = n match {
+      case a: AdaptiveSparkPlanExec => Seq(a.inputPlan)
+      case m: InMemoryTableScanExec =>
+        if (intoCache) Seq(m.relation.cachedPlan) else Nil
+      case other => other.children
+    }
+    def nodes(n: SparkPlan, intoCache: Boolean = true): Seq[SparkPlan] =
+      n +: kids(n, intoCache).flatMap(nodes(_, intoCache))
+    // cache scans on every path from `n` down to the documents scan
+    def cachesToScan(n: SparkPlan): Seq[Int] = n match {
+      case _: FileSourceScanExec => Seq(0)
+      case m: InMemoryTableScanExec =>
+        cachesToScan(m.relation.cachedPlan).map(_ + 1)
+      case other => kids(other, intoCache = true).flatMap(cachesToScan)
+    }
+    val df = Dedup.minhashLsh.fn(spark, sfTiny)
+    val all = nodes(df.queryExecution.executedPlan)
+    // the bucket aggregation: the partial bounded collect over the
+    // exploded sketch hashes
+    val bucketAggs = all.collect {
+      case a: ObjectHashAggregateExec
+          if a.toString.contains("collect_set_bounded") &&
+            a.child.isInstanceOf[GenerateExec] => a
+    }
+    assert(bucketAggs.nonEmpty, all.mkString("\n"))
+    bucketAggs.foreach { agg =>
+      val paths = cachesToScan(agg)
+      assert(paths.nonEmpty && paths.forall(_ == 1),
+        s"sketch must reach the buckets through exactly one cache: $paths\n$agg")
+      val sketchCache = nodes(agg).collect { case m: InMemoryTableScanExec => m }.head
+      val cached = nodes(sketchCache.relation.cachedPlan)
+      assert(cached.exists(_.toString.contains("shingle_md5_bottom_k")),
+        s"cached frame is not the fused sketch:\n${cached.mkString("\n")}")
+      assert(cached.exists {
+          case f: FilterExec => f.condition.sql.contains("size(sketch")
+          case _ => false
+        }, s"cached sketch is not gated:\n${cached.mkString("\n")}")
+    }
+    // the verify sliver's left-semi probe-id side, above the cached
+    // candidate pairs: one explode branch + distinct, no union
+    val semis = all.collect {
+      case j: BaseJoinExec if j.joinType == LeftSemi => j
+    }
+    assert(semis.nonEmpty, all.mkString("\n"))
+    semis.foreach { j =>
+      val probe = nodes(j.right, intoCache = false)
+      assert(probe.exists {
+          case g: GenerateExec => g.generator.isInstanceOf[Explode]
+          case _ => false
+        }, s"probe ids are not one explode branch:\n${probe.mkString("\n")}")
+      assert(probe.exists {
+          case h: HashAggregateExec => h.aggregateExpressions.isEmpty
+          case _ => false
+        }, s"probe ids are not distinct:\n${probe.mkString("\n")}")
+      assert(!probe.exists(_.isInstanceOf[UnionExec]),
+        s"probe ids must not union two projections:\n${probe.mkString("\n")}")
+      assert(probe.exists(_.isInstanceOf[InMemoryTableScanExec]),
+        s"probe ids must read the cached candidate pairs:\n${probe.mkString("\n")}")
+    }
+    CacheRegistry.drain()
+  }
 }
