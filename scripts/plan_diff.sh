@@ -1,0 +1,36 @@
+#!/usr/bin/env bash
+# Plan-identity check for refactors that must not move any registered
+# plan: dump every op's formatted plan (graft.Explain, sf0.001) at
+# <parent-rev> and in the working tree, mask the ids that differ between
+# two runs of the SAME code, and diff. Empty diff = identical plans.
+#
+#   scripts/plan_diff.sh <parent-rev> [work-dir]
+#
+# The parent is a `git archive` copy (not a worktree) under work-dir
+# (default: a fresh temp dir), built by its own sbt. Both dumps stay in
+# work-dir as ex_parent.txt / ex_change.txt.
+#
+# Masked: `#\d+` expression ids, exchange plan_ids, codegen and AQE
+# query-stage ids (stage materialization order is concurrent), temp-dir
+# suffixes and lambda class names. Temp-dir PREFIXES stay, so a renamed
+# persisted-table location shows up in the diff.
+set -euo pipefail
+rev=${1:?usage: scripts/plan_diff.sh <parent-rev> [work-dir]}
+work=${2:-$(mktemp -d -t graft_plan_diff.XXXXXX)}
+root=$(git rev-parse --show-toplevel)
+mkdir -p "$work/parent"
+git -C "$root" archive "$rev" | tar -x -C "$work/parent"
+(cd "$work/parent" && sbt -batch "runMain graft.Explain") > "$work/ex_parent.txt"
+(cd "$root" && sbt -batch "runMain graft.Explain") > "$work/ex_change.txt"
+mask() {
+  grep -v '^\[' "$1" | sed -E 's/#[0-9]+/#N/g; s/plan_id=[0-9]+/plan_id=N/g;
+    s/codegen id : [0-9]+/codegen id : N/g; s/^Arguments: [0-9]+$/Arguments: N/;
+    s#/tmp/([a-z_]+)[0-9a-f_-]+([/ ]|]|$)#/tmp/\1N\2#g;
+    s#(/tmp/[A-Za-z0-9_]*[A-Za-z_])-?[0-9]{6,}#\1N#g; s/Lambda\$[^ ]*/Lambda/g'
+}
+if diff <(mask "$work/ex_parent.txt") <(mask "$work/ex_change.txt"); then
+  echo "plan_diff: identical ($work)"
+else
+  echo "plan_diff: plans differ ($work)"
+  exit 1
+fi

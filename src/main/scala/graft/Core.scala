@@ -80,12 +80,6 @@ object Tables {
   */
 object GraftSession {
   def local(threads: Int = Runtime.getRuntime.availableProcessors.min(32)): SparkSession = {
-    // SPARK_GRAFT_LOCAL_AQE=off falls back to Spark's stock AQE skew
-    // thresholds (256 MB skew / 64 MB advisory) instead of the
-    // local-data-scale mirror below — the A/B instrument for isolating
-    // what the mirror costs/buys on a given corpus, and the escape hatch
-    // for runs whose partitions really are executor-sized.
-    val localAqe = !sys.env.get("SPARK_GRAFT_LOCAL_AQE").contains("off")
     val spark = SparkSession.builder()
       .withExtensions(graft.plans.GraftExtensions(_))
       .master(s"local[$threads]")
@@ -105,10 +99,8 @@ object GraftSession {
       // partition, so this is the local mirror of cluster behavior,
       // not a behavior change. (Verified: SortMergeJoin(skew=true) on
       // the skew-100x cartprod join, 10.9 -> 7.7 s warm.)
-      .config("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-        if (localAqe) "32m" else "256m")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        if (localAqe) "8m" else "64m")
+      .config("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "32m")
+      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
       // ObjectHashAggregate (collect_set_bounded / collect_list /
       // TypedImperativeAggregate posting-list builds) falls back to
       // SORT-based aggregation after 128 distinct keys per task by

@@ -59,6 +59,19 @@ final case class BloomState(filters: DataFrame, buckets: Int,
   */
 object GraftApi {
 
+  /** A `graft.*` session-conf override of a Long bound: the conf wins
+    * when set, else the caller's `default` — the ops knob for tests and
+    * for pipeline owners who know their data.
+    */
+  private[graft] def confLong(spark: SparkSession, key: String,
+      default: Long): Long =
+    spark.conf.getOption(key).map(_.toLong).getOrElse(default)
+
+  /** Default per-group string budget of [[groupConcatExport]] and its
+    * sharded and streaming faces (`graft.groupExport.maxGroupBytes`).
+    */
+  private[graft] val defaultMaxGroupBytes: Long = 268435456L
+
   /** asSquopt for plain in-memory collections: the reference lifts any
     * local Traversable into a queryable Exp; here a local Seq lifts into
     * a Dataset (a LocalRelation — Catalyst folds/prunes it like any
@@ -168,10 +181,8 @@ object GraftApi {
     */
   def adaptiveBroadcast(df: DataFrame, maxRows: Long = 4000000L,
       knownRowBound: Option[Long] = None): DataFrame = {
-    // session conf overrides the code default — the ops knob for tests
-    // and for pipeline owners who know their dup rate
-    val limit = df.sparkSession.conf.getOption("graft.adaptiveBroadcast.maxRows")
-      .map(_.toLong).getOrElse(maxRows)
+    val limit = confLong(df.sparkSession, "graft.adaptiveBroadcast.maxRows",
+      maxRows)
     // caller-supplied row UPPER BOUND (e.g. pipeline_keep_best's
     // winners/losers are subsets of a label set whose exact size the
     // driver already read off a LocalRelation): a bound at or under the
@@ -837,9 +848,8 @@ object GraftApi {
       leftId: String, rightId: String, windowMs: Long, k: Int,
       pairBound: Long = 50000000L, blockMs: Long = 3600000L): DataFrame = {
     require(windowMs >= 0, s"rangeJoinEarliestKAuto: windowMs must be >= 0, got $windowMs")
-    val bound = left.sparkSession.conf
-      .getOption("graft.rangeJoinEarliestK.pairBound")
-      .map(_.toLong).getOrElse(pairBound)
+    val bound = confLong(left.sparkSession,
+      "graft.rangeJoinEarliestK.pairBound", pairBound)
     // windowMs = 0 (exact-time matches) is legal for the rank path but
     // the estimate's bucket width would divide by zero — route straight
     // to the always-safe branch
@@ -1076,8 +1086,8 @@ object GraftApi {
   private def dispatch(df: DataFrame, hottest: Long, hotKeyBound: Long)(
       simple: DataFrame => DataFrame)(
       blocks: DataFrame => DataFrame)(input: DataFrame): DataFrame = {
-    val limit = df.sparkSession.conf.getOption("graft.skewAdaptive.hotKeyBound")
-      .map(_.toLong).getOrElse(hotKeyBound)
+    val limit = confLong(df.sparkSession, "graft.skewAdaptive.hotKeyBound",
+      hotKeyBound)
     if (hottest <= limit) simple(input) else blocks(input)
   }
 
@@ -1121,8 +1131,7 @@ object GraftApi {
     val l = left.withColumn("_bkt", explode(sequence(
       floor((lMs + lowerMs) / widthMs), floor((lMs + upperMs) / widthMs))))
     val r = right.withColumn("_rbkt", floor(rMs / widthMs))
-    val limit = left.sparkSession.conf.getOption("graft.rangeJoin.maxPairs")
-      .map(_.toLong).getOrElse(maxPairs)
+    val limit = confLong(left.sparkSession, "graft.rangeJoin.maxPairs", maxPairs)
     if (limit < Long.MaxValue) {
       val pairs = rangeJoinPairEstimate(left, right, leftKey, rightKey,
         leftTime, rightTime, lowerMs, upperMs)
@@ -1180,10 +1189,9 @@ object GraftApi {
     * we fail loudly where it would OOM.
     */
   def groupConcatExport(df: DataFrame, key: String, elem: String,
-      out: String = "elems", maxGroupBytes: Long = 268435456L): DataFrame = {
-    val limit = df.sparkSession.conf
-      .getOption("graft.groupExport.maxGroupBytes")
-      .map(_.toLong).getOrElse(maxGroupBytes)
+      out: String = "elems", maxGroupBytes: Long = defaultMaxGroupBytes): DataFrame = {
+    val limit = confLong(df.sparkSession, "graft.groupExport.maxGroupBytes",
+      maxGroupBytes)
     if (limit < Long.MaxValue) {
       // octet_length, not length: the limit is a BYTE budget and
       // multi-byte UTF-8 elements would otherwise pass up to ~4x over it
@@ -1220,7 +1228,7 @@ object GraftApi {
     */
   def groupConcatExportSharded(df: DataFrame, key: String, elem: String,
       rowsPerShard: Long, out: String = "elems",
-      maxGroupBytes: Long = 268435456L): DataFrame = {
+      maxGroupBytes: Long = defaultMaxGroupBytes): DataFrame = {
     require(rowsPerShard >= 1,
       s"groupConcatExportSharded: rowsPerShard=$rowsPerShard must be >= 1")
     // A shard string is still ONE aggregation-buffer value — bounding by
@@ -1231,9 +1239,8 @@ object GraftApi {
     // count or its key's total bytes, so one-shard-per-group usage with
     // a generous rowsPerShard stays valid. octet_length, not length —
     // the limit is a byte budget.
-    val limit = df.sparkSession.conf
-      .getOption("graft.groupExport.maxGroupBytes")
-      .map(_.toLong).getOrElse(maxGroupBytes)
+    val limit = confLong(df.sparkSession, "graft.groupExport.maxGroupBytes",
+      maxGroupBytes)
     if (limit < Long.MaxValue) {
       val st = df.groupBy(col(key))
         .agg(count(lit(1)).as("_n"),

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Op, Tables}
+import graft.{Op, Tables, TempWarehouse}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -1027,23 +1027,19 @@ object Dedup {
       sketchTable(docs.filter(col("doc_id") % 10 === 0)), 0.2)
   }
 
-  private val skTblLock = new Object
   /** Bucket count of the persisted posting layout — matches the local
     * parallelism like Similarity.hotSlices; a cluster sizes it to its
     * executor count at index-build time.
     */
   private[graft] val skBuckets = 32
   /** Get-or-build the persisted sketch state of `dir`'s corpus shard
-    * (doc_id % 10 ≠ 0 — the registered split). Same persistence
-    * contract as Similarity.persistedIvfIndex: deterministic build,
-    * session-catalog database, rebuilt per session in in-memory-catalog
-    * sessions, kept across jobs in a warehouse deployment.
+    * (doc_id % 10 ≠ 0 — the registered split), through the
+    * [[graft.TempWarehouse.getOrBuild]] persistence contract.
     *
     * r14 layout (VERDICT r13 #7 — serve joins must not re-shuffle
     * corpus state): THREE tables, the probe-keyed ones bucketed AND
-    * per-bucket sorted (repartition(buckets, h) before the write so
-    * each bucket is ONE file and the sortBy order survives — Spark
-    * only trusts bucket order on single-file buckets):
+    * per-bucket sorted, one file per bucket
+    * ([[graft.TempWarehouse.writeBucketed]]):
     *   - `sk(doc_id, shingles, sketch)` — the wide verify state;
     *   - `post(doc_id, h)` — exploded postings, bucketBy(h)/sortBy(h);
     *   - `hcnt(h, cn)` — per-hash distinct-doc counts, same layout.
@@ -1052,31 +1048,17 @@ object Dedup {
       tag: String = "corpus90",
       corpusOf: DataFrame => DataFrame = _.filter(col("doc_id") % 10 =!= 0))
       : (DataFrame, DataFrame, DataFrame) = {
-    val keyHex = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir|$tag|v2".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-    val db = s"graft_sk_$keyHex"
-    skTblLock.synchronized {
-      if (!spark.catalog.databaseExists(db) ||
-          !spark.catalog.tableExists(s"$db.hcnt")) {
-        val loc = graft.TempWarehouse.dir("graft_sk_tbl")
-        spark.sql(s"CREATE DATABASE IF NOT EXISTS $db LOCATION '$loc'")
-        sketchTable(corpusOf(Tables.documents(spark, dir)))
-          .write.mode("overwrite").saveAsTable(s"$db.sk")
-        val post = spark.table(s"$db.sk")
-          .select(col("doc_id"), explode(col("sketch")).as("h"))
-          .repartition(skBuckets, col("h"))
-        post.write.mode("overwrite")
-          .bucketBy(skBuckets, "h").sortBy("h").saveAsTable(s"$db.post")
-        spark.table(s"$db.post")
-          .groupBy("h").agg(countDistinct(col("doc_id")).as("cn"))
-          .repartition(skBuckets, col("h"))
-          .write.mode("overwrite")
-          .bucketBy(skBuckets, "h").sortBy("h").saveAsTable(s"$db.hcnt")
-      }
-    }
-    (spark.table(s"$db.sk"), spark.table(s"$db.post"),
-      spark.table(s"$db.hcnt"))
+    TempWarehouse.getOrBuild(spark, "graft_sk",
+        s"$dir|$tag|v2", Seq("sk", "post", "hcnt")) { db =>
+      sketchTable(corpusOf(Tables.documents(spark, dir)))
+        .write.mode("overwrite").saveAsTable(s"$db.sk")
+      TempWarehouse.writeBucketed(spark.table(s"$db.sk")
+        .select(col("doc_id"), explode(col("sketch")).as("h")),
+        s"$db.post", skBuckets, "h")
+      TempWarehouse.writeBucketed(spark.table(s"$db.post")
+        .groupBy("h").agg(countDistinct(col("doc_id")).as("cn")),
+        s"$db.hcnt", skBuckets, "h")
+    } match { case Seq(sk, post, hcnt) => (sk, post, hcnt) }
   }
 
   /** Exact substring (duplicated-span) detection — the third classic
@@ -1474,7 +1456,6 @@ object Dedup {
       docs.filter(col("doc_id") % 10 === 0), parts, corpusHint = "MERGE")
   }
 
-  private val gcTblLock = new Object
   /** Get-or-build the persisted per-gram count table of `dir`'s corpus
     * shard (doc_id % 10 ≠ 0 — the registered split): `gc(g, n)`
     * bucketBy([[skBuckets]], g) + sortBy(g), one file per bucket
@@ -1486,24 +1467,13 @@ object Dedup {
   private def persistedGramCounts(spark: SparkSession, dir: String,
       tag: String = "corpus90",
       corpusOf: DataFrame => DataFrame = _.filter(col("doc_id") % 10 =!= 0))
-      : DataFrame = {
-    val keyHex = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir|$tag|gc|v2digest".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-    val db = s"graft_gc_$keyHex"
-    gcTblLock.synchronized {
-      if (!spark.catalog.databaseExists(db) ||
-          !spark.catalog.tableExists(s"$db.gc")) {
-        val loc = graft.TempWarehouse.dir("graft_gc_tbl")
-        spark.sql(s"CREATE DATABASE IF NOT EXISTS $db LOCATION '$loc'")
-        substringCountTable(corpusOf(Tables.documents(spark, dir)))
-          .repartition(skBuckets, col("g"))
-          .write.mode("overwrite")
-          .bucketBy(skBuckets, "g").sortBy("g").saveAsTable(s"$db.gc")
-      }
-    }
-    spark.table(s"$db.gc")
-  }
+      : DataFrame =
+    TempWarehouse.getOrBuild(spark, "graft_gc", s"$dir|$tag|gc|v2digest",
+        Seq("gc")) { db =>
+      TempWarehouse.writeBucketed(
+        substringCountTable(corpusOf(Tables.documents(spark, dir))),
+        s"$db.gc", skBuckets, "g")
+    }.head
 
   /** Absorb-back face of the substring family (completing its
     * lifecycle — batch score, strip, incremental, streaming, UPSERT —
@@ -1539,12 +1509,10 @@ object Dedup {
     */
   def compactCountState(spark: SparkSession, base: DataFrame,
       absorb: DataFrame, keyCol: String, targetTable: String): DataFrame = {
-    base.select(col(keyCol), col("n"))
+    TempWarehouse.writeBucketed(base.select(col(keyCol), col("n"))
       .unionByName(absorb.select(col(keyCol), col("n")))
-      .groupBy(keyCol).agg(sum(col("n")).as("n"))
-      .repartition(skBuckets, col(keyCol))
-      .write.mode("overwrite")
-      .bucketBy(skBuckets, keyCol).sortBy(keyCol).saveAsTable(targetTable)
+      .groupBy(keyCol).agg(sum(col("n")).as("n")),
+      targetTable, skBuckets, keyCol)
     spark.table(targetTable)
   }
 
@@ -1950,24 +1918,13 @@ object Dedup {
     */
   private def persistedParagraphHashes(spark: SparkSession, dir: String,
       tag: String,
-      corpusOf: DataFrame => DataFrame): DataFrame = {
-    val keyHex = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir|para|$tag|v1".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-    val db = s"graft_ph_$keyHex"
-    skTblLock.synchronized {
-      if (!spark.catalog.databaseExists(db) ||
-          !spark.catalog.tableExists(s"$db.hn")) {
-        val loc = graft.TempWarehouse.dir("graft_ph_tbl")
-        spark.sql(s"CREATE DATABASE IF NOT EXISTS $db LOCATION '$loc'")
-        paragraphHashCounts(pseudoParas(corpusOf(Tables.documents(spark, dir))))
-          .repartition(skBuckets, col("h"))
-          .write.mode("overwrite")
-          .bucketBy(skBuckets, "h").sortBy("h").saveAsTable(s"$db.hn")
-      }
-    }
-    spark.table(s"$db.hn")
-  }
+      corpusOf: DataFrame => DataFrame): DataFrame =
+    TempWarehouse.getOrBuild(spark, "graft_ph", s"$dir|para|$tag|v1",
+        Seq("hn")) { db =>
+      TempWarehouse.writeBucketed(
+        paragraphHashCounts(pseudoParas(corpusOf(Tables.documents(spark, dir)))),
+        s"$db.hn", skBuckets, "h")
+    }.head
 
   /** CCNet paragraph ADMISSION of an arriving doc frame against the
     * persisted corpus paragraph-hash state, with an optional
@@ -2149,24 +2106,13 @@ object Dedup {
     * time.
     */
   private def persistedContentHashes(spark: SparkSession, dir: String,
-      tag: String, corpusOf: DataFrame => DataFrame): DataFrame = {
-    val keyHex = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir|ch|$tag|v1|$skBuckets".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-    val db = s"graft_ch_$keyHex"
-    skTblLock.synchronized {
-      if (!spark.catalog.databaseExists(db) ||
-          !spark.catalog.tableExists(s"$db.ch")) {
-        val loc = graft.TempWarehouse.dir("graft_ch_tbl")
-        spark.sql(s"CREATE DATABASE IF NOT EXISTS $db LOCATION '$loc'")
-        contentHashes(corpusOf(Tables.documents(spark, dir)))
-          .repartition(skBuckets, col("k"))
-          .write.mode("overwrite")
-          .bucketBy(skBuckets, "k").sortBy("k").saveAsTable(s"$db.ch")
-      }
-    }
-    spark.table(s"$db.ch")
-  }
+      tag: String, corpusOf: DataFrame => DataFrame): DataFrame =
+    TempWarehouse.getOrBuild(spark, "graft_ch", s"$dir|ch|$tag|v1|$skBuckets",
+        Seq("ch")) { db =>
+      TempWarehouse.writeBucketed(
+        contentHashes(corpusOf(Tables.documents(spark, dir))),
+        s"$db.ch", skBuckets, "k")
+    }.head
 
   /** Registered bloom-state geometry (r15): bucket count and per-bucket
     * sizing are a WAREHOUSE CONSTANT pinned at state-create time — every
@@ -2193,25 +2139,16 @@ object Dedup {
     // must invalidate the persisted state, not just the merge. The
     // public-surface equivalent is graft.api.BloomState, which carries
     // (buckets, items) with the filter frame and fail-fasts on mismatch
-    val keyHex = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir|bloom|$tag|v1|$bloomStateBuckets|$bloomStateItemsPerBucket"
-        .getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-    val db = s"graft_bl_$keyHex"
-    skTblLock.synchronized {
-      if (!spark.catalog.databaseExists(db) ||
-          !spark.catalog.tableExists(s"$db.bf")) {
-        val loc = graft.TempWarehouse.dir("graft_bl_tbl")
-        spark.sql(s"CREATE DATABASE IF NOT EXISTS $db LOCATION '$loc'")
-        bloomBucketFilters(
-          withTextBkt(corpusOf(Tables.documents(spark, dir)), bloomStateBuckets),
-          bloomStateItemsPerBucket,
-          parts = bloomStateBuckets)
-          .write.mode("overwrite")
-          .bucketBy(bloomStateBuckets, "bkt").saveAsTable(s"$db.bf")
-      }
-    }
-    spark.table(s"$db.bf")
+    TempWarehouse.getOrBuild(spark, "graft_bl",
+        s"$dir|bloom|$tag|v1|$bloomStateBuckets|$bloomStateItemsPerBucket",
+        Seq("bf")) { db =>
+      bloomBucketFilters(
+        withTextBkt(corpusOf(Tables.documents(spark, dir)), bloomStateBuckets),
+        bloomStateItemsPerBucket,
+        parts = bloomStateBuckets)
+        .write.mode("overwrite")
+        .bucketBy(bloomStateBuckets, "bkt").saveAsTable(s"$db.bf")
+    }.head
   }
 
   /** Bloom membership of an arriving delta against persisted per-bucket
@@ -2624,6 +2561,17 @@ object Dedup {
     require(copies >= 1 && copies < 128,
       s"composedRecallFrom: copies=$copies must be in [1, 127] — replica " +
         "ids pack as -(doc_id*128 + c)")
+    // the amplified-arm sketch replay below selects replicas off the
+    // (doc_id, sketch) frame with the same predicate, so it must read
+    // doc_id alone
+    val ampRefs = base0.filter(ampFilter).queryExecution.analyzed
+      .collectFirst { case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
+        f.condition.references.toSeq.map(_.name) }.getOrElse(Nil)
+    require(ampRefs.forall(_.equalsIgnoreCase("doc_id")),
+      s"composedRecallFrom: ampFilter may reference only doc_id, got " +
+        s"${ampRefs.distinct.mkString(", ")} — replicas are packed as " +
+        "-(doc_id*128 + c) off the (doc_id, sketch) frame, so the " +
+        "predicate must select the same rows there as on (doc_id, text)")
     val base = base0.select(col("doc_id").cast("long").as("doc_id"),
       col("text"))
       // assert_true is NULL when the predicate holds, so the filter keeps
@@ -2667,9 +2615,8 @@ object Dedup {
     // PER BASE DOC and replays the replica id packing over (doc_id,
     // sketch) rows — `copies`× fewer kernel evaluations on the amplified
     // slice, byte-identical sketches by kernel determinism
-    // (ShingleSketchSpec). Requires ampFilter to read only doc_id, which
-    // both call sites (the registered op, DedupSpec) satisfy — the same
-    // predicate selects the same rows off the sketch frame. The verify
+    // (ShingleSketchSpec). ampFilter reads only doc_id (required above),
+    // so it selects the same rows off the sketch frame. The verify
     // sliver still reads amp's texts (candidate-bounded, tiny under
     // saturation); grp/ar keep reading the cached amp unchanged.
     // Base rows come off the CACHED amp (doc_id >= 0 ⇔ base: replica ids

@@ -225,19 +225,15 @@ object Pipeline {
     * aggregate over the EVAL side only (never the corpus), on a frame the
     * chosen formulation consumes anyway. Both paths are result-identical
     * (PipelineAdaptiveSpec on a large-benchmark corpus; EdgeCaseSpec at
-    * the switch boundary). Session conf
-    * `graft.decontaminate.broadcastMaxGrams` overrides the default.
+    * the switch boundary).
     */
   def decontaminate(train: org.apache.spark.sql.DataFrame,
       bench: org.apache.spark.sql.DataFrame, tau: Double,
       broadcastMaxGrams: Long = 100000L): org.apache.spark.sql.DataFrame = {
-    val limit = train.sparkSession.conf
-      .getOption("graft.decontaminate.broadcastMaxGrams")
-      .map(_.toLong).getOrElse(broadcastMaxGrams)
     val grams = graft.CacheRegistry.track(
       bench.select(explode(col("shingles")).as("g")).distinct())
     val scored =
-      if (grams.count() <= limit) {
+      if (grams.count() <= broadcastMaxGrams) {
         val bg = grams.agg(collect_list(col("g")).as("bg"))
         val overlap = size(array_intersect(col("shingles"), col("bg")))
         train.crossJoin(broadcast(bg))

@@ -778,6 +778,11 @@ object Similarity {
       "vec_id", "embedding", k = 5, oversample = 8, stats = Some(stats1))
   }
 
+  /** Sub-cell count for pre-split hot inverted lists — matches the local
+    * bucket count; a cluster deployment sizes both to its executor
+    * parallelism at index-build time.
+    */
+  private[graft] val hotSlices = 32
   /** Get-or-build the persisted IVF index of `dir`'s embeddings table:
     * first call per (session, corpus) trains [[ivfIndex]] and writes it
     * to a session-catalog database; later calls only read the tables.
@@ -799,12 +804,6 @@ object Similarity {
     *     repartition exchange. Serving detects the layout by the slice
     *     column ([[ivfIndexProbeSearch]]).
     */
-  private val ivfIdxLock = new Object
-  /** Sub-cell count for pre-split hot inverted lists — matches the local
-    * bucket count; a cluster deployment sizes both to its executor
-    * parallelism at index-build time.
-    */
-  private[graft] val hotSlices = 32
   private def persistedIvfIndex(spark: SparkSession, dir: String,
       cells: Int, iters: Int, trainTag: String = "all",
       train: DataFrame => DataFrame = identity)
@@ -812,32 +811,23 @@ object Similarity {
     // trainTag/train carve the TRAINING corpus (the upsert ops persist a
     // base index of the 4/5 subset so their timed runs measure the
     // delta-sized absorb, not the one-time build — VERDICT r12 #4); the
-    // tag keys the persisted database, the default keeps pre-r13 keys
-    val keyHex = java.security.MessageDigest.getInstance("MD5")
-      .digest((s"$dir|$cells|$iters" +
-        (if (trainTag == "all") "" else s"|$trainTag")).getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
+    // tag keys the persisted database, the default keeps pre-r13 keys;
     // v3 prefix: layout change (stats table + pre-split slice column)
-    val db = s"graft_ivf3_$keyHex"
-    ivfIdxLock.synchronized {
-      if (!spark.catalog.databaseExists(db) ||
-          !spark.catalog.tableExists(s"$db.stats")) {
-        val loc = graft.TempWarehouse.dir("graft_ivf_idx")
-        spark.sql(s"CREATE DATABASE IF NOT EXISTS $db LOCATION '$loc'")
-        val (cents, lists) = ivfIndex(
-          train(Tables.embeddings(spark, dir)), "vec_id", "embedding",
-          cells, iters)
-        cents.write.mode("overwrite").saveAsTable(s"$db.cents")
-        val occ = lists.groupBy("cent_id").agg(count(lit(1)).as("cnt"))
-        occ.write.mode("overwrite").saveAsTable(s"$db.stats")
-        preSplitByOccupancy(lists, spark.table(s"$db.stats"), "vec_id")
-          .write.mode("overwrite")
-          .bucketBy(hotSlices, "cent_id", "slice").sortBy("cent_id", "slice")
-          .saveAsTable(s"$db.lists")
-      }
-    }
-    (spark.table(s"$db.cents"), spark.table(s"$db.lists"),
-      spark.table(s"$db.stats"))
+    graft.TempWarehouse.getOrBuild(spark,
+        "graft_ivf3", s"$dir|$cells|$iters" +
+          (if (trainTag == "all") "" else s"|$trainTag"),
+        Seq("cents", "lists", "stats")) { db =>
+      val (cents, lists) = ivfIndex(
+        train(Tables.embeddings(spark, dir)), "vec_id", "embedding",
+        cells, iters)
+      cents.write.mode("overwrite").saveAsTable(s"$db.cents")
+      val occ = lists.groupBy("cent_id").agg(count(lit(1)).as("cnt"))
+      occ.write.mode("overwrite").saveAsTable(s"$db.stats")
+      preSplitByOccupancy(lists, spark.table(s"$db.stats"), "vec_id")
+        .write.mode("overwrite")
+        .bucketBy(hotSlices, "cent_id", "slice").sortBy("cent_id", "slice")
+        .saveAsTable(s"$db.lists")
+    } match { case Seq(cents, lists, stats) => (cents, lists, stats) }
   }
 
   /** Add the pre-split `slice` column to a cell-keyed frame: rows of
@@ -914,37 +904,27 @@ object Similarity {
       trainTag: String = "all", train: DataFrame => DataFrame = identity)
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
     // trainTag/train: see persistedIvfIndex — the upsert op's base index
-    val keyHex = java.security.MessageDigest.getInstance("MD5")
-      .digest((s"$dir|$cells|$numSubs|$subDim|$codebookSize" +
-        (if (trainTag == "all") "" else s"|$trainTag")).getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-    // v3 prefix: layout change (stats table + pre-split slice column)
-    val db = s"graft_ivfpq3_$keyHex"
-    ivfIdxLock.synchronized {
-      if (!spark.catalog.databaseExists(db) ||
-          !spark.catalog.tableExists(s"$db.stats")) {
-        val loc = graft.TempWarehouse.dir("graft_ivfpq_idx")
-        spark.sql(s"CREATE DATABASE IF NOT EXISTS $db LOCATION '$loc'")
-        val emb = train(Tables.embeddings(spark, dir))
-        val (_, c1p, assign1) = ivfBuild(emb, "vec_id", "embedding", cells, 1)
-        val cbs = graft.api.GraftApi.pqCodebooks(
-          emb, "vec_id", "embedding", numSubs, subDim, codebookSize)
-        val codes = graft.api.GraftApi.pqEncode(
-            emb, "vec_id", "embedding", cbs, numSubs, subDim)
-          .join(assign1, col("vec_id") === col("a_vec"))
-          .select(col("vec_id"), col("codes"), col("a_cent").as("cent_id"))
-        c1p.drop("part").write.mode("overwrite").saveAsTable(s"$db.cents")
-        cbs.write.mode("overwrite").saveAsTable(s"$db.cbs")
-        codes.groupBy("cent_id").agg(count(lit(1)).as("cnt"))
-          .write.mode("overwrite").saveAsTable(s"$db.stats")
-        preSplitByOccupancy(codes, spark.table(s"$db.stats"), "vec_id")
-          .write.mode("overwrite")
-          .bucketBy(hotSlices, "cent_id", "slice").sortBy("cent_id", "slice")
-          .saveAsTable(s"$db.codes")
-      }
-    }
-    (spark.table(s"$db.cents"), spark.table(s"$db.cbs"),
-      spark.table(s"$db.codes"), spark.table(s"$db.stats"))
+    graft.TempWarehouse.getOrBuild(spark,
+        "graft_ivfpq3", s"$dir|$cells|$numSubs|$subDim|$codebookSize" +
+          (if (trainTag == "all") "" else s"|$trainTag"),
+        Seq("cents", "cbs", "codes", "stats")) { db =>
+      val emb = train(Tables.embeddings(spark, dir))
+      val (_, c1p, assign1) = ivfBuild(emb, "vec_id", "embedding", cells, 1)
+      val cbs = graft.api.GraftApi.pqCodebooks(
+        emb, "vec_id", "embedding", numSubs, subDim, codebookSize)
+      val codes = graft.api.GraftApi.pqEncode(
+          emb, "vec_id", "embedding", cbs, numSubs, subDim)
+        .join(assign1, col("vec_id") === col("a_vec"))
+        .select(col("vec_id"), col("codes"), col("a_cent").as("cent_id"))
+      c1p.drop("part").write.mode("overwrite").saveAsTable(s"$db.cents")
+      cbs.write.mode("overwrite").saveAsTable(s"$db.cbs")
+      codes.groupBy("cent_id").agg(count(lit(1)).as("cnt"))
+        .write.mode("overwrite").saveAsTable(s"$db.stats")
+      preSplitByOccupancy(codes, spark.table(s"$db.stats"), "vec_id")
+        .write.mode("overwrite")
+        .bucketBy(hotSlices, "cent_id", "slice").sortBy("cent_id", "slice")
+        .saveAsTable(s"$db.codes")
+    } match { case Seq(cents, cbs, codes, stats) => (cents, cbs, codes, stats) }
   }
 
   /** Lloyd-refined IVF cosine top-k as a library function over any

@@ -89,9 +89,8 @@ object GroupExportStream {
     // aggregation-buffer value here. Elements are rendered longs — ≤ 20
     // chars + separator — so the worst case needs no scan (division, not
     // multiplication: a huge rowsPerShard must not overflow past the guard)
-    val limit = pieces.sparkSession.conf
-      .getOption("graft.groupExport.maxGroupBytes")
-      .map(_.toLong).getOrElse(268435456L)
+    val limit = graft.api.GraftApi.confLong(pieces.sparkSession,
+      "graft.groupExport.maxGroupBytes", graft.api.GraftApi.defaultMaxGroupBytes)
     if (limit < Long.MaxValue)
       require(21L <= limit / rowsPerShard,
         s"reshardPieces: rowsPerShard=$rowsPerShard × worst-case rendered " +

@@ -317,6 +317,15 @@ class DedupSpec extends SparkSpec {
     assert(out("composed") == ((truth, truth, truth)), out)
   }
 
+  test("composed recall: an ampFilter reading text fails with the replica-packing contract") {
+    val docs = hotDocs(Seq((0L, base), (1L, base.replace("fast", "quick"))), base, n = 0)
+    val e = intercept[IllegalArgumentException](
+      Dedup.composedRecallFrom(docs, ampFilter = col("text").contains("fast"),
+        copies = 2))
+    assert(e.getMessage.contains("ampFilter may reference only doc_id"), e)
+    assert(e.getMessage.contains("-(doc_id*128 + c)"), e)
+  }
+
   test("recall audit: exact counts on the crafted corpus, per-method invariants") {
     val out = Dedup.recallAuditFrom(spark.read.parquet(s"$docsDir/documents.parquet"))
       .collect().map(r => r.getAs[String]("method") ->
