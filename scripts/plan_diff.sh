@@ -14,6 +14,9 @@
 # query-stage ids (stage materialization order is concurrent), temp-dir
 # suffixes and lambda class names. Temp-dir PREFIXES stay, so a renamed
 # persisted-table location shows up in the diff.
+#
+# Output: the names of the ops whose masked plans differ, one a line,
+# then the full diff. Exit 0 when identical, 1 otherwise.
 set -euo pipefail
 rev=${1:?usage: scripts/plan_diff.sh <parent-rev> [work-dir]}
 work=${2:-$(mktemp -d -t graft_plan_diff.XXXXXX)}
@@ -28,7 +31,17 @@ mask() {
     s#/tmp/([a-z_]+)[0-9a-f_-]+([/ ]|]|$)#/tmp/\1N\2#g;
     s#(/tmp/[A-Za-z0-9_]*[A-Za-z_])-?[0-9]{6,}#\1N#g; s/Lambda\$[^ ]*/Lambda/g'
 }
-if diff <(mask "$work/ex_parent.txt") <(mask "$work/ex_change.txt"); then
+# every masked plan line prefixed with its op's name (from the
+# `========== name ==========` section headers), so diff lines name the op
+by_op() {
+  awk '/^========== .* ==========$/ {op = $2; next} {print op "\t" $0}' "$1"
+}
+mask "$work/ex_parent.txt" > "$work/ex_parent.masked"
+mask "$work/ex_change.txt" > "$work/ex_change.masked"
+# the ops whose masked plans differ (or exist on one side only), one a line
+{ diff <(by_op "$work/ex_parent.masked") <(by_op "$work/ex_change.masked") || true; } |
+  awk -F'\t' '/^[<>] / {print substr($1, 3)}' | sort -u
+if diff "$work/ex_parent.masked" "$work/ex_change.masked"; then
   echo "plan_diff: identical ($work)"
 else
   echo "plan_diff: plans differ ($work)"

@@ -376,7 +376,8 @@ object ScaleSmoke {
     //     indistinguishable from "nothing to find".
     def satProbe(postings: (SparkSession, String) => org.apache.spark.sql.DataFrame)
         : (SparkSession, String) => Seq[(String, Long)] = { (spark, dir) =>
-      val r = graft.operators.Dedup.capAuditRow(postings(spark, dir), 64, "probe")
+      val r = graft.operators.Dedup.capAuditRow(postings(spark, dir),
+        graft.operators.Dedup.bucketCap, "probe")
         .select(col("sat_buckets"), col("sat_docs")).head()
       CacheRegistry.drain()
       Seq("sat_buckets" -> r.getLong(0), "sat_docs" -> r.getLong(1))

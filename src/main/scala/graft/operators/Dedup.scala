@@ -12,6 +12,15 @@ import org.apache.spark.sql.functions._
   * so the shuffle is keyed and the pair space is bounded by bucket sizes.
   * Signatures (shingle sets, minhash arrays, simhash bits) are pure per-row
   * array expressions — computed in one codegen'd scan, no UDFs.
+  *
+  * The near-dup family's contract lives in three helpers and one
+  * constant: [[cappedPairs]] (the capped posting-list pair expansion),
+  * [[jaccardVerify]] (the exact-Jaccard score) and [[sliverVerify]]
+  * (the candidate-pruned verify sliver), with [[bucketCap]] the one
+  * bucket bound. Every pair generator here — and Multimodal's phash,
+  * EventStreams' streaming verify, the embedding bucket caps in
+  * Similarity — goes through them, so a change to the cap or to the
+  * Jaccard contract is made once.
   */
 object Dedup {
 
@@ -82,28 +91,104 @@ object Dedup {
       .withColumn("cgrams", array_distinct(expr(gramExpr("words", 5))))
       .select(col("doc_id"), explode(col("cgrams")).as("g"))
 
-  /** Probe-id stream naming the docs a candidate pair set touches — the
-    * build side of every verify-sliver left-semi join. Registered form
-    * (r15): ONE explode branch over the (usually cached) pair frame +
-    * distinct — vs the r13 union of two projections, one cache read and
-    * one AQE stage-materialization job fewer (minhash_ab_r15.jsonl
-    * adjudicates hash-identically; warm plateau at sf0.1 1.97 → ~1.55 s
-    * with the driver-gap reduction). The distinct STAYS: a fully lean
-    * (no-distinct) variant was tried, and the same-day solo-1000×
-    * three-way A/B (legacy 874.9 / no-distinct 1078 / this form 1225
-    * cpu-s on dedup_recall_audit, canaries swinging 0.08–0.26) is
-    * NOISE-DOMINATED at scale — so the tie-breaker is risk, not a
-    * measured win: the un-deduped build side is 2·|pairs| rows vs
-    * |docs in pairs|, a real blow-up exactly on dup-heavy corpora
-    * where |pairs| ≫ |docs|, while the distinct costs one tiny-frame
-    * exchange at interactive scale. (The 122–225 MB serve spills that
-    * sweep surfaced appear in ALL THREE forms INCLUDING the
-    * byte-identical legacy plan that recorded 0 in the first-half
-    * era — environmental, pinned in BASELINE.md, not plan-attributed.)
+  /** The near-dup family's bucket cap: a posting list (shared shingle,
+    * sketch hash, band key) with more members than this is dropped
+    * wholesale — quadratic candidate mass with no discrimination, and
+    * true near-dup pairs also share a non-degenerate key. Every
+    * Spark-side bucket bound and every DuckDB oracle's `HAVING` bound
+    * reads this one value; [[capAudit]] counts what it drops.
     */
-  private[graft] def semiProbeIds(candHinted: DataFrame): DataFrame =
-    candHinted.select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
+  private[graft] val bucketCap = 64
+
+  /** Capped posting-list pair expansion — candidate pairs in ONE
+    * shuffle: group `postings` by `key`, collect each bucket's members
+    * with the cap enforced INSIDE the aggregation buffer
+    * (collect_set_bounded → NULL on overflow, so a boilerplate key
+    * shared by 100 M docs costs O(cap) buffer memory, not O(df) — same
+    * answer as collect_set + size filter, proven in
+    * CollectSetBoundedSpec), drop NULL and singleton buckets, and expand
+    * each kept list's pairs IN-GROUP with array HOFs (≤ cap·(cap−1)/2
+    * per bucket) — the df-count + rare-filter join + self-join triple
+    * shuffle this replaced found the identical pair set.
+    *
+    * `member` is the doc_id column (each pair ordered by least/greatest)
+    * or a struct led by doc_id carrying payload for a per-pair filter
+    * (the list is array-sorted so x precedes y; `extra` names the
+    * payload fields computed from x and y, e.g. a Hamming distance).
+    * Emits (doc_a, doc_b, extra…) with doc_a < doc_b, not distinct: a
+    * pair sharing several keys appears once per key.
+    */
+  private[graft] def cappedPairs(postings: DataFrame, key: String,
+      member: Column = col("doc_id"), extra: String = "",
+      cap: Int = bucketCap): DataFrame = {
+    require(cap >= 2,
+      s"cappedPairs: cap=$cap — a bucket needs two members to emit a pair")
+    val bounded = graft.functions.CollectSetBounded.collect_set_bounded(member, cap)
+    val (ms, name, pair) = postings.select(member).schema.head.dataType match {
+      case _: org.apache.spark.sql.types.StructType =>
+        (array_sort(bounded), "ms", s"x.doc_id as doc_a, y.doc_id as doc_b, $extra")
+      case _ => (bounded, "ids", "least(x, y) as doc_a, greatest(x, y) as doc_b")
+    }
+    postings.groupBy(key).agg(ms.as(name))
+      .filter(col(name).isNotNull && size(col(name)) >= 2)
+      .select(explode(expr(s"flatten(transform($name, (x, i) ->" +
+        s" transform(slice($name, i + 2, size($name) - i - 1), y -> struct($pair))))")).as("p"))
+      .select("p.*")
+  }
+
+  /** Exact-Jaccard verify — the family's one scoring contract:
+    * candidate pairs (doc_a, doc_b) join a (doc_id, shingles) frame on
+    * both sides (`sa`, `sb`) and keep |A∩B| / (|A| + |B| − |A∩B|) ≥
+    * `jaccardMin`, integer counts + one double division, so the score
+    * is bit-deterministic. Emits (doc_a, doc_b, n_common, jaccard).
+    */
+  private[graft] def jaccardVerify(cand: DataFrame, shingles: DataFrame,
+      jaccardMin: Double): DataFrame = {
+    val interSz = size(array_intersect(col("sa.shingles"), col("sb.shingles")))
+    val jac = interSz.cast("double") /
+      (size(col("sa.shingles")) + size(col("sb.shingles")) - interSz)
+    cand
+      .join(shingles.alias("sa"), col("sa.doc_id") === col("doc_a"))
+      .join(shingles.alias("sb"), col("sb.doc_id") === col("doc_b"))
+      .filter(jac >= jaccardMin)
+      .select(col("doc_a"), col("doc_b"), interSz.cast("long").as("n_common"),
+        jac.as("jaccard"))
+  }
+
+  /** [[jaccardVerify]] over a candidate-pruned sliver: the verify needs
+    * the shingles of exactly the docs the candidate pairs name, so
+    * `sliverOf(probeIds)` rebuilds them over that pair-bounded slice
+    * (tracked — both verify sides read it) instead of caching or
+    * shuffling corpus-wide arrays to serve a sliver of lookups.
+    *
+    * The cand side goes through [[graft.api.GraftApi.adaptiveBroadcast]]:
+    * capped buckets make the pair set tiny on most corpora, and the
+    * broadcast keeps the wide sliver from being shuffled+sorted twice
+    * just to probe it (the 1000× smoke measured that map stage 2× over
+    * linear before AQE could see the cand size); a mega-dup crawl's cand
+    * runs un-hinted.
+    *
+    * Probe ids (r15): ONE explode branch over the (usually cached) pair
+    * frame + distinct — vs the r13 union of two projections, one cache
+    * read and one AQE stage-materialization job fewer
+    * (minhash_ab_r15.jsonl adjudicates hash-identically). The distinct
+    * STAYS: a no-distinct variant's same-day solo-1000× A/B (legacy
+    * 874.9 / no-distinct 1078 / this form 1225 cpu-s on
+    * dedup_recall_audit, canaries swinging 0.08–0.26) is
+    * NOISE-DOMINATED, so the tie-breaker is risk: the un-deduped build
+    * side is 2·|pairs| rows vs |docs in pairs|, a real blow-up exactly
+    * on dup-heavy corpora where |pairs| ≫ |docs|, while the distinct
+    * costs one tiny-frame exchange at interactive scale.
+    */
+  private[graft] def sliverVerify(cand: DataFrame, jaccardMin: Double)(
+      sliverOf: DataFrame => DataFrame): DataFrame = {
+    val candHinted = graft.api.GraftApi.adaptiveBroadcast(cand)
+    val probeIds = candHinted
+      .select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
       .distinct()
+    jaccardVerify(candHinted, graft.CacheRegistry.track(sliverOf(probeIds)),
+      jaccardMin)
+  }
 
   /** Same shingle construction in DuckDB SQL (1-based lists), over a
     * caller-chosen docs source — a table name or a parenthesized
@@ -182,7 +267,7 @@ object Dedup {
     val pool = if (sampled) "sampled" else "grams"
     s"""WITH sh AS (${shinglesSqlFrom(src)}),
       |grams AS (SELECT doc_id, unnest(shingles) AS g FROM sh),
-      |${sampleCte}rare AS (SELECT g FROM $pool GROUP BY g HAVING COUNT(*) <= 64),
+      |${sampleCte}rare AS (SELECT g FROM $pool GROUP BY g HAVING COUNT(*) <= $bucketCap),
       |kept AS (SELECT doc_id, g FROM $pool WHERE g IN (SELECT g FROM rare)),
       |cand AS (
       |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -203,7 +288,7 @@ object Dedup {
     "dedup_ngram_jaccard",
     ngramPairsSqlFrom("documents", sampled = true),
   ) { (spark, dir) =>
-    ngramJaccardPlanFrom(fusedGramStream(4))(Tables.documents(spark, dir))
+    postingPairsPlan(fusedGramStream(4))(Tables.documents(spark, dir), 0.2)
   }
 
   /** The 1-in-4 content-stable gram sampling coin (see the ngramJaccard
@@ -234,66 +319,40 @@ object Dedup {
 
   /** The dedup_ngram_jaccard plan with a pluggable gram-sampling coin
     * over the composed posting stream — the reference ShingleSketchSpec
-    * pins the registered fused stream ([[ngramJaccardPlanFrom]]) against.
+    * pins the registered fused stream against.
     */
   private[graft] def ngramJaccardPlan(coin: Option[Column => Column])(
       docs: DataFrame): DataFrame =
-    ngramJaccardPlanFrom { d =>
+    postingPairsPlan { d =>
       val allGrams = ngramCandidateGrams(d)
       // 1-in-4 content-stable sample (see the op scaladoc): same
       // predicate semantics as the oracle, applied right at the explode
       // so the sampled-out grams never reach the exchange or agg buffers
       coin.fold(allGrams)(c => allGrams.filter(c(col("g"))))
-    }(docs)
+    }(docs, 0.2)
 
-  /** The pairs plan over an arbitrary (doc_id, g) posting stream — the
-    * candidate tail and exact-Jaccard verify shared by the composed and
-    * fused stream builders.
+  /** The near-dup pair plan over a posting stream: `postings(docs)` is a
+    * (doc_id, key) stream — gram digests for dedup_ngram_jaccard
+    * ([[fusedGramStream]]), sketch hashes for [[minhashPairs]]
+    * ([[sketchPostings]]) — whose key is its second column. Candidates
+    * are the [[cappedPairs]] of that stream, verified by
+    * [[sliverVerify]] over [[withShingles]] of the candidate docs.
+    * Emits (doc_a, doc_b, n_common, jaccard).
+    *
+    * No corpus-wide shingle cache: with the shingle arrays cached, the
+    * 24g uniform-1000× sweep read the minhash op BIMODALLY — 740 vs
+    * 1954 cpu-s across code-identical runs, borderline LRU eviction
+    * serializing wide array blocks mid-query — so since r13 the stream
+    * explodes off one fresh scan and the verify rebuilds shingles over
+    * the candidate sliver only.
     */
-  private[graft] def ngramJaccardPlanFrom(postings: DataFrame => DataFrame)(
-      docs: DataFrame): DataFrame = {
-    // no corpus-wide shingle cache (see minhashPairs: borderline LRU
-    // eviction of wide array blocks made sweeps bimodal) — the posting
-    // stream explodes off one fresh scan, and the verify probes read a
-    // candidate-pruned sliver rebuilt below
-    val grams = postings(docs)
-    // Candidate pairs in ONE shuffle: group the posting list per shingle,
-    // drop ultra-common shingles (df cap — quadratic candidate mass,
-    // zero discrimination), and expand each remaining list's pairs
-    // IN-GROUP with array HOFs (≤ 64·63/2 pairs per group) — replacing
-    // the df-count + rare-filter join + self-join triple shuffle. The
-    // pair set is identical: docs sharing a rare shingle. The cap is
-    // enforced INSIDE the aggregation buffer (collect_set_bounded →
-    // NULL on overflow), so a boilerplate shingle shared by 100 M docs
-    // costs O(cap) buffer memory, not O(df) — same answer as
-    // collect_set + size filter, proven in CollectSetBoundedSpec.
-    val cand = grams.groupBy("g")
-      .agg(graft.functions.CollectSetBounded
-        .collect_set_bounded(col("doc_id"), 64).as("ids"))
-      .filter(col("ids").isNotNull && size(col("ids")) >= 2)
-      .select(explode(expr(
-        "flatten(transform(ids, (x, i) -> transform(slice(ids, i + 2, size(ids) - i - 1)," +
-          " y -> struct(least(x, y) as doc_a, greatest(x, y) as doc_b))))")).as("p"))
-      .select("p.doc_a", "p.doc_b")
-      .distinct()
-    val interSz = size(array_intersect(col("sa.shingles"), col("sb.shingles")))
-    val jac = interSz.cast("double") /
-      (size(col("sa.shingles")) + size(col("sb.shingles")) - interSz)
-    // adaptive cand side: capped buckets make the pair set tiny on most
-    // corpora, and a broadcast hint keeps the wide shingle sliver from
-    // being shuffled+sorted twice just to probe it (the 1000× smoke
-    // measured that map stage as 2× over linear before AQE could see the
-    // cand size); past the row threshold the joins run un-hinted
-    val candHinted = graft.api.GraftApi.adaptiveBroadcast(cand)
-    val sliver = graft.CacheRegistry.track(
-      withShingles(docs.join(semiProbeIds(candHinted), Seq("doc_id"), "left_semi"))
+  private[graft] def postingPairsPlan(postings: DataFrame => DataFrame)(
+      docs: DataFrame, jaccardMin: Double): DataFrame = {
+    val stream = postings(docs)
+    val cand = cappedPairs(stream, stream.columns(1)).distinct()
+    sliverVerify(cand, jaccardMin)(ids =>
+      withShingles(docs.join(ids, Seq("doc_id"), "left_semi"))
         .select("doc_id", "shingles"))
-    candHinted
-      .join(sliver.alias("sa"), col("sa.doc_id") === col("doc_a"))
-      .join(sliver.alias("sb"), col("sb.doc_id") === col("doc_b"))
-      .filter(jac >= 0.2)
-      .select(col("doc_a"), col("doc_b"),
-        interSz.cast("long").as("n_common"), jac.as("jaccard"))
   }
 
   /** MinHash sketch → LSH bucket → candidate CTE chain in DuckDB SQL
@@ -311,7 +370,7 @@ object Dedup {
       |         list_sort(list_transform(shingles, s -> md5(s)))[1:8] AS sketch
       |       FROM sh),
       |buckets AS (SELECT doc_id, unnest(sketch) AS h FROM sk),
-      |small AS (SELECT h FROM buckets GROUP BY h HAVING COUNT(*) <= 64),
+      |small AS (SELECT h FROM buckets GROUP BY h HAVING COUNT(*) <= $bucketCap),
       |cand AS (
       |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
       |  FROM buckets a JOIN buckets b ON a.h = b.h AND a.doc_id < b.doc_id
@@ -336,6 +395,14 @@ object Dedup {
       |          JOIN sk sb ON sb.doc_id = doc_b
       |WHERE $minhashJaccardSql >= 0.2""".stripMargin
 
+  /** The dedup_minhash_lsh oracle: verified pairs over the documents
+    * table's minhash candidates — also the full recompute the
+    * incremental faces' oracle restricts to the delta.
+    */
+  private val minhashPairsSql: String =
+    s"""WITH $minhashCandCte
+      |${minhashVerifiedSql(s"doc_a, doc_b,\n  $minhashJaccardSql AS jaccard")}""".stripMargin
+
   /** MinHash (bottom-k sketch) + LSH bucket join. One digest per shingle;
     * the sketch is the 8 lexicographically smallest md5s — the bottom-k
     * estimator of the minwise family (one-permutation MinHash). Candidates
@@ -347,11 +414,9 @@ object Dedup {
     * independent hash passes and the same plan shape (scan → sketch →
     * bucket join → verify).
     */
-  val minhashLsh: Op = Op(
-    "dedup_minhash_lsh",
-    s"""WITH $minhashCandCte
-      |${minhashVerifiedSql(s"doc_a, doc_b,\n  $minhashJaccardSql AS jaccard")}""".stripMargin,
-  ) { (spark, dir) => minhashPairs(Tables.documents(spark, dir), 0.2) }
+  val minhashLsh: Op = Op("dedup_minhash_lsh", minhashPairsSql) {
+    (spark, dir) => minhashPairs(Tables.documents(spark, dir), 0.2)
+  }
 
   /** The MinHash+LSH pipeline as a generic library function over any
     * frame with `doc_id` and `text` columns (the user-facing form; the
@@ -365,8 +430,9 @@ object Dedup {
     // — kernel fused straight into the bucket aggregation's map stage —
     // ~0.2 s worse wall and ~0.25 s better cpu at sf0.1, hash-identical,
     // so the cache stayed.
-    minhashPairsPlanFused(d => graft.CacheRegistry.track(fusedSketchFrameGated(d)),
-      withShingles)(docs, jaccardMin)
+    postingPairsPlan(d =>
+      sketchPostings(graft.CacheRegistry.track(fusedSketchFrameGated(d))))(
+      docs, jaccardMin).select("doc_a", "doc_b", "jaccard")
 
   /** The corpus-wide (doc_id, sketch) pass as ONE fused kernel
     * ([[graft.functions.ShingleMd5BottomK]]): no words array, no
@@ -398,11 +464,16 @@ object Dedup {
   /** The exploded (doc_id, h) LSH bucket stream of the registered
     * minhash generator — shared by the cap audit ([[capAuditRow]]) and
     * the scale smokes' saturation probes so they count exactly the
-    * buckets [[minhashPairsPlanFused]]'s 64-cap bounds.
+    * buckets [[minhashPairs]]' [[bucketCap]] bounds.
     */
   private[graft] def minhashBuckets(docs: DataFrame): DataFrame =
-    fusedSketchFrame(docs)
-      .select(col("doc_id"), explode(col("sketch")).as("h"))
+    sketchPostings(fusedSketchFrame(docs))
+
+  /** A (doc_id, sketch) frame's (doc_id, h) posting stream — one row per
+    * sketch hash, the bucket stream of every minhash generator.
+    */
+  private[graft] def sketchPostings(sk: DataFrame): DataFrame =
+    sk.select(col("doc_id"), explode(col("sketch")).as("h"))
 
   /** The bottom-8 minhash sketch over the `shingles` column — bounded
     * one-pass selection ([[graft.functions.Md5BottomK]]), ≡ the
@@ -418,70 +489,9 @@ object Dedup {
     * ShingleSketchSpec pins [[minhashPairs]] against. */
   private[graft] def minhashPairsPlan(shingleBuilder: DataFrame => DataFrame,
       sketch: Column)(docs: DataFrame, jaccardMin: Double): DataFrame =
-    minhashPairsPlanFused(
-      d => shingleBuilder(d).withColumn("sketch", sketch)
-        .select("doc_id", "sketch"),
-      shingleBuilder)(docs, jaccardMin)
-
-  /** The pairs plan over an arbitrary corpus-wide sketch pass
-    * (`sketchFrame`: docs → (doc_id, sketch)) and a shingle builder
-    * for the verify sliver. The registered op uses the fused kernel
-    * for the former, tracked; [[minhashPairsPlan]] reproduces the
-    * composed passes as the spec reference. The sketch frame is the
-    * bucket explode's only consumer, so whether it is cached is the
-    * caller's choice ([[composedRecallFrom]] passes one derived from
-    * an already-cached frame).
-    */
-  private[graft] def minhashPairsPlanFused(
-      sketchFrame: DataFrame => DataFrame,
-      shingleBuilder: DataFrame => DataFrame)(
-      docs: DataFrame, jaccardMin: Double): DataFrame = {
-    // The SHINGLE arrays are never cached corpus-wide: with them
-    // cached, the 24g uniform-1000x sweep read this op BIMODALLY — 740
-    // vs 1954 cpu-s across code-identical runs, borderline LRU eviction
-    // serializing wide array blocks mid-query. Since r13 the verify
-    // recomputes shingles over the candidate sliver instead.
-    val sk = sketchFrame(docs)
-    // Candidates via one-shuffle posting lists (see ngramJaccard): group
-    // doc ids per sketch hash, expand pairs in-group. Bucket sizes here
-    // are near-dup cluster sizes (max 4 at sf0.1); a corpus with
-    // mega-duplicate clusters makes the pair set quadratic under ANY
-    // formulation — that pathology is dedup_exact's job to remove first.
-    // But NEAR-identical mega-clusters (templated pages sharing a sketch
-    // hash) survive exact dedup, so the bucket is capped INSIDE the
-    // aggregation buffer (collect_set_bounded — O(cap) memory, NULL on
-    // overflow drops the degenerate bucket): a >64-member LSH bucket is
-    // quadratic candidate mass with no discrimination, and true near-dup
-    // pairs also share a non-degenerate sketch value.
-    val buckets = sk.select(col("doc_id"), explode(col("sketch")).as("h"))
-    val cand = buckets.groupBy("h")
-      .agg(graft.functions.CollectSetBounded
-        .collect_set_bounded(col("doc_id"), 64).as("ids"))
-      .filter(col("ids").isNotNull && size(col("ids")) >= 2)
-      .select(explode(expr(
-        "flatten(transform(ids, (x, i) -> transform(slice(ids, i + 2, size(ids) - i - 1)," +
-          " y -> struct(least(x, y) as doc_a, greatest(x, y) as doc_b))))")).as("p"))
-      .select("p.doc_a", "p.doc_b")
-      .distinct()
-    val interSz = size(array_intersect(col("sa.shingles"), col("sb.shingles")))
-    val jac = interSz.cast("double") /
-      (size(col("sa.shingles")) + size(col("sb.shingles")) - interSz)
-    // same adaptive cand guard as ngramJaccard: don't shuffle+sort a
-    // wide table twice to probe a capped (usually tiny) pair set
-    val candHinted = graft.api.GraftApi.adaptiveBroadcast(cand)
-    // exact-Jaccard verify needs the SHINGLES of exactly the docs the
-    // candidate pairs name — recompute them over the semi-join-pruned
-    // corpus sliver (pair-bounded, so the rebuild is O(candidate docs))
-    // instead of caching corpus-wide arrays to serve a sliver of lookups
-    val sliver = graft.CacheRegistry.track(
-      shingleBuilder(docs.join(semiProbeIds(candHinted), Seq("doc_id"), "left_semi"))
-        .select("doc_id", "shingles"))
-    candHinted
-      .join(sliver.alias("sa"), col("sa.doc_id") === col("doc_a"))
-      .join(sliver.alias("sb"), col("sb.doc_id") === col("doc_b"))
-      .filter(jac >= jaccardMin)
-      .select(col("doc_a"), col("doc_b"), jac.as("jaccard"))
-  }
+    postingPairsPlan(d =>
+      sketchPostings(shingleBuilder(d).withColumn("sketch", sketch)))(
+      docs, jaccardMin).select("doc_a", "doc_b", "jaccard")
 
   /** Per-feature md5 bit votes folded into a 64-bit signature (each hex
     * digit casts two independent votes — its 8-bit and its 4-bit — so 32
@@ -503,15 +513,7 @@ object Dedup {
 
   val simhash: Op = Op(
     "dedup_simhash",
-    s"""SELECT doc_id,
-      |  $simhashBitSql AS simhash
-      |FROM (SELECT doc_id,
-      |        list_transform(list_distinct(
-      |          CASE WHEN len(w) >= 3
-      |            THEN list_transform(generate_series(1, len(w)-2),
-      |                   i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])
-      |            ELSE w END), t -> md5(t)) AS md5s
-      |      FROM (SELECT doc_id, string_split(coalesce(text, ''), ' ') AS w FROM documents))""".stripMargin,
+    simhashSigsSqlFrom("documents"),
   ) { (spark, dir) =>
     // Features are word-3-grams (token fallback for docs shorter than 3
     // words): single tokens carry too little entropy on a small-vocabulary
@@ -533,8 +535,8 @@ object Dedup {
     * zero — caught by the 30x scale smoke).
     */
   /** The simhash signature relation in DuckDB SQL over a caller-chosen
-    * docs source — single-sourced between [[simhashPairsSqlFrom]] and
-    * the cap audit's band stanza.
+    * docs source — single-sourced between dedup_simhash's oracle,
+    * [[simhashPairsSqlFrom]] and the cap audit's band stanza.
     */
   private[operators] def simhashSigsSqlFrom(src: String): String =
     s"""SELECT doc_id,
@@ -547,30 +549,42 @@ object Dedup {
       |              ELSE w END), t -> md5(t)) AS md5s
       |        FROM (SELECT doc_id, string_split(coalesce(text, ''), ' ') AS w FROM $src))""".stripMargin
 
-  /** The dedup_simhash_pairs oracle (4×16-bit bands, Hamming ≤ 3) over a
-    * caller-chosen docs source — single-sourced between the registered op
-    * and [[recallAudit]]'s simhash arm.
+  /** The 4×16-bit band rows (doc_id, simhash, band) over the `sigs`
+    * relation — shared by [[simhashPairsSqlFrom]] and the cap audit's
+    * band stanza.
     */
-  private[operators] def simhashPairsSqlFrom(src: String): String =
+  private val simhashBandsSql: String =
+    """SELECT doc_id, simhash,
+      |    CAST(b AS VARCHAR) || ':' || substr(simhash, 16*b+1, 16) AS band
+      |  FROM sigs, UNNEST(generate_series(0, 3)) AS t(b)""".stripMargin
+
+  /** The simhash pair oracle (Hamming ≤ 3) over a caller-chosen docs
+    * source and band layout — `bands` is the body of a `bands` CTE over
+    * `sigs` emitting (doc_id, simhash, band). Single-sourced between
+    * dedup_simhash_pairs (the 4×16-bit default), [[recallAudit]]'s
+    * simhash arm and dedup_simhash_blocks (its 20 block combinations).
+    */
+  private[operators] def simhashPairsSqlFrom(src: String,
+      bands: String = simhashBandsSql): String = {
+    val hamming =
+      """list_sum(list_transform(generate_series(1, 64),
+        |    i -> CASE WHEN substr(ha, i, 1) <> substr(hb, i, 1) THEN 1 ELSE 0 END))""".stripMargin
     s"""WITH sigs AS (
       |  ${simhashSigsSqlFrom(src)}),
       |bands AS (
-      |  SELECT doc_id, simhash,
-      |    CAST(b AS VARCHAR) || ':' || substr(simhash, 16*b+1, 16) AS band
-      |  FROM sigs, UNNEST(generate_series(0, 3)) AS t(b)),
-      |small AS (SELECT band FROM bands GROUP BY band HAVING COUNT(*) BETWEEN 2 AND 64),
+      |  $bands),
+      |small AS (SELECT band FROM bands GROUP BY band HAVING COUNT(*) BETWEEN 2 AND $bucketCap),
       |cand AS (
       |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
       |    a.simhash AS ha, b.simhash AS hb
       |  FROM bands a JOIN bands b ON a.band = b.band AND a.doc_id < b.doc_id
       |  WHERE a.band IN (SELECT band FROM small))
       |SELECT doc_a, doc_b,
-      |  CAST(list_sum(list_transform(generate_series(1, 64),
-      |    i -> CASE WHEN substr(ha, i, 1) <> substr(hb, i, 1) THEN 1 ELSE 0 END))
+      |  CAST($hamming
       |    AS BIGINT) AS hamming
       |FROM cand
-      |WHERE list_sum(list_transform(generate_series(1, 64),
-      |    i -> CASE WHEN substr(ha, i, 1) <> substr(hb, i, 1) THEN 1 ELSE 0 END)) <= 3""".stripMargin
+      |WHERE $hamming <= 3""".stripMargin
+  }
 
   val simhashPairs: Op = Op(
     "dedup_simhash_pairs",
@@ -698,26 +712,19 @@ object Dedup {
       explode(simhashBandKeys(col("hi"), col("lo"), m, d)).as("band"))
 
   /** Near-dup pairs from a signature table via the multi-block band
-    * layout: explode the C(m, m−d) keys, posting lists bounded at
-    * `cap` per band (collect_set_bounded — the family invariant), the
-    * Hamming filter inside the in-group expansion. Emits
-    * (doc_a, doc_b, hamming) with hamming ≤ d.
+    * layout: explode the C(m, m−d) keys, [[cappedPairs]] per band at
+    * `cap` (the family invariant), the Hamming distance computed inside
+    * the in-group expansion. Emits (doc_a, doc_b, hamming) with
+    * hamming ≤ d.
     */
   def simhashPairsFromSigs(sigs: DataFrame, m: Int, d: Int,
-      cap: Int = 64): DataFrame = {
-    val bands = simhashBands(sigs, m, d)
-    bands.groupBy("band")
-      .agg(array_sort(graft.functions.CollectSetBounded
-        .collect_set_bounded(struct(col("doc_id"), col("hi"), col("lo")), cap)).as("ms"))
-      .filter(col("ms").isNotNull && size(col("ms")) >= 2)
-      .select(explode(expr(
-        "flatten(transform(ms, (x, i) -> transform(slice(ms, i + 2, size(ms) - i - 1)," +
-          " y -> struct(x.doc_id as doc_a, y.doc_id as doc_b," +
-          " cast(bit_count(x.hi ^ y.hi) + bit_count(x.lo ^ y.lo) as bigint) as hamming))))")).as("p"))
-      .select("p.doc_a", "p.doc_b", "p.hamming")
+      cap: Int = bucketCap): DataFrame =
+    cappedPairs(simhashBands(sigs, m, d), "band",
+      struct(col("doc_id"), col("hi"), col("lo")),
+      "cast(bit_count(x.hi ^ y.hi) + bit_count(x.lo ^ y.lo) as bigint) as hamming",
+      cap)
       .filter(col("hamming") <= d)
       .distinct()
-  }
 
   /** The MinHash sketch of any (doc_id, text) frame — the persisted
     * signature table an incremental dedup pipeline keeps per corpus
@@ -734,7 +741,7 @@ object Dedup {
       // REGRESSED the no-warmup 1000× smokes (the build then pays
       // shingles + a re-hash of every window: upsert 1122 → 1755 cpu-s
       // solo). The kernel wins only where shingles are NOT kept
-      // (minhashPairsPlanFused's corpus pass).
+      // ([[minhashPairs]]' corpus pass).
       .withColumn("sketch", sketchCol)
       .select("doc_id", "shingles", "sketch")
 
@@ -764,10 +771,8 @@ object Dedup {
     // postings are two narrow columns, the cache the warehouse analog
     // of the persisted (doc_id, h) posting table the scale note below
     // describes
-    val corpusBuckets = graft.CacheRegistry.track(
-      corpusSk.select(col("doc_id"), explode(col("sketch")).as("h")))
-    val deltaBuckets = graft.CacheRegistry.track(
-      dSk.select(col("doc_id"), explode(col("sketch")).as("h")))
+    val corpusBuckets = graft.CacheRegistry.track(sketchPostings(corpusSk))
+    val deltaBuckets = graft.CacheRegistry.track(sketchPostings(dSk))
     // The bucket cap counts the DISTINCT doc_ids of the corpus+delta
     // union per hash — the same "all docs sharing h" bucket minhashPairs
     // caps — so the incremental pair set stays EXACTLY the capped full
@@ -782,7 +787,7 @@ object Dedup {
     // column, not a recount.
     val kept = corpusBuckets.union(deltaBuckets)
       .groupBy("h").agg(countDistinct(col("doc_id")).as("n"))
-      .filter(col("n").between(2, 64)).select("h")
+      .filter(col("n").between(2, bucketCap)).select("h")
     val deltaKept = deltaBuckets.join(kept, "h")
     incrementalVerifyTail(corpusSk, dSk, Seq(corpusBuckets), deltaKept,
       jaccardMin)
@@ -813,40 +818,18 @@ object Dedup {
     // delta×delta candidates: in-group posting-list expansion, delta
     // only. The bounded collect stays as the buffer guard even though
     // the union cap already pruned the hashes.
-    val deltaCand = deltaKept.groupBy("h")
-      .agg(graft.functions.CollectSetBounded
-        .collect_set_bounded(col("doc_id"), 64).as("ids"))
-      .filter(col("ids").isNotNull && size(col("ids")) >= 2)
-      .select(explode(expr(
-        "flatten(transform(ids, (x, i) -> transform(slice(ids, i + 2, size(ids) - i - 1)," +
-          " y -> struct(least(x, y) as doc_a, greatest(x, y) as doc_b))))")).as("p"))
-      .select("p.doc_a", "p.doc_b")
-    val cand = crossCand.union(deltaCand).distinct()
-    // candidate-pruned verify sliver (r13, minhash_ab_r13.jsonl — the
-    // minhashPairs pattern): the verify joins touch only docs named by
-    // candidate pairs, so the wide shingle columns semi-join down to
-    // that sliver BEFORE the dedup shuffle — the old form shuffled the
-    // FULL corpus's shingle arrays through dropDuplicates to serve a
-    // pair-bounded probe. The adaptiveBroadcast guard is the same
-    // curate/keep_best one: tiny cand broadcasts, a mega-dup crawl's
-    // cand runs un-hinted.
-    val candHinted = graft.api.GraftApi.adaptiveBroadcast(cand)
-    val candIds = semiProbeIds(candHinted)
-    // a doc_id in both frames is the SAME document (identical shingles
-    // by id semantics) — keep one verify row so the join can't fan out
-    val all = graft.CacheRegistry.track(
+    val cand = crossCand.union(cappedPairs(deltaKept, "h")).distinct()
+    // candidate-pruned verify sliver (r13, minhash_ab_r13.jsonl): the
+    // old form shuffled the FULL corpus's shingle arrays through
+    // dropDuplicates to serve a pair-bounded probe. A doc_id in both
+    // frames is the SAME document (identical shingles by id semantics) —
+    // keep one verify row so the join can't fan out
+    sliverVerify(cand, jaccardMin)(ids =>
       corpusSk.select("doc_id", "shingles")
         .union(dSk.select("doc_id", "shingles"))
-        .join(candIds, Seq("doc_id"), "left_semi")
+        .join(ids, Seq("doc_id"), "left_semi")
         .dropDuplicates("doc_id"))
-    val interSz = size(array_intersect(col("sa.shingles"), col("sb.shingles")))
-    val jac = interSz.cast("double") /
-      (size(col("sa.shingles")) + size(col("sb.shingles")) - interSz)
-    candHinted
-      .join(all.alias("sa"), col("sa.doc_id") === col("doc_a"))
-      .join(all.alias("sb"), col("sb.doc_id") === col("doc_b"))
-      .filter(jac >= jaccardMin)
-      .select(col("doc_a"), col("doc_b"), jac.as("jaccard"))
+      .select("doc_a", "doc_b", "jaccard")
   }
 
   /** The INDEXED serve path (VERDICT r13 #7): near-dup pairs of a delta
@@ -877,8 +860,7 @@ object Dedup {
     // raced the lazy cache into 2-3 full recomputes of the shard's
     // sketch kernel (CacheRegistry.pin scaladoc carries the r18 numbers)
     val dSk = graft.CacheRegistry.pin(deltaSk)
-    val deltaBuckets = graft.CacheRegistry.track(
-      dSk.select(col("doc_id"), explode(col("sketch")).as("h")))
+    val deltaBuckets = graft.CacheRegistry.track(sketchPostings(dSk))
     // MERGE (not shuffle-hash): the corpus tables are bucketed AND
     // per-bucket sorted by h, so sort-merge streams them with zero
     // exchange and zero sort while only the delta side aligns; an SHJ
@@ -887,7 +869,7 @@ object Dedup {
     val kept = deltaBuckets
       .groupBy("h").agg(countDistinct(col("doc_id")).as("dn"))
       .join(corpusHcnt.hint("MERGE"), Seq("h"), "left")
-      .filter((col("dn") + coalesce(col("cn"), lit(0L))).between(2, 64))
+      .filter((col("dn") + coalesce(col("cn"), lit(0L))).between(2, bucketCap))
       .select("h")
     val deltaKept = deltaBuckets.join(kept, "h")
     incrementalVerifyTail(corpusSk, dSk, Seq(corpusPost.hint("MERGE")),
@@ -925,18 +907,16 @@ object Dedup {
     // CacheRegistry.pin scaladoc): each feeds several exchanges of the
     // merged serve, and the lazy-cache race re-ran the sketch kernels
     val absorbSk = graft.CacheRegistry.pin(absorbSk0)
-    val aPost = graft.CacheRegistry.track(
-      absorbSk.select(col("doc_id"), explode(col("sketch")).as("h")))
+    val aPost = graft.CacheRegistry.track(sketchPostings(absorbSk))
     val dSk = graft.CacheRegistry.pin(deltaSk)
-    val deltaBuckets = graft.CacheRegistry.track(
-      dSk.select(col("doc_id"), explode(col("sketch")).as("h")))
+    val deltaBuckets = graft.CacheRegistry.track(sketchPostings(dSk))
     val an = aPost.groupBy("h").agg(countDistinct(col("doc_id")).as("an"))
     val kept = deltaBuckets
       .groupBy("h").agg(countDistinct(col("doc_id")).as("dn"))
       .join(corpusHcnt.hint("MERGE"), Seq("h"), "left")
       .join(an, Seq("h"), "left")
       .filter((col("dn") + coalesce(col("cn"), lit(0L)) +
-        coalesce(col("an"), lit(0L))).between(2, 64))
+        coalesce(col("an"), lit(0L))).between(2, bucketCap))
       .select("h")
     val deltaKept = deltaBuckets.join(kept, "h")
     incrementalVerifyTail(
@@ -959,26 +939,8 @@ object Dedup {
     * answers, the dedup_bloom_bucketed oracle-sharing precedent).
     */
   private val incrementalOracleSql: String =
-    s"""WITH sh AS ($shinglesSql),
-      |sk AS (SELECT doc_id, shingles,
-      |         list_sort(list_transform(shingles, s -> md5(s)))[1:8] AS sketch
-      |       FROM sh),
-      |buckets AS (SELECT doc_id, unnest(sketch) AS h FROM sk),
-      |small AS (SELECT h FROM buckets GROUP BY h HAVING COUNT(*) BETWEEN 2 AND 64),
-      |cand AS (
-      |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      |  FROM buckets a JOIN buckets b ON a.h = b.h AND a.doc_id < b.doc_id
-      |  WHERE (a.doc_id % 10 = 0 OR b.doc_id % 10 = 0)
-      |    AND a.h IN (SELECT h FROM small))
-      |SELECT doc_a, doc_b,
-      |  CAST(len(list_intersect(sa.shingles, sb.shingles)) AS DOUBLE) /
-      |    (len(sa.shingles) + len(sb.shingles)
-      |     - len(list_intersect(sa.shingles, sb.shingles))) AS jaccard
-      |FROM cand JOIN sk sa ON sa.doc_id = doc_a
-      |          JOIN sk sb ON sb.doc_id = doc_b
-      |WHERE CAST(len(list_intersect(sa.shingles, sb.shingles)) AS DOUBLE) /
-      |    (len(sa.shingles) + len(sb.shingles)
-      |     - len(list_intersect(sa.shingles, sb.shingles))) >= 0.2""".stripMargin
+    s"""SELECT * FROM ($minhashPairsSql)
+      |WHERE doc_a % 10 = 0 OR doc_b % 10 = 0""".stripMargin
 
   val incremental: Op = Op(
     "dedup_incremental",
@@ -1052,8 +1014,7 @@ object Dedup {
         s"$dir|$tag|v2", Seq("sk", "post", "hcnt")) { db =>
       sketchTable(corpusOf(Tables.documents(spark, dir)))
         .write.mode("overwrite").saveAsTable(s"$db.sk")
-      TempWarehouse.writeBucketed(spark.table(s"$db.sk")
-        .select(col("doc_id"), explode(col("sketch")).as("h")),
+      TempWarehouse.writeBucketed(sketchPostings(spark.table(s"$db.sk")),
         s"$db.post", skBuckets, "h")
       TempWarehouse.writeBucketed(spark.table(s"$db.post")
         .groupBy("h").agg(countDistinct(col("doc_id")).as("cn")),
@@ -2041,35 +2002,8 @@ object Dedup {
           s"substr(simhash, ${bounds(b) + 1}, ${bounds(b + 1) - bounds(b)})")
         s"  SELECT doc_id, simhash, '$ci:' || ${parts.mkString(" || ")} AS band FROM sigs"
     }.mkString("\n  UNION ALL\n")
-    Op(
-      "dedup_simhash_blocks",
-      s"""WITH sigs AS (
-        |  SELECT doc_id,
-        |    $simhashBitSql AS simhash
-        |  FROM (SELECT doc_id,
-        |          list_transform(list_distinct(
-        |            CASE WHEN len(w) >= 3
-        |              THEN list_transform(generate_series(1, len(w)-2),
-        |                     i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])
-        |              ELSE w END), t -> md5(t)) AS md5s
-        |        FROM (SELECT doc_id, string_split(coalesce(text, ''), ' ') AS w FROM documents))),
-        |bands AS (
-        |$bandSelects),
-        |small AS (SELECT band FROM bands GROUP BY band HAVING COUNT(*) BETWEEN 2 AND 64),
-        |cand AS (
-        |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |    a.simhash AS ha, b.simhash AS hb
-        |  FROM bands a JOIN bands b ON a.band = b.band AND a.doc_id < b.doc_id
-        |  WHERE a.band IN (SELECT band FROM small))
-        |SELECT doc_a, doc_b,
-        |  CAST(list_sum(list_transform(generate_series(1, 64),
-        |    i -> CASE WHEN substr(ha, i, 1) <> substr(hb, i, 1) THEN 1 ELSE 0 END))
-        |    AS BIGINT) AS hamming
-        |FROM cand
-        |WHERE list_sum(list_transform(generate_series(1, 64),
-        |    i -> CASE WHEN substr(ha, i, 1) <> substr(hb, i, 1) THEN 1 ELSE 0 END)) <= 3""".stripMargin,
-    ) { (spark, dir) =>
-      simhashPairsFromSigs(
+    Op("dedup_simhash_blocks", simhashPairsSqlFrom("documents", bandSelects)) {
+      (spark, dir) => simhashPairsFromSigs(
         simhashSignatures(Tables.documents(spark, dir)), m = 6, d = 3)
     }
   }
@@ -2332,11 +2266,11 @@ object Dedup {
     // tracking, the unsampled posting pass (the audit's dominant cost)
     // would re-run per consumer
     val truth = graft.CacheRegistry.track(
-      ngramJaccardPlanFrom(fusedGramStream(1))(sample).select("doc_a", "doc_b"))
+      postingPairsPlan(fusedGramStream(1))(sample, 0.2).select("doc_a", "doc_b"))
     val apx =
       minhashPairs(sample, 0.2)
         .select(lit("minhash_lsh").as("method"), col("doc_a"), col("doc_b"))
-      .unionByName(ngramJaccardPlanFrom(fusedGramStream(4))(sample)
+      .unionByName(postingPairsPlan(fusedGramStream(4))(sample, 0.2)
         .select(lit("ngram_sampled").as("method"), col("doc_a"), col("doc_b")))
       .unionByName(simhashPairsFromSigs(simhashSignatures(sample), m = 4, d = 3)
         .select(lit("simhash_pairs").as("method"), col("doc_a"), col("doc_b")))
@@ -2415,7 +2349,7 @@ object Dedup {
       s"""SELECT '$generator' AS generator, total_buckets, sat_buckets, sat_docs FROM (
         |  WITH $withBody,
         |  cnt_ AS (SELECT $keyCol AS k, COUNT(*) AS n FROM $rel GROUP BY 1),
-        |  sat_ AS (SELECT k FROM cnt_ WHERE n > 64)
+        |  sat_ AS (SELECT k FROM cnt_ WHERE n > $bucketCap)
         |  SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM cnt_) AS total_buckets,
         |    (SELECT CAST(COUNT(*) AS BIGINT) FROM sat_) AS sat_buckets,
         |    (SELECT CAST(COUNT(DISTINCT $idCol) AS BIGINT) FROM $rel
@@ -2429,9 +2363,7 @@ object Dedup {
           s"""sigs AS (
             |  ${simhashSigsSqlFrom("documents")}),
             |bands AS (
-            |  SELECT doc_id,
-            |    CAST(b AS VARCHAR) || ':' || substr(simhash, 16*b+1, 16) AS band
-            |  FROM sigs, UNNEST(generate_series(0, 3)) AS t(b))""".stripMargin,
+            |  $simhashBandsSql)""".stripMargin,
           "bands", "band", "doc_id"),
         stanza("ngram_postings",
           s"""sh AS (${shinglesSqlFrom("documents")}),
@@ -2443,14 +2375,14 @@ object Dedup {
       ).mkString("\nUNION ALL\n"),
     ) { (spark, dir) =>
       val docs = Tables.documents(spark, dir)
-      capAuditRow(minhashBuckets(docs), 64, "minhash_lsh")
+      capAuditRow(minhashBuckets(docs), bucketCap, "minhash_lsh")
         .unionByName(capAuditRow(
           simhashBands(simhashSignatures(docs), m = 4, d = 3)
-            .select("doc_id", "band"), 64, "simhash_pairs"))
-        .unionByName(capAuditRow(fusedGramStream(4)(docs), 64,
+            .select("doc_id", "band"), bucketCap, "simhash_pairs"))
+        .unionByName(capAuditRow(fusedGramStream(4)(docs), bucketCap,
           "ngram_postings"))
         .unionByName(capAuditRow(
-          Similarity.knnBandBuckets(Tables.embeddings(spark, dir)), 64,
+          Similarity.knnBandBuckets(Tables.embeddings(spark, dir)), bucketCap,
           "knn_join"))
     }
   }
@@ -2594,7 +2526,7 @@ object Dedup {
       .agg(min("doc_id").as("rep_id"), count(lit(1)).as("n")))
     val reps = grp.select(col("rep_id").as("doc_id"), col("text"))
     val rt = graft.CacheRegistry.track(
-      ngramJaccardPlanFrom(fusedGramStream(1))(reps)
+      postingPairsPlan(fusedGramStream(1))(reps, 0.2)
         .select("doc_a", "doc_b"))
     val rm = graft.CacheRegistry.track(
       minhashPairs(reps, 0.2).select("doc_a", "doc_b"))
@@ -2631,7 +2563,7 @@ object Dedup {
         col("sketch"))
     val ampSk = baseSk.unionByName(replSk).filter(size(col("sketch")) > 0)
     val mh = graft.CacheRegistry.track(
-      minhashPairsPlanFused(_ => ampSk, withShingles)(amp, 0.2)
+      postingPairsPlan(_ => sketchPostings(ampSk))(amp, 0.2)
         .select("doc_a", "doc_b"))
     val ampRep = amp.join(grp, Seq("text"))
       .select(col("doc_id"), col("rep_id"))

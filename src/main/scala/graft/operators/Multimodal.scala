@@ -304,20 +304,12 @@ object Multimodal {
     val bands = sigs.select(col("doc_id"), col("phash"),
       explode(expr("transform(sequence(0, 3)," +
         " b -> b * 16384 + shiftright(phash, 14 * b) % 16384)")).as("band_key"))
-    // Cap INSIDE the aggregation buffer (collect_set_bounded — O(cap)
-    // memory, NULL on overflow ≡ the dropped >64 bucket): an all-zero
-    // phash band from empty/templated payloads would otherwise buffer its
-    // whole posting list before the size filter ran. Same answer as
-    // collect_set + BETWEEN(2,64), proven in CollectSetBoundedSpec.
-    bands.groupBy("band_key")
-      .agg(array_sort(graft.functions.CollectSetBounded
-        .collect_set_bounded(struct(col("doc_id"), col("phash")), 64)).as("ms"))
-      .filter(col("ms").isNotNull && size(col("ms")) >= 2)
-      .select(explode(expr(
-        "flatten(transform(ms, (x, i) -> transform(slice(ms, i + 2, size(ms) - i - 1)," +
-          " y -> struct(x.doc_id as doc_a, y.doc_id as doc_b," +
-          " cast(bit_count(x.phash ^ y.phash) as bigint) as hamming))))")).as("p"))
-      .select("p.doc_a", "p.doc_b", "p.hamming")
+    // capped posting lists (Dedup.cappedPairs — O(cap) buffer memory,
+    // NULL on overflow ≡ the dropped bucket): an all-zero phash band
+    // from empty/templated payloads would otherwise buffer its whole
+    // posting list before the size filter ran
+    Dedup.cappedPairs(bands, "band_key", struct(col("doc_id"), col("phash")),
+      "cast(bit_count(x.phash ^ y.phash) as bigint) as hamming")
       .filter(col("hamming") <= 3)
       .distinct()
   }

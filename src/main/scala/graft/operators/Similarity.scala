@@ -175,7 +175,7 @@ object Similarity {
     // exact-vector dedup collapses the multiplicity. The kept-bucket
     // list is sketch-cardinality-sized (≤ 2^8 here) — broadcast.
     val small = v.groupBy("sk").agg(count(lit(1)).as("n"))
-      .filter(col("n").between(2, 64)).select("sk")
+      .filter(col("n").between(2, Dedup.bucketCap)).select("sk")
     // prune the b-side through the kept-bucket broadcast BEFORE the
     // shuffle too (the ivfSemDedup discipline): without it every member
     // of a dropped >64 hot bucket still hash-partitions to one reducer
@@ -278,7 +278,7 @@ object Similarity {
     val v = if (cacheSketch) graft.CacheRegistry.track(vPlan) else vPlan
     def bandPairs(sk: String): DataFrame = {
       val small = v.groupBy(sk).agg(count(lit(1)).as("n"))
-        .filter(col("n").between(2, 64)).select(sk)
+        .filter(col("n").between(2, Dedup.bucketCap)).select(sk)
       // kept-bucket pruning on BOTH sides before the shuffle (the
       // dedup_embedding_cosine discipline — a dropped hot bucket's
       // members must not concentrate onto one reducer for nothing)

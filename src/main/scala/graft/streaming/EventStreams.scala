@@ -333,12 +333,15 @@ object EventStreams {
     * bucket self-join — StreamingSpec proves the equivalence. State per
     * bucket is capped (as in every batch dedup op here): a hot bucket
     * stops emitting rather than going quadratic, and its cap is the same
-    * 64 the batch caps use. The exact-Jaccard verify stays downstream —
-    * candidate generation is the part whose state must live in the
-    * stream.
+    * [[graft.operators.Dedup.bucketCap]] the batch caps use; a cap below
+    * 2 would never admit a second id, so it is refused. The exact-Jaccard
+    * verify stays downstream — candidate generation is the part whose
+    * state must live in the stream.
     */
   def nearDupCandidates(sketchBuckets: Dataset[BucketArrival],
-      cap: Int = 64): Dataset[CandidatePair] = {
+      cap: Int = graft.operators.Dedup.bucketCap): Dataset[CandidatePair] = {
+    require(cap >= 2,
+      s"nearDupCandidates: cap=$cap — a bucket needs two members to emit a pair")
     import sketchBuckets.sparkSession.implicits._
     sketchBuckets
       .groupByKey(_.h)
@@ -633,16 +636,9 @@ object EventStreams {
     */
   def nearDupVerified(cands: Dataset[CandidatePair], sketches: DataFrame,
       jaccardMin: Double): DataFrame = {
-    val interSz = size(array_intersect(col("sa.shingles"), col("sb.shingles")))
-    val jac = interSz.cast("double") /
-      (size(col("sa.shingles")) + size(col("sb.shingles")) - interSz)
-    cands.toDF()
-      .join(sketches.select(col("doc_id"), col("shingles")).alias("sa"),
-        col("sa.doc_id") === col("doc_a"))
-      .join(sketches.select(col("doc_id"), col("shingles")).alias("sb"),
-        col("sb.doc_id") === col("doc_b"))
-      .filter(jac >= jaccardMin)
-      .select(col("doc_a"), col("doc_b"), jac.as("jaccard"))
+    graft.operators.Dedup.jaccardVerify(cands.toDF(),
+        sketches.select(col("doc_id"), col("shingles")), jaccardMin)
+      .select("doc_a", "doc_b", "jaccard")
   }
 
   /** Event row for the windowed-value streaming faces. `value` is

@@ -243,15 +243,33 @@ class DedupSpec extends SparkSpec {
     def corpusOf(n: Int) = (0 until n).map(i => (i.toLong, base))
       .map { case (id, t) => (id, t, "en", s"s$id", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    // 64 identical docs: every sketch bucket holds exactly 64 — AT the
-    // cap, so the full C(64,2) pair set must be emitted
-    val at = Dedup.minhashPairs(corpusOf(64), 0.2).count()
-    CacheRegistry.drain()
-    assert(at == 64L * 63 / 2, s"at-cap bucket lost pairs: $at")
-    // 65: one past the cap — dropped wholesale, zero pairs
-    val past = Dedup.minhashPairs(corpusOf(65), 0.2).count()
-    CacheRegistry.drain()
-    assert(past == 0L, s"past-cap bucket leaked pairs: $past")
+    // every generator that expands pairs through Dedup.cappedPairs and
+    // that a (doc_id, text) frame can drive; `base` has sampled grams,
+    // so the 1-in-4 stream has buckets too
+    val generators: Seq[(String, org.apache.spark.sql.DataFrame => Long)] = Seq(
+      "minhashPairs" -> (d => Dedup.minhashPairs(d, 0.2).count()),
+      "ngram unsampled" -> (d =>
+        Dedup.postingPairsPlan(Dedup.fusedGramStream(1))(d, 0.2).count()),
+      "ngram sampled" -> (d =>
+        Dedup.postingPairsPlan(Dedup.fusedGramStream(4))(d, 0.2).count()),
+      "simhash m=4" -> (d =>
+        Dedup.simhashPairsFromSigs(Dedup.simhashSignatures(d), 4, 3).count()),
+      "simhash m=6" -> (d =>
+        Dedup.simhashPairsFromSigs(Dedup.simhashSignatures(d), 6, 3).count()),
+      "incremental all-delta" -> (d => Dedup.incrementalPairs(
+        Dedup.sketchTable(corpusOf(0)), Dedup.sketchTable(d), 0.2).count()),
+    )
+    for ((name, pairsOf) <- generators) {
+      // 64 identical docs: every bucket holds exactly 64 — AT the cap,
+      // so the full C(64,2) pair set must be emitted
+      val at = pairsOf(corpusOf(64))
+      CacheRegistry.drain()
+      assert(at == 64L * 63 / 2, s"$name: at-cap bucket lost pairs: $at")
+      // 65: one past the cap — dropped wholesale, zero pairs
+      val past = pairsOf(corpusOf(65))
+      CacheRegistry.drain()
+      assert(past == 0L, s"$name: past-cap bucket leaked pairs: $past")
+    }
   }
 
   test("minhash hot bucket: 80-member LSH bucket is dropped, outside pair kept") {

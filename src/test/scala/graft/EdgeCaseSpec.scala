@@ -389,6 +389,25 @@ class EdgeCaseSpec extends SparkSpec {
     assert(pairs.contains((63L, 64L)), pairs.take(5).toString)
   }
 
+  test("simhashPairsFromSigs: a cap below 2 fails fast naming the pair contract") {
+    val sigs = Dedup.simhashSignatures(Tables.documents(spark, weirdDocsDir))
+    val e = intercept[IllegalArgumentException](
+      Dedup.simhashPairsFromSigs(sigs, m = 4, d = 3, cap = 1))
+    assert(e.getMessage.contains("a bucket needs two members to emit a pair"),
+      e.getMessage)
+  }
+
+  test("nearDupCandidates: a cap below 2 fails fast naming the pair contract") {
+    import spark.implicits._
+    val arrivals = Seq(graft.streaming.EventStreams.BucketArrival("h1", 1L)).toDS()
+    for (cap <- Seq(1, 0)) {
+      val e = intercept[IllegalArgumentException](
+        graft.streaming.EventStreams.nearDupCandidates(arrivals, cap))
+      assert(e.getMessage.contains("a bucket needs two members to emit a pair"),
+        e.getMessage)
+    }
+  }
+
   test("collect_set_bounded SQL rejects a non-numeric cap with a descriptive error") {
     val e = intercept[Exception] {
       spark.sql("SELECT collect_set_bounded(x, 'x') FROM VALUES (1) t(x)").collect()

@@ -129,11 +129,11 @@ class ShingleSketchSpec extends SparkSpec {
       got
     }
     import graft.operators.Dedup
-    val fusedS = pairs(Dedup.ngramJaccardPlanFrom(Dedup.fusedGramStream(4))(docs))
+    val fusedS = pairs(Dedup.postingPairsPlan(Dedup.fusedGramStream(4))(docs, 0.2))
     val composedS = pairs(Dedup.ngramJaccardPlan(Some(Dedup.ngramCoin))(docs))
     assert(fusedS == composedS,
       s"missing=${composedS -- fusedS} extra=${fusedS -- composedS}")
-    val fusedU = pairs(Dedup.ngramJaccardPlanFrom(Dedup.fusedGramStream(1))(docs))
+    val fusedU = pairs(Dedup.postingPairsPlan(Dedup.fusedGramStream(1))(docs, 0.2))
     val composedU = pairs(Dedup.ngramJaccardPlan(None)(docs))
     assert(fusedU == composedU)
     assert(fusedS.nonEmpty && fusedU.nonEmpty && fusedS.subsetOf(fusedU))
