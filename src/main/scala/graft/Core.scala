@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** One operator from SURVEY.md §2: a named Spark query plus (optionally)
   * an equivalent ANSI-SQL oracle the driver runs in DuckDB over the same
@@ -23,14 +25,83 @@ object Op {
 /** Parquet table loaders for the driver-generated TPC-H-ish schema
   * (TESTDATA.md). At 100 TB these would be partitioned/bucketed catalog
   * tables; the access pattern (columnar scan + pushdown) is identical.
+  *
+  * Schema memo (SQuOpt's `addIndex` discipline: compute once, reuse).
+  * Spark infers a parquet table's schema by reading footers in a Spark
+  * job, so a bare `spark.read.parquet` fires one job per read. [[load]]
+  * pays that job on the FIRST read of a table only — through Spark's own
+  * inference, so the schema is Spark's by construction — and passes the
+  * remembered schema back (`spark.read.schema(s).parquet`) on every later
+  * read, which fires no job.
+  *  - key: the table's leaf files, each as (path, length, modification
+  *    time), listed recursively through the Hadoop `FileSystem` on the
+  *    driver (one file for a single-file table, every part file for a
+  *    Spark-written directory), plus the session's explicitly set
+  *    schema-conversion confs: every `spark.sql.parquet.*` and
+  *    `spark.sql.legacy.parquet.*` key (binaryAsString, int96AsTimestamp,
+  *    inferTimestampNTZ.enabled, nanosAsLong, mergeSchema, ...),
+  *    `spark.sql.caseSensitive` and `spark.sql.variant.*`.
+  *  - invalidation: a rewritten, added or removed file, or a changed
+  *    conf, is a new key and infers again. A rewrite that keeps both the
+  *    length and the millisecond modification time is not seen.
+  *  - bounds: JVM-wide, keyed by value (no `SparkSession` held), at most
+  *    [[schemaMemoCap]] entries, least recently used evicted first.
+  *  - a path that cannot be listed (missing, a glob) reads without the
+  *    memo, so Spark reports its own error.
   */
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    leafFiles(spark, path) match {
+      case None => spark.read.parquet(path)
+      case Some(files) =>
+        val key = (files, schemaConfs(spark))
+        Option(schemaMemo.get(key)) match {
+          case Some(schema) => spark.read.schema(schema).parquet(path)
+          case None =>
+            val df = spark.read.parquet(path)
+            schemaMemo.put(key, df.schema)
+            df
+        }
+    }
+  }
+
+  private val schemaMemoCap = 256
+
+  private type MemoKey = (Seq[(String, Long, Long)], Seq[(String, String)])
+
+  private val schemaMemo = java.util.Collections.synchronizedMap(
+    new java.util.LinkedHashMap[MemoKey, StructType](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[MemoKey, StructType]): Boolean =
+        size() > schemaMemoCap
+    })
+
+  private def leafFiles(spark: SparkSession,
+      path: String): Option[Seq[(String, Long, Long)]] = {
+    val p = new Path(path)
+    val hadoopConf = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.newHadoopConf()
+    try {
+      val it = p.getFileSystem(hadoopConf).listFiles(p, true)
+      val files = Seq.newBuilder[(String, Long, Long)]
+      while (it.hasNext) {
+        val f = it.next()
+        files += ((f.getPath.toString, f.getLen, f.getModificationTime))
+      }
+      Some(files.result().sorted)
+    } catch { case _: java.io.IOException => None }
+  }
+
+  private def schemaConfs(spark: SparkSession): Seq[(String, String)] =
+    spark.conf.getAll.toSeq.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.") ||
+        k.startsWith("spark.sql.variant.") || k == "spark.sql.caseSensitive"
+    }.sorted
 
   def lineitem(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "lineitem")
   def orders(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "orders")
@@ -147,6 +218,13 @@ object GraftSession {
       .config("spark.sql.optimizer.excludedRules",
         "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // Spark caches generated classes by source text, 100 by default
+      // (a static conf, so it must be set here, before the first query).
+      // One pass over a dozen graft ops generates a few hundred classes,
+      // so with the default every repeat re-generates, re-compiles and
+      // re-JITs all of them: a relational pass measured about 9.5 s
+      // with the default against about 7 s with 2000 entries.
+      .config("spark.sql.codegen.cache.maxEntries", "2000")
       // Naive (un-annotated) parquet timestamps read as TIMESTAMP in the
       // UTC session, not TIMESTAMP_NTZ: epoch arithmetic (unix_micros /
       // RANGE windows) requires the LTZ type, and with the session pinned

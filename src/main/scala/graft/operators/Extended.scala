@@ -305,9 +305,9 @@ object Extended {
   }
 
   /** Nested-query unnesting (Unnesting.scala generalUnnesting,
-    * existsUnnester): written as a correlated scalar subquery in Spark SQL;
-    * Catalyst decorrelates it into an aggregate+join — the reference's
-    * unnesting rewrite.
+    * existsUnnester): written as a correlated scalar subquery through the
+    * DataFrame subquery API (`outer()` + `scalar()`); Catalyst decorrelates
+    * it into an aggregate+join — the reference's unnesting rewrite.
     */
   val nestedUnnest: Op = Op(
     "q_nested_unnest",
@@ -315,17 +315,13 @@ object Extended {
       |WHERE o_totalprice = (SELECT MAX(o2.o_totalprice) FROM orders o2
       |                      WHERE o2.o_custkey = o.o_custkey)""".stripMargin,
   ) { (spark, dir) =>
-    // inline parquet table refs, not a temp view: registering a session-
-    // global view is mutable catalog state that races when two queries
-    // run concurrently in one session. The correlated scalar subquery
-    // stays in SQL because Catalyst's decorrelation rewrite IS the
-    // operator being demonstrated.
-    spark.sql(
-      s"""SELECT o_custkey, o_orderkey, o_totalprice
-         |FROM parquet.`$dir/orders.parquet` o
-         |WHERE o_totalprice = (SELECT MAX(o2.o_totalprice)
-         |                      FROM parquet.`$dir/orders.parquet` o2
-         |                      WHERE o2.o_custkey = o.o_custkey)""".stripMargin)
+    val maxOfCustomer = Tables.orders(spark, dir).as("o2")
+      .where(col("o2.o_custkey") === col("o.o_custkey").outer())
+      .select(max(col("o2.o_totalprice")))
+      .scalar()
+    Tables.orders(spark, dir).as("o")
+      .where(col("o.o_totalprice") === maxOfCustomer)
+      .select("o_custkey", "o_orderkey", "o_totalprice")
   }
 
   /** TypeMapping (collections/TypeMapping.scala): one scan partitioned into

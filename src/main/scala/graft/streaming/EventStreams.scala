@@ -327,16 +327,24 @@ object EventStreams {
     * dedup_incremental: each arriving document's MinHash sketch hashes
     * are keyed to their posting bucket, whose state holds the doc ids
     * seen there so far; a new arrival emits one candidate pair per
-    * co-bucketed prior doc. This is exactly the batch posting-list
-    * expansion run incrementally (state = the corpus posting table,
-    * micro-batch = the arriving shard), so candidates ≡ the batch
-    * bucket self-join — StreamingSpec proves the equivalence. State per
-    * bucket is capped (as in every batch dedup op here): a hot bucket
-    * stops emitting rather than going quadratic, and its cap is the same
+    * co-bucketed prior doc. This is the batch posting-list expansion run
+    * incrementally (state = the corpus posting table, micro-batch = the
+    * arriving shard). State per bucket is capped: a hot bucket stops
+    * emitting rather than going quadratic, and its cap is the same
     * [[graft.operators.Dedup.bucketCap]] the batch caps use; a cap below
     * 2 would never admit a second id, so it is refused. The exact-Jaccard
     * verify stays downstream — candidate generation is the part whose
     * state must live in the stream.
+    *
+    * Contract against the batch generators: while no bucket holds more
+    * than `cap` docs, candidates ≡ the batch bucket self-join. Past the
+    * cap they are a SUPERSET: the stream keeps the pairs among a bucket's
+    * first `cap` arrivals (doc_id order within a micro-batch), while every
+    * batch generator ([[graft.operators.Dedup.cappedPairs]], the
+    * incremental serves' `between(2, bucketCap)`) drops an over-cap
+    * bucket wholesale. Append mode cannot retract pairs it has already
+    * emitted when a later arrival overflows the bucket, so the stream
+    * cannot match the batch drop. StreamingSpec pins both cases.
     */
   def nearDupCandidates(sketchBuckets: Dataset[BucketArrival],
       cap: Int = graft.operators.Dedup.bucketCap): Dataset[CandidatePair] = {

@@ -140,9 +140,23 @@ class PlanSpec extends SparkSpec {
   }
 
   test("correlated subquery is decorrelated into an aggregate+join") {
-    val p = plan(Extended.nestedUnnest)
+    val df = Extended.nestedUnnest.fn(spark, sfTiny)
+    val p = df.queryExecution.executedPlan.toString
     assert(!p.toLowerCase.contains("cartesian"), p)
     assert(p.contains("Join") || p.contains("HashJoin"), p)
+    // the scalar subquery is gone: one side of a join is the per-customer
+    // MAX aggregate it was rewritten into
+    import org.apache.spark.sql.catalyst.expressions.ScalarSubquery
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
+    val opt = df.queryExecution.optimizedPlan
+    assert(!opt.exists(_.expressions.exists(_.exists(_.isInstanceOf[ScalarSubquery]))), opt)
+    assert(opt.exists {
+      case j: Join => j.children.exists(_.exists {
+        case a: Aggregate => a.groupingExpressions.nonEmpty
+        case _ => false
+      })
+      case _ => false
+    }, opt)
   }
 
   test("as-of join plans as one window pass — no join operator at all") {

@@ -837,8 +837,9 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val sketchTable = graft.operators.Dedup.sketchTable(Tables.documents(spark, sfTiny))
     val sk = sketchTable.select(col("doc_id"), explode(col("sketch")).as("h"))
-    // the equivalence below is exact only while no bucket hits the cap —
-    // pin that precondition on this corpus
+    // the equivalence below is exact only while no bucket exceeds the
+    // cap — past it the stream emits a superset (see "streaming near-dup
+    // candidates past the bucket cap ...") — pin that precondition here
     val maxBucket = sk.groupBy("h").count().agg(smax("count")).head().getLong(0)
     assert(maxBucket <= 64, s"corpus has a hot bucket ($maxBucket) — pick a smaller SF")
     val arrivals = sk.as[(Long, String)].collect()
@@ -879,6 +880,43 @@ class StreamingSpec extends SparkSpec {
       assert(streamedVerified === batchVerified,
         s"verified ${streamedVerified.size} vs batch ${batchVerified.size}")
     } finally { query.stop(); verified.stop() }
+  }
+
+  test("streaming near-dup candidates past the bucket cap: a superset of the batch drop") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val cap = graft.operators.Dedup.bucketCap
+    // one hot bucket one member past the cap, one cold bucket under it
+    val hot = (1L to cap + 1L).map(EventStreams.BucketArrival("hot", _))
+    val cold = Seq(101L, 102L, 103L).map(EventStreams.BucketArrival("cold", _))
+    val input = MemoryStream[EventStreams.BucketArrival]
+    val query = EventStreams.nearDupCandidates(input.toDS())
+      .writeStream.format("memory").queryName("neardup_overcap")
+      .outputMode(OutputMode.Append()).start()
+    try {
+      // two micro-batches: the overflowing member arrives after the
+      // bucket's first `cap` pairs were already emitted
+      input.addData(hot.take(cap) ++ cold)
+      query.processAllAvailable()
+      input.addData(hot.drop(cap))
+      query.processAllAvailable()
+      val streamed = spark.table("neardup_overcap")
+        .as[(Long, Long, String)].collect().toSeq
+      val batch = graft.operators.Dedup.cappedPairs(
+          (hot ++ cold).map(a => (a.doc_id, a.h)).toDF("doc_id", "h"), "h")
+        .as[(Long, Long)].collect().toSet
+      // the stream keeps the pairs among the hot bucket's first `cap`
+      // arrivals — Append mode cannot retract them when member cap+1 lands
+      val streamedHot = streamed.filter(_._3 == "hot").map(p => (p._1, p._2))
+      assert(streamedHot.size == cap * (cap - 1) / 2)
+      assert(streamedHot.toSet ==
+        (1L to cap.toLong).combinations(2).map(p => (p(0), p(1))).toSet)
+      // every batch generator drops the over-cap bucket wholesale
+      val coldPairs = Set((101L, 102L), (101L, 103L), (102L, 103L))
+      assert(batch == coldPairs, s"batch emitted ${batch.size} pairs")
+      // under the cap the two agree
+      assert(streamed.filter(_._3 == "cold").map(p => (p._1, p._2)).toSet == coldPairs)
+    } finally query.stop()
   }
 
   test("anomalyStream equals batch q_anomaly_zscore on the real event log") {
