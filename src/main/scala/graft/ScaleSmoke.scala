@@ -188,7 +188,7 @@ object ScaleSmoke {
           // — the template-heavy-corpus shape where one IVF cell ends up
           // holding most of the corpus AND most of the probe mass (base
           // id 0 is also a search query), i.e. the hot-inverted-list
-          // scenario the ivfIndexProbeSearch hot-cell split exists for.
+          // scenario the Similarity.splitHotCells hot-cell split exists for.
           // (r6's IVF "skew" numbers predate this: embeddings used to
           // amplify identically in both modes, so those deltas could only
           // be machine noise — r7 re-measured them flat and added this.)

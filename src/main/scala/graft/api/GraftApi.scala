@@ -1387,19 +1387,12 @@ object GraftApi {
   def pqSearchADC(codes: DataFrame, codebooks: DataFrame, queries: DataFrame,
       idCol: String, embCol: String, numSubs: Int, subDim: Int,
       codebookSize: Int = 16, k: Int = 5): DataFrame = {
-    val lut = pqSplit(queries, idCol, embCol, numSubs, subDim)
-      .join(broadcast(codebooks), "part")
-      .select(col("pid").as("q_id"), col("part"), col("cent_id"),
-        graft.functions.vec.vec_distsq(col("emb"), col("c_emb")).as("dsq"))
-      .groupBy(col("q_id"))
-      .agg(expr(
-        s"map_from_entries(collect_list(struct(int(part * $codebookSize + cent_id), dsq)))")
-        .as("lut"))
-    val adc = (0 until numSubs).map(s =>
-        expr(s"element_at(lut, int(${s * codebookSize} + element_at(codes, ${s + 1})))"))
-      .reduce(_ + _)
+    import graft.operators.Similarity
+    val lut = Similarity.adcLut(pqSplit(queries, idCol, embCol, numSubs, subDim),
+      codebooks, codebookSize, "q_id")
     val scored = codes.join(broadcast(lut), col(idCol) =!= col("q_id"))
-      .select(col("q_id"), col(idCol).as("cand_id"), adc.as("adc_dist"))
+      .select(col("q_id"), col(idCol).as("cand_id"),
+        Similarity.adcSum(numSubs, codebookSize).as("adc_dist"))
       .withColumn("neg_dist", -col("adc_dist"))
     topKPerKey(scored, "q_id", "neg_dist", "cand_id", k)
       .select("q_id", "cand_id", "adc_dist")
@@ -1449,7 +1442,7 @@ object GraftApi {
     * through the bounded-heap TopKPerKey on (adc_dist asc, cand_id).
     * A mass-duplicated hot cell concentrates this join exactly like the
     * IVF list probe — serve from a persisted layout with the
-    * ivfIndexProbeSearch hot-cell split when cell occupancy demands it.
+    * Similarity.splitHotCells hot-cell split when cell occupancy demands it.
     */
   def ivfPqSearchADC(corpus: DataFrame, queries: DataFrame, idCol: String,
       embCol: String, cells: Int = 16, nprobe: Int = 4, numSubs: Int = 4,
@@ -1459,9 +1452,8 @@ object GraftApi {
       corpus, idCol, embCol, cells, iters = 1)
     val cbs = pqCodebooks(corpus, idCol, embCol, numSubs, subDim, codebookSize,
       iters = trainIters)
-    val codes = pqEncode(corpus, idCol, embCol, cbs, numSubs, subDim)
-    val cwc = codes.join(assign1, col(idCol) === col("a_vec"))
-      .select(col(idCol), col("codes"), col("a_cent").as("cent_id"))
+    val cwc = graft.operators.Similarity.ivfPqCodes(corpus, idCol, embCol, cbs,
+      numSubs, subDim, assign1)
     ivfPqSearchADCFromIndex(c1p.drop("part"), cbs, cwc, queries, idCol,
       embCol, nprobe, numSubs, subDim, codebookSize, k)
   }
@@ -1476,12 +1468,12 @@ object GraftApi {
     * Lloyd), so serving from the persisted parts is bit-identical to the
     * inline build.
     *
-    * Hot-cell split, as in the IVF list probe (Similarity.
-    * ivfIndexProbeSearch): a mass-duplicated corpus concentrates most
-    * codes AND most probes into one cell, whose single bucketed-scan
-    * task would ADC-score hot_queries × hot_cell candidates. A PRE-SPLIT
-    * persisted layout (detected by a `slice` column in the codes: hot
-    * cells content-hash-sliced at build time and bucketed on
+    * Hot-cell split, as in the IVF list probe (Similarity.splitHotCells):
+    * a mass-duplicated corpus concentrates most codes AND most probes
+    * into one cell, whose single bucketed-scan task would ADC-score
+    * hot_queries × hot_cell candidates. A PRE-SPLIT persisted layout
+    * (detected by the graft.presplit metadata flag on the codes' slice
+    * column: hot cells content-hash-sliced at build time and bucketed on
     * (cent_id, slice)) serves with NO runtime repartition and no
     * occupancy read. Otherwise, cells whose code count exceeds
     * `hotCellBound` (floored at corpus/partitions) redistribute by a
@@ -1495,63 +1487,21 @@ object GraftApi {
       codes: DataFrame, queries: DataFrame, idCol: String, embCol: String,
       nprobe: Int = 4, numSubs: Int = 4, subDim: Int = 16,
       codebookSize: Int = 16, k: Int = 5,
-      hotCellBound: Long = 16384L,
+      hotCellBound: Long = graft.operators.Similarity.hotCellBound,
       stats: Option[DataFrame] = None): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import graft.functions.vec.{vec_dot, vec_distsq}
-    val q = queries.select(col(idCol).cast("long").as("q_id"),
-        col(embCol).as("q_emb"))
-      .withColumn("q_nrm", sqrt(vec_dot(col("q_emb"), col("q_emb"))))
-      // zero-norm queries excluded: the retrieval contract
-      // (Similarity.normed) — ANSI double division crashes on 0/0
-      .filter(col("q_nrm") > 0)
-    val ranked = q.crossJoin(broadcast(cents))
-      .withColumn("rn", row_number().over(Window.partitionBy(col("q_id")).orderBy(
-        (vec_dot(col("q_emb"), col("c_emb")) / (col("q_nrm") * col("c_nrm"))).desc,
-        col("cent_id"))))
-    val probes = ranked.filter(col("rn") <= nprobe)
-      .select(col("q_id").as("p_qid"), col("cent_id").as("p_cent"))
-    val lut = pqSplit(queries, idCol, embCol, numSubs, subDim)
-      .join(broadcast(codebooks), "part")
-      .select(col("pid").as("l_qid"), col("part"), col("cent_id"),
-        vec_distsq(col("emb"), col("c_emb")).as("dsq"))
-      .groupBy(col("l_qid"))
-      .agg(expr(
-        s"map_from_entries(collect_list(struct(int(part * $codebookSize + cent_id), dsq)))")
-        .as("lut"))
-    val adc = (0 until numSubs).map(s =>
-        expr(s"element_at(lut, int(${s * codebookSize} + element_at(codes, ${s + 1})))"))
-      .reduce(_ + _)
+    import graft.operators.Similarity
+    // zero-norm queries drop out with the probe set (queryVecs)
+    val probes = Similarity.rankProbes(Similarity.queryVecs(queries, idCol, embCol),
+      cents)(_.filter(col("rn") <= nprobe))
+    val lut = Similarity.adcLut(pqSplit(queries, idCol, embCol, numSubs, subDim),
+      codebooks, codebookSize, "l_qid")
     val probeLut = broadcast(probes.join(lut, col("l_qid") === col("p_qid")))
     def score(cand: DataFrame): DataFrame = cand
       .join(probeLut,
         col("cent_id") === col("p_cent") && col(idCol) =!= col("p_qid"))
       .select(col("p_qid").as("q_id"), col(idCol).cast("long").as("cand_id"),
-        adc.as("adc_dist"))
-    val spark = codes.sparkSession
-    val scored =
-      if (graft.operators.Similarity.isPresplit(codes)) {
-        // pre-split persisted layout (graft.presplit metadata flag on the
-        // slice column — an UNFLAGGED caller-supplied column named slice
-        // routes through the runtime-split tier instead of silently
-        // disabling it): hot cells already spread across bucket files at
-        // rest — nothing to decide or repartition
-        score(codes)
-      } else {
-        val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt.max(1)
-        val occ = stats.getOrElse(
-            codes.groupBy("cent_id").agg(count(lit(1)).as("cnt")))
-          .select(col("cent_id"), col("cnt")).collect()
-        val bound = math.max(hotCellBound, occ.map(_.getLong(1)).sum / parts)
-        val hotIds = occ.filter(_.getLong(1) > bound).map(_.getLong(0)).toSeq
-        if (hotIds.isEmpty) score(codes)
-        else {
-          val cold = score(codes.filter(!col("cent_id").isin(hotIds: _*)))
-          val hot = score(codes.filter(col("cent_id").isin(hotIds: _*))
-            .repartition(parts, pmod(hash(col(idCol)), lit(parts))))
-          cold.unionByName(hot)
-        }
-      }
+        Similarity.adcSum(numSubs, codebookSize).as("adc_dist"))
+    val scored = Similarity.splitHotCells(codes, stats, idCol, hotCellBound)(score)
     topKPerKey(scored.withColumn("neg_dist", -col("adc_dist")),
         "q_id", "neg_dist", "cand_id", k)
       .select("q_id", "cand_id", "adc_dist")
@@ -1912,14 +1862,16 @@ object GraftApi {
   def ivfIndexUpsert(cents: DataFrame, lists: DataFrame, stats: DataFrame,
       delta: DataFrame, idCol: String = "vec_id",
       embCol: String = "embedding",
-      hotCellBound: Long = 16384L): (DataFrame, DataFrame) =
+      hotCellBound: Long = graft.operators.Similarity.hotCellBound)
+      : (DataFrame, DataFrame) =
     graft.operators.Similarity.ivfIndexUpsert(cents, lists, stats, delta,
       idCol, embCol, hotCellBound)
   def ivfPqIndexUpsert(cents: DataFrame, codebooks: DataFrame,
       codes: DataFrame, stats: DataFrame, delta: DataFrame,
       idCol: String = "vec_id", embCol: String = "embedding",
       numSubs: Int = 4, subDim: Int = 16,
-      hotCellBound: Long = 16384L): (DataFrame, DataFrame) =
+      hotCellBound: Long = graft.operators.Similarity.hotCellBound)
+      : (DataFrame, DataFrame) =
     graft.operators.Similarity.ivfPqIndexUpsert(cents, codebooks, codes,
       stats, delta, idCol, embCol, numSubs, subDim, hotCellBound)
 

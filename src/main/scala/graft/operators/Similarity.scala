@@ -18,6 +18,16 @@ import org.apache.spark.sql.functions._
   * |Q|·|N| with Q broadcast); the LSH variant buckets by a sign-bit
   * sketch so candidate generation is an equi-join on the bucket key —
   * the 100 TB path. No cross join ever touches two large sides.
+  *
+  * The ANN family's contract is its probe core, written once here and
+  * composed by every IVF/IVF-PQ search (GraftApi's and AnnServe's
+  * faces included): [[queryVecs]] (the zero-norm-gated query
+  * projection), [[rankProbes]] (per-query cell ranking by cosine desc,
+  * cent_id), [[autoNprobeCut]] (the occupancy-derived nprobe bound),
+  * [[splitHotCells]] / [[preSplitByOccupancy]] over [[hotCells]] (the
+  * hot-cell split at serve and build time, bounded by [[hotCellBound]]),
+  * [[adcLut]] / [[adcSum]] (the PQ lookup table and distance) and
+  * [[ivfPqCodes]] (the cell-keyed PQ codes).
   */
 object Similarity {
 
@@ -26,7 +36,7 @@ object Similarity {
     * identical left-to-right fold, minus the per-row intermediate array a
     * HOF zip_with would allocate.
     */
-  private def nrmCol = sqrt(vec_dot(col("embedding"), col("embedding")))
+  private def nrmOf(c: Column): Column = sqrt(vec_dot(c, c))
 
   private val normSql =
     "sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE)," +
@@ -48,7 +58,7 @@ object Similarity {
     // stage runs the full-width dot product twice per vector
     // (plans/r17 Condition audit, r17)
     df.withColumn("nrm",
-        graft.functions.OptimizerBarrier.barrier(nrmCol))
+        graft.functions.OptimizerBarrier.barrier(nrmOf(col("embedding"))))
       .filter(col("nrm") > 0)
   private val normedVSql =
     s"SELECT * FROM (SELECT vec_id, embedding, $normSql AS nrm FROM embeddings) WHERE nrm > 0"
@@ -460,34 +470,16 @@ object Similarity {
         .filter(col("vec_id") < 256))
       .select(col("vec_id").as("cent_id"), col("embedding").as("c_emb"),
         col("nrm").as("c_nrm"))
-    import org.apache.spark.sql.expressions.Window
     // nearest centroid through the codegen'd argmin kernel (assignTo):
     // codebook packed + broadcast, one input row → one output row — no
     // |N|·|cells| expansion, no aggregate, no window.
-    val assign = assignTo(
-        v.select(col("vec_id").as("pid"), lit(0).as("part"),
-          col("embedding").as("emb"), col("nrm")),
-        cents.withColumn("part", lit(0)), NegCos)
+    val assign = nearestCell(v, cents)
       .select(col("pid").as("a_vec"), col("a_cent"))
     val q = normed(Tables.load(spark, dir, "embeddings")
         .filter(col("vec_id") < 8))
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
         col("nrm").as("q_nrm"))
-    val probes = q.crossJoin(broadcast(cents))
-      .withColumn("rn", row_number().over(Window.partitionBy(col("q_id")).orderBy(
-        (vec_dot(col("q_emb"), col("c_emb")) / (col("q_nrm") * col("c_nrm"))).desc,
-        col("cent_id"))))
-      .filter(col("rn") <= 2)
-      .select(col("q_id").as("p_qid"), col("cent_id").as("p_cent"))
-    val scored = q
-      .join(broadcast(probes), col("p_qid") === col("q_id"))
-      .join(assign, col("a_cent") === col("p_cent"))
-      .join(v, col("vec_id") === col("a_vec") && col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id").as("cand_id"),
-        (vec_dot(col("q_emb"), col("embedding")) / (col("q_nrm") * col("nrm")))
-          .as("cosine"))
-    graft.api.GraftApi.topKPerKey(scored, "q_id", "cosine", "cand_id", k = 5)
-      .select("q_id", "cand_id", "cosine")
+    ivfProbeSearch(q, cents, assign, v, k = 5)(_.filter(col("rn") <= 2))
   }
 
   /** Random-hyperplane LSH (the production form of the sign-sketch ops
@@ -561,7 +553,8 @@ object Similarity {
     def sketched(base: DataFrame) = base
       .crossJoin(broadcast(planes))
       // barrier: corpus-side gate — see normed()'s r17 note
-      .withColumn("nrm", graft.functions.OptimizerBarrier.barrier(nrmCol))
+      .withColumn("nrm",
+        graft.functions.OptimizerBarrier.barrier(nrmOf(col("embedding"))))
       .filter(col("nrm") > 0)
       .withColumn("sk", graft.functions.vec.vec_signs(col("embedding"), col("w")))
       .select("vec_id", "embedding", "nrm", "sk")
@@ -585,23 +578,6 @@ object Similarity {
       .select("q_id", "cand_id", "cosine")
   }
 
-  /** IVF with one Lloyd (k-means) refinement iteration — the index-build
-    * loop real IVF indexes run, on top of [[annIvfTopK]]'s probe shape.
-    *
-    * Cross-engine exactness of the refined centroids is the crux: a
-    * naive per-cell AVG of doubles depends on partial-aggregation order
-    * (different between 1000 Spark executors and DuckDB), so the mean is
-    * computed over FIXED-POINT components — round(x·1e6) per dimension,
-    * summed exactly as longs, divided back once — making every refined
-    * centroid bit-identical in both engines regardless of parallelism.
-    * The per-(cell,dim) sums are the scalable shape too: one keyed
-    * shuffle of (cells·64) longs, never a collect of vectors.
-    *
-    * Assignment stays the map-side min_by collapse (argmax cosine with
-    * cent_id tiebreak, |N|·|cells| rows collapse before the shuffle);
-    * probes = top-2 refined cells per query; final ranking through
-    * TopKPerKeyExec on true cosine.
-    */
   /** The ann_ivf_kmeans CTE chain (v/c0/assign0/contrib/c1/c1n/assign1/q),
     * with the probe cut parameterized: `probeLimit` is the SQL expression
     * bounding `rn` (a literal for the fixed-nprobe op; an occupancy-derived
@@ -672,6 +648,23 @@ object Similarity {
       |    ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cosine DESC, cand_id) AS rn
       |  FROM scored) WHERE rn <= 5""".stripMargin
 
+  /** IVF with one Lloyd (k-means) refinement iteration — the index-build
+    * loop real IVF indexes run, on top of [[annIvfTopK]]'s probe shape.
+    *
+    * Cross-engine exactness of the refined centroids is the crux: a
+    * naive per-cell AVG of doubles depends on partial-aggregation order
+    * (different between 1000 Spark executors and DuckDB), so the mean is
+    * computed over FIXED-POINT components — round(x·1e6) per dimension,
+    * summed exactly as longs, divided back once — making every refined
+    * centroid bit-identical in both engines regardless of parallelism.
+    * The per-(cell,dim) sums are the scalable shape too: one keyed
+    * shuffle of (cells·64) longs, never a collect of vectors.
+    *
+    * Assignment stays the map-side min_by collapse (argmax cosine with
+    * cent_id tiebreak, |N|·|cells| rows collapse before the shuffle);
+    * probes = top-2 refined cells per query; final ranking through
+    * TopKPerKeyExec on true cosine.
+    */
   val annIvfKmeansTopK: Op = Op(
     "ann_ivf_kmeans_topk",
     ivfKmeansOracleSql("", "2"),
@@ -685,6 +678,17 @@ object Similarity {
       "vec_id", "embedding",
       cells = 256, nprobe = 2, iters = 1, k = 5)
   }
+
+  /** The autoprobe occupancy CTEs: the oracle's nprobe bound, shared by
+    * [[annIvfAutoprobe]], [[annIvfUpsert]] and [[annRecallAudit]] (which
+    * nests the identical oracle so the audited search IS the registered
+    * one).
+    */
+  private val autoprobeExtraCtes: String =
+    """
+      |occ AS (SELECT cent_id, COUNT(*) AS cnt FROM assign1 GROUP BY cent_id),
+      |np AS (SELECT LEAST(256, GREATEST(1,
+      |  CAST(ceil(40.0 * SUM(cnt) / SUM(cnt * cnt)) AS BIGINT))) AS np FROM occ),"""
 
   /** [[annIvfKmeansTopK]] with nprobe chosen FROM the index instead of by
     * hand — the SURVEY r6+ "nprobe auto-tuning from cell-occupancy stats"
@@ -700,22 +704,11 @@ object Similarity {
     * both sf0.01 and sf0.1 (vs IVFPQ-ADC 0.35/0.275 and — after the r15
     * shortlist re-tune — IVFPQ+refine 0.825 at sf0.1; the ADC variant
     * trades recall for the 16-byte code scan, refine buys it back
-    * above the IVF line). The stats are
-    * `cells` rows
-    * aggregated off the inverted lists and ride the plan as a one-row
+    * above the IVF line). The stats are `cells` rows aggregated off the
+    * inverted lists and ride the plan as a one-row
     * cross join — no driver action (see [[Similarity.ivfSearchAuto]]).
     * The oracle re-derives the same bound in SQL from the same assign1.
     */
-  /** The autoprobe occupancy CTEs (shared with [[annRecallAudit]], which
-    * nests the identical oracle so the audited search IS the registered
-    * one).
-    */
-  private val autoprobeExtraCtes: String =
-    """
-      |occ AS (SELECT cent_id, COUNT(*) AS cnt FROM assign1 GROUP BY cent_id),
-      |np AS (SELECT LEAST(256, GREATEST(1,
-      |  CAST(ceil(40.0 * SUM(cnt) / SUM(cnt * cnt)) AS BIGINT))) AS np FROM occ),"""
-
   val annIvfAutoprobe: Op = Op(
     "ann_ivf_autoprobe",
     ivfKmeansOracleSql(autoprobeExtraCtes, "(SELECT np FROM np)"),
@@ -750,12 +743,7 @@ object Similarity {
     */
   val annIvfUpsert: Op = Op(
     "ann_ivf_upsert",
-    ivfKmeansOracleSql(
-      """
-        |occ AS (SELECT cent_id, COUNT(*) AS cnt FROM assign1 GROUP BY cent_id),
-        |np AS (SELECT LEAST(256, GREATEST(1,
-        |  CAST(ceil(40.0 * SUM(cnt) / SUM(cnt * cnt)) AS BIGINT))) AS np FROM occ),""",
-      "(SELECT np FROM np)",
+    ivfKmeansOracleSql(autoprobeExtraCtes, "(SELECT np FROM np)",
       trainFilter = "vec_id % 5 <> 0"),
   ) { (spark, dir) =>
     // base index persisted get-or-build (r13, VERDICT r12 #4): the
@@ -783,6 +771,13 @@ object Similarity {
     * parallelism at index-build time.
     */
   private[graft] val hotSlices = 32
+  /** The hot-cell bound of the IVF family: a cell whose occupancy exceeds
+    * max(hotCellBound, Σcnt / shuffle partitions) is hot — sliced at
+    * build time by [[preSplitByOccupancy]], split at serve time by
+    * [[splitHotCells]]. The public `hotCellBound` parameters default to
+    * it; specs force the split tiers through them.
+    */
+  private[graft] val hotCellBound: Long = 16384L
   /** Get-or-build the persisted IVF index of `dir`'s embeddings table:
     * first call per (session, corpus) trains [[ivfIndex]] and writes it
     * to a session-catalog database; later calls only read the tables.
@@ -801,8 +796,9 @@ object Similarity {
     *     (cold cells slice 0), and the table is bucketBy(cent_id, slice)
     *     — a hot cell's rows spread across bucket files AT REST, so the
     *     probe-join scan parallelizes over the hot cell with NO runtime
-    *     repartition exchange. Serving detects the layout by the slice
-    *     column ([[ivfIndexProbeSearch]]).
+    *     repartition exchange. Serving detects the layout by the
+    *     graft.presplit metadata flag on the slice column
+    *     ([[presplitMeta]], [[splitHotCells]]).
     */
   private def persistedIvfIndex(spark: SparkSession, dir: String,
       cells: Int, iters: Int, trainTag: String = "all",
@@ -821,34 +817,34 @@ object Similarity {
         train(Tables.embeddings(spark, dir)), "vec_id", "embedding",
         cells, iters)
       cents.write.mode("overwrite").saveAsTable(s"$db.cents")
-      val occ = lists.groupBy("cent_id").agg(count(lit(1)).as("cnt"))
-      occ.write.mode("overwrite").saveAsTable(s"$db.stats")
-      preSplitByOccupancy(lists, spark.table(s"$db.stats"), "vec_id")
-        .write.mode("overwrite")
-        .bucketBy(hotSlices, "cent_id", "slice").sortBy("cent_id", "slice")
-        .saveAsTable(s"$db.lists")
+      cellOccupancy(lists).write.mode("overwrite").saveAsTable(s"$db.stats")
+      savePreSplit(lists, spark.table(s"$db.stats"), s"$db.lists")
     } match { case Seq(cents, lists, stats) => (cents, lists, stats) }
   }
 
   /** Add the pre-split `slice` column to a cell-keyed frame: rows of
-    * cells whose occupancy exceeds the [[ivfIndexProbeSearch]] hot bound
-    * slice by content hash of `idCol` (deterministic under stage retry),
-    * cold cells stay slice 0. The decision reads `stats` — ≤cells rows.
+    * [[hotCells]] slice by content hash of `idCol` (deterministic under
+    * stage retry), cold cells stay slice 0. The decision reads `stats` —
+    * ≤cells rows.
     */
   private[graft] def preSplitByOccupancy(keyed: DataFrame, stats: DataFrame,
-      idCol: String, hotCellBound: Long = 16384L): DataFrame = {
-    val occ = stats.collect()
-    val parts = keyed.sparkSession.conf
-      .get("spark.sql.shuffle.partitions").toInt.max(1)
-    val bound = math.max(hotCellBound, occ.map(_.getAs[Long]("cnt")).sum / parts)
-    val hotIds = occ.filter(_.getAs[Long]("cnt") > bound)
-      .map(_.getAs[Long]("cent_id")).toSeq
+      idCol: String, hotCellBound: Long = Similarity.hotCellBound): DataFrame = {
+    val (_, hotIds) = hotCells(stats, hotCellBound)
     val slice =
       if (hotIds.isEmpty) lit(0)
       else when(col("cent_id").isin(hotIds: _*),
         pmod(hash(col(idCol)), lit(hotSlices))).otherwise(lit(0))
     keyed.withColumn("slice", slice).withMetadata("slice", presplitMeta)
   }
+
+  /** Persist a cell-keyed (cent_id, vec_id, …) frame in the pre-split
+    * layout: [[preSplitByOccupancy]] at the default bound, bucketed and
+    * sorted on (cent_id, slice) into [[hotSlices]] buckets.
+    */
+  private def savePreSplit(keyed: DataFrame, stats: DataFrame, table: String): Unit =
+    preSplitByOccupancy(keyed, stats, "vec_id").write.mode("overwrite")
+      .bucketBy(hotSlices, "cent_id", "slice").sortBy("cent_id", "slice")
+      .saveAsTable(table)
 
   /** Explicit marker for the pre-split layout: a StructField-metadata flag
     * on the `slice` column, written by [[preSplitByOccupancy]] and
@@ -890,6 +886,135 @@ object Similarity {
     flagged
   }
 
+  // ---- IVF/PQ probe core -------------------------------------------------
+  //
+  // Every IVF and IVF-PQ search decision, written once: the query
+  // projection, the probe ranking, the occupancy-derived nprobe bound, the
+  // hot-cell split, the ADC lookup table and sum, and the cell-keyed PQ
+  // codes. The batch searches here and in GraftApi compose them; the
+  // streaming faces (AnnServe) share the ADC sum.
+
+  /** Queries as (q_id, q_emb, q_nrm), zero-norm rows dropped — the
+    * retrieval contract of [[normed]] (cosine against a zero vector is a
+    * DIVIDE_BY_ZERO under ANSI).
+    */
+  private[graft] def queryVecs(queries: DataFrame, idCol: String,
+      embCol: String): DataFrame =
+    queries.select(col(idCol).cast("long").as("q_id"), col(embCol).as("q_emb"))
+      .withColumn("q_nrm", nrmOf(col("q_emb")))
+      .filter(col("q_nrm") > 0)
+
+  /** The probe set (p_qid, p_cent): every query against the broadcast
+    * centroids (cent_id, c_emb, c_nrm), ranked per query by (cosine desc,
+    * cent_id) as `rn`; `cut` keeps the probed ranks (a literal nprobe or
+    * [[autoNprobeCut]]).
+    */
+  private[graft] def rankProbes(q: DataFrame, cents: DataFrame)(
+      cut: DataFrame => DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val ranked = q.crossJoin(broadcast(cents))
+      .withColumn("rn", row_number().over(Window.partitionBy(col("q_id")).orderBy(
+        (vec_dot(col("q_emb"), col("c_emb")) / (col("q_nrm") * col("c_nrm"))).desc,
+        col("cent_id"))))
+    cut(ranked).select(col("q_id").as("p_qid"), col("cent_id").as("p_cent"))
+  }
+
+  /** Per-cell occupancy (cell, cnt) of a cell-keyed frame. */
+  private def cellOccupancy(keyed: DataFrame, cell: String = "cent_id"): DataFrame =
+    keyed.groupBy(cell).agg(count(lit(1)).as("cnt"))
+
+  /** The auto-nprobe probe cut: nprobe = clamp(ceil(k·oversample·Σcnt /
+    * Σcnt²), 1, cells) over the occupancy `occ` (see [[annIvfAutoprobe]]
+    * for the derivation), computed plan-side as a one-row broadcast —
+    * no driver action. `cells` is the upper clamp, an aggregate over
+    * `occ`'s columns.
+    */
+  private def autoNprobeCut(occ: DataFrame, cells: Column, k: Int,
+      oversample: Int): DataFrame => DataFrame = {
+    val np = occ.agg(least(cells, greatest(lit(1L),
+      ceil(lit((k.toLong * oversample).toDouble) * sum("cnt") /
+        sum(col("cnt") * col("cnt"))))).as("np"))
+    _.crossJoin(broadcast(np)).filter(col("rn") <= col("np"))
+  }
+
+  /** The hot cells of an occupancy table (cent_id, cnt): cells above
+    * max(hotCellBound, Σcnt / parts), with `parts` the session's shuffle
+    * parallelism (returned too, the runtime split's repartition width).
+    * Collects ≤cells rows.
+    */
+  private def hotCells(stats: DataFrame, hotCellBound: Long): (Int, Seq[Long]) = {
+    val parts = stats.sparkSession.conf
+      .get("spark.sql.shuffle.partitions").toInt.max(1)
+    val occ = stats.select(col("cent_id"), col("cnt")).collect()
+    val bound = math.max(hotCellBound, occ.map(_.getLong(1)).sum / parts)
+    (parts, occ.filter(_.getLong(1) > bound).map(_.getLong(0)).toSeq)
+  }
+
+  /** Score a cell-keyed candidate frame (inverted lists or IVF-PQ codes)
+    * with `score`, splitting hot cells — the HOT-CELL SPLIT of
+    * [[ivfIndexProbeSearch]] and GraftApi.ivfPqSearchADCFromIndex. Two
+    * tiers:
+    *   - PRE-SPLIT ([[isPresplit]]: the graft.presplit flag on the slice
+    *     column): [[preSplitByOccupancy]] sliced hot cells at build time
+    *     and the table is bucketed on (cent_id, slice), so `keyed` is
+    *     scored as is — no occupancy read, no repartition.
+    *   - RUNTIME split: the [[hotCells]] (occupancy from `stats` when
+    *     given, ≤cells rows, else a `keyed` aggregate) are scored after a
+    *     repartition by a content hash of `idCol` (deterministic under
+    *     stage retry) and unioned with the cold cells, which keep the
+    *     zero-exchange bucketed scan. The probe side stays broadcast, so
+    *     the union over sub-slices is exactly the cell's result.
+    */
+  private[graft] def splitHotCells(keyed: DataFrame, stats: Option[DataFrame],
+      idCol: String, hotCellBound: Long)(score: DataFrame => DataFrame): DataFrame =
+    if (isPresplit(keyed)) score(keyed)
+    else {
+      val (parts, hotIds) =
+        hotCells(stats.getOrElse(cellOccupancy(keyed)), hotCellBound)
+      if (hotIds.isEmpty) score(keyed)
+      else score(keyed.filter(!col("cent_id").isin(hotIds: _*)))
+        .unionByName(score(keyed.filter(col("cent_id").isin(hotIds: _*))
+          .repartition(parts, pmod(hash(col(idCol)), lit(parts)))))
+    }
+
+  /** Per-query ADC lookup tables (`qid`, lut): the exact squared distance
+    * from each query subvector of `sub` (pid, part, emb) to each codeword
+    * of the broadcast `codebooks` (part, cent_id, c_emb), keyed
+    * part·codebookSize + code — injective for dense codes
+    * 0..codebookSize-1, and an exact-key map keeps the pick correct when
+    * a part has fewer live codewords.
+    */
+  private[graft] def adcLut(sub: DataFrame, codebooks: DataFrame,
+      codebookSize: Int, qid: String): DataFrame =
+    sub.join(broadcast(codebooks), "part")
+      .select(col("pid").as(qid), col("part"), col("cent_id"),
+        graft.functions.vec.vec_distsq(col("emb"), col("c_emb")).as("dsq"))
+      .groupBy(col(qid))
+      .agg(expr(
+        s"map_from_entries(collect_list(struct(int(part * $codebookSize + cent_id), dsq)))")
+        .as("lut"))
+
+  /** A candidate's ADC distance: its `codes`' numSubs LUT picks summed
+    * left to right — unrolled into plain adds so the scan stays inside
+    * WholeStageCodegen (an aggregate() HOF is interpreted), bit-identical
+    * to the oracles' sequential fold.
+    */
+  private[graft] def adcSum(numSubs: Int, codebookSize: Int): Column =
+    (0 until numSubs).map(s =>
+        expr(s"element_at(lut, int(${s * codebookSize} + element_at(codes, ${s + 1})))"))
+      .reduce(_ + _)
+
+  /** The cell-keyed IVF-PQ codes (<idCol>, codes, cent_id): `corpus`
+    * PQ-encoded against `codebooks`, joined to its IVF cell assignment
+    * `assign1` (a_vec, a_cent).
+    */
+  private[graft] def ivfPqCodes(corpus: DataFrame, idCol: String,
+      embCol: String, codebooks: DataFrame, numSubs: Int, subDim: Int,
+      assign1: DataFrame): DataFrame =
+    graft.api.GraftApi.pqEncode(corpus, idCol, embCol, codebooks, numSubs, subDim)
+      .join(assign1, col(idCol) === col("a_vec"))
+      .select(col(idCol), col("codes"), col("a_cent").as("cent_id"))
+
   /** Get-or-build the persisted IVF+PQ index of `dir`'s embeddings table
     * — the FAISS-IVFADC storage layout: coarse centroids + PQ codebooks
     * (both broadcast-sized) and the codes laid out BY CELL
@@ -912,35 +1037,35 @@ object Similarity {
       val (_, c1p, assign1) = ivfBuild(emb, "vec_id", "embedding", cells, 1)
       val cbs = graft.api.GraftApi.pqCodebooks(
         emb, "vec_id", "embedding", numSubs, subDim, codebookSize)
-      val codes = graft.api.GraftApi.pqEncode(
-          emb, "vec_id", "embedding", cbs, numSubs, subDim)
-        .join(assign1, col("vec_id") === col("a_vec"))
-        .select(col("vec_id"), col("codes"), col("a_cent").as("cent_id"))
+      val codes = ivfPqCodes(emb, "vec_id", "embedding", cbs, numSubs, subDim,
+        assign1)
       c1p.drop("part").write.mode("overwrite").saveAsTable(s"$db.cents")
       cbs.write.mode("overwrite").saveAsTable(s"$db.cbs")
-      codes.groupBy("cent_id").agg(count(lit(1)).as("cnt"))
-        .write.mode("overwrite").saveAsTable(s"$db.stats")
-      preSplitByOccupancy(codes, spark.table(s"$db.stats"), "vec_id")
-        .write.mode("overwrite")
-        .bucketBy(hotSlices, "cent_id", "slice").sortBy("cent_id", "slice")
-        .saveAsTable(s"$db.codes")
+      cellOccupancy(codes).write.mode("overwrite").saveAsTable(s"$db.stats")
+      savePreSplit(codes, spark.table(s"$db.stats"), s"$db.codes")
     } match { case Seq(cents, cbs, codes, stats) => (cents, cbs, codes, stats) }
   }
 
-  /** Lloyd-refined IVF cosine top-k as a library function over any
-    * (id, float-array) corpus/queries frames — the registered
-    * [[annIvfKmeansTopK]] is this bound to the embeddings table.
-    *
-    * Index build: seeds are the `cells` smallest ids
-    * (TakeOrderedAndProject — map-side partial top-k, a BOUNDED cell
-    * count, never a fraction of N), refined by `iters` fixed-point
-    * Lloyd passes; assignment is the codegen'd broadcast argmin.
-    * Search: per query the top-`nprobe` refined cells (a |Q|·cells
-    * window over a broadcast — queries are the small side), candidates
-    * from the probed cells only, exact cosine re-rank through the
-    * bounded-heap TopKPerKey. Self-pairs excluded. Returns (q_id,
-    * cand_id, cosine).
+  /** A corpus as (vec_id, embedding, nrm), ids cast to long. */
+  private def corpusVecs(corpus: DataFrame, idCol: String,
+      embCol: String): DataFrame =
+    corpus.select(col(idCol).cast("long").as("vec_id"), col(embCol).as("embedding"))
+      .withColumn("nrm", nrmOf(col("embedding")))
+
+  /** (vec_id, embedding, nrm) vectors as single-codebook [[assignTo]]
+    * points (pid, part = 0, emb, nrm).
     */
+  private def cellPoints(v: DataFrame): DataFrame =
+    v.select(col("vec_id").as("pid"), lit(0).as("part"),
+      col("embedding").as("emb"), col("nrm"))
+
+  /** Each vector of `v` (vec_id, embedding, nrm) assigned its nearest
+    * centroid of `cents` (cent_id, c_emb, c_nrm) by cosine: (pid, part,
+    * a_cent, a_cost).
+    */
+  private def nearestCell(v: DataFrame, cents: DataFrame): DataFrame =
+    assignTo(cellPoints(v), cents.withColumn("part", lit(0)), NegCos)
+
   /** The shared IVF index build: normalized corpus vectors, Lloyd-refined
     * centroids, and per-vector cell assignments — the deterministic
     * prefix of [[ivfSearch]], factored so [[ivfIndex]] can persist the
@@ -948,16 +1073,11 @@ object Similarity {
     */
   private[graft] def ivfBuild(corpus: DataFrame, idCol: String, embCol: String,
       cells: Int, iters: Int): (DataFrame, DataFrame, DataFrame) = {
-    def nrmOf(c: Column) = sqrt(vec_dot(c, c))
     // zero-norm vectors are excluded from the INDEX (the retrieval
     // contract: no direction, no cosine) — [[normed]]'s rationale
     val v = graft.CacheRegistry.track(
-      corpus.select(col(idCol).cast("long").as("vec_id"),
-          col(embCol).as("embedding"))
-        .withColumn("nrm", nrmOf(col("embedding")))
-        .filter(col("nrm") > 0))
-    val pts = v.select(col("vec_id").as("pid"), lit(0).as("part"),
-      col("embedding").as("emb"), col("nrm"))
+      corpusVecs(corpus, idCol, embCol).filter(col("nrm") > 0))
+    val pts = cellPoints(v)
     val seedIds = broadcast(v.select(col("vec_id").as("seed_id"))
       .orderBy("seed_id").limit(cells))
     val c0 = pts.join(seedIds, col("pid") === col("seed_id"))
@@ -995,18 +1115,11 @@ object Similarity {
     */
   private[graft] def ivfAssignToCells(cents: DataFrame, vecs: DataFrame,
       idCol: String, embCol: String): DataFrame = {
-    def nrmOf(c: Column) = sqrt(vec_dot(c, c))
     // the retrieval contract ([[normed]]): zero-norm vectors never enter
     // the index — an upserted delta shard obeys the same exclusion the
     // build does
-    val v = vecs.select(col(idCol).cast("long").as("vec_id"),
-        col(embCol).as("embedding"))
-      .withColumn("nrm", nrmOf(col("embedding")))
-      .filter(col("nrm") > 0)
-    assignTo(
-        v.select(col("vec_id").as("pid"), lit(0).as("part"),
-          col("embedding").as("emb"), col("nrm")),
-        cents.withColumn("part", lit(0)), NegCos)
+    val v = corpusVecs(vecs, idCol, embCol).filter(col("nrm") > 0)
+    nearestCell(v, cents)
       .select(col("pid").as("vec_id"), col("a_cent").as("cent_id"))
       .join(v, "vec_id")
       .select(col("cent_id"), col("vec_id"), col("embedding"), col("nrm"))
@@ -1043,7 +1156,7 @@ object Similarity {
   def ivfIndexUpsert(cents: DataFrame, lists: DataFrame, stats: DataFrame,
       delta: DataFrame, idCol: String = "vec_id",
       embCol: String = "embedding",
-      hotCellBound: Long = 16384L): (DataFrame, DataFrame) = {
+      hotCellBound: Long = Similarity.hotCellBound): (DataFrame, DataFrame) = {
     val deltaLists = ivfAssignToCells(cents, delta, idCol, embCol)
     val mergedStats = mergeCellStats(stats, deltaLists)
     val union = lists.drop("slice").unionByName(deltaLists)
@@ -1062,7 +1175,7 @@ object Similarity {
       codes: DataFrame, stats: DataFrame, delta: DataFrame,
       idCol: String = "vec_id", embCol: String = "embedding",
       numSubs: Int = 4, subDim: Int = 16,
-      hotCellBound: Long = 16384L): (DataFrame, DataFrame) = {
+      hotCellBound: Long = Similarity.hotCellBound): (DataFrame, DataFrame) = {
     val assign = ivfAssignToCells(cents, delta, idCol, embCol)
       .select(col("vec_id").as("a_vec"), col("cent_id"))
     val deltaCodes = graft.api.GraftApi.pqEncode(
@@ -1104,20 +1217,13 @@ object Similarity {
     */
   def semDedupIndex(corpus: DataFrame, idCol: String, embCol: String,
       nCents: Int = 64): (DataFrame, DataFrame, DataFrame) = {
-    def nrmOf(c: Column) = sqrt(vec_dot(c, c))
-    val v = graft.CacheRegistry.track(
-      corpus.select(col(idCol).cast("long").as("vec_id"),
-          col(embCol).as("embedding"))
-        .withColumn("nrm", nrmOf(col("embedding"))))
+    val v = graft.CacheRegistry.track(corpusVecs(corpus, idCol, embCol))
     val seedIds = broadcast(v.select(col("vec_id").as("seed_id"))
       .orderBy("seed_id").limit(nCents))
     val cents = v.join(seedIds, col("vec_id") === col("seed_id"))
       .select(col("vec_id").as("cent_id"), col("embedding").as("c_emb"),
         col("nrm").as("c_nrm"))
-    val assign = assignTo(
-        v.select(col("vec_id").as("pid"), lit(0).as("part"),
-          col("embedding").as("emb"), col("nrm")),
-        cents.withColumn("part", lit(0)), NegCos)
+    val assign = nearestCell(v, cents)
       .select(col("pid").as("vec_id"), col("a_cent").as("cent_id"))
     val members = assign.join(v, "vec_id")
       .select(col("cent_id"), col("vec_id"), col("embedding"), col("nrm"))
@@ -1125,11 +1231,25 @@ object Similarity {
     (cents, members, stats)
   }
 
+  /** Lloyd-refined IVF cosine top-k as a library function over any
+    * (id, float-array) corpus/queries frames — the registered
+    * [[annIvfKmeansTopK]] is this bound to the embeddings table.
+    *
+    * Index build: seeds are the `cells` smallest ids
+    * (TakeOrderedAndProject — map-side partial top-k, a BOUNDED cell
+    * count, never a fraction of N), refined by `iters` fixed-point
+    * Lloyd passes; assignment is the codegen'd broadcast argmin.
+    * Search: per query the top-`nprobe` refined cells (a |Q|·cells
+    * window over a broadcast — queries are the small side), candidates
+    * from the probed cells only, exact cosine re-rank through the
+    * bounded-heap TopKPerKey. Self-pairs excluded. Returns (q_id,
+    * cand_id, cosine).
+    */
   def ivfSearch(corpus: DataFrame, queries: DataFrame, idCol: String,
       embCol: String, cells: Int, nprobe: Int, iters: Int, k: Int): DataFrame = {
     val (v, c1p, assign1) = ivfBuild(corpus, idCol, embCol, cells, iters)
-    ivfProbeSearch(v, c1p, assign1, queries, idCol, embCol, k)(
-      _.filter(col("rn") <= nprobe))
+    ivfProbeSearch(queryVecs(queries, idCol, embCol), c1p.drop("part"),
+      assign1, v, k)(_.filter(col("rn") <= nprobe))
   }
 
   /** Batch serving off a PERSISTED [[ivfIndex]], nprobe auto-derived from
@@ -1140,124 +1260,58 @@ object Similarity {
     * candidate score joins the inverted lists ONCE on cent_id (no
     * assign⋈vectors re-join — the lists ARE the assignment with its
     * vectors). A pre-split lists layout serves hot cells with zero
-    * runtime exchange (see [[ivfIndexProbeSearch]]) — the same shape the
+    * runtime exchange (see [[splitHotCells]]) — the same shape the
     * streaming face (AnnServe.ivfServeStreamAuto) serves per micro-batch.
     */
   def ivfSearchAutoFromIndex(cents: DataFrame, lists: DataFrame,
       queries: DataFrame, idCol: String, embCol: String, k: Int,
-      oversample: Int = 8, hotCellBound: Long = 16384L,
+      oversample: Int = 8, hotCellBound: Long = Similarity.hotCellBound,
       stats: Option[DataFrame] = None): DataFrame = {
     // occupancy: the persisted stats table when the index ships one
     // (≤cells rows — the footer-sized read), else derived in-plan from
     // the lists (a second corpus pass; acceptable only for ad-hoc
     // in-memory indexes)
-    val occ = stats.getOrElse(
-      lists.groupBy("cent_id").agg(count(lit(1)).as("cnt")))
-    val np = occ
+    val occ = stats.getOrElse(cellOccupancy(lists))
       .crossJoin(broadcast(cents.agg(count(lit(1)).as("cells"))))
-      .agg(least(max(col("cells")), greatest(lit(1L),
-        ceil(lit((k.toLong * oversample).toDouble) * sum("cnt") /
-          sum(col("cnt") * col("cnt"))))).as("np"))
     ivfIndexProbeSearch(cents, lists, queries, idCol, embCol, k, hotCellBound,
-      stats)(
-      _.crossJoin(broadcast(np)).filter(col("rn") <= col("np")))
+      stats)(autoNprobeCut(occ, max(col("cells")), k, oversample))
   }
 
-  /** [[ivfProbeSearch]] for a persisted index: identical probe ranking,
-    * but candidates come straight from the (cent_id, vec_id, embedding,
-    * nrm) inverted lists — one keyed join, no assignment⋈vector re-join.
-    *
-    * HOT-CELL SPLIT (the standard-IVF-practice answer to template-heavy
+  /** The IVF probe for a persisted index: the [[rankProbes]] probe set,
+    * candidates straight from the (cent_id, vec_id, embedding, nrm)
+    * inverted lists — one keyed join, no assignment⋈vector re-join —
+    * scored through [[splitHotCells]]. That split answers template-heavy
     * corpora, where mass-duplicated embeddings concentrate most of the
-    * corpus AND most probes into one cell): the bucketed lists scan reads
-    * one task per bucket, so a cell holding 90% of the corpus scores
-    * hot_queries × hot_list candidates in a SINGLE task — a straggler
-    * that grows quadratically with duplication concentration. Two tiers:
-    *
-    *   - PRE-SPLIT (preferred; detected by a `slice` column in the
-    *     lists): [[persistedIvfIndex]] already sliced hot cells by
-    *     content hash at BUILD time and bucketed the table on
-    *     (cent_id, slice), so the hot cell's rows sit spread across
-    *     bucket files at rest — the probe-join scan parallelizes over
-    *     them and serving pays NO runtime repartition and NO occupancy
-    *     read at all (the addIndex precompute-once contract, reference
-    *     Optimization.scala:31).
-    *   - RUNTIME split (ad-hoc in-memory indexes): cells whose inverted
-    *     list exceeds `hotCellBound` (floored at tot/partitions) are
-    *     redistributed by a content hash of vec_id (deterministic under
-    *     stage retry — see [[Skew.saltedJoin]]'s note) across the
-    *     session's shuffle parallelism before the probe join; the probe
-    *     side stays a broadcast, so each sub-slice scores independently
-    *     and the union over slices is EXACTLY the cell's result — the
-    *     oracle is unchanged. Cold cells keep the zero-exchange
-    *     bucketed-scan plan (BucketingSpec) with hot-cell row groups
-    *     pruned via the pushed `cent_id NOT IN` filter. The split
-    *     decision reads the persisted `stats` when provided (≤`cells`
-    *     rows — bounded index metadata), else a lists aggregate.
+    * corpus AND most probes into one cell: the bucketed lists scan reads
+    * one task per bucket, so unsplit a cell holding 90% of the corpus
+    * scores hot_queries × hot_list candidates in a SINGLE task — a
+    * straggler that grows quadratically with duplication concentration.
     */
   private def ivfIndexProbeSearch(cents: DataFrame, lists: DataFrame,
       queries: DataFrame, idCol: String, embCol: String, k: Int,
-      hotCellBound: Long = 16384L, stats: Option[DataFrame] = None)(
+      hotCellBound: Long, stats: Option[DataFrame])(
       cut: DataFrame => DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    def nrmOf(c: Column) = sqrt(vec_dot(c, c))
-    val q = queries.select(col(idCol).cast("long").as("q_id"),
-        col(embCol).as("q_emb"))
-      .withColumn("q_nrm", nrmOf(col("q_emb")))
-      .filter(col("q_nrm") > 0)
-    val ranked = q.crossJoin(broadcast(cents))
-      .withColumn("rn", row_number().over(Window.partitionBy(col("q_id")).orderBy(
-        (vec_dot(col("q_emb"), col("c_emb")) / (col("q_nrm") * col("c_nrm"))).desc,
-        col("cent_id"))))
-    val probes = cut(ranked)
-      .select(col("q_id").as("p_qid"), col("cent_id").as("p_cent"))
-    val qp = q.join(broadcast(probes), col("p_qid") === col("q_id"))
+    val q = queryVecs(queries, idCol, embCol)
+    val qp = q.join(broadcast(rankProbes(q, cents)(cut)),
+      col("p_qid") === col("q_id"))
+    // the slice column, if any, is dropped by the projection
     def score(cand: DataFrame): DataFrame = qp
       .join(cand, col("cent_id") === col("p_cent") && col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("cand_id"),
         (vec_dot(col("q_emb"), col("embedding")) / (col("q_nrm") * col("nrm")))
           .as("cosine"))
-    val spark = lists.sparkSession
-    val scored =
-      if (isPresplit(lists)) {
-        // PRE-SPLIT persisted layout ([[persistedIvfIndex]], detected by
-        // the graft.presplit metadata flag on the slice column — see
-        // [[presplitMeta]]): hot cells already spread across bucket files
-        // by their slice column, so the probe-join scan parallelizes over
-        // them with zero runtime exchange — serving pays nothing, ever.
-        // The slice column is dropped by score()'s projection.
-        score(lists)
-      } else {
-        // ad-hoc (unpersisted) index: runtime split. The occupancy read
-        // is the persisted stats when provided (≤cells rows), else a
-        // corpus-column aggregate — the fallback an in-memory index
-        // can't avoid.
-        val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt.max(1)
-        val occ = stats.getOrElse(
-            lists.groupBy("cent_id").agg(count(lit(1)).as("cnt")))
-          .select(col("cent_id"), col("cnt")).collect()
-        val bound = math.max(hotCellBound, occ.map(_.getLong(1)).sum / parts)
-        val hotIds = occ.filter(_.getLong(1) > bound).map(_.getLong(0)).toSeq
-        if (hotIds.isEmpty) score(lists)
-        else {
-          val cold = score(lists.filter(!col("cent_id").isin(hotIds: _*)))
-          val hot = score(lists.filter(col("cent_id").isin(hotIds: _*))
-            .repartition(parts, pmod(hash(col("vec_id")), lit(parts))))
-          cold.unionByName(hot)
-        }
-      }
+    val scored = splitHotCells(lists, stats, "vec_id", hotCellBound)(score)
     graft.api.GraftApi.topKPerKey(scored, "q_id", "cosine", "cand_id", k)
       .select("q_id", "cand_id", "cosine")
   }
 
   /** [[ivfSearch]] with nprobe auto-tuned from the index's own cell
-    * occupancy (see [[annIvfAutoprobe]] for the bound's derivation):
-    * nprobe = clamp(ceil(k·oversample·Σcnt/Σcnt²), 1, cells). The
-    * occupancy aggregate is `cells` rows off assign1 and joins the probe
-    * ranking as a ONE-ROW broadcast cross join, so the tuned limit stays
-    * entirely plan-side — no `.head()` between index build and search,
-    * and at 100 TB the stats read the persisted inverted lists' footer-
-    * sized groupBy, not the vectors.
+    * occupancy ([[autoNprobeCut]]). The occupancy aggregate is `cells`
+    * rows off assign1 and joins the probe ranking as a ONE-ROW broadcast
+    * cross join, so the tuned limit stays entirely plan-side — no
+    * `.head()` between index build and search, and at 100 TB the stats
+    * read the persisted inverted lists' footer-sized groupBy, not the
+    * vectors.
     */
   def ivfSearchAuto(corpus: DataFrame, queries: DataFrame, idCol: String,
       embCol: String, cells: Int, iters: Int, k: Int,
@@ -1268,38 +1322,22 @@ object Similarity {
     // per consumer — a second full corpus pass at scale. Cached it is
     // 2 longs/vector, the in-plan analog of the persisted ivfIndex lists.
     val assign1 = graft.CacheRegistry.track(rawAssign)
-    val occ = assign1.groupBy(col("a_cent")).agg(count(lit(1)).as("cnt"))
-    val np = occ.agg(least(lit(cells.toLong), greatest(lit(1L),
-      ceil(lit((k.toLong * oversample).toDouble) * sum("cnt") /
-        sum(col("cnt") * col("cnt"))))).as("np"))
-    ivfProbeSearch(v, c1p, assign1, queries, idCol, embCol, k)(
-      _.crossJoin(broadcast(np)).filter(col("rn") <= col("np")))
+    ivfProbeSearch(queryVecs(queries, idCol, embCol), c1p.drop("part"),
+      assign1, v, k)(autoNprobeCut(cellOccupancy(assign1, "a_cent"),
+        lit(cells.toLong), k, oversample))
   }
 
-  /** Shared IVF probe-and-rerank tail: rank refined cells per query by
-    * cosine, keep the probes `cut` selects (a literal rn bound, or the
-    * occupancy-derived one-row np), score candidates from the probed
-    * inverted lists only, rank through the bounded-heap TopKPerKey.
+  /** The IVF probe over an inline index: the [[rankProbes]] probe set of
+    * the queries `q` (q_id, q_emb, q_nrm) against `cents`, candidates
+    * from the probed cells' assignments `assign` (a_vec, a_cent) joined
+    * back to their vectors `v` (vec_id, embedding, nrm), exact cosine
+    * ranked through the bounded-heap TopKPerKey. Self-pairs excluded.
     */
-  private def ivfProbeSearch(v: DataFrame, c1p: DataFrame, assign1: DataFrame,
-      queries: DataFrame, idCol: String, embCol: String, k: Int)(
-      cut: DataFrame => DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    def nrmOf(c: Column) = sqrt(vec_dot(c, c))
-    val c1b = broadcast(c1p.drop("part"))
-    val q = queries.select(col(idCol).cast("long").as("q_id"),
-        col(embCol).as("q_emb"))
-      .withColumn("q_nrm", nrmOf(col("q_emb")))
-      .filter(col("q_nrm") > 0)
-    val ranked = q.crossJoin(c1b)
-      .withColumn("rn", row_number().over(Window.partitionBy(col("q_id")).orderBy(
-        (vec_dot(col("q_emb"), col("c_emb")) / (col("q_nrm") * col("c_nrm"))).desc,
-        col("cent_id"))))
-    val probes = cut(ranked)
-      .select(col("q_id").as("p_qid"), col("cent_id").as("p_cent"))
+  private def ivfProbeSearch(q: DataFrame, cents: DataFrame, assign: DataFrame,
+      v: DataFrame, k: Int)(cut: DataFrame => DataFrame): DataFrame = {
     val scored = q
-      .join(broadcast(probes), col("p_qid") === col("q_id"))
-      .join(assign1, col("a_cent") === col("p_cent"))
+      .join(broadcast(rankProbes(q, cents)(cut)), col("p_qid") === col("q_id"))
+      .join(assign, col("a_cent") === col("p_cent"))
       .join(v, col("vec_id") === col("a_vec") && col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("cand_id"),
         (vec_dot(col("q_emb"), col("embedding")) / (col("q_nrm") * col("nrm")))
@@ -1396,18 +1434,6 @@ object Similarity {
     c
   }
 
-  /** Product quantization: split each vector into 4 subvectors of 16 dims,
-    * train a per-subspace codebook with [[lloyd]] (init = the 16 lowest
-    * vec_ids' subvectors — a bounded codebook, never a fraction of N —
-    * one fixed-point refinement iteration, same recipe as
-    * [[annIvfKmeansTopK]]), then assign every subvector its nearest
-    * codeword. Output per vector: the 4 codes (joined as a string — a
-    * 64-dim float vector compressed to 4 small ints) plus the
-    * reconstruction error audit, computed as a part-ordered sequential
-    * fold so it is bit-identical across engines. The codebooks are tiny
-    * and broadcast; assignment is map-side — at 100 TB this is one scan
-    * over the fleet per Lloyd pass and one for the final encoding.
-    */
   /** Shared oracle CTE: subvector split, bounded init codebook, one
     * fixed-point Lloyd pass, final per-subvector code assignment (a1) —
     * the training+encoding prefix of both PQ operators.
@@ -1466,6 +1492,18 @@ object Similarity {
       |          (acc, p) -> acc + p), c1.code) AS rn
       |    FROM sub JOIN c1 ON c1.s = sub.s) WHERE rn = 1)""".stripMargin
 
+  /** Product quantization: split each vector into 4 subvectors of 16 dims,
+    * train a per-subspace codebook with [[lloyd]] (init = the 16 lowest
+    * vec_ids' subvectors — a bounded codebook, never a fraction of N —
+    * one fixed-point refinement iteration, same recipe as
+    * [[annIvfKmeansTopK]]), then assign every subvector its nearest
+    * codeword. Output per vector: the 4 codes (joined as a string — a
+    * 64-dim float vector compressed to 4 small ints) plus the
+    * reconstruction error audit, computed as a part-ordered sequential
+    * fold so it is bit-identical across engines. The codebooks are tiny
+    * and broadcast; assignment is map-side — at 100 TB this is one scan
+    * over the fleet per Lloyd pass and one for the final encoding.
+    */
   val pqCodes: Op = Op(
     "ann_pq_codes",
     s"""WITH $pqCteSql
@@ -1551,26 +1589,11 @@ object Similarity {
       .agg(expr(
         "transform(array_sort(collect_list(struct(part, a_cent))), s -> s.a_cent)")
         .as("codes"))
-    // 64 exact subvector→codeword distances per query, keyed part*16+code
-    // (codes are init pids < 16, so the key is injective); an exact-key
-    // map keeps the pick correct even when a part has <16 live codewords
-    val lut = pts.filter(col("pid") < 8)
-      .join(broadcast(c1), "part")
-      .select(col("pid").as("q_id"), col("part"), col("cent_id"),
-        graft.functions.vec.vec_distsq(col("emb"), col("c_emb")).as("dsq"))
-      .groupBy(col("q_id"))
-      .agg(expr(
-        "map_from_entries(collect_list(struct(int(part * 16 + cent_id), dsq)))")
-        .as("lut"))
-    // the s=0..3 fold unrolled into plain adds so the scan stays inside
-    // WholeStageCodegen (an aggregate() HOF here is interpreted — the
-    // same hot-loop cost the vec_distsq kernel removed from encoding);
-    // left-to-right double adds keep it bit-identical to the fold
-    val adc = (0 to 3).map(s =>
-      expr(s"element_at(lut, int(${s * 16} + element_at(codes, ${s + 1})))"))
-      .reduce(_ + _)
+    // 64 exact subvector→codeword distances per query (codes are init
+    // pids < 16, so the part*16+code key is injective)
+    val lut = adcLut(pts.filter(col("pid") < 8), c1, 16, "q_id")
     val scored = codes.join(broadcast(lut), col("pid") =!= col("q_id"))
-      .select(col("q_id"), col("pid").as("cand_id"), adc.as("adc_dist"))
+      .select(col("q_id"), col("pid").as("cand_id"), adcSum(4, 16).as("adc_dist"))
       .withColumn("neg_dist", -col("adc_dist"))
     graft.api.GraftApi.topKPerKey(scored, "q_id", "neg_dist", "cand_id", k = 5)
       .select("q_id", "cand_id", "adc_dist")
@@ -1813,23 +1836,6 @@ object Similarity {
       codebookSize = 16, k = 5, stats = Some(stats1))
   }
 
-  /** IVFADC shortlist + exact re-rank — the refine step (FAISS
-    * RefineFlat shape) that completes the production ANN serving story:
-    * the quantized index proposes a `ivfPqShortlistMult`·k-candidate
-    * shortlist per query (60 at the r15 tuning — the [[ivfPqTopK]]
-    * machinery verbatim, served from the persisted index), then ONLY
-    * those candidates' true embeddings are fetched by id and scored
-    * with exact sequential-fold cosine, and the top 5 by TRUE
-    * similarity are kept. Recall lost to PQ approximation is recovered
-    * for the price of a |Q|·60-row broadcast join against the corpus —
-    * the corpus itself never shuffles and is read once (by id;
-    * bucketed/partition-pruned at 100 TB). Shortlist depth is the one
-    * tuning lever the r15 sweep found effective (see the serving-
-    * parameter scaladoc above: recall@5 0.55 → 0.825). Oracle = the
-    * composed IVFADC chain at the shortlist k wrapped as the shortlist
-    * CTE + the brute-force cosine re-rank — both stages engine-exact,
-    * so the hash gate holds.
-    */
   /** The composed refine oracle (shortlist at [[ivfPqShortlistMult]]·k,
     * exact re-rank to k) — factored so [[annRecallAudit]] can nest it
     * verbatim.
@@ -1850,6 +1856,23 @@ object Similarity {
       |    ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cosine DESC, cand_id) AS rn
       |  FROM ex) WHERE rn <= $k""".stripMargin
 
+  /** IVFADC shortlist + exact re-rank — the refine step (FAISS
+    * RefineFlat shape) that completes the production ANN serving story:
+    * the quantized index proposes a `ivfPqShortlistMult`·k-candidate
+    * shortlist per query (60 at the r15 tuning — the [[ivfPqTopK]]
+    * machinery verbatim, served from the persisted index), then ONLY
+    * those candidates' true embeddings are fetched by id and scored
+    * with exact sequential-fold cosine, and the top 5 by TRUE
+    * similarity are kept. Recall lost to PQ approximation is recovered
+    * for the price of a |Q|·60-row broadcast join against the corpus —
+    * the corpus itself never shuffles and is read once (by id;
+    * bucketed/partition-pruned at 100 TB). Shortlist depth is the one
+    * tuning lever the r15 sweep found effective (see the serving-
+    * parameter scaladoc above: recall@5 0.55 → 0.825). Oracle = the
+    * composed IVFADC chain at the shortlist k wrapped as the shortlist
+    * CTE + the brute-force cosine re-rank — both stages engine-exact,
+    * so the hash gate holds.
+    */
   val ivfPqRefineTopK: Op = Op(
     "ann_ivfpq_refine_topk",
     refineOracleSql(5),
@@ -1874,25 +1897,6 @@ object Similarity {
       k = 5)
   }
 
-  /** Recall audit — the measurement production serving tunes against
-    * (VERDICT r13 #4): recall@5 of each persisted approximate index —
-    * IVF autoprobe, IVFPQ (ADC), IVFPQ+refine — against the exact
-    * brute-force top-5 on the same query set. Every approximate side is
-    * the REGISTERED op's own fn (not a re-implementation), so the audit
-    * measures exactly what serves; the exact side is the bruteforce
-    * scan at k=5. Both sides are fully deterministic (cosine desc,
-    * cand_id tie-break), so the composed DuckDB oracle — each op's
-    * oracle nested verbatim as a derived table — reproduces the hit
-    * counts exactly. Output is per (index_kind, q_id): `hits` and `k`
-    * as exact integer rationals (recall = hits/k), zero-hit queries
-    * kept via the kinds × queries scaffold.
-    *
-    * 100 TB shape: the three approximate searches are the already-
-    * bounded serving plans (broadcast queries, cell-keyed probes); the
-    * exact side is the one corpus-wide scan — which is the POINT of the
-    * audit (run it on a sampled query set at scale, not per query in
-    * serving). The join/aggregate after them touches |Q|·k-row slivers.
-    */
   /** Exact brute-force cosine top-k (q_id, cand_id) for the vec_id < 8
     * query set — the ground-truth arm of [[annRecallAudit]].
     */
@@ -1918,6 +1922,25 @@ object Similarity {
       .select("q_id", "cand_id")
   }
 
+  /** Recall audit — the measurement production serving tunes against
+    * (VERDICT r13 #4): recall@5 of each persisted approximate index —
+    * IVF autoprobe, IVFPQ (ADC), IVFPQ+refine — against the exact
+    * brute-force top-5 on the same query set. Every approximate side is
+    * the REGISTERED op's own fn (not a re-implementation), so the audit
+    * measures exactly what serves; the exact side is the bruteforce
+    * scan at k=5. Both sides are fully deterministic (cosine desc,
+    * cand_id tie-break), so the composed DuckDB oracle — each op's
+    * oracle nested verbatim as a derived table — reproduces the hit
+    * counts exactly. Output is per (index_kind, q_id): `hits` and `k`
+    * as exact integer rationals (recall = hits/k), zero-hit queries
+    * kept via the kinds × queries scaffold.
+    *
+    * 100 TB shape: the three approximate searches are the already-
+    * bounded serving plans (broadcast queries, cell-keyed probes); the
+    * exact side is the one corpus-wide scan — which is the POINT of the
+    * audit (run it on a sampled query set at scale, not per query in
+    * serving). The join/aggregate after them touches |Q|·k-row slivers.
+    */
   val annRecallAudit: Op = {
     val exactSql =
       s"""SELECT q_id, cand_id FROM (
@@ -2069,7 +2092,7 @@ object Similarity {
       |     LEFT JOIN dropped d ON d.vec_id = a.vec_id""".stripMargin,
   ) { (spark, dir) =>
     val v = graft.CacheRegistry.track(
-      Tables.embeddings(spark, dir).withColumn("nrm", nrmCol))
+      Tables.embeddings(spark, dir).withColumn("nrm", nrmOf(col("embedding"))))
     val cents = v.filter(col("vec_id") < 64)
       .select(col("vec_id").as("cent_id"), col("embedding").as("c_emb"),
         col("nrm").as("c_nrm"))

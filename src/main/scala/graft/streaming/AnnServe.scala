@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import graft.operators.Similarity
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 
@@ -31,6 +32,65 @@ object AnnServe {
   case class AdcScore(q_id: Long, cand_id: Long, adc_dist: Double)
   case class CosScore(q_id: Long, cand_id: Long, cosine: Double)
 
+  /** The k best of one query's rows in ascending `key` order — the batch
+    * topKPerKey order — through a bounded max-heap that drops the
+    * current worst once it holds more than k. Runs inside
+    * flatMapGroupsWithState: a query's candidates all land in its own
+    * trigger, so no state survives the batch.
+    */
+  private def bestK[T](rows: Iterator[T], k: Int)(key: T => (Double, Long)): List[T] = {
+    val heap = scala.collection.mutable.PriorityQueue.empty[T](Ordering.by(key))
+    rows.foreach { r =>
+      heap += r
+      if (heap.size > k) heap.dequeue()
+    }
+    heap.toList.sortBy(key)
+  }
+
+  /** Streamed queries as (q_id, qd, q_nrm): the embedding cast to double
+    * and its norm. The cosine faces drop `q_nrm = 0` rows, the batch
+    * retrieval contract (Similarity.queryVecs): a cosine against a zero
+    * vector is a DIVIDE_BY_ZERO under ANSI and would fail the micro-batch.
+    */
+  private def streamQueries(queries: DataFrame, idCol: String,
+      embCol: String): DataFrame =
+    queries
+      .select(col(idCol).cast("long").as("q_id"),
+        expr(s"transform($embCol, x -> cast(x as double))").as("qd"))
+      .withColumn("q_nrm", expr("sqrt(vec_dot(qd, qd))"))
+
+  /** One broadcast row `cents`: every (cent_id, c_emb, c_nrm) centroid. */
+  private def packedCents(centroids: DataFrame): DataFrame =
+    broadcast(centroids.groupBy().agg(
+      collect_list(struct(col("cent_id"), col("c_emb"), col("c_nrm"))).as("cents")))
+
+  /** One broadcast row `cbs`: every (part, cent_id, c_emb) codeword —
+    * numSubs·codebookSize entries, broadcastable by construction.
+    */
+  private def packedCbs(codebooks: DataFrame): DataFrame =
+    broadcast(codebooks.groupBy().agg(
+      collect_list(struct(col("part"), col("cent_id"), col("c_emb"))).as("cbs")))
+
+  /** A query row's full ADC lookup table in one codegen'd projection over
+    * the packed `cbs`: keys part·codebookSize + cent_id, exact
+    * subvector→codeword distances — the batch Similarity.adcLut map, with
+    * no stream-side aggregation.
+    */
+  private def streamLut(codebookSize: Int, subDim: Int): Column =
+    expr(s"map_from_entries(transform(cbs, c -> struct(" +
+      s"int(c.part * $codebookSize + c.cent_id), " +
+      s"vec_distsq(slice(qd, c.part * $subDim + 1, $subDim), c.c_emb))))")
+
+  /** A query row's cells ranked by (−cosine, cent_id) — the batch probe
+    * order (Similarity.rankProbes) as one array_sort over the packed
+    * `cents` (window functions don't exist on streams; cells ≤ a few
+    * hundred makes the per-row sort trivial).
+    */
+  private val rankedCells =
+    "array_sort(transform(cents, c -> struct(" +
+      "-(vec_dot(qd, c.c_emb) / (q_nrm * c.c_nrm)) as cost," +
+      " c.cent_id as cent_id)))"
+
   /** ADC top-k for a STREAM of (id, embedding) queries against static
     * `codes` (from GraftApi.pqEncode) and `codebooks` (from
     * GraftApi.pqCodebooks). Returns a streaming Dataset of the same
@@ -40,24 +100,10 @@ object AnnServe {
       idCol: String, embCol: String, numSubs: Int, subDim: Int,
       codebookSize: Int = 16, k: Int = 5): Dataset[AdcScore] = {
     import queries.sparkSession.implicits._
-    // one static row: every (part, cent_id, centroid) — numSubs·codebookSize
-    // entries, broadcastable by construction
-    val packed = broadcast(codebooks.groupBy().agg(
-      collect_list(struct(col("part"), col("cent_id"), col("c_emb"))).as("cbs")))
-    // per-query LUT in one codegen'd projection (keys part·K + cent_id,
-    // exact subvector→centroid distances — identical to the batch LUT)
-    val lut = queries
-      .select(col(idCol).cast("long").as("q_id"),
-        expr(s"transform($embCol, x -> cast(x as double))").as("qd"))
-      .join(packed)
-      .select(col("q_id"), expr(
-        s"map_from_entries(transform(cbs, c -> struct(" +
-          s"int(c.part * $codebookSize + c.cent_id), " +
-          s"vec_distsq(slice(qd, c.part * $subDim + 1, $subDim), c.c_emb))))")
-        .as("lut"))
-    val adc = (0 until numSubs).map(s =>
-        expr(s"element_at(lut, int(${s * codebookSize} + element_at(codes, ${s + 1})))"))
-      .reduce(_ + _)
+    // L2 distances need no norm: zero vectors stay, as in batch
+    val lut = streamQueries(queries, idCol, embCol)
+      .join(packedCbs(codebooks))
+      .select(col("q_id"), streamLut(codebookSize, subDim).as("lut"))
     // stream-static join: the micro-batch of LUTs drives one codes scan.
     // The broadcast hint pins the STREAM side as the build side — a
     // micro-batch of queries is small by construction, while the codes
@@ -65,22 +111,13 @@ object AnnServe {
     // pick the codes side at exactly the scale where that is fatal.
     val scored = broadcast(lut).join(codes, col(idCol) =!= col("q_id"))
       .select(col("q_id"), col(idCol).cast("long").as("cand_id"),
-        adc.as("adc_dist"))
+        Similarity.adcSum(numSubs, codebookSize).as("adc_dist"))
     // bounded-heap rank, same (dist asc, cand_id asc) order as the batch
     // topKPerKey(neg_dist desc, cand_id asc)
     scored.as[AdcScore].groupByKey(_.q_id)
       .flatMapGroupsWithState[Long, AdcScore](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (_, rows, state) =>
-          val heap = scala.collection.mutable.PriorityQueue
-            .empty[AdcScore](Ordering.by(s => (s.adc_dist, s.cand_id)))
-          rows.foreach { r =>
-            heap += r
-            if (heap.size > k) heap.dequeue() // drop current worst
-          }
-          // deliberately no state.update: a query's candidates all land in
-          // its own trigger, so nothing must survive the batch
-          heap.toList.sortBy(s => (s.adc_dist, s.cand_id)).iterator
+        (_, rows, _) => bestK(rows, k)(s => (s.adc_dist, s.cand_id)).iterator
       }
   }
 
@@ -92,26 +129,19 @@ object AnnServe {
     * batch), the probe join here is KEYED on cent_id: each micro-batch
     * touches only its queries' nprobe cells.
     *
-    * The per-query top-nprobe cell pick runs as one array_sort over a
-    * packed centroid broadcast (window functions don't exist on streams;
-    * cells ≤ a few hundred makes the per-row sort trivial), ordered by
-    * (−cosine, cent_id) — exactly the batch probe order. Emits the same
-    * (q_id, cand_id, cosine) rows batch ivfSearch produces.
+    * The per-query top-nprobe cell pick is the [[rankedCells]] sort,
+    * exactly the batch probe order; zero-norm queries are dropped as in
+    * batch. Emits the same (q_id, cand_id, cosine) rows batch ivfSearch
+    * produces.
     */
   def ivfServeStream(queries: DataFrame, centroids: DataFrame, lists: DataFrame,
       idCol: String, embCol: String, nprobe: Int = 2, k: Int = 5): Dataset[CosScore] = {
     import queries.sparkSession.implicits._
-    val packed = broadcast(centroids.groupBy().agg(
-      collect_list(struct(col("cent_id"), col("c_emb"), col("c_nrm"))).as("cents")))
-    val probes = queries
-      .select(col(idCol).cast("long").as("q_id"),
-        expr(s"transform($embCol, x -> cast(x as double))").as("qd"))
-      .withColumn("q_nrm", expr("sqrt(vec_dot(qd, qd))"))
-      .join(packed)
-      .select(col("q_id"), col("qd"), col("q_nrm"), explode(expr(
-        s"slice(array_sort(transform(cents, c -> struct(" +
-          s"-(vec_dot(qd, c.c_emb) / (q_nrm * c.c_nrm)) as cost," +
-          s" c.cent_id as cent_id))), 1, $nprobe)")).as("p"))
+    val probes = streamQueries(queries, idCol, embCol)
+      .filter(col("q_nrm") > 0)
+      .join(packedCents(centroids))
+      .select(col("q_id"), col("qd"), col("q_nrm"),
+        explode(expr(s"slice($rankedCells, 1, $nprobe)")).as("p"))
       .select(col("q_id"), col("qd"), col("q_nrm"), col("p.cent_id").as("p_cent"))
     // probe set = micro-batch × nprobe — broadcast-sized by construction;
     // the hint keeps the corpus lists as the streamed probe target (over
@@ -124,16 +154,9 @@ object AnnServe {
     scored.as[CosScore].groupByKey(_.q_id)
       .flatMapGroupsWithState[Long, CosScore](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (_, rows, _) =>
-          // keep the k LARGEST cosines, ties to the smaller cand_id —
-          // the batch topKPerKey(cosine desc, cand_id asc) order
-          val heap = scala.collection.mutable.PriorityQueue
-            .empty[CosScore](Ordering.by(s => (-s.cosine, s.cand_id)))
-          rows.foreach { r =>
-            heap += r
-            if (heap.size > k) heap.dequeue()
-          }
-          heap.toList.sortBy(s => (-s.cosine, s.cand_id)).iterator
+        // the k LARGEST cosines, ties to the smaller cand_id — the batch
+        // topKPerKey(cosine desc, cand_id asc) order
+        (_, rows, _) => bestK(rows, k)(s => (-s.cosine, s.cand_id)).iterator
       }
   }
 
@@ -143,8 +166,9 @@ object AnnServe {
     * `codes` (id, codes, cent_id) bucketed by cell) — the serving face
     * of the canonical production ANN index, composing the two existing
     * faces: the cell routing of [[ivfServeStream]] (per-row array_sort
-    * over a packed centroid broadcast) and the ADC LUT of
-    * [[pqServeStream]] (one projection against the packed codebooks).
+    * over a packed centroid broadcast, zero-norm queries dropped) and
+    * the ADC LUT of [[pqServeStream]] (one projection against the packed
+    * codebooks).
     * The stream-static codes join is KEYED on cent_id, so each
     * micro-batch reads only its queries' probed cells — scan mass ≈
     * probed cells, never the corpus. Emits the same (q_id, cand_id,
@@ -155,46 +179,23 @@ object AnnServe {
       nprobe: Int = 4, numSubs: Int = 4, subDim: Int = 16,
       codebookSize: Int = 16, k: Int = 5): Dataset[AdcScore] = {
     import queries.sparkSession.implicits._
-    val packedCents = broadcast(centroids.groupBy().agg(
-      collect_list(struct(col("cent_id"), col("c_emb"), col("c_nrm"))).as("cents")))
-    val packedCbs = broadcast(codebooks.groupBy().agg(
-      collect_list(struct(col("part"), col("cent_id"), col("c_emb"))).as("cbs")))
     // per query, in one projection pass: the full ADC LUT (computed once,
     // BEFORE the probe explode duplicates the row nprobe×) and the
     // top-nprobe cells in the batch (−cosine, cent_id) order
-    val lutProbes = queries
-      .select(col(idCol).cast("long").as("q_id"),
-        expr(s"transform($embCol, x -> cast(x as double))").as("qd"))
-      .withColumn("q_nrm", expr("sqrt(vec_dot(qd, qd))"))
-      .join(packedCents).join(packedCbs)
-      .select(col("q_id"),
-        expr(s"map_from_entries(transform(cbs, c -> struct(" +
-          s"int(c.part * $codebookSize + c.cent_id), " +
-          s"vec_distsq(slice(qd, c.part * $subDim + 1, $subDim), c.c_emb))))")
-          .as("lut"),
-        explode(expr(
-          s"slice(array_sort(transform(cents, c -> struct(" +
-            s"-(vec_dot(qd, c.c_emb) / (q_nrm * c.c_nrm)) as cost," +
-            s" c.cent_id as cent_id))), 1, $nprobe)")).as("p"))
+    val lutProbes = streamQueries(queries, idCol, embCol)
+      .filter(col("q_nrm") > 0)
+      .join(packedCents(centroids)).join(packedCbs(codebooks))
+      .select(col("q_id"), streamLut(codebookSize, subDim).as("lut"),
+        explode(expr(s"slice($rankedCells, 1, $nprobe)")).as("p"))
       .select(col("q_id"), col("lut"), col("p.cent_id").as("p_cent"))
-    val adc = (0 until numSubs).map(s =>
-        expr(s"element_at(lut, int(${s * codebookSize} + element_at(codes, ${s + 1})))"))
-      .reduce(_ + _)
     val scored = broadcast(lutProbes)
       .join(codes, col("cent_id") === col("p_cent") && col(idCol) =!= col("q_id"))
       .select(col("q_id"), col(idCol).cast("long").as("cand_id"),
-        adc.as("adc_dist"))
+        Similarity.adcSum(numSubs, codebookSize).as("adc_dist"))
     scored.as[AdcScore].groupByKey(_.q_id)
       .flatMapGroupsWithState[Long, AdcScore](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (_, rows, _) =>
-          val heap = scala.collection.mutable.PriorityQueue
-            .empty[AdcScore](Ordering.by(s => (s.adc_dist, s.cand_id)))
-          rows.foreach { r =>
-            heap += r
-            if (heap.size > k) heap.dequeue()
-          }
-          heap.toList.sortBy(s => (s.adc_dist, s.cand_id)).iterator
+        (_, rows, _) => bestK(rows, k)(s => (s.adc_dist, s.cand_id)).iterator
       }
   }
 
@@ -210,7 +211,8 @@ object AnnServe {
     * seed-similarity classifier served online): per arriving query, the
     * k exact-cosine nearest corpus vectors vote and the majority label
     * wins (ties: most votes, then smallest label — the batch order
-    * exactly). The micro-batch rides as the BROADCAST side of one corpus
+    * exactly); zero-norm queries and corpus rows are dropped as in
+    * batch. The micro-batch rides as the BROADCAST side of one corpus
     * scan (labels on the scored side, so no second fetch join), and both
     * the top-k heap and the vote tally run inside ONE
     * flatMapGroupsWithState group pass — a query's candidates all land
@@ -219,13 +221,16 @@ object AnnServe {
   def knnClassifyStream(queries: DataFrame, corpus: DataFrame, idCol: String,
       embCol: String, labelCol: String, k: Int = 10): Dataset[KnnVote] = {
     import queries.sparkSession.implicits._
+    // barrier: the `c_nrm > 0` gate reads the norm column instead of
+    // re-running the full-width dot product per corpus row
+    // (GraftApi.knnClassify's note)
     val v = corpus.select(col(idCol).cast("long").as("c_id"),
         col(embCol).as("c_emb"), col(labelCol).cast("long").as("label"))
-      .withColumn("c_nrm", expr("sqrt(vec_dot(c_emb, c_emb))"))
-    val q = queries.select(col(idCol).cast("long").as("q_id"),
-        expr(s"transform($embCol, x -> cast(x as double))").as("qd"))
-      .withColumn("q_nrm", expr("sqrt(vec_dot(qd, qd))"))
-    val scored = broadcast(q)
+      .withColumn("c_nrm", graft.functions.OptimizerBarrier.barrier(
+        expr("sqrt(vec_dot(c_emb, c_emb))")))
+      .filter(col("c_nrm") > 0)
+    val scored = broadcast(streamQueries(queries, idCol, embCol)
+        .filter(col("q_nrm") > 0))
       .join(v, col("q_id") =!= col("c_id"))
       .select(col("q_id"), col("c_id").as("cand_id"),
         (expr("vec_dot(qd, c_emb)") / (col("q_nrm") * col("c_nrm")))
@@ -235,17 +240,12 @@ object AnnServe {
       .flatMapGroupsWithState[Long, KnnVote](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         (qid, rows, _) =>
-          // bounded heap in the batch (cosine desc, cand_id asc) order,
-          // then the vote tally over exactly the kept k
-          val heap = scala.collection.mutable.PriorityQueue
-            .empty[LabeledScore](Ordering.by(s => (-s.cosine, s.cand_id)))
-          rows.foreach { r =>
-            heap += r
-            if (heap.size > k) heap.dequeue()
-          }
-          if (heap.isEmpty) Iterator.empty
+          // the k best in the batch (cosine desc, cand_id asc) order,
+          // then the vote tally over exactly those
+          val best = bestK(rows, k)(s => (-s.cosine, s.cand_id))
+          if (best.isEmpty) Iterator.empty
           else {
-            val (label, n) = heap.toList.groupBy(_.label)
+            val (label, n) = best.groupBy(_.label)
               .view.mapValues(_.size).toSeq
               .minBy { case (l, c) => (-c, l) }
             Iterator(KnnVote(qid, label, n.toLong))
@@ -277,15 +277,10 @@ object AnnServe {
       collect_list(struct(col("cent_id"),
         expr("cast(c_emb as array<double>)").as("c_emb"),
         col("c_nrm"))).as("cents")))
-    val assigned = queries
-      .select(col(idCol).cast("long").as("q_id"),
-        expr(s"transform($embCol, x -> cast(x as double))").as("qd"))
-      .withColumn("q_nrm", expr("sqrt(vec_dot(qd, qd))"))
+    val assigned = streamQueries(queries, idCol, embCol)
       .join(packed)
-      .select(col("q_id"), col("qd"), col("q_nrm"), expr(
-        "element_at(array_sort(transform(cents, c -> struct(" +
-          "-(vec_dot(qd, c.c_emb) / (q_nrm * c.c_nrm)) as cost," +
-          " c.cent_id as cent_id))), 1).cent_id").as("a_cent"))
+      .select(col("q_id"), col("qd"), col("q_nrm"),
+        expr(s"element_at($rankedCells, 1).cent_id").as("a_cent"))
       .join(broadcast(stats.select(col("cent_id").as("s_cent"), col("n"))),
         col("a_cent") === col("s_cent"), "left_outer")
       .withColumn("cell_capped",

@@ -520,64 +520,79 @@ class EdgeCaseSpec extends SparkSpec {
   }
 
   test("ivf hot-cell split at the boundary: result-identical, hot branch repartitioned") {
-    // 2 cells over the tiny corpus make every inverted list exceed the
+    // 2 cells over the tiny corpus make every cell exceed the
     // tot/partitions floor once hotCellBound is forced to 1 — the split
     // path engages for ALL cells, and the result must still be exactly
     // the unsplit search's (union over content-hash slices is the cell).
+    // One row per cell-keyed layout the split serves: the IVF inverted
+    // lists and the IVF-PQ codes.
+    import org.apache.spark.sql.DataFrame
     val emb = Tables.embeddings(spark, sfTiny)
     val queries = emb.filter(col("vec_id") < 8)
-    val (cents, lists) = graft.operators.Similarity.ivfIndex(
+    val (cents, lists) = Similarity.ivfIndex(
       emb, "vec_id", "embedding", cells = 2, iters = 1)
-    def toSet(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("cand_id"),
-        r.getAs[Double]("cosine"))).toSet
-    val unsplit = graft.operators.Similarity.ivfSearchAutoFromIndex(
-      cents, lists, queries, "vec_id", "embedding", k = 5,
-      hotCellBound = Long.MaxValue)
-    assert(!unsplit.queryExecution.optimizedPlan.toString.contains("pmod"),
-      "unsplit plan must not carry the content-hash repartition")
-    val want = toSet(unsplit)
-    CacheRegistry.drain()
-    val split = graft.operators.Similarity.ivfSearchAutoFromIndex(
-      cents, lists, queries, "vec_id", "embedding", k = 5, hotCellBound = 1L)
-    assert(split.queryExecution.optimizedPlan.toString.contains("pmod"),
-      "forced split must repartition the hot branch by content hash")
-    assert(toSet(split) == want)
-    CacheRegistry.drain()
-    // persisted-split layout: slices assigned at BUILD time
-    // (preSplitByOccupancy, forced hot via bound 1 → every cell sliced
-    // by content hash), serving detects the slice column and must use
-    // ZERO runtime repartition — and still return exactly the unsplit
-    // result. Stats ride as the persisted ≤cells-row table, so no
-    // corpus-sized occupancy scan appears in the plan either.
-    val stats = lists.groupBy("cent_id").agg(count(lit(1)).as("cnt"))
-    val pre = graft.operators.Similarity.preSplitByOccupancy(
-      lists, stats, "vec_id", hotCellBound = 1L)
-    assert(pre.columns.contains("slice"))
-    assert(pre.filter(col("slice") > 0).count() > 0,
-      "forced bound must slice at least one hot cell's rows")
-    val served = graft.operators.Similarity.ivfSearchAutoFromIndex(
-      cents, pre, queries, "vec_id", "embedding", k = 5,
-      hotCellBound = 1L, stats = Some(stats))
-    assert(!served.queryExecution.optimizedPlan.toString.contains("pmod"),
-      "pre-split serving must not add a runtime content-hash repartition")
-    assert(toSet(served) == want)
-    CacheRegistry.drain()
-    // an UNFLAGGED caller-supplied column that merely happens to be named
-    // `slice` must NOT read as the pre-split layout (ADVICE r8: magic
-    // column-name detection silently disabled hot-cell splitting) — the
-    // runtime split still engages and the result is unchanged
-    assert(!graft.operators.Similarity.isPresplit(
-      lists.withColumn("slice", lit(0))))
-    assert(graft.operators.Similarity.isPresplit(pre))
-    val decoy = graft.operators.Similarity.ivfSearchAutoFromIndex(
-      cents, lists.withColumn("slice", lit(0)), queries, "vec_id",
-      "embedding", k = 5, hotCellBound = 1L, stats = Some(stats))
-    assert(decoy.queryExecution.optimizedPlan.toString.contains("pmod"),
-      "unflagged slice column must still trigger the runtime hot-cell split")
-    assert(toSet(decoy) == want)
-    CacheRegistry.drain()
-    assert(want.nonEmpty)
+    val (_, c1p, assign1) = Similarity.ivfBuild(
+      emb, "vec_id", "embedding", cells = 2, iters = 1)
+    val pqCents = c1p.drop("part")
+    val cbs = graft.api.GraftApi.pqCodebooks(
+      emb, "vec_id", "embedding", numSubs = 4, subDim = 16)
+    val codes = Similarity.ivfPqCodes(emb, "vec_id", "embedding", cbs,
+      numSubs = 4, subDim = 16, assign1)
+    // (layout, cell-keyed frame, search(keyed, hotCellBound, stats))
+    val rows: Seq[(String, DataFrame, (DataFrame, Long, Option[DataFrame]) => DataFrame)] =
+      Seq(
+        ("ivf lists", lists, (keyed, bound, stats) =>
+          Similarity.ivfSearchAutoFromIndex(cents, keyed, queries, "vec_id",
+            "embedding", k = 5, hotCellBound = bound, stats = stats)),
+        ("ivf-pq codes", codes, (keyed, bound, stats) =>
+          graft.api.GraftApi.ivfPqSearchADCFromIndex(pqCents, cbs, keyed,
+            queries, "vec_id", "embedding", nprobe = 2, k = 5,
+            hotCellBound = bound, stats = stats)))
+    def toSet(df: DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    def hasPmod(df: DataFrame) = df.queryExecution.optimizedPlan.toString.contains("pmod")
+    for ((layout, keyed, search) <- rows) {
+      val unsplit = search(keyed, Long.MaxValue, None)
+      assert(!hasPmod(unsplit),
+        s"$layout: unsplit plan must not carry the content-hash repartition")
+      val want = toSet(unsplit)
+      CacheRegistry.drain()
+      val split = search(keyed, 1L, None)
+      assert(hasPmod(split),
+        s"$layout: forced split must repartition the hot branch by content hash")
+      assert(toSet(split) == want, layout)
+      CacheRegistry.drain()
+      // persisted-split layout: slices assigned at BUILD time
+      // (preSplitByOccupancy, forced hot via bound 1 → every cell sliced
+      // by content hash), serving detects the flagged slice column and
+      // must use ZERO runtime repartition — and still return exactly the
+      // unsplit result. Stats ride as the persisted ≤cells-row table, so
+      // no corpus-sized occupancy scan appears in the plan either.
+      val stats = keyed.groupBy("cent_id").agg(count(lit(1)).as("cnt"))
+      val pre = Similarity.preSplitByOccupancy(
+        keyed, stats, "vec_id", hotCellBound = 1L)
+      assert(pre.columns.contains("slice"))
+      assert(pre.filter(col("slice") > 0).count() > 0,
+        s"$layout: forced bound must slice at least one hot cell's rows")
+      assert(Similarity.isPresplit(pre))
+      val served = search(pre, 1L, Some(stats))
+      assert(!hasPmod(served),
+        s"$layout: pre-split serving must not add a runtime content-hash repartition")
+      assert(toSet(served) == want, layout)
+      CacheRegistry.drain()
+      // an UNFLAGGED caller-supplied column that merely happens to be
+      // named `slice` must NOT read as the pre-split layout (ADVICE r8:
+      // magic column-name detection silently disabled hot-cell
+      // splitting) — the runtime split still engages, result unchanged
+      val decoy = keyed.withColumn("slice", lit(0))
+      assert(!Similarity.isPresplit(decoy))
+      val decoyServed = search(decoy, 1L, Some(stats))
+      assert(hasPmod(decoyServed),
+        s"$layout: unflagged slice column must still trigger the runtime hot-cell split")
+      assert(toSet(decoyServed) == want, layout)
+      CacheRegistry.drain()
+      assert(want.nonEmpty, layout)
+    }
   }
 
   test("zscore/ewma blocks twins match the simple forms on NULL values") {

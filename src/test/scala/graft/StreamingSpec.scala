@@ -1300,6 +1300,88 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("streaming IVF, IVFADC and KNN faces drop zero-norm vectors like batch") {
+    // a zero vector has no direction: cosine against it is 0/0, a
+    // DIVIDE_BY_ZERO under ANSI. Batch drops zero-norm queries (and the
+    // KNN face zero-norm corpus rows); each streaming face must do the
+    // same instead of failing the micro-batch, so stream ≡ batch holds
+    // with one zero vector among the queries (and in the KNN corpus).
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    import graft.streaming.AnnServe
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.{col, max}
+    val emb = Tables.embeddings(spark, sfTiny)
+    val zeroId = emb.agg(max("vec_id")).head().getLong(0) + 1
+    val zero = Seq((zeroId, Seq.fill(64)(0f), 0)).toDF("vec_id", "embedding", "label")
+    val queries = emb.filter(col("vec_id") < 8).unionByName(zero)
+    val qRows = queries.select(col("vec_id"), col("embedding"))
+      .as[(Long, Seq[Float])].collect().sortBy(_._1)
+    assert(qRows.last._1 == zeroId)
+    def triples(df: DataFrame, cols: String*) = df
+      .select(col(cols(0)).cast("long"), col(cols(1)).cast("long"),
+        col(cols(2)).cast("double"))
+      .as[(Long, Long, Double)].collect().toSet
+    // streams `qRows` in two micro-batches (the zero query in the second)
+    def served(name: String, cols: String*)(
+        face: DataFrame => org.apache.spark.sql.Dataset[_]) = {
+      val input = MemoryStream[(Long, Seq[Float])]
+      val q = face(input.toDF().toDF("vec_id", "embedding")).writeStream
+        .format("memory").queryName(name).outputMode(OutputMode.Append()).start()
+      try {
+        input.addData(qRows.take(4).toIndexedSeq)
+        q.processAllAvailable()
+        input.addData(qRows.drop(4).toIndexedSeq)
+        q.processAllAvailable()
+        triples(spark.table(name), cols: _*)
+      } finally q.stop()
+    }
+    def check(streamed: Set[(Long, Long, Double)], batch: Set[(Long, Long, Double)]) = {
+      assert(streamed == batch,
+        s"stream-only=${(streamed -- batch).take(3)} " +
+          s"batch-only=${(batch -- streamed).take(3)}")
+      assert(streamed.nonEmpty && !streamed.exists(_._1 == zeroId))
+    }
+
+    val (cents, lists) = graft.operators.Similarity.ivfIndex(
+      emb, "vec_id", "embedding", cells = 256, iters = 1)
+    val (centsC, listsC) = (CacheRegistry.track(cents), CacheRegistry.track(lists))
+    check(
+      served("ivf_serve_zero", "q_id", "cand_id", "cosine")(AnnServe.ivfServeStream(
+        _, centsC, listsC, "vec_id", "embedding", nprobe = 2, k = 5)),
+      triples(graft.operators.Similarity.ivfSearch(emb, queries, "vec_id",
+        "embedding", cells = 256, nprobe = 2, iters = 1, k = 5),
+        "q_id", "cand_id", "cosine"))
+    CacheRegistry.drain()
+
+    val (_, c1p, assign1) = graft.operators.Similarity.ivfBuild(
+      emb, "vec_id", "embedding", cells = 16, iters = 1)
+    val pqCents = CacheRegistry.track(c1p.drop("part"))
+    val cbs = CacheRegistry.track(graft.api.GraftApi.pqCodebooks(
+      emb, "vec_id", "embedding", numSubs = 4, subDim = 16))
+    val codes = CacheRegistry.track(graft.api.GraftApi.pqEncode(
+        emb, "vec_id", "embedding", cbs, numSubs = 4, subDim = 16)
+      .join(assign1, col("vec_id") === col("a_vec"))
+      .select(col("vec_id"), col("codes"), col("a_cent").as("cent_id")))
+    check(
+      served("ivfpq_serve_zero", "q_id", "cand_id", "adc_dist")(
+        AnnServe.ivfPqServeStream(_, pqCents, cbs, codes, "vec_id", "embedding",
+          nprobe = 4, numSubs = 4, subDim = 16, codebookSize = 16, k = 5)),
+      triples(graft.api.GraftApi.ivfPqSearchADCFromIndex(pqCents, cbs, codes,
+        queries, "vec_id", "embedding", nprobe = 4, numSubs = 4, subDim = 16,
+        codebookSize = 16, k = 5), "q_id", "cand_id", "adc_dist"))
+    CacheRegistry.drain()
+
+    // the zero vector is a corpus row of the KNN face too
+    val corpus = emb.unionByName(zero)
+    check(
+      served("knn_serve_zero", "q_id", "pred_label", "votes")(
+        AnnServe.knnClassifyStream(_, corpus, "vec_id", "embedding", "label", k = 10)),
+      triples(graft.api.GraftApi.knnClassify(corpus, queries, "vec_id",
+        "embedding", "label", k = 10), "q_id", "pred_label", "votes"))
+    CacheRegistry.drain()
+  }
+
   test("streaming semDedup decisions equal the registered batch pass") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
