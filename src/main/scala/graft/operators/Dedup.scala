@@ -24,33 +24,30 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** Word-5-shingle set per document as a distinct array (UNSORTED
-    * since r13) — per-row expression, shared by the Jaccard/MinHash
-    * operators. Shingle length is a selectivity knob: on this corpus
-    * (small vocabulary) 3-word shingles are shared by nearly every
+  /** Word-5-shingle set per document as a distinct array of the shingle
+    * STRINGS (unsorted). Shingle length is a selectivity knob: on this
+    * corpus (small vocabulary) 3-word shingles are shared by nearly every
     * document pair (candidate pair mass ~1.3M at sf0.1) while 5-word
-    * shingles are ~100× more selective (13.5k) with near-dup pairs
-    * still sharing most runs.
+    * shingles are ~100× more selective (13.5k) with near-dup pairs still
+    * sharing most runs.
+    *
+    * Only callers that need the gram strings themselves use this
+    * interpreted `transform`/`concat_ws` builder: [[sketchTable]] (its
+    * persisted `shingles` column is the string contract the incremental
+    * serves read, and its sketch amortizes into that build) and
+    * EventStreams.decontamStream (a static string gram set from the
+    * caller). Consumers that only count, intersect or key on grams read
+    * their MD5 digests from the byte-walk kernels instead
+    * ([[graft.functions.ShingleMd5Grams]] and
+    * [[graft.functions.ShingleMd5BottomK]]): the verify sliver
+    * ([[shingleDigests]]), the candidate posting streams
+    * ([[fusedGramStream]]) and the minhash sketch ([[fusedSketchFrame]]).
+    * Digest sets give the same intersections and sizes as string sets
+    * unless MD5 collides — the argument candidate generation and
+    * decontam_ngram's scored overlap already rest on. The arrays are
+    * UNSORTED: every consumer is order-independent (array_intersect/size,
+    * explode→distinct, bottom-k selection).
     */
-  // The gram BUILDER is consumer-dependent (r12, measured both ways
-  // same-JVM, hash-identical outputs): the concat_ws(element_at × 5)
-  // form below wins ~3× for ARRAY consumers (decontam's
-  // array_intersect, sketchTable's md5 transform, the verify slivers:
-  // decontam 107 vs 360 cpu-s at 100x), while the substring family's
-  // array_join(slice(...)) form wins ~2× for EXPLODE consumers
-  // (posting streams: 559 vs ~280 cpu-s at 100x) — so [[withShingles]]
-  // keeps concat_ws and [[ngramCandidateGrams]] builds its exploded
-  // candidate stream with slice/join. Strings are identical either
-  // way; only evaluation cost differs with the consuming context.
-  //
-  // UNSORTED (r13): every consumer is order-independent —
-  // array_intersect/size (the Jaccard verifies, decontam overlap),
-  // explode→distinct (decontam's bench gram set), and the minhash
-  // sketch (bottom-k of md5s — selection, no order dependence). The
-  // array_sort the arrays used to carry was a full ~per-text-word
-  // string sort per document for nothing any consumer read; the r13
-  // minhash A/B (minhash_ab_r13.jsonl) adjudicated its removal
-  // hash-identically.
   private[graft] def withShingles(df: DataFrame): DataFrame =
     // barrier on words: the ≥5-word gate otherwise pushdown-clones the
     // split into its own condition and the scan tokenizes every text
@@ -70,11 +67,30 @@ object Dedup {
           " i -> concat_ws(' ', try_element_at(words,i), try_element_at(words,i+1)," +
           " try_element_at(words,i+2), try_element_at(words,i+3), try_element_at(words,i+4)))")))
 
+  /** The verify sliver's (doc_id, shingles) frame: each document's
+    * DISTINCT word-5-shingle MD5 digests from one byte walk
+    * ([[graft.functions.ShingleMd5Grams]], unsampled), gated on
+    * `size(shingles) > 0` — ≡ [[withShingles]]' `size(words) >= 5` gate,
+    * since a ≥5-word doc always has a shingle. [[jaccardVerify]] over
+    * these digests gives the string sets' `n_common` and `jaccard`
+    * (DedupSpec pins it). The kernel is an optimizer barrier, so the
+    * gate reads the projected column instead of re-running the walk.
+    */
+  private[graft] def shingleDigests(df: DataFrame): DataFrame =
+    df.select(col("doc_id"),
+        graft.functions.ShingleSketch.shingle_md5_grams(col("text"), 5, 1)
+          .as("shingles"))
+      .filter(size(col("shingles")) > 0)
+
   /** The per-doc DISTINCT gram posting stream (doc_id, g) for candidate
-    * generation — slice/join built (see the builder note above) and
-    * UNSORTED: candidates only need the distinct gram strings, and the
-    * array_sort the shared shingle arrays carry measured as half the
-    * old explode path's cost for nothing the candidate join uses.
+    * generation, as gram STRINGS — the composed reference
+    * ShingleSketchSpec pins [[fusedGramStream]] against. Built with
+    * array_join(slice(...)), which for explode consumers measured ~2×
+    * cheaper than [[withShingles]]' concat_ws form (r12: 559 vs ~280
+    * cpu-s at 100×), and UNSORTED: candidates only need the distinct
+    * gram strings, and the array_sort the shared shingle arrays carry
+    * measured as half the old explode path's cost for nothing the
+    * candidate join uses.
     */
   private[graft] def ngramCandidateGrams(df: DataFrame): DataFrame =
     // words barrier: same split-clone note as [[withShingles]] (r17)
@@ -336,7 +352,7 @@ object Dedup {
     * ([[fusedGramStream]]), sketch hashes for [[minhashPairs]]
     * ([[sketchPostings]]) — whose key is its second column. Candidates
     * are the [[cappedPairs]] of that stream, verified by
-    * [[sliverVerify]] over [[withShingles]] of the candidate docs.
+    * [[sliverVerify]] over the [[shingleDigests]] of the candidate docs.
     * Emits (doc_a, doc_b, n_common, jaccard).
     *
     * No corpus-wide shingle cache: with the shingle arrays cached, the
@@ -351,8 +367,7 @@ object Dedup {
     val stream = postings(docs)
     val cand = cappedPairs(stream, stream.columns(1)).distinct()
     sliverVerify(cand, jaccardMin)(ids =>
-      withShingles(docs.join(ids, Seq("doc_id"), "left_semi"))
-        .select("doc_id", "shingles"))
+      shingleDigests(docs.join(ids, Seq("doc_id"), "left_semi")))
   }
 
   /** MinHash sketch → LSH bucket → candidate CTE chain in DuckDB SQL
@@ -606,22 +621,28 @@ object Dedup {
     * plus its two exact 32-bit halves — the shared input of the banded
     * pair generators (the persisted signature table at warehouse scale).
     */
-  def simhashSignatures(docs: DataFrame): DataFrame =
+  def simhashSignatures(docs: DataFrame): DataFrame = {
+    // null text normalizes to the empty document (null-gate r9): both
+    // engines then derive the same ''-signature instead of Spark NULL
+    // vs DuckDB's zero-fold — and null-text docs keep a signature row,
+    // the per-doc contract of the simhash family
+    val text = coalesce(col("text"), lit(""))
+    // features: the distinct word-3-gram digests, or for a doc of fewer
+    // than 3 words its distinct word digests — one byte walk each
+    // (graft.functions.ShingleMd5Grams; words split on ' ' with empty
+    // words kept, as `split` does). simhash_bits is order-independent,
+    // so the kernel's sorted digests vote like the composed form's. The
+    // kernel is an optimizer barrier: the fallback reads the projected
+    // 3-gram column instead of re-running the walk.
     docs
-      // null text normalizes to the empty document (null-gate r9): both
-      // engines then derive the same ''-signature instead of Spark NULL
-      // vs DuckDB's zero-fold — and null-text docs keep a signature row,
-      // the per-doc contract of the simhash family
-      .withColumn("words", split(coalesce(col("text"), lit("")), " "))
-      .withColumn("md5s", expr(
-        "transform(array_distinct(case when size(words) >= 3" +
-          " then transform(sequence(1, size(words)-2)," +
-          " i -> concat_ws(' ', element_at(words,i), element_at(words,i+1), element_at(words,i+2)))" +
-          " else words end), t -> md5(t))"))
-      .select(col("doc_id"),
-        graft.functions.simhash.simhash_bits(col("md5s")).as("simhash"))
+      .withColumn("md5s", graft.functions.ShingleSketch.shingle_md5_grams(text, 3, 1))
+      .select(col("doc_id"), graft.functions.simhash.simhash_bits(
+          when(size(col("md5s")) > 0, col("md5s"))
+            .otherwise(graft.functions.ShingleSketch.shingle_md5_grams(text, 1, 1)))
+        .as("simhash"))
       .withColumn("hi", expr("cast(conv(substring(simhash, 1, 32), 2, 10) as long)"))
       .withColumn("lo", expr("cast(conv(substring(simhash, 33, 32), 2, 10) as long)"))
+  }
 
   /** Block boundaries for an m-block split of the 64-bit signature:
     * bit positions (MSB-first, 0-based) `64·i/m` for i = 0..m.

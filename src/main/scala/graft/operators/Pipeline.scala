@@ -133,16 +133,13 @@ object Pipeline {
       // coalesce every gate comparison is NULL and falls through to the
       // 'ok' verdict — a quality gate passing null docs into the kept set
       .withColumn("text", coalesce(col("text"), lit("")))
-      .withColumn("w", expr("filter(split(text, ' '), x -> x != '')"))
-      .withColumn("bi", expr(
-        "case when size(w) >= 2 then transform(sequence(1, size(w)-1)," +
-          " i -> concat_ws(' ', element_at(w,i), element_at(w,i+1)))" +
-          " else array() end"))
+      // text_repetition's bigram rule: one kernel call, projected once
+      // so the fraction's three reads of it do not re-run it
+      .withColumn("bi",
+        graft.functions.TokenCounts.word_ngram_counts(col("text"), 2))
       .select(col("doc_id"), tokens.as("tokens"),
         punctRatio.as("punct_ratio"), stopRatio.as("stopword_ratio"),
-        when(size(col("bi")) > 0,
-          (size(col("bi")) - size(array_distinct(col("bi")))).cast("double") /
-            size(col("bi"))).otherwise(0.0).as("dup_bigram_frac"))
+        TextAnalysis.dupFrac(col("bi")).as("dup_bigram_frac"))
       .withColumn("verdict",
         when(col("tokens") < 5, "too_short")
           .when(col("tokens") > 5000, "too_long")

@@ -920,7 +920,7 @@ object Similarity {
   }
 
   /** Per-cell occupancy (cell, cnt) of a cell-keyed frame. */
-  private def cellOccupancy(keyed: DataFrame, cell: String = "cent_id"): DataFrame =
+  private[graft] def cellOccupancy(keyed: DataFrame, cell: String = "cent_id"): DataFrame =
     keyed.groupBy(cell).agg(count(lit(1)).as("cnt"))
 
   /** The auto-nprobe probe cut: nprobe = clamp(ceil(k·oversample·Σcnt /
@@ -931,11 +931,19 @@ object Similarity {
     */
   private def autoNprobeCut(occ: DataFrame, cells: Column, k: Int,
       oversample: Int): DataFrame => DataFrame = {
-    val np = occ.agg(least(cells, greatest(lit(1L),
-      ceil(lit((k.toLong * oversample).toDouble) * sum("cnt") /
-        sum(col("cnt") * col("cnt"))))).as("np"))
+    val np = occ.agg(autoNprobe(cells, k, oversample).as("np"))
     _.crossJoin(broadcast(np)).filter(col("rn") <= col("np"))
   }
+
+  /** The auto-nprobe bound itself, an aggregate over an occupancy frame
+    * (…, cnt): clamp(ceil(k·oversample·Σcnt / Σcnt²), 1, `cells`) —
+    * the one formula the plan-side cut and the streaming face
+    * (AnnServe.ivfServeStreamAuto) both read.
+    */
+  private[graft] def autoNprobe(cells: Column, k: Int, oversample: Int): Column =
+    least(cells, greatest(lit(1L),
+      ceil(lit((k.toLong * oversample).toDouble) * sum("cnt") /
+        sum(col("cnt") * col("cnt")))))
 
   /** The hot cells of an occupancy table (cent_id, cnt): cells above
     * max(hotCellBound, Σcnt / parts), with `parts` the session's shuffle

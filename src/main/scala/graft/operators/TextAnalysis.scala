@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Op, Tables}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** SURVEY §2.2 text-analysis operators over the documents table — the
@@ -309,9 +310,9 @@ object TextAnalysis {
   /** Repetition scoring (the Gopher-family "fraction of duplicate
     * n-grams" quality rule): templated/spammy documents repeat word
     * n-grams far above natural prose rates. Duplicate fraction =
-    * (total − distinct) / total over word 2-grams and 3-grams — pure
-    * per-row array HOFs, one codegen'd scan, no explode/shuffle.
-    * Short docs (< n words) get an empty gram list and fraction 0.
+    * (total − distinct) / total over word 2-grams and 3-grams — two
+    * per-row kernel calls in one codegen'd scan, no explode/shuffle.
+    * Short docs (< n words) have no grams and fraction 0.
     */
   val repetition: Op = Op(
     "text_repetition",
@@ -334,32 +335,30 @@ object TextAnalysis {
       |  FROM (SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS w
       |        FROM documents))""".stripMargin,
   ) { (spark, dir) =>
-    def dupFrac(grams: String) =
-      when(size(col(grams)) > 0,
-        (size(col(grams)) - size(array_distinct(col(grams)))).cast("double") /
-          size(col(grams)))
-        .otherwise(0.0)
+    // one byte-walk kernel per n (graft.functions.WordNgramCounts): the
+    // gram counts without building, hashing or de-duplicating a single
+    // gram string; null text counts as empty, the composed form's CASE
+    def counts(n: Int) =
+      graft.functions.TokenCounts.word_ngram_counts(col("text"), n)
     Tables.documents(spark, dir)
-      .withColumn("w", expr("filter(split(text, ' '), x -> x != '')"))
-      // guard n-gram windows explicitly: Spark's sequence(1, n) DESCENDS
-      // for n < 1 while DuckDB's generate_series is empty — the CASE keeps
-      // both engines on the same (empty) result for short docs
-      .withColumn("bi", expr(
-        "case when size(w) >= 2 then transform(sequence(1, size(w)-1)," +
-          " i -> concat_ws(' ', element_at(w,i), element_at(w,i+1)))" +
-          " else array() end"))
-      .withColumn("tri", expr(
-        "case when size(w) >= 3 then transform(sequence(1, size(w)-2)," +
-          " i -> concat_ws(' ', element_at(w,i), element_at(w,i+1), element_at(w,i+2)))" +
-          " else array() end"))
+      .select(col("doc_id"), counts(2).as("bi"), counts(3).as("tri"))
       .select(col("doc_id"),
-        size(col("bi")).cast("long").as("n_bigrams"),
-        size(array_distinct(col("bi"))).cast("long").as("n_distinct_bigrams"),
-        dupFrac("bi").as("dup_bigram_frac"),
-        size(col("tri")).cast("long").as("n_trigrams"),
-        size(array_distinct(col("tri"))).cast("long").as("n_distinct_trigrams"),
-        dupFrac("tri").as("dup_trigram_frac"))
+        col("bi.total").as("n_bigrams"),
+        col("bi.distinct").as("n_distinct_bigrams"),
+        dupFrac(col("bi")).as("dup_bigram_frac"),
+        col("tri.total").as("n_trigrams"),
+        col("tri.distinct").as("n_distinct_trigrams"),
+        dupFrac(col("tri")).as("dup_trigram_frac"))
   }
+
+  /** (total − distinct) / total of a [[graft.functions.WordNgramCounts]]
+    * struct, 0 when there are no grams — the Gopher duplicate-n-gram
+    * fraction, shared with pipeline_quality_filter's bigram rule.
+    */
+  private[operators] def dupFrac(counts: Column): Column =
+    when(counts("total") > 0,
+      (counts("total") - counts("distinct")).cast("double") / counts("total"))
+      .otherwise(0.0)
 
   /** PII redaction — the scrubbing pass every training-data pipeline runs
     * before a corpus ships: emails, IPv4 addresses, and phone-shaped

@@ -84,11 +84,14 @@ object AnnServe {
   /** A query row's cells ranked by (−cosine, cent_id) — the batch probe
     * order (Similarity.rankProbes) as one array_sort over the packed
     * `cents` (window functions don't exist on streams; cells ≤ a few
-    * hundred makes the per-row sort trivial).
+    * hundred makes the per-row sort trivial). A zero norm on either side
+    * costs NaN, which array_sort orders last — the batch argmin kernel's
+    * 0/0 order — instead of an ANSI DIVIDE_BY_ZERO failing the batch.
     */
   private val rankedCells =
     "array_sort(transform(cents, c -> struct(" +
-      "-(vec_dot(qd, c.c_emb) / (q_nrm * c.c_nrm)) as cost," +
+      "case when q_nrm * c.c_nrm = 0 then double('NaN')" +
+      " else -(vec_dot(qd, c.c_emb) / (q_nrm * c.c_nrm)) end as cost," +
       " c.cent_id as cent_id)))"
 
   /** ADC top-k for a STREAM of (id, embedding) queries against static
@@ -295,9 +298,14 @@ object AnnServe {
     val m = members.select(col("cent_id").as("m_cent"),
       col("vec_id").as("m_id"), col("embedding").as("m_emb"),
       col("nrm").as("m_nrm"))
+    // zero-norm guard as a CASE (per-row lazy), -infinity never ≥ tau:
+    // the batch pass's pair filter exactly
+    val cosine = when(col("q_nrm") * col("m_nrm") =!= 0,
+        expr("vec_dot(qd, m_emb)") / (col("q_nrm") * col("m_nrm")))
+      .otherwise(lit(Double.NegativeInfinity))
     val hits = broadcast(assigned.filter(col("cell_capped") === 0))
       .join(m, col("a_cent") === col("m_cent") && col("m_id") < col("q_id") &&
-        (expr("vec_dot(qd, m_emb)") / (col("q_nrm") * col("m_nrm"))) >= tau)
+        cosine >= tau)
       .select(col("q_id"), col("a_cent"), col("cell_capped"), col("m_id"))
     base.unionByName(hits).as[(Long, Long, Long, Option[Long])]
       .groupByKey(_._1)
@@ -318,28 +326,30 @@ object AnnServe {
     * own cell occupancy — the serving face of
     * graft.operators.Similarity.ivfSearchAuto, same bound: smallest
     * probe count expected to surface k·oversample candidates given the
-    * size-biased mean occupancy, clamped to [1, cells]. The stats read
-    * is one `cells`-row aggregate off the lists — index metadata, the
-    * same class as loading the centroid table — computed ONCE at stream
-    * definition, never per micro-batch. Re-derive on index refresh (a
-    * stream restart), which is when occupancy can change.
+    * size-biased mean occupancy, clamped to [1, cells]
+    * (Similarity.autoNprobe, the batch formula). The bound is ONE
+    * single-row aggregate over the lists' occupancy and the centroid
+    * count — index metadata, the same class as loading the centroid
+    * table — computed ONCE at stream definition, never per micro-batch.
+    * Re-derive on index refresh (a stream restart), which is when
+    * occupancy can change.
     */
   def ivfServeStreamAuto(queries: DataFrame, centroids: DataFrame,
       lists: DataFrame, idCol: String, embCol: String, k: Int = 5,
       oversample: Int = 8): Dataset[CosScore] = {
-    val occ = lists.groupBy("cent_id").count()
-      .agg(sum("count").as("s"), sum(col("count") * col("count")).as("s2"))
+    val bound = Similarity.cellOccupancy(lists)
+      .crossJoin(broadcast(centroids.agg(count(lit(1)).as("cells"))))
+      .agg(Similarity.autoNprobe(max(col("cells")), k, oversample).as("np"),
+        sum("cnt").as("n_vecs"))
       .head()
-    // an empty index yields NULL sums — fail fast with the contract
-    // instead of an opaque NPE (the bloomNewDocs empty-corpus treatment)
-    require(!occ.isNullAt(0),
+    // an empty index yields a NULL vector count — fail fast with the
+    // contract instead of serving off a meaningless bound (the
+    // bloomNewDocs empty-corpus treatment)
+    require(!bound.isNullAt(1),
       "ivfServeStreamAuto: lists index is empty — build the IVF index " +
         "before defining the serving stream (occupancy-derived nprobe " +
         "needs at least one indexed vector)")
-    val cells = centroids.count()
-    val np = math.min(cells, math.max(1L, math.ceil(
-      (k.toLong * oversample).toDouble * occ.getLong(0) / occ.getLong(1))
-      .toLong)).toInt
-    ivfServeStream(queries, centroids, lists, idCol, embCol, np, k)
+    ivfServeStream(queries, centroids, lists, idCol, embCol,
+      bound.getLong(0).toInt, k)
   }
 }

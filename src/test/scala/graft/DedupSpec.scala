@@ -33,6 +33,28 @@ class DedupSpec extends SparkSpec {
     dir
   }
 
+  test("verify sliver: digest shingles ≡ withShingles strings (pairs, n_common, jaccard)") {
+    // the registered verify keys its Jaccard on the shingles' MD5
+    // digests; the string sets it replaced must score every candidate
+    // pair identically. jaccardMin = 0 keeps every candidate pair.
+    def scored(df: org.apache.spark.sql.DataFrame) = df
+      .select("doc_a", "doc_b", "n_common", "jaccard")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
+      .toSet
+    for (dir <- Seq(sfTiny, PipelineAdaptiveSpec.highDupDir(this))) {
+      val docs = Tables.documents(spark, dir)
+      val digests = scored(Dedup.postingPairsPlan(Dedup.fusedGramStream(1))(docs, 0.0))
+      val cand = Dedup.cappedPairs(Dedup.fusedGramStream(1)(docs), "g").distinct()
+      val strings = scored(Dedup.sliverVerify(cand, 0.0)(ids =>
+        Dedup.withShingles(docs.join(ids, Seq("doc_id"), "left_semi"))
+          .select("doc_id", "shingles")))
+      CacheRegistry.drain()
+      assert(digests == strings, s"$dir: digest-only=${(digests -- strings).take(3)} " +
+        s"string-only=${(strings -- digests).take(3)}")
+      assert(digests.exists(_._4 >= 0.2), s"$dir: no near-dup pair to verify")
+    }
+  }
+
   test("exact dedup groups identical texts") {
     val out = Dedup.exact.fn(spark, docsDir).collect()
     assert(out.length == 3) // 4 docs, 2 identical

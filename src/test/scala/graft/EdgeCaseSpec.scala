@@ -389,6 +389,30 @@ class EdgeCaseSpec extends SparkSpec {
     assert(pairs.contains((63L, 64L)), pairs.take(5).toString)
   }
 
+  test("simhash signatures: byte-walk features ≡ the composed split/transform features") {
+    import spark.implicits._
+    // the weird-docs table plus null text, runs of spaces, tabs and
+    // multi-byte words: empty words count as features, like split's
+    val extra = Seq[(Long, Option[String])]((10L, None), (11L, Some("a  b")),
+      (12L, Some(" a b c a b c ")), (13L, Some("tab\tword x")), (14L, Some("文字 👍")))
+      .toDF("doc_id", "text")
+    val docs = Tables.documents(spark, weirdDocsDir).select("doc_id", "text")
+      .unionByName(extra)
+    val composed = docs
+      .withColumn("words", split(coalesce(col("text"), lit("")), " "))
+      .select(col("doc_id"), graft.functions.simhash.simhash_bits(expr(
+        "transform(array_distinct(case when size(words) >= 3" +
+          " then transform(sequence(1, size(words)-2)," +
+          " i -> concat_ws(' ', element_at(words,i), element_at(words,i+1), element_at(words,i+2)))" +
+          " else words end), t -> md5(t))")).as("simhash"))
+      .as[(Long, String)].collect().toSet
+    val kernel = Dedup.simhashSignatures(docs).select("doc_id", "simhash")
+      .as[(Long, String)].collect().toSet
+    assert(kernel == composed,
+      s"kernel-only=${kernel -- composed} composed-only=${composed -- kernel}")
+    assert(kernel.size == 10)
+  }
+
   test("simhashPairsFromSigs: a cap below 2 fails fast naming the pair contract") {
     val sigs = Dedup.simhashSignatures(Tables.documents(spark, weirdDocsDir))
     val e = intercept[IllegalArgumentException](

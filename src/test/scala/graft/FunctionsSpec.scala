@@ -51,6 +51,51 @@ class FunctionsSpec extends SparkSpec {
     assert(n.isNullAt(0))
   }
 
+  test("word_ngram_counts ≡ the composed transform/array_distinct form (n = 1, 2, 3)") {
+    import graft.functions.TokenCounts.word_ngram_counts
+    import spark.implicits._
+    val rng = new scala.util.Random(83)
+    val crafted = Seq[Option[String]](
+      None, Some(""), Some(" "), Some("   "), Some("a"), Some("a b"),
+      Some("a  b"), Some("  a b  "), Some("a   b   a   b"), Some(" a b a b a b "),
+      Some("tab\there tab\there tab\there"), Some("a\tb a\tb"), Some("\t \t"),
+      Some("déjà vu déjà vu 文字 文字 文字"), Some("👍 👍 👍 👍"),
+      Some("é é e e"), Some("x y z x y z x y"))
+    // small vocabularies so grams repeat, random runs of spaces
+    val generated = (0 until 3000).map { _ =>
+      val n = rng.nextInt(40)
+      Some((0 until n).map(_ => rng.nextInt(9) match {
+        case 0 => ""
+        case 1 => "語"
+        case 2 => "é\t"
+        case 3 => "w" + rng.nextInt(3)
+        case _ => ('a' + rng.nextInt(4)).toChar.toString
+      }).mkString(if (rng.nextBoolean()) " " else "  "))
+    }
+    val df = (crafted ++ generated).toDF("text")
+      .withColumn("w", expr("filter(split(text, ' '), x -> x != '')"))
+    for (n <- 1 to 3) {
+      val grams = expr(s"case when size(w) >= $n then transform(sequence(1, size(w)-${n - 1})," +
+        s" i -> concat_ws(' ', ${(0 until n).map(j => s"element_at(w, i+$j)").mkString(", ")}))" +
+        " else array() end")
+      val bad = df
+        .withColumn("g", grams)
+        .withColumn("k", word_ngram_counts(col("text"), n))
+        .filter(col("k.total") =!= size(col("g")) ||
+          col("k.distinct") =!= size(array_distinct(col("g"))))
+      assert(bad.count() == 0L, s"n=$n: ${bad.select("text").head(5).mkString(", ")}")
+      // null text counts as the empty document, on both eval paths
+      val nul = Seq[Option[String]](None).toDF("text")
+        .select(word_ngram_counts(col("text"), n).as("k")).head()
+      assert(nul.getStruct(0).getLong(0) == 0L && nul.getStruct(0).getLong(1) == 0L)
+    }
+    // the interpreted path agrees with the generated one
+    val k = graft.functions.WordNgramCounts(
+      org.apache.spark.sql.catalyst.expressions.Literal("a b a b a"), 2)
+    val row = k.eval(null).asInstanceOf[org.apache.spark.sql.catalyst.InternalRow]
+    assert((row.getLong(0), row.getLong(1)) == ((4L, 2L)))
+  }
+
   test("vec_dot evaluates correctly on a known vector") {
     import spark.implicits._
     val df = Seq((Array(1.0f, 2.0f, 3.0f), Array(4.0f, 5.0f, 6.0f))).toDF("a", "b")

@@ -13,28 +13,7 @@ import org.apache.spark.sql.functions._
   */
 class PipelineAdaptiveSpec extends SparkSpec {
 
-  /** 40 near-dup clusters of 4 one-token variants + 40 singletons:
-    * 200 docs, 60% of them near-duplicates. Cluster vocabularies are
-    * disjoint so cross-cluster Jaccard is exactly 0.
-    */
-  private lazy val highDupDir: String = {
-    import spark.implicits._
-    val docs = (0 until 40).flatMap { c =>
-      val words = (0 until 24).map(w => s"c${c}w$w")
-      (0 until 4).map { v =>
-        val t = (if (v == 0) words
-                 else words.updated(10 + v, s"c${c}v$v")).mkString(" ")
-        (c * 10L + v, t)
-      }
-    } ++ (0 until 40).map { u =>
-      (1000L + u, (0 until 24).map(w => s"u${u}w$w").mkString(" "))
-    }
-    val df = docs.map { case (id, t) => (id, t, "en", s"s$id", t.length.toLong) }
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = tmpDir()
-    writeTable(dir, "documents", df)
-    dir
-  }
+  private lazy val highDupDir: String = PipelineAdaptiveSpec.highDupDir(this)
 
   private def withShufflePath[A](body: => A): A = {
     val prevB = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -128,5 +107,32 @@ class PipelineAdaptiveSpec extends SparkSpec {
     }
     assert(pS.contains("SortMergeJoin") || pS.contains("ShuffledHashJoin"), pS)
     assert(!pS.contains("BroadcastHashJoin"), s"forced broadcast above threshold:\n$pS")
+  }
+}
+
+object PipelineAdaptiveSpec {
+
+  /** 40 near-dup clusters of 4 one-token variants + 40 singletons:
+    * 200 docs, 60% of them near-duplicates. Cluster vocabularies are
+    * disjoint so cross-cluster Jaccard is exactly 0. Returns the temp
+    * dir holding its documents table.
+    */
+  def highDupDir(spec: SparkSpec): String = {
+    import spec.spark.implicits._
+    val docs = (0 until 40).flatMap { c =>
+      val words = (0 until 24).map(w => s"c${c}w$w")
+      (0 until 4).map { v =>
+        val t = (if (v == 0) words
+                 else words.updated(10 + v, s"c${c}v$v")).mkString(" ")
+        (c * 10L + v, t)
+      }
+    } ++ (0 until 40).map { u =>
+      (1000L + u, (0 until 24).map(w => s"u${u}w$w").mkString(" "))
+    }
+    val df = docs.map { case (id, t) => (id, t, "en", s"s$id", t.length.toLong) }
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+    val dir = spec.tmpDir()
+    spec.writeTable(dir, "documents", df)
+    dir
   }
 }

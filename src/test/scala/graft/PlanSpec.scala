@@ -526,4 +526,19 @@ class PlanSpec extends SparkSpec {
     }
     CacheRegistry.drain()
   }
+
+  test("curation n-grams: no interpreted transform lambda builds a word n-gram") {
+    // the gram features of these ops come from the byte-walk kernels
+    // (ShingleMd5Grams, ShingleMd5BottomK, WordNgramCounts), never from
+    // a transform/concat_ws lambda Spark evaluates element by element
+    for (op <- Seq(Dedup.minhashLsh, Dedup.simhashPairs, TextAnalysis.repetition,
+        Pipeline.curate)) {
+      val hits = lambdaNgramBuilders(op.fn(spark, sfTiny))
+      CacheRegistry.drain()
+      assert(hits.isEmpty, s"${op.name}:\n${hits.mkString("\n")}")
+    }
+    // the detector bites on the string-contract builder that remains
+    val sh = Dedup.withShingles(Tables.documents(spark, sfTiny))
+    assert(lambdaNgramBuilders(sh).nonEmpty)
+  }
 }

@@ -54,6 +54,45 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     go(root, Nil, Set.empty)
   }
 
+  /** The word n-gram builders of `df`'s optimized plan that Spark
+    * interprets element by element: `transform` lambdas whose body joins
+    * words with `concat_ws(' ', …)`. Walks subqueries and the physical
+    * plans of cached relations (where CacheRegistry materializations
+    * hide their projections). Returns each hit's SQL.
+    */
+  def lambdaNgramBuilders(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+    import org.apache.spark.sql.catalyst.expressions.{ArrayTransform, ConcatWs, Expression, Literal}
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
+    def isSpaceJoin(e: Expression): Boolean = e match {
+      case c: ConcatWs => c.children.headOption.exists {
+        case Literal(v, _) => v != null && v.toString == " "
+        case _ => false
+      }
+      case _ => false
+    }
+    def hits(es: Seq[Expression]): Seq[String] = es.flatMap(_.collect {
+      case t: ArrayTransform if t.function.find(isSpaceJoin).isDefined => t.sql
+    })
+    def physical(p: SparkPlan): Seq[String] = p.flatMap { n =>
+      hits(n.expressions) ++ (n match {
+        case a: AdaptiveSparkPlanExec => physical(a.inputPlan)
+        case s: QueryStageExec => physical(s.plan)
+        case i: InMemoryTableScanExec => physical(i.relation.cachedPlan)
+        case _ => Nil
+      })
+    }
+    def logical(p: LogicalPlan): Seq[String] = p.flatMap { n =>
+      hits(n.expressions) ++ n.subqueries.flatMap(logical) ++ (n match {
+        case m: InMemoryRelation => physical(m.cachedPlan)
+        case _ => Nil
+      })
+    }
+    logical(df.queryExecution.optimizedPlan).distinct
+  }
+
   /** Assert the `hit` scans exist in `df`'s plan and that none of them
     * crosses a ShuffleExchange before reaching its first join — the
     * bucketed/broadcast serve contract for persisted index state.

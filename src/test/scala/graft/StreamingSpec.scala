@@ -1422,6 +1422,53 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("streaming semDedup: a zero vector gets the batch decision, not DIVIDE_BY_ZERO") {
+    // batch dedup_semdedup keeps zero-norm rows and guards its cosine
+    // divisions (the vector lands in the lowest-id cell, drops nothing
+    // and is never dropped); the admission face must decide the same
+    // instead of failing the micro-batch on 0/0
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    import graft.streaming.AnnServe
+    import org.apache.spark.sql.functions.{col, max}
+    val emb = Tables.embeddings(spark, sfTiny)
+    val zeroId = emb.agg(max("vec_id")).head().getLong(0) + 1
+    val zero = Seq((zeroId, Seq.fill(64)(0f), 0)).toDF("vec_id", "embedding", "label")
+    val dir = tmpDir()
+    writeTable(dir, "embeddings", emb.unionByName(zero))
+    val corpus = Tables.embeddings(spark, dir)
+    val (cents, members, stats) = graft.operators.Similarity.semDedupIndex(
+      corpus, "vec_id", "embedding", nCents = 64)
+    val vRows = corpus.select(col("vec_id"), col("embedding"))
+      .as[(Long, Seq[Float])].collect().sortBy(_._1)
+    assert(vRows.last._1 == zeroId)
+    val input = MemoryStream[(Long, Seq[Float])]
+    val served = AnnServe.semDedupServeStream(
+      input.toDF().toDF("vec_id", "embedding"), cents, members, stats,
+      "vec_id", "embedding", tau = 0.2, cellCap = 128L)
+    val q = served.writeStream.format("memory").queryName("semdedup_serve_zero")
+      .outputMode(OutputMode.Append()).start()
+    try {
+      // the zero vector rides the second micro-batch with the corpus tail
+      val (a, b) = vRows.splitAt(vRows.length / 2)
+      input.addData(a.toIndexedSeq); q.processAllAvailable()
+      input.addData(b.toIndexedSeq); q.processAllAvailable()
+      val streamed = spark.table("semdedup_serve_zero")
+        .as[AnnServe.SemDedupDecision].collect()
+        .map(s => (s.vec_id, s.cent_id, s.keep, s.cell_capped)).toSet
+      val batch = graft.operators.Similarity.semDedup.fn(spark, dir)
+        .collect().map(r => (r.getAs[Long]("vec_id"),
+          r.getAs[Long]("cent_id"), r.getAs[Long]("keep"),
+          r.getAs[Long]("cell_capped"))).toSet
+      CacheRegistry.drain()
+      assert(streamed == batch,
+        s"stream-only=${(streamed -- batch).take(3)} " +
+          s"batch-only=${(batch -- streamed).take(3)}")
+      assert(streamed.exists(d => d._1 == zeroId && d._3 == 1L),
+        streamed.filter(_._1 == zeroId))
+    } finally q.stop()
+  }
+
   test("streaming semDedup cap discipline: forced cap passes everything through flagged") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
