@@ -84,10 +84,8 @@ object Tables {
   private def leafFiles(spark: SparkSession,
       path: String): Option[Seq[(String, Long, Long)]] = {
     val p = new Path(path)
-    val hadoopConf = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.newHadoopConf()
     try {
-      val it = p.getFileSystem(hadoopConf).listFiles(p, true)
+      val it = p.getFileSystem(hadoopConf(spark)).listFiles(p, true)
       val files = Seq.newBuilder[(String, Long, Long)]
       while (it.hasNext) {
         val f = it.next()
@@ -96,6 +94,10 @@ object Tables {
       Some(files.result().sorted)
     } catch { case _: java.io.IOException => None }
   }
+
+  private def hadoopConf(spark: SparkSession): org.apache.hadoop.conf.Configuration =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.newHadoopConf()
 
   private def schemaConfs(spark: SparkSession): Seq[(String, String)] =
     spark.conf.getAll.toSeq.filter { case (k, _) =>
@@ -110,20 +112,49 @@ object Tables {
   def part(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "part")
   def nation(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "nation")
   def region(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "region")
-  /** events.ts is parquet TIMESTAMP(NANOS), which Spark's vectorized reader
-    * rejects. Read nanos as long (legacy conf, set in every session builder)
-    * and normalize to a micros timestamp — same truncation DuckDB applies.
+  /** events.ts may be parquet TIMESTAMP(NANOS), which Spark 4.1 refuses
+    * to read as a timestamp. Such a column reads as long (the legacy
+    * `nanosAsLong` conf, set in every session builder) and is normalized
+    * to a micros timestamp — same truncation DuckDB applies. The conf is
+    * set on the session only when the table's footer says NANOS
+    * ([[tsIsNanos]]), so reading a MICROS table leaves a caller's own
+    * setting alone.
     */
   def events(spark: SparkSession, dir: String): DataFrame = {
     // self-sufficiency on sessions that didn't set it at build time (the
     // conf is runtime-settable and consulted at schema conversion)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    if (tsIsNanos(spark, s"$dir/events.parquet"))
+      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = load(spark, dir, "events")
     if (raw.schema("ts").dataType == org.apache.spark.sql.types.LongType)
       raw.withColumn("ts", org.apache.spark.sql.functions.timestamp_micros(
         org.apache.spark.sql.functions.expr("ts div 1000")))
     else raw
   }
+  /** Whether `ts` in the footer of the table's first data file is
+    * TIMESTAMP(NANOS) — read on the driver, no Spark job. False for a
+    * table that cannot be listed (Spark then reports its own error).
+    */
+  private def tsIsNanos(spark: SparkSession, path: String): Boolean = {
+    import org.apache.parquet.schema.LogicalTypeAnnotation.{TimestampLogicalTypeAnnotation, TimeUnit}
+    val dataFile = leafFiles(spark, path).flatMap(_.map(_._1).find { f =>
+      val name = new Path(f).getName
+      !name.startsWith("_") && !name.startsWith(".")
+    })
+    dataFile.exists { f =>
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(f), hadoopConf(spark)))
+      try {
+        val schema = reader.getFileMetaData.getSchema
+        schema.containsField("ts") &&
+          (schema.getType(schema.getFieldIndex("ts")).getLogicalTypeAnnotation match {
+            case t: TimestampLogicalTypeAnnotation => t.getUnit == TimeUnit.NANOS
+            case _ => false
+          })
+      } finally reader.close()
+    }
+  }
+
   /** documents/embeddings feed digest/fold-heavy per-row pipelines
     * (shingling, simhash, dot products). The test inputs are single-row-
     * group files, i.e. one scan split — spread them to session parallelism

@@ -1884,7 +1884,10 @@ object GraftApi {
 
   /** Incremental near-dup pairs of a delta frame against a persisted
     * corpus sketch table — see graft.operators.Dedup.incrementalPairs.
-    * Build sketch tables with [[sketchTable]].
+    * Build both sketch tables with [[sketchTable]]: the result equals
+    * [[nearDupPairs]] over corpus ∪ delta restricted to the pairs that
+    * touch the delta. A table whose `shingles` are gram strings (older
+    * graft) does not score against digest shingles — rebuild it.
     */
   def incrementalNearDupPairs(corpusSketches: DataFrame, deltaSketches: DataFrame,
       jaccardMin: Double = 0.2): DataFrame =
@@ -1919,8 +1922,13 @@ object GraftApi {
     graft.operators.Dedup.compactCountState(spark, base, absorb, keyCol,
       targetTable)
 
-  /** The persisted MinHash sketch/posting table of any (doc_id, text)
-    * frame (store it bucketed by doc_id for exchange-free re-runs).
+  /** The persisted MinHash sketch table of any (id, text) frame:
+    * (doc_id, shingles, sketch), where `shingles` are the distinct
+    * word-5-shingle MD5 digests (32-char lowercase hex, ascending) and
+    * `sketch` their first 8 — see graft.operators.Dedup.sketchTable.
+    * Store it bucketed by doc_id for exchange-free re-runs. A table
+    * written by older graft holds gram STRINGS in `shingles`; rebuild it
+    * before serving it with [[incrementalNearDupPairs]].
     */
   def sketchTable(df: DataFrame, idCol: String, textCol: String): DataFrame =
     graft.operators.Dedup.sketchTable(

@@ -37,20 +37,6 @@ object HashCoinUtil {
 
   private val HEX = "0123456789abcdef".toCharArray
 
-  def md5HexOf(s: UTF8String): String = {
-    val md = tl.get()
-    md.reset()
-    val d = md.digest(s.getBytes)
-    val out = new Array[Char](32)
-    var i = 0
-    while (i < 16) {
-      out(2 * i) = HEX((d(i) >> 4) & 0xF)
-      out(2 * i + 1) = HEX(d(i) & 0xF)
-      i += 1
-    }
-    new String(out)
-  }
-
   /** Min md5 digest over all w-code-point windows; see [[WinnowMinMd5]]. */
   def winnowMinMd5(s: UTF8String, w: Int): UTF8String = {
     val bytes = s.getBytes
@@ -96,35 +82,6 @@ object HashCoinUtil {
     }
     UTF8String.fromBytes(out)
   }
-
-  /** The k lexicographically smallest md5 hex digests of the non-null
-    * elements, ascending — one pass, bounded k-slot insertion (most
-    * elements reject on one compare against the current k-th).
-    */
-  def md5BottomK(xs: org.apache.spark.sql.catalyst.util.ArrayData,
-      k: Int): Array[String] = {
-    val keep = new Array[String](k)
-    var n = 0
-    val total = xs.numElements()
-    var i = 0
-    while (i < total) {
-      if (!xs.isNullAt(i)) {
-        val h = md5HexOf(xs.getUTF8String(i))
-        if (n < k || h.compareTo(keep(n - 1)) < 0) {
-          // insertion position by linear scan from the tail (k is small)
-          var p = math.min(n, k - 1)
-          while (p > 0 && keep(p - 1).compareTo(h) > 0) {
-            keep(p) = keep(p - 1)
-            p -= 1
-          }
-          keep(p) = h
-          if (n < k) n += 1
-        }
-      }
-      i += 1
-    }
-    java.util.Arrays.copyOfRange(keep, 0, n)
-  }
 }
 
 /** md5_nibble0(string) → int 0..15: the first hex nibble of the MD5
@@ -153,49 +110,6 @@ case class Md5Nibble0(child: Expression) extends UnaryExpression {
       s => s"${ev.value} = graft.functions.HashCoinUtil.md5Nibble0($s);")
 
   override protected def withNewChildInternal(newChild: Expression): Md5Nibble0 =
-    copy(child = newChild)
-}
-
-/** md5_bottom_k(array<string>, k) → the k lexicographically smallest
-  * md5 hex digests of the elements, ascending. For null-free element
-  * arrays this is EXACTLY `slice(array_sort(transform(xs, x ->
-  * md5(x))), 1, k)` (HashCoinsSpec pins it), computed as one bounded
-  * selection pass instead of materializing the full digest array and
-  * string-sorting it — the difference between O(n log n) string sort
-  * and O(n) compares per document on the minhash sketch path. Null
-  * ELEMENTS are skipped (the sort form would sort them last; the
-  * graft shingle builders never produce null elements); a null array
-  * yields null.
-  */
-case class Md5BottomK(child: Expression, k: Int) extends UnaryExpression {
-  require(k >= 1 && k <= 1024, s"md5_bottom_k: k=$k out of range [1, 1024]")
-
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "md5_bottom_k"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case org.apache.spark.sql.types.ArrayType(StringType, _) =>
-        TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"md5_bottom_k expects array<string>, got ${other.simpleString}")
-    }
-
-  def bottomK(xs: org.apache.spark.sql.catalyst.util.ArrayData)
-      : org.apache.spark.sql.catalyst.util.ArrayData =
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      HashCoinUtil.md5BottomK(xs, k).map(UTF8String.fromString))
-
-  override protected def nullSafeEval(input: Any): Any =
-    bottomK(input.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("md5BottomK", this)
-    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $ref.bottomK($a);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Md5BottomK =
     copy(child = newChild)
 }
 
@@ -242,9 +156,6 @@ case class WinnowMinMd5(child: Expression, w: Int) extends UnaryExpression {
 object HashCoins {
   def md5_nibble0(c: Column): Column =
     Shim.column(Md5Nibble0(Shim.expression(c)))
-
-  def md5_bottom_k(c: Column, k: Int): Column =
-    Shim.column(Md5BottomK(Shim.expression(c), k))
 
   def winnow_min_md5(c: Column, w: Int): Column =
     Shim.column(WinnowMinMd5(Shim.expression(c), w))

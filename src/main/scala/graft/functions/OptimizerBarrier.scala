@@ -21,7 +21,7 @@ import org.apache.spark.sql.types.DataType
   * charges the hot loop. Wrapping ONLY the projected alias in a barrier
   * pins the expression to its projection — the gate reads the computed
   * column — while the expression class itself stays deterministic for
-  * every other use (unlike the blanket ShingleMd5BottomK marking, this
+  * every other use (unlike the blanket ShingleMd5Sketch marking, this
   * is per-call-site). The guide's §4.4 expensive-expression discipline,
   * packaged as a combinator.
   *

@@ -9,40 +9,37 @@ import org.apache.spark.sql.graftshim.Shim
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Fused word-shingle → MD5 → bottom-k sketch kernel.
+/** Word-shingle MD5 kernels: one byte walk per document, no words
+  * array and no shingle strings.
   *
-  * The composed minhash sketch path builds, per document: a `split`
-  * words array, a `transform`+`concat_ws` shingle-string array, an
-  * `array_distinct` hash set, and then one 32-char hex String PER
-  * SHINGLE inside md5_bottom_k — four materializations and ~words
-  * allocations to keep eight digests. This kernel exploits that a
-  * w-word shingle joined by single spaces over words split on single
-  * spaces is EXACTLY the byte slice of the original text from the
-  * first word's start to the last word's end (split/rejoin on the
-  * same separator is the identity on the covered span, empty words
-  * included). So the sketch needs no intermediate strings at all:
-  * one scan finds space positions, each window hashes as an
-  * (offset, length) range of the text's UTF-8 bytes — safe because
-  * 0x20 never occurs inside a multi-byte UTF-8 sequence — and a
-  * bounded k-slot insertion keeps the smallest digests as raw 16-byte
-  * arrays (unsigned byte order ≡ lowercase-hex lexicographic order),
-  * hex-encoding only the ≤ k winners.
+  * Every kernel here rests on one observation: a w-word shingle joined
+  * by single spaces over words split on single spaces is EXACTLY the
+  * byte slice of the original text from the first word's start to the
+  * last word's end (split/rejoin on the same separator is the identity
+  * on the covered span, empty words included). So a shingle needs no
+  * intermediate string: [[ShingleWalk]] finds space positions once and
+  * each window hashes as an (offset, length) range of the text's UTF-8
+  * bytes — safe because 0x20 never occurs inside a multi-byte UTF-8
+  * sequence. Digests are compared as raw 16-byte arrays (unsigned byte
+  * order ≡ lowercase-hex lexicographic order) and hex-encoded only on
+  * output.
   *
-  * Semantics are pinned to the composed form (ShingleSketchSpec):
-  * `md5_bottom_k(array_distinct(shingles), k)` over
-  * `transform(sequence(...), i -> concat_ws(' ', words[i..i+n-1]))`,
-  * with an EMPTY array for documents of fewer than n words — a doc of
-  * ≥ n words always has ≥ 1 shingle, so the `size(words) >= n`
-  * participation filter folds into `size(sketch) > 0`.
-  * array_distinct's dedup is reproduced by digest
-  * equality during insertion (distinct shingle strings collide only
-  * if MD5 collides — and then the composed form's sketch would carry
-  * the duplicate VALUE anyway, so downstream bucket keys agree).
+  * Semantics are pinned (ShingleSketchSpec) to the plain-Spark string
+  * form: with `shingles` the distinct
+  * `transform(sequence(...), i -> concat_ws(' ', words[i..i+n-1]))`
+  * strings, [[ShingleMd5Grams]] (mod 1) is
+  * `array_sort(transform(shingles, x -> md5(x)))` and
+  * [[ShingleMd5Sketch]] its first k — the bottom-k sketch, computed by
+  * bounded insertion without sorting every digest. Both are EMPTY for
+  * documents of fewer than n words, so the `size(words) >= n`
+  * participation filter folds into `size(…) > 0`. Distinctness is by
+  * digest (distinct shingle strings collide only if MD5 collides — and
+  * then every md5-keyed consumer would merge them anyway).
   *
   * Reference behavior anchor: the reference indexes collections once
-  * and serves queries from the precomputed structure
-  * (/root/reference/src/main/scala/ivm/optimization/Optimization.scala:31);
-  * this kernel is the build-side cost of that structure at corpus scale.
+  * and serves queries from the precomputed structure (SQuOpt's
+  * `ivm/optimization/Optimization.scala`); these kernels are the
+  * build-side cost of that structure at corpus scale.
   */
 /** THE word-window byte walk (ONE copy — a clamp or boundary fix
   * applied to one inlined copy would silently break the spec-pinned
@@ -374,7 +371,7 @@ case class ShingleMd5Grams(child: Expression, n: Int, mod: Int)
     }
 
   /** Optimizer duplication barrier, same contract as
-    * [[ShingleMd5BottomK.deterministic]]: values are a pure function of
+    * [[ShingleMd5Sketch.deterministic]]: values are a pure function of
     * the text; the flag only stops alias-substituting predicate
     * pushdown from cloning this dominant per-row kernel into explicit
     * participation filters (decontam_ngram's `size(shingles) > 0`).
@@ -399,7 +396,7 @@ case class ShingleMd5Grams(child: Expression, n: Int, mod: Int)
   * text's n-word shingles (see [[ShingleSketchUtil.sketch]]); empty
   * for < n words, null only for null text.
   */
-case class ShingleMd5BottomK(child: Expression, n: Int, k: Int)
+case class ShingleMd5Sketch(child: Expression, n: Int, k: Int)
     extends UnaryExpression {
   require(n >= 1 && n <= 64, s"shingle_md5_bottom_k: n=$n out of range [1, 64]")
   require(k >= 1 && k <= 1024, s"shingle_md5_bottom_k: k=$k out of range [1, 1024]")
@@ -446,13 +443,13 @@ case class ShingleMd5BottomK(child: Expression, n: Int, k: Int)
     nullSafeCodeGen(ctx, ev, s => s"${ev.value} = $ref.sketchOf($s);")
   }
 
-  override protected def withNewChildInternal(newChild: Expression): ShingleMd5BottomK =
+  override protected def withNewChildInternal(newChild: Expression): ShingleMd5Sketch =
     copy(child = newChild)
 }
 
 object ShingleSketch {
   def shingle_md5_bottom_k(c: Column, n: Int, k: Int): Column =
-    Shim.column(ShingleMd5BottomK(Shim.expression(c), n, k))
+    Shim.column(ShingleMd5Sketch(Shim.expression(c), n, k))
 
   def shingle_md5_grams(c: Column, n: Int, mod: Int): Column =
     Shim.column(ShingleMd5Grams(Shim.expression(c), n, mod))

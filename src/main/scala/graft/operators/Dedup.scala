@@ -24,88 +24,30 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** Word-5-shingle set per document as a distinct array of the shingle
-    * STRINGS (unsorted). Shingle length is a selectivity knob: on this
-    * corpus (small vocabulary) 3-word shingles are shared by nearly every
-    * document pair (candidate pair mass ~1.3M at sf0.1) while 5-word
-    * shingles are ~100× more selective (13.5k) with near-dup pairs still
-    * sharing most runs.
+  /** Each document's word-5-shingle set as its DISTINCT MD5 digests
+    * (lowercase hex, ascending) from one byte walk
+    * ([[graft.functions.ShingleMd5Grams]], unsampled) — the one
+    * word-n-gram rule of the near-dup family: the verify sliver, the
+    * persisted sketch state ([[sketchTable]]) and decontamination all
+    * read it. Gated on `size(shingles) > 0`, the `size(words) >= 5`
+    * participation contract (a ≥5-word doc always has a shingle). Digest
+    * sets give the same intersections and sizes as the gram-string sets
+    * unless MD5 collides, so [[jaccardVerify]] over them gives the string
+    * sets' `n_common` and `jaccard` (DedupSpec pins it). The kernel is an
+    * optimizer barrier, so the gate reads the projected column instead of
+    * re-running the walk.
     *
-    * Only callers that need the gram strings themselves use this
-    * interpreted `transform`/`concat_ws` builder: [[sketchTable]] (its
-    * persisted `shingles` column is the string contract the incremental
-    * serves read, and its sketch amortizes into that build) and
-    * EventStreams.decontamStream (a static string gram set from the
-    * caller). Consumers that only count, intersect or key on grams read
-    * their MD5 digests from the byte-walk kernels instead
-    * ([[graft.functions.ShingleMd5Grams]] and
-    * [[graft.functions.ShingleMd5BottomK]]): the verify sliver
-    * ([[shingleDigests]]), the candidate posting streams
-    * ([[fusedGramStream]]) and the minhash sketch ([[fusedSketchFrame]]).
-    * Digest sets give the same intersections and sizes as string sets
-    * unless MD5 collides — the argument candidate generation and
-    * decontam_ngram's scored overlap already rest on. The arrays are
-    * UNSORTED: every consumer is order-independent (array_intersect/size,
-    * explode→distinct, bottom-k selection).
-    */
-  private[graft] def withShingles(df: DataFrame): DataFrame =
-    // barrier on words: the ≥5-word gate otherwise pushdown-clones the
-    // split into its own condition and the scan tokenizes every text
-    // twice (r17 Condition audit; see functions.OptimizerBarrier)
-    df.withColumn("words",
-        graft.functions.OptimizerBarrier.barrier(split(col("text"), " ")))
-      .filter(size(col("words")) >= 5)
-      // greatest-clamp + try_element_at: total under speculative
-      // evaluation (see ngramCandidateGrams) — a short doc's descending
-      // sequence would hit element_at(words, 0), and even clamped,
-      // element_at(words, size+k) past the array end THROWS under the
-      // ANSI mode Spark 4 defaults to; try_element_at yields null and
-      // concat_ws skips nulls, so the garbage row the size filter
-      // removes anyway can never abort the job
-      .withColumn("shingles", array_distinct(expr(
-        "transform(sequence(1, greatest(size(words)-4, 1))," +
-          " i -> concat_ws(' ', try_element_at(words,i), try_element_at(words,i+1)," +
-          " try_element_at(words,i+2), try_element_at(words,i+3), try_element_at(words,i+4)))")))
-
-  /** The verify sliver's (doc_id, shingles) frame: each document's
-    * DISTINCT word-5-shingle MD5 digests from one byte walk
-    * ([[graft.functions.ShingleMd5Grams]], unsampled), gated on
-    * `size(shingles) > 0` — ≡ [[withShingles]]' `size(words) >= 5` gate,
-    * since a ≥5-word doc always has a shingle. [[jaccardVerify]] over
-    * these digests gives the string sets' `n_common` and `jaccard`
-    * (DedupSpec pins it). The kernel is an optimizer barrier, so the
-    * gate reads the projected column instead of re-running the walk.
+    * Shingle length is a selectivity knob: on this corpus (small
+    * vocabulary) 3-word shingles are shared by nearly every document
+    * pair (candidate pair mass ~1.3M at sf0.1) while 5-word shingles are
+    * ~100× more selective (13.5k) with near-dup pairs still sharing most
+    * runs.
     */
   private[graft] def shingleDigests(df: DataFrame): DataFrame =
     df.select(col("doc_id"),
         graft.functions.ShingleSketch.shingle_md5_grams(col("text"), 5, 1)
           .as("shingles"))
       .filter(size(col("shingles")) > 0)
-
-  /** The per-doc DISTINCT gram posting stream (doc_id, g) for candidate
-    * generation, as gram STRINGS — the composed reference
-    * ShingleSketchSpec pins [[fusedGramStream]] against. Built with
-    * array_join(slice(...)), which for explode consumers measured ~2×
-    * cheaper than [[withShingles]]' concat_ws form (r12: 559 vs ~280
-    * cpu-s at 100×), and UNSORTED: candidates only need the distinct
-    * gram strings, and the array_sort the shared shingle arrays carry
-    * measured as half the old explode path's cost for nothing the
-    * candidate join uses.
-    */
-  private[graft] def ngramCandidateGrams(df: DataFrame): DataFrame =
-    // words barrier: same split-clone note as [[withShingles]] (r17)
-    df.withColumn("words",
-        graft.functions.OptimizerBarrier.barrier(split(col("text"), " ")))
-      .filter(size(col("words")) >= 5)
-      // greatest(...,1): sequence() DESCENDS for a bound below its
-      // start, so a <5-word doc would drive slice through start 0 —
-      // an ERROR, not a null — whenever the optimizer evaluates this
-      // expression speculatively (subexpression elimination pulled it
-      // into the sampling predicate ahead of the size conjunct;
-      // EdgeCaseSpec caught exactly that). The clamp makes the
-      // expression total; the size filter still removes those rows.
-      .withColumn("cgrams", array_distinct(expr(gramExpr("words", 5))))
-      .select(col("doc_id"), explode(col("cgrams")).as("g"))
 
   /** The near-dup family's bucket cap: a posting list (shared shingle,
     * sketch hash, band key) with more members than this is dropped
@@ -307,18 +249,6 @@ object Dedup {
     postingPairsPlan(fusedGramStream(4))(Tables.documents(spark, dir), 0.2)
   }
 
-  /** The 1-in-4 content-stable gram sampling coin (see the ngramJaccard
-    * scaladoc). Semantics = first md5 hex nibble mod 4 == 0 — exactly
-    * `substring(md5(g),1,1) IN ('0','4','8','c')`, which is what the
-    * DuckDB oracle computes. The Spark side reads the nibble off the
-    * raw digest ([[graft.functions.Md5Nibble0]]) instead of
-    * materializing the hex string + substring + isin chain: the r13
-    * warm-solo A/B (ngram_ab_r13.jsonl) adjudicated the raw-digest
-    * coin against the hex form and the unsampled plan.
-    */
-  private[graft] val ngramCoin: Column => Column =
-    g => graft.functions.HashCoins.md5_nibble0(g) % 4 === 0
-
   /** The fused sampled posting stream (doc_id, g) where g is the gram's
     * DIGEST hex, not the gram string ([[graft.functions.ShingleMd5Grams]]
     * — one byte-slice scan, the sampling coin inside the kernel, no
@@ -332,20 +262,6 @@ object Dedup {
     docs => docs.select(col("doc_id"),
       explode(graft.functions.ShingleSketch
         .shingle_md5_grams(col("text"), 5, mod)).as("g"))
-
-  /** The dedup_ngram_jaccard plan with a pluggable gram-sampling coin
-    * over the composed posting stream — the reference ShingleSketchSpec
-    * pins the registered fused stream against.
-    */
-  private[graft] def ngramJaccardPlan(coin: Option[Column => Column])(
-      docs: DataFrame): DataFrame =
-    postingPairsPlan { d =>
-      val allGrams = ngramCandidateGrams(d)
-      // 1-in-4 content-stable sample (see the op scaladoc): same
-      // predicate semantics as the oracle, applied right at the explode
-      // so the sampled-out grams never reach the exchange or agg buffers
-      coin.fold(allGrams)(c => allGrams.filter(c(col("g"))))
-    }(docs, 0.2)
 
   /** The near-dup pair plan over a posting stream: `postings(docs)` is a
     * (doc_id, key) stream — gram digests for dedup_ngram_jaccard
@@ -450,12 +366,12 @@ object Dedup {
       docs, jaccardMin).select("doc_a", "doc_b", "jaccard")
 
   /** The corpus-wide (doc_id, sketch) pass as ONE fused kernel
-    * ([[graft.functions.ShingleMd5BottomK]]): no words array, no
+    * ([[graft.functions.ShingleMd5Sketch]]): no words array, no
     * shingle-string array, no per-shingle hex String — each 5-gram
-    * hashes as a byte slice of the text. ≡ the composed
-    * `withShingles → md5_bottom_k` form (ShingleSketchSpec pins it on
-    * crafted + random texts; minhash_ab_r14.jsonl adjudicates the
-    * swap hash-identically). UNGATED: explode(sketch) emits zero rows
+    * hashes as a byte slice of the text, and only the 8 smallest
+    * digests are kept. ≡ `slice(shingles, 1, 8)` of [[shingleDigests]],
+    * the sketch [[sketchTable]] persists (ShingleSketchSpec pins both on
+    * crafted + random texts). UNGATED: explode(sketch) emits zero rows
     * for an empty array, so explode-consumers need no filter at all;
     * [[fusedSketchFrameGated]] adds the explicit `size(sketch) > 0`
     * participation gate for paths that materialize the frame.
@@ -467,7 +383,7 @@ object Dedup {
   /** [[fusedSketchFrame]] + the `size(sketch) > 0` participation gate
     * (the `size(words) >= 5` contract — a ≥5-word doc always has ≥1
     * shingle). r17: the gate is CHEAP again — the kernel is an
-    * optimizer-barrier expression (see ShingleMd5BottomK.deterministic),
+    * optimizer-barrier expression (see ShingleMd5Sketch.deterministic),
     * so the filter reads the projected column instead of predicate
     * pushdown cloning the md5-shingle pass into its condition; the r16
     * plan evaluated the kernel 2× per document (filter + projection),
@@ -489,24 +405,6 @@ object Dedup {
     */
   private[graft] def sketchPostings(sk: DataFrame): DataFrame =
     sk.select(col("doc_id"), explode(col("sketch")).as("h"))
-
-  /** The bottom-8 minhash sketch over the `shingles` column — bounded
-    * one-pass selection ([[graft.functions.Md5BottomK]]), ≡ the
-    * sort-all-then-slice form r12 registered (HashCoinsSpec pins the
-    * equality; minhash_ab_r13.jsonl adjudicated the swap). Same
-    * value-set convention as the DuckDB oracle's
-    * `list_sort(list_transform(...))[1:8]`.
-    */
-  private[graft] val sketchCol: Column =
-    graft.functions.HashCoins.md5_bottom_k(col("shingles"), 8)
-
-  /** The composed-pass reference (shingle builder → `sketch` column)
-    * ShingleSketchSpec pins [[minhashPairs]] against. */
-  private[graft] def minhashPairsPlan(shingleBuilder: DataFrame => DataFrame,
-      sketch: Column)(docs: DataFrame, jaccardMin: Double): DataFrame =
-    postingPairsPlan(d =>
-      sketchPostings(shingleBuilder(d).withColumn("sketch", sketch)))(
-      docs, jaccardMin).select("doc_a", "doc_b", "jaccard")
 
   /** Per-feature md5 bit votes folded into a 64-bit signature (each hex
     * digit casts two independent votes — its 8-bit and its 4-bit — so 32
@@ -747,24 +645,20 @@ object Dedup {
       .filter(col("hamming") <= d)
       .distinct()
 
-  /** The MinHash sketch of any (doc_id, text) frame — the persisted
-    * signature table an incremental dedup pipeline keeps per corpus
-    * (the reference's addIndex precomputation; at warehouse scale it is
-    * stored `bucketBy(hash)` so re-runs never reshuffle it).
+  /** The MinHash sketch state of any (doc_id, text) frame — the
+    * persisted signature table an incremental dedup pipeline keeps per
+    * corpus (the reference's addIndex precomputation; at warehouse scale
+    * it is stored `bucketBy(hash)` so re-runs never reshuffle it).
+    * (doc_id, shingles, sketch) from ONE byte walk: `shingles` is
+    * [[shingleDigests]] (the distinct word-5-shingle MD5 digests,
+    * ascending — the verify state), and since the digests arrive sorted,
+    * their first 8 are the bottom-8 sketch the buckets key on (≡
+    * `shingle_md5_bottom_k(text, 5, 8)`, ShingleSketchSpec pins it). A
+    * table built from gram STRINGS by older code is not this contract —
+    * rebuild it.
     */
   def sketchTable(docs: DataFrame): DataFrame =
-    withShingles(docs)
-      // deliberately the COMPOSED sketch (md5_bottom_k over the shingles
-      // column), NOT the fused text-bytes kernel: every consumer either
-      // persists or CacheRegistry-materializes this frame with BOTH
-      // columns, so the shingle build amortizes into the sketch (distinct
-      // strings hash once) — swapping in the kernel was tried r14 and
-      // REGRESSED the no-warmup 1000× smokes (the build then pays
-      // shingles + a re-hash of every window: upsert 1122 → 1755 cpu-s
-      // solo). The kernel wins only where shingles are NOT kept
-      // ([[minhashPairs]]' corpus pass).
-      .withColumn("sketch", sketchCol)
-      .select("doc_id", "shingles", "sketch")
+    shingleDigests(docs).withColumn("sketch", slice(col("shingles"), 1, 8))
 
   /** Incremental dedup: near-dup pairs INVOLVING an arriving delta shard,
     * against an existing corpus whose sketch table already exists — the
@@ -1023,16 +917,20 @@ object Dedup {
     * corpus state): THREE tables, the probe-keyed ones bucketed AND
     * per-bucket sorted, one file per bucket
     * ([[graft.TempWarehouse.writeBucketed]]):
-    *   - `sk(doc_id, shingles, sketch)` — the wide verify state;
+    *   - `sk(doc_id, shingles, sketch)` — the wide verify state, both
+    *     arrays MD5 digests ([[sketchTable]]);
     *   - `post(doc_id, h)` — exploded postings, bucketBy(h)/sortBy(h);
     *   - `hcnt(h, cn)` — per-hash distinct-doc counts, same layout.
+    * The key's version names the `sk` column format: v3 is digest
+    * shingles, so a v2 database of gram strings is never read as
+    * digests.
     */
   private def persistedCorpusSketch(spark: SparkSession, dir: String,
       tag: String = "corpus90",
       corpusOf: DataFrame => DataFrame = _.filter(col("doc_id") % 10 =!= 0))
       : (DataFrame, DataFrame, DataFrame) = {
     TempWarehouse.getOrBuild(spark, "graft_sk",
-        s"$dir|$tag|v2", Seq("sk", "post", "hcnt")) { db =>
+        s"$dir|$tag|v3", Seq("sk", "post", "hcnt")) { db =>
       sketchTable(corpusOf(Tables.documents(spark, dir)))
         .write.mode("overwrite").saveAsTable(s"$db.sk")
       TempWarehouse.writeBucketed(sketchPostings(spark.table(s"$db.sk")),
@@ -1099,9 +997,9 @@ object Dedup {
     * the r12 builder A/B) and greatest-clamped so the expression stays
     * total under speculative evaluation (sequence() DESCENDS for short
     * docs and slice(start 0) throws). Single-sourced because the batch,
-    * delta, and streaming substring faces plus the ngram candidate
-    * stream must agree bit-for-bit — a clamp or width fix applied to
-    * one inlined copy silently breaks the spec-pinned equivalences.
+    * delta, and streaming substring faces plus the specs' string n-gram
+    * references must agree bit-for-bit — a clamp or width fix applied
+    * to one inlined copy silently breaks the spec-pinned equivalences.
     */
   private[graft] def gramExpr(wordsCol: String, k: Int): String =
     s"transform(sequence(1, greatest(size($wordsCol)-${k - 1}, 1))," +
@@ -1113,8 +1011,8 @@ object Dedup {
     .withColumn("w", split(col("text"), " "))
     .filter(size(col("w")) >= 8)
     // greatest-clamp: total under speculative evaluation (see
-    // ngramCandidateGrams) — sequence() descends through 0 for short
-    // docs and slice(start 0) throws; the size filter still governs
+    // [[gramExpr]]) — sequence() descends through 0 for short docs and
+    // slice(start 0) throws; the size filter still governs
     .select(col("doc_id"), explode(expr(gramExpr("w", 8))).as("g"))
 
   /** Data-sized partition count for the posting exchange: posting rows

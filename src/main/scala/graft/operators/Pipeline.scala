@@ -184,16 +184,12 @@ object Pipeline {
       |    AS contaminated
       |FROM scored""".stripMargin,
   ) { (spark, dir) =>
-    // r14: the registered op feeds DIGEST shingle frames (one fused
-    // ShingleMd5Grams pass per side — no words/gram-string/distinct
-    // arrays; the Dedup.fusedGramStream injectivity argument: both the
-    // intersect and the posting join only ever test gram EQUALITY, and
-    // the per-doc distinct count is preserved). [[decontaminate]] stays
-    // generic over any (doc_id, shingles) token frame.
-    val sh = Tables.documents(spark, dir)
-      .select(col("doc_id"), graft.functions.ShingleSketch
-        .shingle_md5_grams(col("text"), 5, 1).as("shingles"))
-      .filter(size(col("shingles")) > 0)
+    // the registered op feeds DIGEST shingle frames (Dedup.shingleDigests:
+    // one byte walk per side; both the intersect and the posting join
+    // only ever test gram EQUALITY, and the per-doc distinct count is
+    // preserved). [[decontaminate]] stays generic over any
+    // (doc_id, shingles) token frame.
+    val sh = Dedup.shingleDigests(Tables.documents(spark, dir))
     decontaminate(sh.filter(col("doc_id") % 97 =!= 0),
       sh.filter(col("doc_id") % 97 === 0), tau = 0.5)
   }
@@ -224,34 +220,54 @@ object Pipeline {
     * (PipelineAdaptiveSpec on a large-benchmark corpus; EdgeCaseSpec at
     * the switch boundary).
     */
-  def decontaminate(train: org.apache.spark.sql.DataFrame,
-      bench: org.apache.spark.sql.DataFrame, tau: Double,
-      broadcastMaxGrams: Long = 100000L): org.apache.spark.sql.DataFrame = {
-    val grams = graft.CacheRegistry.track(
+  def decontaminate(train: DataFrame, bench: DataFrame, tau: Double,
+      broadcastMaxGrams: Long = decontamBroadcastMaxGrams): DataFrame = {
+    val grams = benchGrams(bench)
+    if (grams.count() <= broadcastMaxGrams) broadcastDecontam(train, grams, tau)
+    else {
+      val hits = train
+        .select(col("doc_id"), explode(array_distinct(col("shingles"))).as("g"))
+        .join(grams, "g")
+        .groupBy("doc_id").agg(count(lit(1)).as("hits"))
+      flagContaminated(train.select(col("doc_id"), size(col("shingles")).as("n_sh"))
+        .join(hits, Seq("doc_id"), "left")
+        .select(col("doc_id"),
+          coalesce(col("hits"), lit(0L)).as("n_overlap"),
+          (coalesce(col("hits"), lit(0L)).cast("double") / col("n_sh"))
+            .as("overlap_frac")), tau)
+    }
+  }
+
+  /** [[decontaminate]]'s default bound on the distinct benchmark grams it
+    * broadcasts as one array; the streaming gate refuses a larger set.
+    */
+  private[graft] val decontamBroadcastMaxGrams = 100000L
+
+  /** The distinct benchmark grams `g` of a (doc_id, shingles) frame,
+    * tracked: the size decision counts them and the chosen arm reads them.
+    */
+  private[graft] def benchGrams(bench: DataFrame): DataFrame =
+    graft.CacheRegistry.track(
       bench.select(explode(col("shingles")).as("g")).distinct())
-    val scored =
-      if (grams.count() <= broadcastMaxGrams) {
-        val bg = grams.agg(collect_list(col("g")).as("bg"))
-        val overlap = size(array_intersect(col("shingles"), col("bg")))
-        train.crossJoin(broadcast(bg))
-          .select(col("doc_id"),
-            overlap.cast("long").as("n_overlap"),
-            (overlap.cast("double") / size(col("shingles"))).as("overlap_frac"))
-      } else {
-        val hits = train
-          .select(col("doc_id"), explode(array_distinct(col("shingles"))).as("g"))
-          .join(grams, "g")
-          .groupBy("doc_id").agg(count(lit(1)).as("hits"))
-        train.select(col("doc_id"), size(col("shingles")).as("n_sh"))
-          .join(hits, Seq("doc_id"), "left")
-          .select(col("doc_id"),
-            coalesce(col("hits"), lit(0L)).as("n_overlap"),
-            (coalesce(col("hits"), lit(0L)).cast("double") / col("n_sh"))
-              .as("overlap_frac"))
-      }
+
+  /** [[decontaminate]]'s broadcast arm, shared with the streaming gate
+    * (EventStreams.decontamStream): the [[benchGrams]] set as one
+    * broadcast array, each `train` row scored by a per-row
+    * array_intersect.
+    */
+  private[graft] def broadcastDecontam(train: DataFrame, grams: DataFrame,
+      tau: Double): DataFrame = {
+    val bg = grams.agg(collect_list(col("g")).as("bg"))
+    val overlap = size(array_intersect(col("shingles"), col("bg")))
+    flagContaminated(train.crossJoin(broadcast(bg))
+      .select(col("doc_id"),
+        overlap.cast("long").as("n_overlap"),
+        (overlap.cast("double") / size(col("shingles"))).as("overlap_frac")), tau)
+  }
+
+  private def flagContaminated(scored: DataFrame, tau: Double): DataFrame =
     scored.withColumn("contaminated",
       when(col("overlap_frac") >= tau, 1L).otherwise(0L))
-  }
 
   /** Quality-aware representative selection: within every near-dup
     * cluster keep the BEST document (most tokens; ties to the lowest

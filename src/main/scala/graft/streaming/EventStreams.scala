@@ -517,26 +517,32 @@ object EventStreams {
 
   /** Streaming decontamination gate — the stream face of
     * Pipeline.decontaminate: arriving training documents score their
-    * shingle overlap against the STATIC benchmark gram set (the same
-    * one-row broadcast array the batch op builds; an eval set is tiny
-    * and changes rarely, so it is batch-prepared and joined
-    * stream-static). Stateless per-row projection — no watermark, no
-    * state store; at 100 TB/day ingest this is the shape that keeps the
-    * contamination check on the ingest path instead of a nightly batch.
+    * shingle overlap against the STATIC benchmark gram set through the
+    * batch op's own broadcast arm (Pipeline.broadcastDecontam; an eval
+    * set is tiny and changes rarely, so it is batch-prepared and joined
+    * stream-static). The arriving side's grams are
+    * graft.operators.Dedup.shingleDigests, as in batch decontam_ngram.
+    * Stateless per-row projection — no watermark, no state store; at
+    * 100 TB/day ingest this is the shape that keeps the contamination
+    * check on the ingest path instead of a nightly batch.
     * `docs` carries (doc_id, text); `bench` is a static (doc_id,
-    * shingles) frame (eval-set-sized, per the batch sizing contract).
+    * shingles) frame of DIGEST shingles (`Dedup.shingleDigests` of the
+    * eval documents). The stream has no posting-list arm: a bench set of
+    * more than Pipeline.decontamBroadcastMaxGrams distinct grams is
+    * refused here (one count of the static side) — score such a set with
+    * batch `decontaminate`.
     */
   def decontamStream(docs: DataFrame, bench: DataFrame, tau: Double): DataFrame = {
-    val bg = broadcast(bench.agg(
-      array_distinct(flatten(collect_list(col("shingles")))).as("bg")))
-    val sh = graft.operators.Dedup.withShingles(docs)
-      .select(col("doc_id"), col("shingles"))
-    val overlap = size(array_intersect(col("shingles"), col("bg")))
-    sh.join(bg)
-      .select(col("doc_id"), overlap.cast("long").as("n_overlap"),
-        (overlap.cast("double") / size(col("shingles"))).as("overlap_frac"))
-      .withColumn("contaminated",
-        when(col("overlap_frac") >= tau, 1L).otherwise(0L))
+    import graft.operators.Pipeline
+    val grams = Pipeline.benchGrams(bench)
+    val n = grams.count()
+    if (n > Pipeline.decontamBroadcastMaxGrams)
+      throw new IllegalArgumentException(s"decontamStream: the bench set has " +
+        s"$n distinct grams, more than the ${Pipeline.decontamBroadcastMaxGrams} " +
+        "a broadcast gram array may hold; score it with batch decontaminate " +
+        "(graft.operators.Pipeline.decontaminate), which switches to a " +
+        "posting-list join past that bound")
+    Pipeline.broadcastDecontam(graft.operators.Dedup.shingleDigests(docs), grams, tau)
   }
 
   /** Streaming face of text_bpe_encode: arriving documents tokenize and

@@ -16,9 +16,6 @@ object Shim {
   def ofRows(spark: SparkSession, plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
-  def logicalPlan(df: DataFrame): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
-    df.queryExecution.logical
-
   /** Block until every queued listener event is delivered. Task metrics
     * arrive on the asynchronous listener bus; a metrics reader that
     * resets counters between measured sections without draining first

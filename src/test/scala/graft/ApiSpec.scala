@@ -49,6 +49,30 @@ class ApiSpec extends SparkSpec {
     ).toDF("title", "publisher", "authors")
   }
 
+  test("sketchTable digests + incrementalNearDupPairs ≡ nearDupPairs touching the delta (renamed columns)") {
+    val docs = Tables.documents(spark, sfTiny)
+      .select(col("doc_id").as("id"), col("text").as("body"))
+    // shingles are MD5 digests, not gram strings
+    val sk = GraftApi.sketchTable(docs, "id", "body")
+    val grams = sk.select(explode(col("shingles")).as("g"))
+    assert(grams.count() > 0)
+    assert(grams.filter(not(col("g").rlike("^[0-9a-f]{32}$"))).count() == 0L)
+    def pairs(df: org.apache.spark.sql.DataFrame) = {
+      val got = df.collect().map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"),
+        math.round(r.getAs[Double]("jaccard") * 1e9))).toSet
+      CacheRegistry.drain()
+      got
+    }
+    val inDelta = col("id") % 10 === 0
+    val incr = pairs(GraftApi.incrementalNearDupPairs(
+      GraftApi.sketchTable(docs.filter(not(inDelta)), "id", "body"),
+      GraftApi.sketchTable(docs.filter(inDelta), "id", "body")))
+    val full = pairs(GraftApi.nearDupPairs(docs, "id", "body")
+      .filter(col("doc_a") % 10 === 0 || col("doc_b") % 10 === 0))
+    assert(incr == full, s"incremental-only=${incr -- full} full-only=${full -- incr}")
+    assert(full.nonEmpty)
+  }
+
   test("paper tutorial: reified query equals hand-optimized composition") {
     import spark.implicits._
     // Figure 2/6: filter publisher, flatMap authors, yield (title, author, coauthors)

@@ -46,7 +46,7 @@ class DedupSpec extends SparkSpec {
       val digests = scored(Dedup.postingPairsPlan(Dedup.fusedGramStream(1))(docs, 0.0))
       val cand = Dedup.cappedPairs(Dedup.fusedGramStream(1)(docs), "g").distinct()
       val strings = scored(Dedup.sliverVerify(cand, 0.0)(ids =>
-        Dedup.withShingles(docs.join(ids, Seq("doc_id"), "left_semi"))
+        ShingleReference.withShingles(docs.join(ids, Seq("doc_id"), "left_semi"))
           .select("doc_id", "shingles")))
       CacheRegistry.drain()
       assert(digests == strings, s"$dir: digest-only=${(digests -- strings).take(3)} " +

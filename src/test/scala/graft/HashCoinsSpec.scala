@@ -36,29 +36,6 @@ class HashCoinsSpec extends SparkSpec {
     assert(rate > 0.2 && rate < 0.3, rate)
   }
 
-  test("md5_bottom_k ≡ slice(array_sort(transform(md5)), 1, k) incl. short/empty arrays") {
-    import graft.functions.HashCoins.md5_bottom_k
-    import spark.implicits._
-    val rng = new scala.util.Random(31)
-    val rows = (0 until 3000).map { i =>
-      val n = rng.nextInt(40) // sizes 0..39 — below, at, and above k=8
-      (0 until n).map(j => s"shingle ${rng.nextInt(500)} of row $i pos $j")
-    }
-    val df = rows.toDF("xs")
-    val diff = df.select(
-        md5_bottom_k(col("xs"), 8).as("fast"),
-        expr("slice(array_sort(transform(xs, x -> md5(x))), 1, 8)").as("ref"))
-      .filter(col("fast") =!= col("ref"))
-      .count()
-    assert(diff == 0L)
-    // duplicates kept like the slice form keeps them
-    val dup = Seq(Seq("a", "a", "b")).toDF("xs")
-      .select(md5_bottom_k(col("xs"), 2).as("f"),
-        expr("slice(array_sort(transform(xs, x -> md5(x))), 1, 2)").as("r"))
-      .filter(col("f") =!= col("r")).count()
-    assert(dup == 0L)
-  }
-
   test("null input yields null, not a crash") {
     import spark.implicits._
     val df = Seq(Some("x"), None).toDF("g")

@@ -70,9 +70,7 @@ class PipelineAdaptiveSpec extends SparkSpec {
     // grams, the regime where the per-row array_intersect set rebuild
     // is the r5-flagged compute cliff and the op must switch itself to
     // the posting-list equi-join
-    val sh = graft.operators.Dedup
-      .withShingles(Tables.documents(spark, highDupDir))
-      .select(col("doc_id"), col("shingles"))
+    val sh = graft.operators.Dedup.shingleDigests(Tables.documents(spark, highDupDir))
     val train = sh.filter(col("doc_id") % 5 =!= 0)
     val bench = sh.filter(col("doc_id") % 5 === 0)
     val viaBroadcast = rows(Pipeline.decontaminate(train, bench, 0.5))

@@ -53,29 +53,18 @@ class PlanLintSpec extends SparkSpec {
     // ≤8 packed query LUTs (64 doubles each) crossed onto the codes scan
     "ann_pq_search")
 
-  /** Ops that still build word n-gram STRINGS with the interpreted
-    * `transform`/`concat_ws` lambda ([[graft.operators.Dedup.withShingles]]),
-    * because the strings themselves are their contract.
-    */
-  private val lambdaNgramAllowed = Set(
-    // the delta shards' Dedup.sketchTable: its (doc_id, shingles,
-    // sketch) rows are the persisted sketch state's string layout, and
-    // the sketch amortizes into the shingle build
-    "dedup_incremental", "dedup_incremental_upsert")
-
   test("no operator builds word n-grams with an interpreted transform/concat_ws lambda") {
-    val offenders = SparkEntry.allOps.filterNot(op => lambdaNgramAllowed(op.name))
-      .flatMap { op =>
-        val hits =
-          try lambdaNgramBuilders(op.fn(spark, sfTiny))
-          catch { case e: Throwable => Seq(s"PLANNING FAILED: ${e.getMessage}") }
-        if (hits.nonEmpty) Some(s"${op.name}: ${hits.head.take(160)}") else None
-      }
+    val offenders = SparkEntry.allOps.flatMap { op =>
+      val hits =
+        try lambdaNgramBuilders(op.fn(spark, sfTiny))
+        catch { case e: Throwable => Seq(s"PLANNING FAILED: ${e.getMessage}") }
+      if (hits.nonEmpty) Some(s"${op.name}: ${hits.head.take(160)}") else None
+    }
     CacheRegistry.drain()
     assert(offenders.isEmpty,
       "Spark interprets transform lambdas element by element, even inside " +
         "codegen: build word n-grams with the byte-walk kernels instead — " +
-        "graft.functions.ShingleMd5Grams / ShingleMd5BottomK for gram digests, " +
+        "graft.functions.ShingleMd5Grams / ShingleMd5Sketch for gram digests, " +
         "WordNgramCounts for gram counts:\n" + offenders.mkString("\n"))
   }
 

@@ -529,7 +529,7 @@ class PlanSpec extends SparkSpec {
 
   test("curation n-grams: no interpreted transform lambda builds a word n-gram") {
     // the gram features of these ops come from the byte-walk kernels
-    // (ShingleMd5Grams, ShingleMd5BottomK, WordNgramCounts), never from
+    // (ShingleMd5Grams, ShingleMd5Sketch, WordNgramCounts), never from
     // a transform/concat_ws lambda Spark evaluates element by element
     for (op <- Seq(Dedup.minhashLsh, Dedup.simhashPairs, TextAnalysis.repetition,
         Pipeline.curate)) {
@@ -537,8 +537,8 @@ class PlanSpec extends SparkSpec {
       CacheRegistry.drain()
       assert(hits.isEmpty, s"${op.name}:\n${hits.mkString("\n")}")
     }
-    // the detector bites on the string-contract builder that remains
-    val sh = Dedup.withShingles(Tables.documents(spark, sfTiny))
+    // the detector bites on the string reference form
+    val sh = ShingleReference.withShingles(Tables.documents(spark, sfTiny))
     assert(lambdaNgramBuilders(sh).nonEmpty)
   }
 }

@@ -1,24 +1,34 @@
 package graft
 
-import graft.functions.ShingleSketch.shingle_md5_bottom_k
+import graft.functions.ShingleSketch.{shingle_md5_bottom_k, shingle_md5_grams}
 import org.apache.spark.sql.functions._
 
-/** shingle_md5_bottom_k: the fused text → bottom-k-of-md5(5-gram)
-  * kernel, pinned equivalent to the composed withShingles →
-  * array_distinct → md5_bottom_k pass it replaces on the corpus-wide
-  * minhash sketch path. The equivalence rests on split-on-' ' /
-  * concat_ws-' ' rejoin being the identity on the covered byte span —
-  * so the crafted cases stress exactly where that could break:
-  * consecutive/leading/trailing spaces (empty words), multi-byte
+/** The byte-walk shingle kernels, pinned equivalent to the plain-Spark
+  * string forms ([[ShingleReference]]): split on ' ', distinct
+  * concat_ws-' ' 5-gram strings, md5 each. The equivalence rests on
+  * split-on-' ' / concat_ws-' ' rejoin being the identity on the covered
+  * byte span — so the crafted cases stress exactly where that could
+  * break: consecutive/leading/trailing spaces (empty words), multi-byte
   * UTF-8, and the <5-word participation boundary.
   */
 class ShingleSketchSpec extends SparkSpec {
 
-  private val composed = graft.functions.HashCoins.md5_bottom_k(expr(
-    "array_distinct(transform(sequence(1, greatest(size(split(text, ' '))-4, 1))," +
-      " i -> concat_ws(' ', try_element_at(split(text, ' '),i)," +
-      " try_element_at(split(text, ' '),i+1), try_element_at(split(text, ' '),i+2)," +
-      " try_element_at(split(text, ' '),i+3), try_element_at(split(text, ' '),i+4))))"), 8)
+  /** A composed string form over `text`, empty below 5 words. */
+  private def below5Empty(c: org.apache.spark.sql.Column) =
+    when(size(split(col("text"), " ")) >= 5, c).otherwise(array().cast("array<string>"))
+
+  /** The three sketch forms that must agree: the first 8 of the
+    * distinct-digest walk (what Dedup.sketchTable keeps), the bounded
+    * bottom-k kernel, and the plain-Spark string reference. Returns the
+    * rows where any two differ.
+    */
+  private def sketchMismatches(df: org.apache.spark.sql.DataFrame) =
+    df.select(col("text"),
+        slice(shingle_md5_grams(col("text"), 5, 1), 1, 8).as("grams8"),
+        shingle_md5_bottom_k(col("text"), 5, 8).as("fused"),
+        below5Empty(ShingleReference.composedSketch(ShingleReference.shingleStrings))
+          .as("ref"))
+      .filter(not(col("fused") <=> col("ref")) || not(col("grams8") <=> col("ref")))
 
   test("fused ≡ composed sketch on crafted edge texts") {
     import spark.implicits._
@@ -34,14 +44,7 @@ class ShingleSketchSpec extends SparkSpec {
       ("w " * 200).trim,                            // many identical windows
       (1 to 300).map(i => s"tok$i").mkString(" "),  // many distinct windows
     )
-    val df = texts.toDF("text")
-    val rows = df.select(
-        col("text"),
-        shingle_md5_bottom_k(col("text"), 5, 8).as("fused"),
-        when(size(split(col("text"), " ")) >= 5, composed)
-          .otherwise(array().cast("array<string>")).as("ref"))
-      .filter(not(col("fused") <=> col("ref")))
-      .collect()
+    val rows = sketchMismatches(texts.toDF("text")).collect()
     assert(rows.isEmpty, rows.mkString("\n"))
   }
 
@@ -60,14 +63,7 @@ class ShingleSketchSpec extends SparkSpec {
         }
       }.mkString(" ")
     }
-    val df = texts.toDF("text")
-    val bad = df.select(
-        shingle_md5_bottom_k(col("text"), 5, 8).as("fused"),
-        when(size(split(col("text"), " ")) >= 5, composed)
-          .otherwise(array().cast("array<string>")).as("ref"))
-      .filter(not(col("fused") <=> col("ref")))
-      .count()
-    assert(bad == 0L)
+    assert(sketchMismatches(texts.toDF("text")).count() == 0L)
   }
 
   test("null text yields null; <5 words yields empty (the participation gate)") {
@@ -80,7 +76,6 @@ class ShingleSketchSpec extends SparkSpec {
   }
 
   test("fused gram stream ≡ composed distinct-gram md5 stream (crafted + fuzz)") {
-    import graft.functions.ShingleSketch.shingle_md5_grams
     import spark.implicits._
     val rng = new scala.util.Random(53)
     val texts = Seq(
@@ -95,13 +90,8 @@ class ShingleSketchSpec extends SparkSpec {
     }
     // composed: distinct gram strings → md5 each → sorted; sampled form
     // filters on the first hex nibble — exactly the ngramCoin semantics
-    val composedAll = expr(
-      "array_sort(transform(array_distinct(transform(" +
-        "sequence(1, greatest(size(split(text, ' '))-4, 1))," +
-        " i -> concat_ws(' ', try_element_at(split(text, ' '),i)," +
-        " try_element_at(split(text, ' '),i+1), try_element_at(split(text, ' '),i+2)," +
-        " try_element_at(split(text, ' '),i+3), try_element_at(split(text, ' '),i+4))))," +
-        " g -> md5(g)))")
+    val composedAll = array_sort(transform(
+      array_distinct(ShingleReference.shingleStrings), g => md5(g)))
     val df = texts.toDF("text")
     val bad1 = df.select(
         shingle_md5_grams(col("text"), 5, 1).as("fused"),
@@ -130,11 +120,12 @@ class ShingleSketchSpec extends SparkSpec {
     }
     import graft.operators.Dedup
     val fusedS = pairs(Dedup.postingPairsPlan(Dedup.fusedGramStream(4))(docs, 0.2))
-    val composedS = pairs(Dedup.ngramJaccardPlan(Some(Dedup.ngramCoin))(docs))
+    val composedS = pairs(ShingleReference.ngramJaccardPlan(
+      Some(ShingleReference.ngramCoin))(docs))
     assert(fusedS == composedS,
       s"missing=${composedS -- fusedS} extra=${fusedS -- composedS}")
     val fusedU = pairs(Dedup.postingPairsPlan(Dedup.fusedGramStream(1))(docs, 0.2))
-    val composedU = pairs(Dedup.ngramJaccardPlan(None)(docs))
+    val composedU = pairs(ShingleReference.ngramJaccardPlan(None)(docs))
     assert(fusedU == composedU)
     assert(fusedS.nonEmpty && fusedU.nonEmpty && fusedS.subsetOf(fusedU))
   }
@@ -202,8 +193,9 @@ class ShingleSketchSpec extends SparkSpec {
       got
     }
     val fused = pairs(graft.operators.Dedup.minhashPairs(docs, 0.2))
-    val composedPlan = pairs(graft.operators.Dedup.minhashPairsPlan(
-      graft.operators.Dedup.withShingles, graft.operators.Dedup.sketchCol)(docs, 0.2))
+    val composedPlan = pairs(ShingleReference.minhashPairsPlan(
+      ShingleReference.withShingles,
+      ShingleReference.composedSketch(col("shingles")))(docs, 0.2))
     assert(fused == composedPlan,
       s"missing=${composedPlan -- fused} extra=${fused -- composedPlan}")
     assert(fused.nonEmpty)

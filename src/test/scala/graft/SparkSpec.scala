@@ -60,7 +60,14 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     * plans of cached relations (where CacheRegistry materializations
     * hide their projections). Returns each hit's SQL.
     */
-  def lambdaNgramBuilders(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+  def lambdaNgramBuilders(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    lambdaNgramBuilders(df.queryExecution.optimizedPlan)
+
+  /** [[lambdaNgramBuilders]] over any logical plan — e.g. a streaming
+    * query's `lastExecution.optimizedPlan`, the plan of one micro-batch.
+    */
+  def lambdaNgramBuilders(
+      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Seq[String] = {
     import org.apache.spark.sql.catalyst.expressions.{ArrayTransform, ConcatWs, Expression, Literal}
     import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
     import org.apache.spark.sql.execution.SparkPlan
@@ -90,7 +97,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
         case _ => Nil
       })
     }
-    logical(df.queryExecution.optimizedPlan).distinct
+    logical(plan).distinct
   }
 
   /** Assert the `hit` scans exist in `df`'s plan and that none of them

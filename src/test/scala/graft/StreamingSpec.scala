@@ -609,7 +609,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     import org.apache.spark.sql.functions.col
     val docs = Tables.documents(spark, sfTiny)
-    val sh = graft.operators.Dedup.withShingles(docs).select("doc_id", "shingles")
+    val sh = graft.operators.Dedup.shingleDigests(docs)
     val bench = CacheRegistry.track(sh.filter(col("doc_id") % 97 === 0))
     val trainRows = docs.filter(col("doc_id") % 97 =!= 0)
       .select("doc_id", "text").as[(Long, String)].collect()
@@ -623,6 +623,12 @@ class StreamingSpec extends SparkSpec {
       q.processAllAvailable()
       input.addData(trainRows.drop(trainRows.length / 2).toIndexedSeq)
       q.processAllAvailable()
+      // the micro-batch plan builds its grams with the byte walk, not a
+      // transform/concat_ws lambda
+      val batchPlan = q.asInstanceOf[
+        org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+        .streamingQuery.lastExecution.optimizedPlan
+      assert(lambdaNgramBuilders(batchPlan).isEmpty, batchPlan.toString)
       val streamed = spark.table("decontam_stream").collect()
         .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("n_overlap"),
           r.getAs[Long]("contaminated"))).toSet
@@ -633,6 +639,21 @@ class StreamingSpec extends SparkSpec {
       assert(streamed == batch,
         s"stream-only=${(streamed -- batch).take(3)} batch-only=${(batch -- streamed).take(3)}")
     } finally q.stop()
+  }
+
+  test("streaming decontamination refuses a bench set past the broadcast bound") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{array, col, md5}
+    // 100001 distinct grams, one more than decontaminate broadcasts
+    val bench = spark.range(100001L)
+      .select((col("id") % 100).as("doc_id"), array(md5(col("id").cast("string"))).as("shingles"))
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[(Long, String)]
+    val e = intercept[IllegalArgumentException](EventStreams.decontamStream(
+      input.toDF().toDF("doc_id", "text"), bench, tau = 0.5))
+    CacheRegistry.drain()
+    assert(e.getMessage.contains("100000") && e.getMessage.contains("decontaminate"),
+      e.getMessage)
   }
 
   test("streaming IVF serving equals batch ivfSearch over the same persisted index") {

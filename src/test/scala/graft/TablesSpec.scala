@@ -141,6 +141,23 @@ class TablesSpec extends SparkSpec {
     finally writer.close()
   }
 
+  test("an events read leaves a caller's nanosAsLong alone unless ts is TIMESTAMP(NANOS)") {
+    val nanos = "spark.sql.legacy.parquet.nanosAsLong"
+    try {
+      // the shipped events table stores ts as TIMESTAMP(MICROS)
+      spark.conf.set(nanos, "false")
+      val ev = Tables.events(spark, sfTiny)
+      assert(spark.conf.get(nanos) == "false")
+      assert(ev.schema("ts").dataType == TimestampType && ev.count() > 0)
+      // a TIMESTAMP(NANOS) file needs the conf, and still reads as micros
+      val dir = tmpDir()
+      writeNanosEvents(dir)
+      val ts = Tables.events(spark, dir).select("ts").collect().map(_.getTimestamp(0))
+      assert(ts.map(t => t.getTime * 1000 + t.getNanos / 1000 % 1000).sorted.toSeq == Seq(1L, 2L))
+      assert(spark.conf.get(nanos) == "true")
+    } finally spark.conf.set(nanos, "true")
+  }
+
   test("a changed schema conf re-infers; restoring it serves the remembered schema") {
     val nanos = "spark.sql.legacy.parquet.nanosAsLong"
     val ntz = "spark.sql.parquet.inferTimestampNTZ.enabled"
