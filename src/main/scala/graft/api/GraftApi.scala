@@ -1893,19 +1893,6 @@ object GraftApi {
       jaccardMin: Double = 0.2): DataFrame =
     graft.operators.Dedup.incrementalPairs(corpusSketches, deltaSketches, jaccardMin)
 
-  /** CCNet paragraph ADMISSION of an arriving (doc_id, paras) frame
-    * against persisted corpus paragraph-hash state, optionally merged
-    * with a just-absorbed shard's counts — the batch face of the
-    * streaming admission; see
-    * graft.operators.Dedup.paragraphAdmitServe. Build hash-count state
-    * with [[paragraphHashCounts]]; a crawl corpus passes "\n" as the
-    * joiner.
-    */
-  def paragraphAdmit(baseHashes: DataFrame, absorbHashes: Option[DataFrame],
-      withParas: DataFrame, joiner: String = "\n"): DataFrame =
-    graft.operators.Dedup.paragraphAdmitServe(baseHashes, absorbHashes,
-      withParas, joiner)
-
   /** The (h, n) paragraph-hash count state of a (doc_id, paras) frame —
     * persist bucketBy(h) at scale; see
     * graft.operators.Dedup.paragraphHashCounts.

@@ -5,34 +5,17 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graftshim.Shim
-import org.apache.spark.sql.types.{DataType, IntegerType, StringType}
+import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Raw-digest MD5 coin kernel. The builtin `md5()` expression
-  * materializes the full 32-char hex UTF8String per call (digest →
-  * hex char[] → String → UTF8String re-encode), and the sampling
-  * predicate built on it pays a further `substring` allocation plus an
-  * `isin` chain of string compares — all to read FOUR BITS of the
-  * digest. This kernel computes the digest into a thread-local
-  * MessageDigest and returns the first hex nibble as an int; the
-  * sampling predicate becomes integer arithmetic. Semantics are pinned
-  * to the hex form so DuckDB oracles keep using
-  * `substring(md5(g),1,1)`: nibble = value of the first hex digit =
-  * `(digest[0] >>> 4) & 0xF`.
+/** Raw-digest MD5 kernels: the digest goes into a thread-local
+  * MessageDigest instead of the builtin `md5()`'s per-call 32-char hex
+  * UTF8String.
   */
 object HashCoinUtil {
   private val tl = new ThreadLocal[java.security.MessageDigest] {
     override def initialValue(): java.security.MessageDigest =
       java.security.MessageDigest.getInstance("MD5")
-  }
-
-  def md5Nibble0(s: UTF8String): Int = {
-    val md = tl.get()
-    md.reset()
-    // getBytes avoids the copy when the UTF8String spans its whole
-    // backing array (the common case for freshly-built gram strings)
-    val d = md.digest(s.getBytes)
-    (d(0) >> 4) & 0xF
   }
 
   private val HEX = "0123456789abcdef".toCharArray
@@ -84,35 +67,6 @@ object HashCoinUtil {
   }
 }
 
-/** md5_nibble0(string) → int 0..15: the first hex nibble of the MD5
-  * digest, without materializing the hex string. `md5_nibble0(g) % 4
-  * === 0` ≡ `substring(md5(g),1,1) IN ('0','4','8','c')` — proven
-  * hash-identical over the posting stream in HashCoinsSpec and
-  * adjudicated against the hex form in ngram_ab_r13.jsonl.
-  */
-case class Md5Nibble0(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "md5_nibble0"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"md5_nibble0 expects string, got ${other.simpleString}")
-    }
-
-  override protected def nullSafeEval(input: Any): Any =
-    HashCoinUtil.md5Nibble0(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev,
-      s => s"${ev.value} = graft.functions.HashCoinUtil.md5Nibble0($s);")
-
-  override protected def withNewChildInternal(newChild: Expression): Md5Nibble0 =
-    copy(child = newChild)
-}
-
 /** winnow_min_md5(text, w) → the lexicographic minimum of the md5 hex
   * digests of all w-CHARACTER windows of the text (the winnowing-family
   * fingerprint), as one streaming pass over the UTF-8 bytes. The
@@ -154,9 +108,6 @@ case class WinnowMinMd5(child: Expression, w: Int) extends UnaryExpression {
 }
 
 object HashCoins {
-  def md5_nibble0(c: Column): Column =
-    Shim.column(Md5Nibble0(Shim.expression(c)))
-
   def winnow_min_md5(c: Column, w: Int): Column =
     Shim.column(WinnowMinMd5(Shim.expression(c), w))
 }

@@ -992,29 +992,6 @@ object Dedup {
     substringWindowFused(spark, Tables.documents(spark, dir))
   }
 
-  /** The k-word-gram transform over a words-array column, as ONE shared
-    * SQL string: array_join(slice) built (the explode-consumer winner of
-    * the r12 builder A/B) and greatest-clamped so the expression stays
-    * total under speculative evaluation (sequence() DESCENDS for short
-    * docs and slice(start 0) throws). Single-sourced because the batch,
-    * delta, and streaming substring faces plus the specs' string n-gram
-    * references must agree bit-for-bit — a clamp or width fix applied
-    * to one inlined copy silently breaks the spec-pinned equivalences.
-    */
-  private[graft] def gramExpr(wordsCol: String, k: Int): String =
-    s"transform(sequence(1, greatest(size($wordsCol)-${k - 1}, 1))," +
-      s" i -> array_join(slice($wordsCol, i, $k), ' '))"
-
-  /** The 8-word-gram posting stream (doc_id, g) — one row per span
-    * position, the composed stream [[substringWindow]] reads. */
-  private[graft] def substringGrams(docs: DataFrame): DataFrame = docs
-    .withColumn("w", split(col("text"), " "))
-    .filter(size(col("w")) >= 8)
-    // greatest-clamp: total under speculative evaluation (see
-    // [[gramExpr]]) — sequence() descends through 0 for short docs and
-    // slice(start 0) throws; the size filter still governs
-    .select(col("doc_id"), explode(expr(gramExpr("w", 8))).as("g"))
-
   /** Data-sized partition count for the posting exchange: posting rows
     * are ~avg-words× the document count (an explode), so inheriting
     * spark.sql.shuffle.partitions lets per-partition agg/build state
@@ -1030,31 +1007,15 @@ object Dedup {
     graft.api.GraftApi.partitionsFor(spark, postEst)
   }
 
-  /** The composed window form (the r9 shape the r11 A/B kept — see
-    * [[substring]]'s scaladoc): (g, doc_id) pre-count with map-side
-    * combine, then sum OVER (partition by g). The window sorts
-    * (g, doc_id) PAIRS within each partition — the pre-count already
-    * collapsed within-doc repeats, so the sorted stream is distinct
-    * pairs, not raw postings, and at executor-scale heaps it never
-    * spilled in either 1000x corpus. The spec reference for the fused
-    * registered form and for the incremental faces. */
-  private[graft] def substringWindow(spark: SparkSession,
-      docs: DataFrame): DataFrame = {
-    val parts = substringParts(spark, docs)
-    substringWindowTail(
-      substringGrams(docs).repartition(parts, col("g"))
-        .groupBy("g", "doc_id").agg(count(lit(1)).as("n_local")))
-  }
-
   /** The registered fused form: the per-doc (gram digest, count) rows
     * come pre-collapsed from ONE byte-slice kernel pass
     * ([[graft.functions.ShingleMd5GramCounts]] — no words array, no
     * 8-word gram strings, no per-position explode; the posting exchange
     * carries distinct (g, doc_id) pairs exactly like the window form's
     * post-aggregation stream, with digests as keys per the
-    * fusedGramStream injectivity argument). ≡ substringWindow
-    * (ShingleSketchSpec and DedupSpec pin it; substring_ab_r14.jsonl
-    * adjudicates the swap).
+    * fusedGramStream injectivity argument). ≡ the composed string
+    * window form the specs keep as their reference (ShingleSketchSpec
+    * and DedupSpec pin it; substring_ab_r14.jsonl adjudicates the swap).
     */
   private[graft] def substringWindowFused(spark: SparkSession,
       docs: DataFrame): DataFrame = {
@@ -1069,7 +1030,7 @@ object Dedup {
   /** Window-form scoring tail over an already-collapsed
     * (g, doc_id, n_local) stream partitioned by g.
     */
-  private def substringWindowTail(local: DataFrame): DataFrame = {
+  private[graft] def substringWindowTail(local: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val scored = local.withColumn("n_total",
       sum(col("n_local")).over(Window.partitionBy(col("g"))))

@@ -31,25 +31,21 @@ object Temporal {
     * user's history at 100 TB.
     */
   private def asofSimple(ev: org.apache.spark.sql.DataFrame) = {
-    val purchases = ev.filter(col("event_type") === "purchase")
-      .select("event_id", "user_id", "ts")
-    val clicks = ev.filter(col("event_type") === "click")
-      .select("event_id", "user_id", "ts")
-    graft.api.GraftApi.asofJoin(purchases, clicks,
-        key = "user_id", leftTime = "ts", rightTime = "ts", payload = "event_id")
-      .select(col("event_id"), col("user_id"), col("asof_event_id").as("click_id"))
+    val (purchases, clicks) = asofSides(ev)
+    ValueWindows.asof(graft.api.GraftApi.asofJoin(purchases, clicks,
+      key = "user_id", leftTime = "ts", rightTime = "ts", payload = "event_id"))
   }
 
   private def asofBlocks(ev: org.apache.spark.sql.DataFrame) = {
-    val purchases = ev.filter(col("event_type") === "purchase")
-      .select("event_id", "user_id", "ts")
-    val clicks = ev.filter(col("event_type") === "click")
-      .select("event_id", "user_id", "ts")
-    graft.api.GraftApi.asofJoinBlocks(purchases, clicks,
-        key = "user_id", leftTime = "ts", rightTime = "ts",
-        payload = "event_id", blockMs = 6L * 3600 * 1000)
-      .select(col("event_id"), col("user_id"), col("asof_event_id").as("click_id"))
+    val (purchases, clicks) = asofSides(ev)
+    ValueWindows.asof(graft.api.GraftApi.asofJoinBlocks(purchases, clicks,
+      key = "user_id", leftTime = "ts", rightTime = "ts",
+      payload = "event_id", blockMs = 6L * 3600 * 1000))
   }
+
+  private def asofSides(ev: org.apache.spark.sql.DataFrame) =
+    (ev.filter(col("event_type") === "purchase").select("event_id", "user_id", "ts"),
+      ev.filter(col("event_type") === "click").select("event_id", "user_id", "ts"))
 
   /** As-of join: for every purchase event, the same user's most recent
     * click at-or-before it — see [[asofSimple]] for the union-of-sides
@@ -280,22 +276,20 @@ object Temporal {
 
   private def burstSimple(ev: org.apache.spark.sql.DataFrame) = {
     val w = Window.partitionBy(col("user_id"))
-      .orderBy(unix_micros(col("ts").cast("timestamp")))
-      .rangeBetween(-300L * 1000000L, Window.currentRow)
+      .orderBy(ValueWindows.micros)
+      .rangeBetween(-ValueWindows.burstWidthUs, Window.currentRow)
     ev.select(col("event_id"), col("user_id"),
         count(lit(1)).over(w).as("n_5m"))
-      .withColumn("burst", when(col("n_5m") > 10, 1L).otherwise(0L))
+      .withColumn("burst", ValueWindows.burstFlag)
   }
 
   private def burstBlocks(ev: org.apache.spark.sql.DataFrame) =
     // blockUs = widthUs — width-sized blocks keep a hot key's per-
     // partition sort depth at ~2 windows' rows (see the sliding twin)
-    graft.api.GraftApi.trailingRangeBlocks(
-        ev.select(col("event_id"), col("user_id"), col("ts")),
-        "user_id", "ts", lit(1L), widthUs = 300L * 1000000L,
-        blockUs = 300L * 1000000L)
-      .select(col("event_id"), col("user_id"), col("range_n").as("n_5m"))
-      .withColumn("burst", when(col("n_5m") > 10, 1L).otherwise(0L))
+    ValueWindows.burst(graft.api.GraftApi.trailingRangeBlocks(
+      ev.select(col("event_id"), col("user_id"), col("ts")),
+      "user_id", "ts", lit(1L), widthUs = ValueWindows.burstWidthUs,
+      blockUs = ValueWindows.burstWidthUs))
 
   /** Burst detection (bot/scraper signal for training-data curation):
     * events per user in the trailing 5 minutes via a RANGE window over
@@ -447,46 +441,20 @@ object Temporal {
       "user_id")(ewmaSimple)(ewmaBlocksForm)
   }
 
-  // round(10^6 · 0.75^d), d = 0..7 — fixed literals, same in the oracle
-  private val ewmaWeights = Seq(1000000L, 750000L, 562500L, 421875L,
-    316406L, 237305L, 177979L, 133484L)
-
   private def ewmaSimple(ev: org.apache.spark.sql.DataFrame) = {
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    val x = floor(col("value") * 1000).cast("long")
-    val lags = ewmaWeights.indices.map(d => if (d == 0) x else lag(x, d).over(w))
-    val num = lags.zip(ewmaWeights).map { case (l, wt) =>
-      when(l.isNull, 0L).otherwise(l * wt) }.reduce(_ + _)
-    val den = lags.zip(ewmaWeights).map { case (l, wt) =>
-      when(l.isNull, 0L).otherwise(wt) }.reduce(_ + _)
-    ev.select(col("event_id"), col("user_id"), x.as("x_milli"),
-        num.as("num"), den.as("den"))
-      // SQL `div` is exact integer division — Column `/` would round-trip
-      // through a double whose nearest-representable rounding can cross
-      // an integer boundary the true quotient doesn't. NULLIF: a window
-      // that is ALL-null (a user's first row carrying a null value) has
-      // den = 0 — under ANSI a bare div would throw mid-scan; the defined
-      // answer is a null EWMA (no observations to smooth), same NULLIF in
-      // the oracle.
-      .select(col("event_id"), col("user_id"), col("x_milli"),
-        expr("num div nullif(den, 0)").as("ewma_milli"))
+    val x = ValueWindows.milli
+    ValueWindows.ewma(ev,
+      x +: (1 to ValueWindows.lagDepth).map(d => lag(x, d).over(w)))
   }
 
   private def ewmaBlocksForm(ev: org.apache.spark.sql.DataFrame) = {
-    val x = floor(col("value") * 1000).cast("long")
     val lagged = graft.api.GraftApi.rowLagsBlocks(
-      ev.select(col("user_id"), col("ts"), col("event_id"), x.as("xm")),
-      "user_id", "ts", "event_id", col("xm"), depth = 7)
-    val lags = col("value") +: (1 to 7).map(d => col(s"lag_$d"))
-    val num = lags.zip(ewmaWeights).map { case (l, wt) =>
-      when(l.isNull, 0L).otherwise(l * wt) }.reduce(_ + _)
-    val den = lags.zip(ewmaWeights).map { case (l, wt) =>
-      when(l.isNull, 0L).otherwise(wt) }.reduce(_ + _)
-    lagged
-      .select(col("event_id"), col("user_id"), col("value").as("x_milli"),
-        num.as("num"), den.as("den"))
-      .select(col("event_id"), col("user_id"), col("x_milli"),
-        expr("num div nullif(den, 0)").as("ewma_milli"))
+      ev.select(col("user_id"), col("ts"), col("event_id"),
+        ValueWindows.milli.as("xm")),
+      "user_id", "ts", "event_id", col("xm"), depth = ValueWindows.lagDepth)
+    ValueWindows.ewma(lagged,
+      col("value") +: (1 to ValueWindows.lagDepth).map(d => col(s"lag_$d")))
   }
 
   /** Rolling z-score outlier flag — the anomaly gate of a metrics/
@@ -531,17 +499,11 @@ object Temporal {
 
   private def zscoreSimple(ev: org.apache.spark.sql.DataFrame) = {
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-      .rowsBetween(-7, Window.currentRow)
-    val x = floor(col("value") * 1000).cast("long")
-    ev.select(col("event_id"), col("user_id"), x.as("x_milli"),
-        sum(x).over(w).as("s1"), sum(x * x).over(w).as("s2"),
-        count(lit(1)).over(w).as("n_window"))
-      .select(col("event_id"), col("user_id"), col("x_milli"), col("n_window"),
-        when(col("n_window") >= 4 &&
-          (col("n_window") * col("x_milli") - col("s1")) *
-            (col("n_window") * col("x_milli") - col("s1")) >
-            lit(4) * (col("n_window") * col("s2") - col("s1") * col("s1")),
-          1L).otherwise(0L).as("anomaly"))
+      .rowsBetween(-ValueWindows.lagDepth, Window.currentRow)
+    val x = ValueWindows.milli
+    ValueWindows.anomaly(ev.select(col("event_id"), col("user_id"), x.as("x_milli"),
+      sum(x).over(w).as("s1"), sum(x * x).over(w).as("s2"),
+      count(lit(1)).over(w).as("n_window")))
   }
 
   /** [[windowEwma]]'s hot-key-safe twin — the q_sessionize_blocks
@@ -576,34 +538,17 @@ object Temporal {
       .select(col("event_id"), col("user_id"), col("ts"), col("value")))
   }
 
-  private def zscoreBlocksForm(ev: org.apache.spark.sql.DataFrame) = {
+  private def zscoreBlocksForm(ev: org.apache.spark.sql.DataFrame) =
     // the lag value rides as a one-field STRUCT so row PRESENCE and value
     // nullness stay distinguishable: the oracle's n_window is COUNT(*)
     // over the ROWS frame (rows with NULL x_milli count), and a bare
     // lag(x) is null for both "no row" and "row with null x" — the struct
     // wrapper is never null for a present row, so n counts rows exactly
-    val x = floor(col("value") * 1000).cast("long")
-    val lagged = graft.api.GraftApi.rowLagsBlocks(
-      ev.select(col("user_id"), col("ts"), col("event_id"), x.as("xm")),
-      "user_id", "ts", "event_id", struct(col("xm").as("x")), depth = 7)
-    val lags = (1 to 7).map(d => col(s"lag_$d"))
-    val xs = (1 to 7).map(d => col(s"lag_$d.x"))
-    val cur = col("value.x")
-    val n = lags.map(l => when(l.isNull, 0L).otherwise(1L))
-      .reduce(_ + _) + lit(1L)
-    val s1 = xs.map(l => coalesce(l, lit(0L))).reduce(_ + _) + cur
-    val s2 = xs.map(l => coalesce(l * l, lit(0L))).reduce(_ + _) +
-      cur * cur
-    lagged
-      .select(col("event_id"), col("user_id"), cur.as("x_milli"),
-        n.as("n_window"), s1.as("s1"), s2.as("s2"))
-      .select(col("event_id"), col("user_id"), col("x_milli"), col("n_window"),
-        when(col("n_window") >= 4 &&
-          (col("n_window") * col("x_milli") - col("s1")) *
-            (col("n_window") * col("x_milli") - col("s1")) >
-            lit(4) * (col("n_window") * col("s2") - col("s1") * col("s1")),
-          1L).otherwise(0L).as("anomaly"))
-  }
+    ValueWindows.anomalyOfLags(graft.api.GraftApi.rowLagsBlocks(
+      ev.select(col("user_id"), col("ts"), col("event_id"),
+        ValueWindows.milli.as("xm")),
+      "user_id", "ts", "event_id", struct(col("xm").as("x")),
+      depth = ValueWindows.lagDepth))
 
   /** [[leadLag]]'s hot-key-safe twin: prev/next event and gap from ONE
     * [[graft.api.GraftApi.rowLagsBlocks]] pass with depth = leads = 1 —

@@ -22,23 +22,16 @@ object WindowOps {
   private def runningSimple(ev: org.apache.spark.sql.DataFrame) =
     ev.select(
       col("event_id"), col("user_id"),
-      sum(col("value").cast("decimal(12,2)"))
+      sum(ValueWindows.cents)
         .over(byUserTime.rowsBetween(Window.unboundedPreceding, Window.currentRow))
         .cast("double").as("running_value"),
       row_number().over(byUserTime).cast("long").as("seq"))
 
   private def runningBlocks(ev: org.apache.spark.sql.DataFrame) =
-    graft.api.GraftApi.runningSumBlocks(
-        ev.select(col("user_id"), col("ts"), col("event_id"),
-          col("value").cast("decimal(12,2)").as("v")),
-        "user_id", "ts", "event_id", col("v"))
-      .select(col("event_id"), col("user_id"),
-        col("running").cast("double").as("running_value"),
-        // seq stays LONG (both branches): the blocks form exists for keys
-        // past ~2.1B rows, where an int seq wraps (or throws under ANSI)
-        // on exactly the histories this branch is advertised to survive;
-        // DuckDB ROW_NUMBER is BIGINT, so long is also the oracle's type
-        col("seq").as("seq"))
+    ValueWindows.running(graft.api.GraftApi.runningSumBlocks(
+      ev.select(col("user_id"), col("ts"), col("event_id"),
+        ValueWindows.cents.as("v")),
+      "user_id", "ts", "event_id", col("v")))
 
   /** Running per-user aggregate: rows-unbounded-preceding frame.
     *
@@ -184,10 +177,10 @@ object WindowOps {
     // unix_micros(ts) ≡ INTERVAL 10 MINUTES PRECEDING at the engines'
     // shared micros precision, ties (equal ts) wholly included.
     val w = Window.partitionBy(col("user_id"))
-      .orderBy(unix_micros(col("ts").cast("timestamp")))
-      .rangeBetween(-600L * 1000000L, Window.currentRow)
+      .orderBy(ValueWindows.micros)
+      .rangeBetween(-ValueWindows.slidingWidthUs, Window.currentRow)
     ev.select(col("event_id"), col("user_id"),
-      sum(col("value").cast("decimal(12,2)")).over(w)
+      sum(ValueWindows.cents).over(w)
         .cast("double").as("sum_10m"))
   }
 
@@ -196,13 +189,11 @@ object WindowOps {
     // ~2 windows' rows — the knob that keeps a 900×-dense hot key's
     // (key, block) sorts shallow (1h blocks measured ~2× uniform cpu at
     // skew-1000x from sort depth alone; width-sized blocks erase it)
-    graft.api.GraftApi.trailingRangeBlocks(
-        ev.select(col("event_id"), col("user_id"),
-          col("ts"), col("value").cast("decimal(12,2)").as("v")),
-        "user_id", "ts", col("v"), widthUs = 600L * 1000000L,
-        blockUs = 600L * 1000000L)
-      .select(col("event_id"), col("user_id"),
-        col("range_sum").cast("double").as("sum_10m"))
+    ValueWindows.sliding(graft.api.GraftApi.trailingRangeBlocks(
+      ev.select(col("event_id"), col("user_id"), col("ts"),
+        ValueWindows.cents.as("v")),
+      "user_id", "ts", col("v"), widthUs = ValueWindows.slidingWidthUs,
+      blockUs = ValueWindows.slidingWidthUs))
 
   /** Sliding event-time window: RANGE frame over the timestamp — frame
     * membership is defined by ts VALUES (ties wholly included), so the

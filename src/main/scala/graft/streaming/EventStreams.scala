@@ -1,9 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import graft.operators.ValueWindows
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import java.sql.Timestamp
+import scala.reflect.runtime.universe.TypeTag
 
 /** SURVEY §2.3 streaming: the Spark-native face of the reference's
   * incremental view maintenance (ivm/collections/IncrementalResult.scala,
@@ -14,6 +16,21 @@ import java.sql.Timestamp
   * These transforms take an (optionally streaming) events-shaped DataFrame
   * (ts TIMESTAMP, user_id LONG, event_type STRING, value DOUBLE) so specs
   * drive them from MemoryStream and batch callers can reuse them.
+  *
+  * The windowed-value faces (anomaly, ewma, running, burst, sliding,
+  * asof) are per-key state machines that only MAINTAIN the window — a
+  * lag ring, a running prefix, a trailing range, an as-of max; a
+  * stateless projection then scores what they emit with the batch
+  * forms' own Columns ([[graft.operators.ValueWindows]]), so each rule
+  * is written once for stream and batch. Arrival-order contract, shared
+  * by all six: within a trigger, rows apply per key in (ts, event_id)
+  * order, ts at microsecond precision; across triggers, each key's
+  * events must arrive in that order (the partition-per-key log), and a
+  * trigger boundary must not split a key's same-microsecond group (a
+  * RANGE frame and an as-of tie both see the whole instant). Under the
+  * contract each face ≡ its simple and blocks batch twins row for row
+  * (StreamingSpec's stream ≡ batch table); late data would need the
+  * watermark + re-emit treatment the sessionize faces document.
   */
 object EventStreams {
 
@@ -587,7 +604,8 @@ object EventStreams {
     * exploded rows land in its own micro-batch), state type Unit-like
     * and never stored.
     *
-    * `corpusParaHashes` is [[paragraphHashCounts]]' (h, n) table; only
+    * `corpusParaHashes` is [[graft.operators.Dedup.paragraphHashCounts]]'
+    * (h, n) table; only
     * h is consulted (n ≥ 1 already means an arriving copy makes ≥ 2).
     */
   def paragraphDedupStream(withParas: DataFrame,
@@ -629,15 +647,6 @@ object EventStreams {
       }
   }
 
-  /** The corpus-side paragraph-hash count table the streaming admission
-    * (and a warehouse maintenance job) reads: (h, n) over a
-    * (doc_id, paras) frame — persist `bucketBy(h)` at scale. Single
-    * copy lives with the batch family (the upsert face reads the same
-    * state — [[graft.operators.Dedup.paragraphHashCounts]]).
-    */
-  def paragraphHashCounts(withParas: DataFrame): DataFrame =
-    graft.operators.Dedup.paragraphHashCounts(withParas)
-
   /** The verify stage on top of [[nearDupCandidates]]: each streamed
     * candidate pair joins the STATIC persisted shingle/sketch table
     * twice (stream-static joins are stateless — the static side is the
@@ -657,304 +666,202 @@ object EventStreams {
 
   /** Event row for the windowed-value streaming faces. `value` is
     * Option[Double] BY CONTRACT: the batch twins run on a nullable
-    * events.value column (the null-gate corpus injects ~5% NULLs), and
-    * the null conventions below mirror the batch window semantics
-    * exactly — a null-valued row OCCUPIES its window position (counts in
+    * events.value column (the null-gate corpus injects ~5% NULLs). A
+    * null-valued row OCCUPIES its window position (counts in
     * n_window/seq, consumes a lag slot) but contributes nothing to any
     * sum, and an all-null window yields a null output (running_value /
-    * ewma_milli None, anomaly 0).
+    * ewma_milli None, anomaly 0) — the batch window conventions, which
+    * hold by construction since the batch projections score the window.
     */
   case class ValEvent(ts: Timestamp, user_id: Long, event_id: Long,
       value: Option[Double])
   case class AnomalyOut(user_id: Long, event_id: Long, x_milli: Option[Long],
       n_window: Long, anomaly: Long)
-  case class RingState(xs: List[Option[Long]])
+  case class EwmaOut(user_id: Long, event_id: Long, x_milli: Option[Long],
+      ewma_milli: Option[Long])
+  case class RunOut(user_id: Long, event_id: Long,
+      running_value: Option[Double], seq: Long)
+  case class BurstOut(user_id: Long, event_id: Long, n_5m: Long, burst: Long)
+  case class SlideOut(user_id: Long, event_id: Long, sum_10m: Option[Double])
+  case class TypedEvent(ts: Timestamp, user_id: Long, event_id: Long,
+      event_type: String)
+  case class AsofOut(event_id: Long, user_id: Long, click_id: Option[Long])
+
+  /** One arrival at a windowed-value machine: the key, the event time in
+    * micros, the tiebreak id, and `v`, the scaled value the machine keeps.
+    */
+  private[streaming] case class Arrival[V](user_id: Long, us: Long,
+      event_id: Long, v: V)
+  // the machines' state (LagRing newest first) and emitted rows
+  private[streaming] case class Slot(x: Option[Long])
+  private[streaming] case class LagRing(xs: Seq[Option[Long]])
+  private[streaming] case class LagRow(user_id: Long, event_id: Long,
+      value: Slot, lags: Seq[Option[Slot]])
+  private[streaming] case class Prefix(sum: Option[java.math.BigDecimal], n: Long)
+  private[streaming] case class PrefixRow(user_id: Long, event_id: Long,
+      running: Option[java.math.BigDecimal], seq: Long)
+  private[streaming] case class RangeEntry(us: Long, v: Option[java.math.BigDecimal])
+  private[streaming] case class RangeWin(entries: Seq[RangeEntry])
+  private[streaming] case class RangeRow(user_id: Long, event_id: Long,
+      range_n: Long, range_sum: Option[java.math.BigDecimal])
+  private[streaming] case class Click(us: Long, click_id: Long)
+  private[streaming] case class AsofBest(best: Option[Click])
+  private[streaming] case class AsofRow(user_id: Long, event_id: Long,
+      asof_event_id: Option[Long])
+
+  /** `events` as machine arrivals, `v` computed by a batch scaling Column
+    * (a stateless projection ahead of the state).
+    */
+  private def arrivals[V: TypeTag](events: Dataset[_], v: Column): Dataset[Arrival[V]] =
+    events.select(col("user_id"), ValueWindows.micros.as("us"), col("event_id"),
+        v.as("v"))
+      .as(Encoders.product[Arrival[V]])
+
+  /** The one skeleton under the windowed-value faces: per key, a
+    * trigger's arrivals apply to the state in (us, event_id) order, one
+    * same-microsecond group at a time — `step` sees the whole group,
+    * because a RANGE frame holds every row of the current instant.
+    */
+  private def inKeyOrder[V, S <: Product : TypeTag, O <: Product : TypeTag](
+      in: Dataset[Arrival[V]], zero: S)(
+      step: (S, Seq[Arrival[V]]) => (S, Seq[O])): DataFrame = {
+    implicit val stateEnc: Encoder[S] = Encoders.product[S]
+    implicit val outEnc: Encoder[O] = Encoders.product[O]
+    in.groupByKey(_.user_id)(Encoders.scalaLong)
+      .flatMapGroupsWithState[S, O](
+        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
+        (_: Long, rows: Iterator[Arrival[V]], state: GroupState[S]) =>
+          var s = state.getOption.getOrElse(zero)
+          val out = Vector.newBuilder[O]
+          var rest = rows.toVector.sortBy(a => (a.us, a.event_id))
+          while (rest.nonEmpty) {
+            val (tie, later) = rest.span(_.us == rest.head.us)
+            val (next, emitted) = step(s, tie)
+            s = next
+            out ++= emitted
+            rest = later
+          }
+          state.update(s)
+          out.result().iterator
+      }.toDF()
+  }
+
+  /** The 7-deep lag ring (anomaly, ewma): each arrival emits its milli
+    * value and its lag 1..7 slots in the [[graft.api.GraftApi
+    * .rowLagsBlocks]] struct layout (`value`, `lag_1..lag_7`; a slot is
+    * null when there is no row). State: ≤ 7 longs per key.
+    */
+  private def lagRing(events: Dataset[ValEvent]): DataFrame = {
+    val depth = ValueWindows.lagDepth
+    inKeyOrder(arrivals[Option[Long]](events, ValueWindows.milli), LagRing(Nil)) {
+      (ring: LagRing, tie: Seq[Arrival[Option[Long]]]) =>
+        tie.foldLeft((ring, Vector.empty[LagRow])) { case ((r, out), a) =>
+          (LagRing((a.v +: r.xs).take(depth)), out :+ LagRow(a.user_id,
+            a.event_id, Slot(a.v), r.xs.map(x => Option(Slot(x))).padTo(depth, None)))
+        }
+    }.select(Seq(col("user_id"), col("event_id"), col("value")) ++
+      (1 to depth).map(d => col("lags")(d - 1).as(s"lag_$d")): _*)
+  }
+
+  /** The running prefix: exact decimal sum (null until a non-null value
+    * arrives) and row count. State: one decimal and one long per key.
+    */
+  private def runningPrefix(events: Dataset[ValEvent]): DataFrame =
+    inKeyOrder(arrivals[Option[java.math.BigDecimal]](events, ValueWindows.cents),
+        Prefix(None, 0L)) {
+      (p: Prefix, tie: Seq[Arrival[Option[java.math.BigDecimal]]]) =>
+        tie.foldLeft((p, Vector.empty[PrefixRow])) { case ((q, out), a) =>
+          val next = Prefix((q.sum ++ a.v).reduceOption(_ add _), q.n + 1)
+          (next, out :+ PrefixRow(a.user_id, a.event_id, next.sum, next.n))
+        }
+    }
+
+  /** The trailing RANGE [us − widthUs, us] per key: every member of a
+    * same-microsecond group reports the whole group's window, ties
+    * included like the batch frame. State is the window's entries —
+    * O(events in window) by semantics, evicted as event time advances.
+    */
+  private def trailingRange(events: Dataset[ValEvent], widthUs: Long,
+      v: Column): DataFrame =
+    inKeyOrder(arrivals[Option[java.math.BigDecimal]](events, v), RangeWin(Nil)) {
+      (w: RangeWin, tie: Seq[Arrival[Option[java.math.BigDecimal]]]) =>
+        val now = tie.head.us
+        val entries = (w.entries ++ tie.map(a => RangeEntry(now, a.v)))
+          .filter(_.us >= now - widthUs)
+        val sum = entries.flatMap(_.v).reduceOption(_ add _)
+        (RangeWin(entries),
+          tie.map(a => RangeRow(a.user_id, a.event_id, entries.size.toLong, sum)))
+    }
 
   /** Streaming face of q_anomaly_zscore (operators/Temporal.scala): the
-    * live metrics anomaly gate as per-key state — the trailing ≤7 prior
-    * milli-scaled values ride in GroupState and each arriving event is
-    * judged by the SAME squared cross-multiplied integer inequality as
-    * the batch window pass, so stream ≡ batch row for row when events
-    * arrive in (ts, event_id) order per key (the sessionize-face
-    * ordering contract; late data would need the watermark + re-emit
-    * treatment those faces document). State is O(8 longs) per key —
-    * bounded regardless of history length, the 100 TB requirement.
+    * lag ring scored by the blocks twin's own projection
+    * ([[graft.operators.ValueWindows.anomalyOfLags]]).
     */
   def anomalyStream(events: Dataset[ValEvent]): Dataset[AnomalyOut] = {
     import events.sparkSession.implicits._
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[RingState, AnomalyOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (user: Long, rows: Iterator[ValEvent], state: GroupState[RingState]) =>
-          // same total order as the batch window (ts at full precision,
-          // event_id tiebreak)
-          val sorted = rows.toSeq
-            .sortBy(e => (e.ts.getTime, e.ts.getNanos, e.event_id))
-          var hist = state.getOption.map(_.xs).getOrElse(Nil)
-          val out = sorted.map { e =>
-            // identical double→long scaling to the batch floor(value*1000);
-            // a null value stays null (and its window slot still counts
-            // in n — the batch COUNT(*) convention)
-            val x = e.value.map(v => math.floor(v * 1000).toLong)
-            val win = (hist :+ x).takeRight(8)
-            val n = win.size.toLong
-            val s1 = win.iterator.flatten.sum
-            val s2 = win.iterator.flatten.map(v => v * v).sum
-            // batch: a NULL x_milli nulls the whole inequality → flag 0
-            val flag = x match {
-              case Some(xv) =>
-                val lhs = n * xv - s1
-                if (n >= 4 && lhs * lhs > 4L * (n * s2 - s1 * s1)) 1L else 0L
-              case None => 0L
-            }
-            hist = (hist :+ x).takeRight(7)
-            AnomalyOut(user, e.event_id, x, n, flag)
-          }
-          state.update(RingState(hist))
-          out.iterator
-      }
+    ValueWindows.anomalyOfLags(lagRing(events)).as[AnomalyOut]
   }
 
-  case class RunState(sumCents: Long, n: Long, nNonNull: Long)
-  case class RunOut(user_id: Long, event_id: Long,
-      running_value: Option[Double], seq: Int)
-
-  /** Streaming face of q_window_running (operators/WindowOps.scala): the
-    * per-user running decimal(12,2) sum and 1-based sequence number,
-    * maintained as O(1) GroupState (exact integer cents + a count).
-    * Values scale to cents with the SAME half-up rounding Spark's
-    * double→decimal(12,2) cast applies, so stream ≡ batch bit-identical
-    * under the per-key (ts, event_id) arrival-order contract. Together
-    * with the q_window_running_blocks batch twin this completes the
-    * family triad: simple window, hot-key-safe batch, online serving.
-    */
-  def runningStream(events: Dataset[ValEvent]): Dataset[RunOut] = {
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[RunState, RunOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (user: Long, rows: Iterator[ValEvent], state: GroupState[RunState]) =>
-          val sorted = rows.toSeq
-            .sortBy(e => (e.ts.getTime, e.ts.getNanos, e.event_id))
-          var s = state.getOption.getOrElse(RunState(0L, 0L, 0L))
-          val out = sorted.map { e =>
-            // exact cents via the decimal(12,2) cast's HALF_UP rounding;
-            // null values add nothing but the row still takes a seq slot,
-            // and running stays NULL until the prefix holds a non-null
-            // (the window-SUM convention)
-            val cents = e.value.map(v => java.math.BigDecimal.valueOf(v)
-              .setScale(2, java.math.RoundingMode.HALF_UP)
-              .unscaledValue().longValueExact())
-            s = RunState(s.sumCents + cents.getOrElse(0L), s.n + 1,
-              s.nNonNull + (if (cents.isDefined) 1L else 0L))
-            RunOut(user, e.event_id,
-              if (s.nNonNull == 0L) None
-              else Some(java.math.BigDecimal.valueOf(s.sumCents, 2)
-                .doubleValue()),
-              s.n.toInt)
-          }
-          state.update(s)
-          out.iterator
-      }
-  }
-
-  case class WinState(times: List[Long])
-  case class BurstOut(user_id: Long, event_id: Long, n_5m: Long, burst: Long)
-
-  /** Streaming face of q_burst_detect: the trailing-5-minute event count
-    * per user — the textbook streaming sliding window, state = the
-    * window's event times (micros) per key, evicted as time advances.
-    * State is O(events-in-window) BY SEMANTICS (the same bound the
-    * blocks batch twin pays per task); a bot key flooding one window is
-    * the upstream-gating case, not a state leak — eviction keeps state
-    * at exactly one window regardless of history length.
-    *
-    * RANGE-frame tie semantics: the batch window includes ALL rows at
-    * the same microsecond, so same-micros events are processed as one
-    * group here and each member reports the whole group — stream ≡
-    * batch requires a micro-batch boundary not to split a per-key
-    * same-microsecond group (the arrival-order contract's tie clause).
-    */
-  def burstStream(events: Dataset[ValEvent], windowUs: Long = 300L * 1000000L,
-      threshold: Long = 10L): Dataset[BurstOut] = {
-    import events.sparkSession.implicits._
-    def usOf(t: Timestamp): Long =
-      Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[WinState, BurstOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (user: Long, rows: Iterator[ValEvent], state: GroupState[WinState]) =>
-          val sorted = rows.toSeq
-            .sortBy(e => (e.ts.getTime, e.ts.getNanos, e.event_id))
-          var times = state.getOption.map(_.times).getOrElse(Nil)
-          val out = scala.collection.mutable.ArrayBuffer.empty[BurstOut]
-          // process same-microsecond runs as one group (RANGE tie rule)
-          val byUs = sorted.groupBy(e => usOf(e.ts)).toSeq.sortBy(_._1)
-          byUs.foreach { case (us, group) =>
-            times = (times ++ group.map(_ => us)).filter(_ >= us - windowUs)
-            val n = times.length.toLong
-            group.foreach { e =>
-              out += BurstOut(user, e.event_id, n, if (n > threshold) 1L else 0L)
-            }
-          }
-          state.update(WinState(times))
-          out.iterator
-      }
-  }
-
-  case class EwmaOut(user_id: Long, event_id: Long, x_milli: Option[Long],
-      ewma_milli: Option[Long])
-
-  /** Streaming face of q_window_ewma (operators/Temporal.scala): the
-    * same ≤7-prior-values GroupState ring as [[anomalyStream]], each
-    * arriving event smoothed with the batch op's exact integer
-    * arithmetic (micro-unit weight literals, one integer division) —
-    * stream ≡ batch row for row under the per-key (ts, event_id)
-    * arrival-order contract. Together with the q_window_ewma_blocks
-    * batch twin this completes the family: simple window, hot-key-safe
-    * batch, and online serving, all three bit-identical.
+  /** Streaming face of q_window_ewma (operators/Temporal.scala): the lag
+    * ring scored by [[graft.operators.ValueWindows.ewma]], the integer
+    * weights and `num div nullif(den, 0)` of both batch forms.
     */
   def ewmaStream(events: Dataset[ValEvent]): Dataset[EwmaOut] = {
     import events.sparkSession.implicits._
-    val weights = Array(1000000L, 750000L, 562500L, 421875L,
-      316406L, 237305L, 177979L, 133484L)
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[RingState, EwmaOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (user: Long, rows: Iterator[ValEvent], state: GroupState[RingState]) =>
-          val sorted = rows.toSeq
-            .sortBy(e => (e.ts.getTime, e.ts.getNanos, e.event_id))
-          var hist = state.getOption.map(_.xs).getOrElse(Nil)
-          val out = sorted.map { e =>
-            val x = e.value.map(v => math.floor(v * 1000).toLong)
-            // newest-first: index d pairs value lag-d with weight w_d,
-            // exactly the batch lag() column order. A null lag slot
-            // contributes 0 to num AND drops its weight from den (the
-            // batch CASE WHEN x IS NULL convention); all-null window →
-            // den 0 → null EWMA (the batch NULLIF).
-            val win = ((hist :+ x).takeRight(8)).reverse
-            val num = win.iterator.zipWithIndex
-              .map { case (v, d) => v.map(_ * weights(d)).getOrElse(0L) }.sum
-            val den = win.iterator.zipWithIndex
-              .map { case (v, d) => if (v.isDefined) weights(d) else 0L }.sum
-            hist = (hist :+ x).takeRight(7)
-            // plain truncating long division, matching the batch op's SQL
-            // `num div den` (IntegralDivide truncates toward zero) —
-            // Math.floorDiv would diverge by 1 milli-unit whenever the
-            // numerator is negative (any negative event value), silently
-            // breaking the stream ≡ batch contract (StreamingSpec pins a
-            // negative-value case)
-            EwmaOut(user, e.event_id, x,
-              if (den == 0L) None else Some(num / den))
-          }
-          state.update(RingState(hist))
-          out.iterator
-      }
+    ValueWindows.ewma(lagRing(events), col("value.x") +:
+        (1 to ValueWindows.lagDepth).map(d => col(s"lag_$d.x")))
+      .as[EwmaOut]
   }
 
-  case class SlideState(win: List[(Long, Option[Long])])
-  case class SlideOut(user_id: Long, event_id: Long, sum_10m: Option[Double])
+  /** Streaming face of q_window_running (operators/WindowOps.scala): the
+    * running decimal(12,2) sum and the LONG 1-based sequence number.
+    */
+  def runningStream(events: Dataset[ValEvent]): Dataset[RunOut] = {
+    import events.sparkSession.implicits._
+    ValueWindows.running(runningPrefix(events)).as[RunOut]
+  }
+
+  /** Streaming face of q_burst_detect (operators/Temporal.scala): the
+    * trailing 5-minute event count and the batch burst flag. A bot
+    * key flooding one window is the upstream-gating case, not a state
+    * leak — eviction keeps state at one window whatever the history.
+    */
+  def burstStream(events: Dataset[ValEvent]): Dataset[BurstOut] = {
+    import events.sparkSession.implicits._
+    ValueWindows.burst(trailingRange(events, ValueWindows.burstWidthUs, lit(null)))
+      .as[BurstOut]
+  }
 
   /** Streaming face of q_window_sliding (operators/WindowOps.scala): the
-    * trailing 10-minute RANGE sum per user as per-key GroupState — the
-    * window's (micros, cents) entries ride in state and are evicted as
-    * event time advances, so state is O(events-in-window) by semantics
-    * (the same bound the trailingRangeBlocks batch twin pays per task).
-    * Values scale to exact cents with the decimal(12,2) cast's HALF_UP
-    * rounding ([[runningStream]]'s convention); a null value occupies
-    * its window slot but contributes nothing, and an all-null window
-    * sums to null (the window-SUM convention). RANGE-frame ties follow
-    * [[burstStream]]: same-microsecond events are one group and each
-    * member reports the whole group's sum, so stream ≡ batch under the
-    * arrival-order contract's tie clause. Together with the
-    * q_window_sliding_blocks batch twin this completes the family
-    * triad: simple window, hot-key-safe batch, online serving.
+    * trailing 10-minute decimal(12,2) sum; an all-null window sums to
+    * null.
     */
-  def slidingStream(events: Dataset[ValEvent],
-      windowUs: Long = 600L * 1000000L): Dataset[SlideOut] = {
+  def slidingStream(events: Dataset[ValEvent]): Dataset[SlideOut] = {
     import events.sparkSession.implicits._
-    def usOf(t: Timestamp): Long =
-      Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[SlideState, SlideOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (user: Long, rows: Iterator[ValEvent], state: GroupState[SlideState]) =>
-          val sorted = rows.toSeq
-            .sortBy(e => (e.ts.getTime, e.ts.getNanos, e.event_id))
-          var win = state.getOption.map(_.win).getOrElse(Nil)
-          val out = scala.collection.mutable.ArrayBuffer.empty[SlideOut]
-          val byUs = sorted.groupBy(e => usOf(e.ts)).toSeq.sortBy(_._1)
-          byUs.foreach { case (us, group) =>
-            val entries = group.map { e =>
-              (us, e.value.map(v => java.math.BigDecimal.valueOf(v)
-                .setScale(2, java.math.RoundingMode.HALF_UP)
-                .unscaledValue().longValueExact()))
-            }
-            win = (win ++ entries).filter(_._1 >= us - windowUs)
-            val defined = win.iterator.flatMap(_._2).toList
-            val sum = if (defined.isEmpty) None
-              else Some(java.math.BigDecimal
-                .valueOf(defined.sum, 2).doubleValue())
-            group.foreach(e => out += SlideOut(user, e.event_id, sum))
-          }
-          state.update(SlideState(win))
-          out.iterator
-      }
+    ValueWindows.sliding(
+        trailingRange(events, ValueWindows.slidingWidthUs, ValueWindows.cents))
+      .as[SlideOut]
   }
 
-  case class TypedEvent(ts: Timestamp, user_id: Long, event_id: Long,
-      event_type: String)
-  case class AsofState(tMs: Long, tNs: Int, clickId: Long)
-  case class AsofOut(event_id: Long, user_id: Long, click_id: Option[Long])
-
   /** Streaming face of q_asof_join (operators/Temporal.scala): every
-    * arriving purchase is answered with the same user's most recent
-    * click at-or-before it. State is O(1) per key — just the winning
-    * (time, payload) so far — which is the whole point of the as-of
-    * shape online: the batch op's union-and-carry becomes "keep the
-    * max". Tie semantics replicate the batch ORDER BY (_t, _side, _p):
-    * a click at the purchase's exact timestamp IS eligible (side 0
-    * sorts before side 1), and among equal-time clicks the larger
-    * payload wins — so intra-batch processing orders clicks before
-    * purchases at the same instant, and a micro-batch boundary must
-    * not split a per-key same-timestamp click/purchase pair (the
-    * arrival-order contract's tie clause). Together with the
-    * q_asof_join_blocks batch twin this completes the family triad.
+    * arriving purchase is answered with the same user's latest click
+    * at-or-before it. State is the as-of max — the (us, id)-greatest
+    * click so far — which is the whole point of the as-of shape online:
+    * the batch union-and-carry becomes "keep the max". The batch
+    * ORDER BY (_t, _side, _p) becomes: an instant's clicks apply before
+    * its purchases (a click at the purchase's exact time IS eligible),
+    * and among equal-time clicks the larger id wins.
     */
   def asofStream(events: Dataset[TypedEvent]): Dataset[AsofOut] = {
     import events.sparkSession.implicits._
-    events
-      .filter(e => e.event_type == "click" || e.event_type == "purchase")
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[AsofState, AsofOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (user: Long, rows: Iterator[TypedEvent], state: GroupState[AsofState]) =>
-          // (_t, _side, _p): clicks (side 0) precede purchases at equal
-          // time; equal-time clicks apply in ascending payload order so
-          // the larger id ends up winning, exactly the batch last()
-          val sorted = rows.toSeq.sortBy(e => (e.ts.getTime, e.ts.getNanos,
-            if (e.event_type == "click") 0 else 1, e.event_id))
-          var best = state.getOption
-          val out = scala.collection.mutable.ArrayBuffer.empty[AsofOut]
-          sorted.foreach { e =>
-            if (e.event_type == "click") {
-              val ord = Ordering[(Long, Int, Long)]
-              val better = best.forall(b => ord.gt(
-                (e.ts.getTime, e.ts.getNanos, e.event_id),
-                (b.tMs, b.tNs, b.clickId)))
-              if (better) best = Some(AsofState(e.ts.getTime, e.ts.getNanos,
-                e.event_id))
-            } else {
-              out += AsofOut(e.event_id, user, best.map(_.clickId))
-            }
-          }
-          best.foreach(state.update)
-          out.iterator
-      }
+    val sides = events.filter(col("event_type").isin("click", "purchase"))
+    ValueWindows.asof(inKeyOrder(
+        arrivals[Boolean](sides, col("event_type") === "click"), AsofBest(None)) {
+      (b: AsofBest, tie: Seq[Arrival[Boolean]]) =>
+        val best = (b.best ++ tie.filter(_.v).map(a => Click(a.us, a.event_id)))
+          .maxByOption(c => (c.us, c.click_id))
+        (AsofBest(best), tie.filterNot(_.v)
+          .map(a => AsofRow(a.user_id, a.event_id, best.map(_.click_id))))
+    }).as[AsofOut]
   }
 }

@@ -156,7 +156,7 @@ class DedupSpec extends SparkSpec {
       .sortBy(_._1).toSeq
     def check(dir: String): Unit = {
       val registered = scores(Dedup.substring.fn(spark, dir))
-      val reference = scores(Dedup.substringWindow(spark, Tables.documents(spark, dir)))
+      val reference = scores(ShingleReference.substringWindow(spark, Tables.documents(spark, dir)))
       assert(registered == reference)
       assert(registered.nonEmpty)
     }
@@ -183,7 +183,7 @@ class DedupSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         math.rint(r.getDouble(3) * 1e12)))
       .sortBy(_._1).toSeq
-    val full = scores(Dedup.substringWindow(spark, corpus.unionByName(delta))
+    val full = scores(ShingleReference.substringWindow(spark, corpus.unionByName(delta))
       .filter(col("doc_id") % 2 === 1))
     val incr = scores(Dedup.substringIncrementalScore(
       Dedup.substringCountTable(corpus), delta, parts = 8))
@@ -200,7 +200,7 @@ class DedupSpec extends SparkSpec {
     // and the registered split on the real table agrees with the full
     // recompute restricted to its delta sliver
     val docs = Tables.documents(spark, sfTiny)
-    val fullReal = scores(Dedup.substringWindow(spark, docs)
+    val fullReal = scores(ShingleReference.substringWindow(spark, docs)
       .filter(col("doc_id") % 10 === 0))
     val incrReal = scores(Dedup.substringIncremental.fn(spark, sfTiny))
     assert(incrReal == fullReal)

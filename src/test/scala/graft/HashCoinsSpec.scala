@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.HashCoins.md5_nibble0
+import graft.ShingleReference.md5_nibble0
 import org.apache.spark.sql.functions._
 
 /** md5_nibble0: raw-digest first-hex-nibble, pinned equivalent to the

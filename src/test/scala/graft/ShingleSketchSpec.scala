@@ -138,7 +138,7 @@ class ShingleSketchSpec extends SparkSpec {
       val fused = docs.select(col("doc_id"),
           explode(shingle_md5_gram_counts(col("text"), 8)).as("p"))
         .select(col("doc_id"), col("p.g").as("g"), col("p.cn").as("cn"))
-      val composed = Dedup.substringGrams(docs)
+      val composed = ShingleReference.substringGrams(docs)
         .groupBy(col("doc_id"), md5(col("g")).as("g"))
         .agg(count(lit(1)).as("cn"))
       assert(fused.exceptAll(composed).count() == 0L)
@@ -166,7 +166,7 @@ class ShingleSketchSpec extends SparkSpec {
         .select(col("doc_id"), split(coalesce(col("text"), lit("")), " ").as("w"))
         .filter(size(col("w")) >= 8)
         .select(col("doc_id"), posexplode(expr(
-          graft.operators.Dedup.gramExpr("w", 8))))
+          ShingleReference.gramExpr("w", 8))))
         .select(col("doc_id"), md5(col("col")).as("g"), (col("pos") + 1).as("i"))
       assert(fused.exceptAll(composed).count() == 0L)
       assert(composed.exceptAll(fused).count() == 0L)

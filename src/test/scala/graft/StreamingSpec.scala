@@ -1,7 +1,9 @@
 package graft
 
+import graft.StreamingSpec.FeedEvent
 import graft.streaming.EventStreams
 import graft.streaming.EventStreams.Event
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 import java.sql.Timestamp
@@ -18,14 +20,6 @@ class StreamingSpec extends SparkSpec {
     */
   private def ts(minutes: Long): Timestamp =
     new Timestamp(86400000L + minutes * 60 * 1000L)
-
-  /** Null-aware column reads for comparing batch (nullable column) rows
-    * against the streaming faces' Option-typed outputs.
-    */
-  private def optL(r: org.apache.spark.sql.Row, c: String): Option[Long] =
-    if (r.isNullAt(r.fieldIndex(c))) None else Some(r.getAs[Long](c))
-  private def optD(r: org.apache.spark.sql.Row, c: String): Option[Double] =
-    if (r.isNullAt(r.fieldIndex(c))) None else Some(r.getAs[Double](c))
 
   test("windowed counts maintain per-window aggregates incrementally") {
     import spark.implicits._
@@ -526,7 +520,7 @@ class StreamingSpec extends SparkSpec {
       (100L, s"alpha beta\n$boiler"),
       (101L, "gamma delta\nepsilon"),
     ).toDF("doc_id", "text"))
-    val counts = CacheRegistry.track(EventStreams.paragraphHashCounts(corpus))
+    val counts = CacheRegistry.track(graft.api.GraftApi.paragraphHashCounts(corpus))
     val arriving = Seq(
       (1L, s"$boiler\nfresh paragraph one"),      // corpus dup dropped
       (2L, "repeated twice\nrepeated twice\nkept"), // in-doc dup dropped
@@ -940,350 +934,156 @@ class StreamingSpec extends SparkSpec {
     } finally query.stop()
   }
 
-  test("anomalyStream equals batch q_anomaly_zscore on the real event log") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.functions.col
-    import graft.streaming.EventStreams.{ValEvent, AnomalyOut}
-    // the registered op's input, globally ts-ordered, fed in two triggers
-    val evRows = Tables.events(spark, sfTiny)
-      .select(col("ts").cast("timestamp"), col("user_id"), col("event_id"),
-        col("value"))
-      .as[(Timestamp, Long, Long, Option[Double])].collect()
-      .sortBy(r => (r._1.getTime, r._1.getNanos, r._3))
-      .map { case (t, u, e, v) => ValEvent(t, u, e, v) }
-    val input = MemoryStream[ValEvent]
-    val q = EventStreams.anomalyStream(input.toDS())
-      .writeStream.format("memory").queryName("anomaly_out")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      val (a, b) = evRows.splitAt(evRows.length / 2)
-      input.addData(a.toIndexedSeq); q.processAllAvailable()
-      input.addData(b.toIndexedSeq); q.processAllAvailable()
-      val got = spark.table("anomaly_out").as[AnomalyOut].collect()
-        .map(r => r.event_id -> ((r.x_milli, r.n_window, r.anomaly))).toMap
-      val want = graft.operators.Temporal.anomalyZscore.fn(spark, sfTiny)
-        .collect()
-        .map(r => r.getAs[Long]("event_id") ->
-          ((optL(r, "x_milli"), r.getAs[Long]("n_window"),
-            r.getAs[Long]("anomaly")))).toMap
-      assert(want.nonEmpty && want.values.exists(_._3 == 1L),
-        "batch run must flag at least one anomaly for the spec to bite")
-      assert(got == want,
-        s"stream-only=${(got.toSet -- want.toSet).take(3)} " +
-          s"batch-only=${(want.toSet -- got.toSet).take(3)}")
-    } finally q.stop()
-  }
+  /** The stream ≡ batch table of the windowed-value family: one row per
+    * (stream face, simple op, blocks op) triple. Every row runs on the
+    * same events table — sfTiny's log plus crafted keys — fed to the face
+    * in three micro-batches, and asserts stream = simple = blocks row for
+    * row, the same output (name, type) pairs, and its own "the spec must
+    * bite" guards over the batch answer.
+    */
+  private case class ValueWindowFace(stream: String, simple: Op, blocks: Op,
+      run: Dataset[FeedEvent] => DataFrame, bites: Seq[(String, Row => Boolean)])
 
-  test("ewmaStream equals batch q_window_ewma on the real event log") {
+  /** The table's events directory and micro-batches. Crafted keys sit
+    * around the real log's median instant, ids clear of the real log's:
+    * A is null-leading with interleaved nulls; B is all null; C holds 12
+    * events (negative values whose EWMA division leaves a remainder, a
+    * null) and spans the second boundary; D packs 14 events into a
+    * minute with same-microsecond groups of clicks and purchases (a
+    * burst, and as-of ties inside one batch).
+    */
+  private lazy val valueWindowFeed: (String, Seq[Seq[FeedEvent]]) = {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
     import org.apache.spark.sql.functions.col
-    import graft.streaming.EventStreams.{ValEvent, EwmaOut}
-    val evRows = Tables.events(spark, sfTiny)
-      .select(col("ts").cast("timestamp"), col("user_id"), col("event_id"),
-        col("value"))
-      .as[(Timestamp, Long, Long, Option[Double])].collect()
-      .sortBy(r => (r._1.getTime, r._1.getNanos, r._3))
-      .map { case (t, u, e, v) => ValEvent(t, u, e, v) }
-    val input = MemoryStream[ValEvent]
-    val q = EventStreams.ewmaStream(input.toDS())
-      .writeStream.format("memory").queryName("ewma_out")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      val (a, b) = evRows.splitAt(evRows.length / 2)
-      input.addData(a.toIndexedSeq); q.processAllAvailable()
-      input.addData(b.toIndexedSeq); q.processAllAvailable()
-      val got = spark.table("ewma_out").as[EwmaOut].collect()
-        .map(r => r.event_id -> ((r.x_milli, r.ewma_milli))).toMap
-      val want = graft.operators.Temporal.windowEwma.fn(spark, sfTiny)
-        .collect()
-        .map(r => r.getAs[Long]("event_id") ->
-          ((optL(r, "x_milli"), optL(r, "ewma_milli")))).toMap
-      assert(want.nonEmpty)
-      assert(got == want,
-        s"stream-only=${(got.toSet -- want.toSet).take(3)} " +
-          s"batch-only=${(want.toSet -- got.toSet).take(3)}")
-    } finally q.stop()
-  }
-
-  test("runningStream equals batch q_window_running on the real event log") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.functions.col
-    import graft.streaming.EventStreams.{ValEvent, RunOut}
-    val evRows = Tables.events(spark, sfTiny)
-      .select(col("ts").cast("timestamp"), col("user_id"), col("event_id"),
-        col("value"))
-      .as[(Timestamp, Long, Long, Option[Double])].collect()
-      .sortBy(r => (r._1.getTime, r._1.getNanos, r._3))
-      .map { case (t, u, e, v) => ValEvent(t, u, e, v) }
-    val input = MemoryStream[ValEvent]
-    val q = EventStreams.runningStream(input.toDS())
-      .writeStream.format("memory").queryName("run_out")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      val (a, b) = evRows.splitAt(evRows.length / 2)
-      input.addData(a.toIndexedSeq); q.processAllAvailable()
-      input.addData(b.toIndexedSeq); q.processAllAvailable()
-      val got = spark.table("run_out").as[RunOut].collect()
-        .map(r => r.event_id -> ((r.running_value, r.seq))).toMap
-      val want = graft.operators.WindowOps.windowRunning.fn(spark, sfTiny)
-        .collect()
-        .map(r => r.getAs[Long]("event_id") ->
-          ((optD(r, "running_value"), r.getAs[Int]("seq")))).toMap
-      assert(want.nonEmpty)
-      assert(got == want,
-        s"stream-only=${(got.toSet -- want.toSet).take(3)} " +
-          s"batch-only=${(want.toSet -- got.toSet).take(3)}")
-    } finally q.stop()
-  }
-
-  test("burstStream equals batch q_burst_detect on the real event log") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.functions.col
-    import graft.streaming.EventStreams.{ValEvent, BurstOut}
-    val evRows = Tables.events(spark, sfTiny)
-      .select(col("ts").cast("timestamp"), col("user_id"), col("event_id"),
-        col("value"))
-      .as[(Timestamp, Long, Long, Option[Double])].collect()
-      .sortBy(r => (r._1.getTime, r._1.getNanos, r._3))
-      .map { case (t, u, e, v) => ValEvent(t, u, e, v) }
-    // the tie clause of the arrival contract: a micro-batch boundary
-    // must not split a per-key same-microsecond group — walk the split
-    // point forward past any tie
-    def us(t: Timestamp) = Math.floorDiv(t.getTime, 1000L) * 1000000L +
-      t.getNanos / 1000L
-    var cut = evRows.length / 2
-    while (cut < evRows.length && cut > 0 &&
-      evRows(cut - 1).user_id == evRows(cut).user_id &&
-      us(evRows(cut - 1).ts) == us(evRows(cut).ts)) cut += 1
-    val input = MemoryStream[ValEvent]
-    val q = EventStreams.burstStream(input.toDS())
-      .writeStream.format("memory").queryName("burst_out")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      val (a, b) = evRows.splitAt(cut)
-      input.addData(a.toIndexedSeq); q.processAllAvailable()
-      input.addData(b.toIndexedSeq); q.processAllAvailable()
-      val got = spark.table("burst_out").as[BurstOut].collect()
-        .map(r => r.event_id -> ((r.n_5m, r.burst))).toMap
-      val want = graft.operators.Temporal.burstDetect.fn(spark, sfTiny)
-        .collect()
-        .map(r => r.getAs[Long]("event_id") ->
-          ((r.getAs[Long]("n_5m"), r.getAs[Long]("burst")))).toMap
-      assert(want.nonEmpty && want.values.exists(_._1 > 1L),
-        "batch must see some multi-event windows for the spec to bite")
-      assert(got == want,
-        s"stream-only=${(got.toSet -- want.toSet).take(3)} " +
-          s"batch-only=${(want.toSet -- got.toSet).take(3)}")
-    } finally q.stop()
-  }
-
-  test("slidingStream equals batch q_window_sliding on the real event log") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.functions.col
-    import graft.streaming.EventStreams.{ValEvent, SlideOut}
-    val evRows = Tables.events(spark, sfTiny)
-      .select(col("ts").cast("timestamp"), col("user_id"), col("event_id"),
-        col("value"))
-      .as[(Timestamp, Long, Long, Option[Double])].collect()
-      .sortBy(r => (r._1.getTime, r._1.getNanos, r._3))
-      .map { case (t, u, e, v) => ValEvent(t, u, e, v) }
-    // RANGE ties: don't split a per-key same-microsecond group across
-    // the micro-batch boundary (the burstStream clause)
-    def us(t: Timestamp) = Math.floorDiv(t.getTime, 1000L) * 1000000L +
-      t.getNanos / 1000L
-    var cut = evRows.length / 2
-    while (cut < evRows.length && cut > 0 &&
-      evRows(cut - 1).user_id == evRows(cut).user_id &&
-      us(evRows(cut - 1).ts) == us(evRows(cut).ts)) cut += 1
-    val input = MemoryStream[ValEvent]
-    val q = EventStreams.slidingStream(input.toDS())
-      .writeStream.format("memory").queryName("slide_out")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      val (a, b) = evRows.splitAt(cut)
-      input.addData(a.toIndexedSeq); q.processAllAvailable()
-      input.addData(b.toIndexedSeq); q.processAllAvailable()
-      val got = spark.table("slide_out").as[SlideOut].collect()
-        .map(r => r.event_id -> r.sum_10m).toMap
-      val want = graft.operators.WindowOps.slidingWindow.fn(spark, sfTiny)
-        .collect()
-        .map(r => r.getAs[Long]("event_id") -> optD(r, "sum_10m")).toMap
-      assert(want.nonEmpty)
-      assert(got == want,
-        s"stream-only=${(got.toSet -- want.toSet).take(3)} " +
-          s"batch-only=${(want.toSet -- got.toSet).take(3)}")
-    } finally q.stop()
-  }
-
-  test("asofStream equals batch q_asof_join on the real event log") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.functions.col
-    import graft.streaming.EventStreams.{TypedEvent, AsofOut}
-    val evRows = Tables.events(spark, sfTiny)
-      .select(col("ts").cast("timestamp"), col("user_id"), col("event_id"),
-        col("event_type"))
-      .as[(Timestamp, Long, Long, String)].collect()
-      .sortBy(r => (r._1.getTime, r._1.getNanos, r._3))
-      .map { case (t, u, e, ty) => TypedEvent(t, u, e, ty) }
-    // as-of ties: a click at a purchase's exact timestamp is eligible,
-    // so the boundary must not split a per-key same-timestamp run
-    var cut = evRows.length / 2
-    while (cut < evRows.length && cut > 0 &&
-      evRows(cut - 1).user_id == evRows(cut).user_id &&
-      evRows(cut - 1).ts.getTime == evRows(cut).ts.getTime &&
-      evRows(cut - 1).ts.getNanos == evRows(cut).ts.getNanos) cut += 1
-    val input = MemoryStream[TypedEvent]
-    val q = EventStreams.asofStream(input.toDS())
-      .writeStream.format("memory").queryName("asof_out")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      val (a, b) = evRows.splitAt(cut)
-      input.addData(a.toIndexedSeq); q.processAllAvailable()
-      input.addData(b.toIndexedSeq); q.processAllAvailable()
-      val got = spark.table("asof_out").as[AsofOut].collect()
-        .map(r => r.event_id -> r.click_id).toMap
-      val want = graft.operators.Temporal.asofJoin.fn(spark, sfTiny)
-        .collect()
-        .map(r => r.getAs[Long]("event_id") -> optL(r, "click_id")).toMap
-      assert(want.nonEmpty && want.values.exists(_.isDefined),
-        "batch must resolve some as-of clicks for the spec to bite")
-      assert(want.values.exists(_.isEmpty),
-        "batch must leave some purchases clickless for the spec to bite")
-      assert(got == want,
-        s"stream-only=${(got.toSet -- want.toSet).take(3)} " +
-          s"batch-only=${(want.toSet -- got.toSet).take(3)}")
-    } finally q.stop()
-  }
-
-  test("ewmaStream equals both batch faces on NEGATIVE values (division rounding)") {
-    // ADVICE r8: Math.floorDiv (floor) vs Spark `div` (truncate toward
-    // zero) differ by exactly 1 whenever num is negative and not a
-    // multiple of den — a silent 1-milli-unit stream/batch divergence the
-    // nonnegative-only spec never exercised. Values here drive num
-    // negative with a non-zero remainder.
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.functions.col
-    import graft.streaming.EventStreams.{ValEvent, EwmaOut}
-    def t(s: Long) = new java.sql.Timestamp(86400000L + s * 1000L)
-    val rows = Seq(
-      (1L, 1L, t(0), "view", 1.0), (2L, 1L, t(60), "view", -3.0),
-      (3L, 1L, t(120), "view", 2.0), (4L, 1L, t(180), "view", -5.5),
-      (5L, 1L, t(240), "view", -0.0015), (6L, 2L, t(0), "view", -7.77),
-      (7L, 2L, t(60), "view", 4.2), (8L, 2L, t(120), "view", -0.3))
+    val real = spark.read.parquet(s"$sfTiny/events.parquet")
+      .withColumn("ts", col("ts").cast("timestamp"))
+    val realMs = real.select(col("ts")).as[Timestamp].collect().map(_.getTime).sorted
+    val midMs = realMs(realMs.length / 2)
+    def key(user: Long, firstId: Long, t0: Long,
+        evs: Seq[(Long, String, Option[Double])]) =
+      evs.zipWithIndex.map { case ((s, ty, v), i) =>
+        FeedEvent(new Timestamp(midMs + (t0 + s) * 1000L), user, firstId + i, ty, v) }
+    val a = key(900001L, 9000000L, -7200L, Seq(
+      (0L, "view", None), (60L, "view", None), (120L, "click", Some(2.5)),
+      (180L, "view", None), (240L, "purchase", Some(-1.25)),
+      (300L, "view", Some(4.0)), (360L, "view", Some(3.0))))
+    val b = key(900002L, 9000100L, -3600L, Seq(
+      (0L, "click", None), (60L, "purchase", None), (120L, "view", None)))
+    val c = key(900003L, 9000200L, -165L, Seq(
+      (0L, "view", Some(1.0)), (30L, "click", Some(-3.0)),
+      (60L, "view", Some(2.0)), (90L, "purchase", Some(-5.5)),
+      (120L, "view", Some(-0.0015)), (150L, "view", None),
+      (180L, "view", Some(-7.77)), (210L, "click", Some(4.2)),
+      (240L, "purchase", Some(-0.3)), (270L, "view", Some(-2.345)),
+      (300L, "view", None), (330L, "purchase", Some(-9.99))))
+    val d = key(900004L, 9000300L, 3600L, Seq(
+      (0L, "click", Some(1.5)), (0L, "click", Some(-2.25)),
+      (0L, "purchase", Some(3.0)), (10L, "purchase", None),
+      (10L, "click", Some(0.5)), (20L, "view", Some(-1.0)),
+      (30L, "view", Some(2.0)), (30L, "purchase", Some(-3.5)),
+      (30L, "click", Some(4.75)), (30L, "view", None),
+      (40L, "view", Some(1.0)), (50L, "purchase", Some(-6.0)),
+      (50L, "click", Some(2.5)), (60L, "purchase", Some(0.25))))
     val dir = tmpDir()
     writeTable(dir, "events",
-      rows.toDF("event_id", "user_id", "ts", "event_type", "value"))
-    def toMap(d: org.apache.spark.sql.DataFrame) = d.collect()
-      .map(r => r.getAs[Long]("event_id") ->
-        ((optL(r, "x_milli"), optL(r, "ewma_milli")))).toMap
-    val batch = toMap(graft.operators.Temporal.windowEwma.fn(spark, dir))
-    val blocks = toMap(graft.operators.Temporal.windowEwmaBlocks.fn(spark, dir))
-    assert(batch.nonEmpty && batch.values.exists(_._2.exists(_ < 0L)),
-      "the corpus must actually produce a negative EWMA for the spec to bite")
-    assert(blocks == batch)
-    val input = MemoryStream[ValEvent]
-    val q = EventStreams.ewmaStream(input.toDS())
-      .writeStream.format("memory").queryName("ewma_neg_out")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      input.addData(rows.map { case (e, u, ts, _, v) => ValEvent(ts, u, e, Some(v)) }
-        .toIndexedSeq)
-      q.processAllAvailable()
-      val got = spark.table("ewma_neg_out").as[EwmaOut].collect()
-        .map(r => r.event_id -> ((r.x_milli, r.ewma_milli))).toMap
-      assert(got == batch,
-        s"stream-only=${(got.toSet -- batch.toSet).take(3)} " +
-          s"batch-only=${(batch.toSet -- got.toSet).take(3)}")
-    } finally q.stop()
-  }
-
-  test("value-windowed streaming faces equal batch on NULL event values") {
-    // ADVICE r9: the streaming faces decoded events into a primitive
-    // Double, so the null-gate corpus (events.value NULL ~5%) crashed the
-    // encoder while every batch twin passed. ValEvent.value is now
-    // Option[Double]; this corpus pins the null conventions — a null row
-    // occupies its window slot (n_window/seq count it, it consumes a lag
-    // position) but adds nothing to sums; all-null prefix/window → null
-    // running/ewma, anomaly 0 — stream ≡ batch on each face.
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.EventStreams.{ValEvent, AnomalyOut, EwmaOut, RunOut, BurstOut}
-    def t(s: Long) = new java.sql.Timestamp(86400000L + s * 1000L)
-    // user 1: null-leading prefix then values; user 2: interleaved nulls;
-    // user 3: ALL null (the all-null-window edge)
-    val rows = Seq(
-      (1L, 1L, t(0), "view", None), (2L, 1L, t(60), "view", Some(2.5)),
-      (3L, 1L, t(120), "view", None), (4L, 1L, t(180), "view", Some(-1.25)),
-      (5L, 1L, t(240), "view", Some(4.0)), (6L, 2L, t(0), "view", Some(1.0)),
-      (7L, 2L, t(30), "view", None), (8L, 2L, t(90), "view", Some(3.0)),
-      (9L, 3L, t(0), "view", None), (10L, 3L, t(60), "view", None)
-    ): Seq[(Long, Long, java.sql.Timestamp, String, Option[Double])]
-    val dir = tmpDir()
-    writeTable(dir, "events",
-      rows.toDF("event_id", "user_id", "ts", "event_type", "value"))
-    val evs = rows.map { case (e, u, ts, _, v) => ValEvent(ts, u, e, v) }
-      .sortBy(e => (e.ts.getTime, e.event_id))
-
-    def run[O](name: String, face: org.apache.spark.sql.Dataset[ValEvent] =>
-        org.apache.spark.sql.Dataset[O]): Seq[O] = {
-      val input = MemoryStream[ValEvent]
-      val q = face(input.toDS()).writeStream.format("memory")
-        .queryName(name).outputMode(OutputMode.Append()).start()
-      try {
-        input.addData(evs.toIndexedSeq); q.processAllAvailable()
-        spark.table(name).as[O](face(input.toDS()).encoder).collect().toSeq
-      } finally q.stop()
+      real.unionByName((a ++ b ++ c ++ d).toDF(), allowMissingColumns = true))
+    def us(e: FeedEvent) =
+      Math.floorDiv(e.ts.getTime, 1000L) * 1000000L + e.ts.getNanos / 1000L
+    val sorted = spark.read.parquet(s"$dir/events.parquet")
+      .select(col("ts"), col("user_id"), col("event_id"), col("event_type"),
+        col("value"))
+      .as[FeedEvent].collect().sortBy(e => (us(e), e.event_id)).toIndexedSeq
+    // a boundary never splits a same-microsecond group (of any key):
+    // walk each cut forward past ties
+    def cutAt(i: Int): Int = {
+      var cut = i
+      while (cut > 0 && cut < sorted.length &&
+        us(sorted(cut - 1)) == us(sorted(cut))) cut += 1
+      cut
     }
+    val c1 = cutAt(sorted.length / 3)
+    val c2 = cutAt(sorted.indexWhere(_.event_id == c(6).event_id))
+    assert(c1 < c2 && sorted.take(c2).exists(_.event_id == c(5).event_id) &&
+      sorted.drop(c2).exists(_.event_id == c(6).event_id),
+      "key C must span a micro-batch boundary for the spec to bite")
+    assert(d.groupBy(us).values.exists(_.size >= 3),
+      "key D must hold same-microsecond groups for the spec to bite")
+    (dir, Seq(sorted.take(c1), sorted.slice(c1, c2), sorted.drop(c2)))
+  }
 
-    val gotAnom = run("null_anom_out", EventStreams.anomalyStream)
-      .map(r => r.event_id -> ((r.x_milli, r.n_window, r.anomaly))).toMap
-    val wantAnom = graft.operators.Temporal.anomalyZscore.fn(spark, dir)
-      .collect().map(r => r.getAs[Long]("event_id") ->
-        ((optL(r, "x_milli"), r.getAs[Long]("n_window"),
-          r.getAs[Long]("anomaly")))).toMap
-    assert(gotAnom == wantAnom, s"anomaly: got=$gotAnom want=$wantAnom")
+  private val valueWindowFaces: Seq[ValueWindowFace] = {
+    import graft.operators.{Temporal, WindowOps}
+    import graft.streaming.EventStreams.{TypedEvent, ValEvent}
+    def vals(d: Dataset[FeedEvent]) = {
+      import d.sparkSession.implicits._
+      d.map(e => ValEvent(e.ts, e.user_id, e.event_id, e.value))
+    }
+    def typed(d: Dataset[FeedEvent]) = {
+      import d.sparkSession.implicits._
+      d.map(e => TypedEvent(e.ts, e.user_id, e.event_id, e.event_type))
+    }
+    def isNull(c: String)(r: Row) = r.isNullAt(r.fieldIndex(c))
+    Seq(
+      ValueWindowFace("anomalyStream", Temporal.anomalyZscore,
+        Temporal.anomalyZscoreBlocks, d => EventStreams.anomalyStream(vals(d)).toDF(),
+        Seq("flag at least one anomaly" -> (_.getAs[Long]("anomaly") == 1L))),
+      ValueWindowFace("ewmaStream", Temporal.windowEwma, Temporal.windowEwmaBlocks,
+        d => EventStreams.ewmaStream(vals(d)).toDF(),
+        Seq("produce a negative EWMA" -> (r => !isNull("ewma_milli")(r) &&
+            r.getAs[Long]("ewma_milli") < 0L),
+          "produce an all-null window" -> isNull("ewma_milli"))),
+      ValueWindowFace("runningStream", WindowOps.windowRunning,
+        WindowOps.windowRunningBlocks, d => EventStreams.runningStream(vals(d)).toDF(),
+        Seq("produce a null-prefix running sum" -> isNull("running_value"))),
+      ValueWindowFace("burstStream", Temporal.burstDetect, Temporal.burstDetectBlocks,
+        d => EventStreams.burstStream(vals(d)).toDF(),
+        Seq("see some multi-event windows" -> (_.getAs[Long]("n_5m") > 1L),
+          "flag a burst" -> (_.getAs[Long]("burst") == 1L))),
+      ValueWindowFace("slidingStream", WindowOps.slidingWindow,
+        WindowOps.slidingWindowBlocks, d => EventStreams.slidingStream(vals(d)).toDF(),
+        Seq("produce an all-null window sum" -> isNull("sum_10m"))),
+      ValueWindowFace("asofStream", Temporal.asofJoin, Temporal.asofJoinBlocksOp,
+        d => EventStreams.asofStream(typed(d)).toDF(),
+        Seq("resolve some as-of clicks" -> (r => !isNull("click_id")(r)),
+          "leave some purchases clickless" -> isNull("click_id"))))
+  }
 
-    val gotEwma = run("null_ewma_out", EventStreams.ewmaStream)
-      .map(r => r.event_id -> ((r.x_milli, r.ewma_milli))).toMap
-    val wantEwma = graft.operators.Temporal.windowEwma.fn(spark, dir)
-      .collect().map(r => r.getAs[Long]("event_id") ->
-        ((optL(r, "x_milli"), optL(r, "ewma_milli")))).toMap
-    assert(wantEwma.values.exists(_._2.isEmpty),
-      "corpus must produce an all-null window for the spec to bite")
-    assert(gotEwma == wantEwma, s"ewma: got=$gotEwma want=$wantEwma")
-
-    val gotRun = run("null_run_out", EventStreams.runningStream)
-      .map(r => r.event_id -> ((r.running_value, r.seq))).toMap
-    val wantRun = graft.operators.WindowOps.windowRunning.fn(spark, dir)
-      .collect().map(r => r.getAs[Long]("event_id") ->
-        ((optD(r, "running_value"), r.getAs[Int]("seq")))).toMap
-    assert(wantRun.values.exists(_._1.isEmpty),
-      "corpus must produce a null-prefix running sum for the spec to bite")
-    assert(gotRun == wantRun, s"running: got=$gotRun want=$wantRun")
-
-    val gotBurst = run("null_burst_out",
-        (d: org.apache.spark.sql.Dataset[ValEvent]) => EventStreams.burstStream(d))
-      .map(r => r.event_id -> ((r.n_5m, r.burst))).toMap
-    val wantBurst = graft.operators.Temporal.burstDetect.fn(spark, dir)
-      .collect().map(r => r.getAs[Long]("event_id") ->
-        ((r.getAs[Long]("n_5m"), r.getAs[Long]("burst")))).toMap
-    assert(gotBurst == wantBurst, s"burst: got=$gotBurst want=$wantBurst")
-
-    val gotSlide = run("null_slide_out",
-        (d: org.apache.spark.sql.Dataset[ValEvent]) => EventStreams.slidingStream(d))
-      .map(r => r.event_id -> r.sum_10m).toMap
-    val wantSlide = graft.operators.WindowOps.slidingWindow.fn(spark, dir)
-      .collect().map(r => r.getAs[Long]("event_id") -> optD(r, "sum_10m")).toMap
-    assert(wantSlide.values.exists(_.isEmpty),
-      "corpus must produce an all-null window sum for the spec to bite")
-    assert(gotSlide == wantSlide, s"sliding: got=$gotSlide want=$wantSlide")
+  valueWindowFaces.foreach { f =>
+    test(s"${f.stream} equals batch ${f.simple.name} on the real event log") {
+      import spark.implicits._
+      import org.apache.spark.sql.functions.col
+      implicit val sqlCtx = spark.sqlContext
+      val (dir, batches) = valueWindowFeed
+      val simple = f.simple.fn(spark, dir)
+      val blocks = f.blocks.fn(spark, dir)
+      val cols = simple.columns.sorted.toSeq
+      def schema(df: DataFrame) = df.schema.fields.map(c => c.name -> c.dataType).toSet
+      def keyed(df: DataFrame) = df.select(cols.map(col): _*).collect()
+        .map(r => r.getAs[Long]("event_id") -> r.toSeq).toMap
+      val input = MemoryStream[FeedEvent]
+      val name = s"${f.stream}_table_out"
+      val q = f.run(input.toDS()).writeStream.format("memory").queryName(name)
+        .outputMode(OutputMode.Append()).start()
+      val (streamSchema, got) = try {
+        batches.foreach { b => input.addData(b); q.processAllAvailable() }
+        (schema(spark.table(name)), keyed(spark.table(name)))
+      } finally q.stop()
+      assert(streamSchema == schema(simple) && schema(blocks) == schema(simple),
+        s"stream=$streamSchema simple=${schema(simple)} blocks=${schema(blocks)}")
+      val simpleRows = simple.collect()
+      assert(simpleRows.nonEmpty)
+      f.bites.foreach { case (what, bites) =>
+        assert(simpleRows.exists(bites), s"the batch run must $what for the spec to bite")
+      }
+      val want = keyed(simple)
+      val viaBlocks = keyed(blocks)
+      assert(viaBlocks == want,
+        s"blocks-only=${(viaBlocks.toSet -- want.toSet).take(3)} " +
+          s"simple-only=${(want.toSet -- viaBlocks.toSet).take(3)}")
+      assert(got == want,
+        s"stream-only=${(got.toSet -- want.toSet).take(3)} " +
+          s"batch-only=${(want.toSet -- got.toSet).take(3)}")
+    }
   }
 
   test("streaming KNN classify equals batch knnClassify") {
@@ -1564,4 +1364,10 @@ class StreamingSpec extends SparkSpec {
       CacheRegistry.drain()
     } finally q.stop()
   }
+}
+
+object StreamingSpec {
+  /** One row of the windowed-value table's events log. */
+  case class FeedEvent(ts: Timestamp, user_id: Long, event_id: Long,
+      event_type: String, value: Option[Double])
 }
