@@ -1086,6 +1086,50 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
+  test("ewmaStream equals both batch faces on NEGATIVE values (division rounding)") {
+    // Math.floorDiv (floor) and Spark `div` (truncate toward zero) differ
+    // by exactly 1 whenever num is negative and not a multiple of den: a
+    // 1-milli-unit stream/batch divergence that nonnegative values never
+    // exercise. Every value here is non-null and the EWMA numerator goes
+    // negative with a non-zero remainder, in a single micro-batch.
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    import graft.streaming.EventStreams.{ValEvent, EwmaOut}
+    def t(s: Long) = new Timestamp(86400000L + s * 1000L)
+    def optL(r: Row, c: String): Option[Long] =
+      if (r.isNullAt(r.fieldIndex(c))) None else Some(r.getAs[Long](c))
+    val rows = Seq(
+      (1L, 1L, t(0), "view", 1.0), (2L, 1L, t(60), "view", -3.0),
+      (3L, 1L, t(120), "view", 2.0), (4L, 1L, t(180), "view", -5.5),
+      (5L, 1L, t(240), "view", -0.0015), (6L, 2L, t(0), "view", -7.77),
+      (7L, 2L, t(60), "view", 4.2), (8L, 2L, t(120), "view", -0.3))
+    val dir = tmpDir()
+    writeTable(dir, "events",
+      rows.toDF("event_id", "user_id", "ts", "event_type", "value"))
+    def toMap(d: DataFrame) = d.collect()
+      .map(r => r.getAs[Long]("event_id") ->
+        ((optL(r, "x_milli"), optL(r, "ewma_milli")))).toMap
+    val batch = toMap(graft.operators.Temporal.windowEwma.fn(spark, dir))
+    val blocks = toMap(graft.operators.Temporal.windowEwmaBlocks.fn(spark, dir))
+    assert(batch.nonEmpty && batch.values.exists(_._2.exists(_ < 0L)),
+      "the corpus must actually produce a negative EWMA for the spec to bite")
+    assert(blocks == batch)
+    val input = MemoryStream[ValEvent]
+    val q = EventStreams.ewmaStream(input.toDS())
+      .writeStream.format("memory").queryName("ewma_neg_out")
+      .outputMode(OutputMode.Append()).start()
+    try {
+      input.addData(rows.map { case (e, u, ts, _, v) => ValEvent(ts, u, e, Some(v)) }
+        .toIndexedSeq)
+      q.processAllAvailable()
+      val got = spark.table("ewma_neg_out").as[EwmaOut].collect()
+        .map(r => r.event_id -> ((r.x_milli, r.ewma_milli))).toMap
+      assert(got == batch,
+        s"stream-only=${(got.toSet -- batch.toSet).take(3)} " +
+          s"batch-only=${(batch.toSet -- got.toSet).take(3)}")
+    } finally q.stop()
+  }
+
   test("streaming KNN classify equals batch knnClassify") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
