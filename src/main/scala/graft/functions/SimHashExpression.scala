@@ -26,10 +26,9 @@ object SimHashUtil {
     while (i < n) {
       val s = md5s.getUTF8String(i)
       if (s != null && s.numBytes() >= 32) {
-        val bytes = s.getBytes
         var d = 0
         while (d < 32) {
-          val c = bytes(d)
+          val c = s.getByte(d)
           val v = if (c <= '9') c - '0' else c - 'a' + 10
           counts(2 * d) += (if ((v & 8) != 0) 1 else -1)
           counts(2 * d + 1) += (if ((v & 4) != 0) 1 else -1)

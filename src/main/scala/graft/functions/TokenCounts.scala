@@ -29,15 +29,27 @@ import org.apache.spark.unsafe.types.UTF8String
   *     — each non-alnum non-ws CODE POINT is its own match; counted at
   *     UTF-8 lead bytes, `(b & 0xC0) != 0x80`).
   *
-  * Returns struct(ws_tokens, bpeish_tokens); null in, null out.
-  * HashCoinsSpec-style equality with the regex forms is pinned in
-  * FunctionsSpec incl. multi-byte text.
+  * The same walk counts what the quality gates read:
+  *
+  *   - chars: code points exactly as `length(text)` counts them (a char
+  *     starts at every `UTF8String.numBytesForFirstByte` step).
+  *   - punct: bytes in `.,;:!?` and upper: bytes in `A-Z` — ASCII bytes
+  *     never occur inside a multi-byte UTF-8 sequence, so on valid UTF-8
+  *     these equal `length(text) - length(translate(text, chars, ''))`
+  *     without the translate's round trip through a Java String.
+  *
+  * Returns struct(ws_tokens, bpeish_tokens, chars, punct, upper); null
+  * in, null out. FunctionsSpec pins the equality with the regex, length
+  * and translate forms incl. multi-byte text.
   */
 case class TextTokenCounts(child: Expression) extends UnaryExpression {
 
   override def dataType: DataType = StructType(Seq(
     StructField("ws_tokens", LongType, nullable = false),
-    StructField("bpeish_tokens", LongType, nullable = false)))
+    StructField("bpeish_tokens", LongType, nullable = false),
+    StructField("chars", LongType, nullable = false),
+    StructField("punct", LongType, nullable = false),
+    StructField("upper", LongType, nullable = false)))
   override def prettyName: String = "text_token_counts"
 
   override def checkInputDataTypes(): TypeCheckResult =
@@ -48,31 +60,36 @@ case class TextTokenCounts(child: Expression) extends UnaryExpression {
     }
 
   def countsOf(s: UTF8String): InternalRow = {
-    val bytes = s.getBytes
-    val len = bytes.length
+    import TextTokenCounts._
+    val len = s.numBytes()
     var ws = 0L
     var bpeish = 0L
-    // classes: 0 = whitespace, 1 = letter, 2 = digit, 3 = other
+    var chars = 0L
+    var punct = 0L
+    var upper = 0L
+    var nextChar = 0
     var prev = 0
     var inToken = false
     var pos = 0
     while (pos < len) {
-      val b = bytes(pos)
-      val isLead = (b & 0xC0) != 0x80
-      val cls =
-        if (b == ' ' || b == '\t' || b == '\n' || b == 0x0B || b == '\f' || b == '\r') 0
-        else if ((b >= 'A' && b <= 'Z') || (b >= 'a' && b <= 'z')) 1
-        else if (b >= '0' && b <= '9') 2
-        else 3
-      if (cls == 0) {
+      val b = s.getByte(pos)
+      val k = byteKind(b & 0xFF)
+      val cls = k & ClassMask
+      upper += (k >> UpperBit) & 1
+      punct += (k >> PunctBit) & 1
+      if (pos >= nextChar) {
+        chars += 1
+        nextChar = pos + (k >> CharLenShift)
+      }
+      if (cls == Space) {
         inToken = false
-        prev = 0
+        prev = Space
       } else {
         if (!inToken) { ws += 1; inToken = true }
-        if (cls == 3) {
+        if (cls == Other) {
           // continuation bytes extend the current OTHER code point
-          if (isLead) bpeish += 1
-          prev = 3
+          if ((b & 0xC0) != 0x80) bpeish += 1
+          prev = Other
         } else {
           if (cls != prev) bpeish += 1
           prev = cls
@@ -80,7 +97,7 @@ case class TextTokenCounts(child: Expression) extends UnaryExpression {
       }
       pos += 1
     }
-    InternalRow(ws, bpeish)
+    InternalRow(ws, bpeish, chars, punct, upper)
   }
 
   override protected def nullSafeEval(input: Any): Any =
@@ -93,6 +110,33 @@ case class TextTokenCounts(child: Expression) extends UnaryExpression {
 
   override protected def withNewChildInternal(newChild: Expression): TextTokenCounts =
     copy(child = newChild)
+}
+
+object TextTokenCounts {
+  // byte classes of the token walk
+  private[functions] final val Space = 0
+  private[functions] final val Letter = 1
+  private[functions] final val Digit = 2
+  private[functions] final val Other = 3
+  private[functions] final val ClassMask = 3
+  private[functions] final val UpperBit = 2
+  private[functions] final val PunctBit = 3
+  private[functions] final val CharLenShift = 4
+
+  /** Per byte value: its class, an A-Z bit, a `.,;:!?` bit, and the byte
+    * step `length()` takes from it when a character starts there.
+    */
+  private[functions] val byteKind: Array[Int] = Array.tabulate(256) { i =>
+    val c = i.toChar
+    val cls =
+      if (c == ' ' || c == '\t' || c == '\n' || c == 0x0B || c == '\f' || c == '\r') Space
+      else if ((c >= 'A' && c <= 'Z') || (c >= 'a' && c <= 'z')) Letter
+      else if (c >= '0' && c <= '9') Digit
+      else Other
+    val upper = if (c >= 'A' && c <= 'Z') 1 << UpperBit else 0
+    val punct = if (".,;:!?".indexOf(c) >= 0) 1 << PunctBit else 0
+    cls | upper | punct | (UTF8String.numBytesForFirstByte(i.toByte) << CharLenShift)
+  }
 }
 
 object TokenCounts {

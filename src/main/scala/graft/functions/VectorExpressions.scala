@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftshim.Shim
@@ -140,10 +140,25 @@ case class DistSqD(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Count of the distinct-element intersection of two string arrays —
+/** Count of the distinct-element intersection of two arrays —
   * `size(array_intersect(a, b))` without materializing the intersection
-  * array. Matches ArrayIntersect + Size semantics for non-null string
-  * elements (our shingle arrays are distinct + non-null by construction).
+  * array: |distinct(a) ∩ distinct(b)|, a null element counting once when
+  * both sides hold one. Both sides must have the same element type.
+  *
+  * Cross-row contract: the RIGHT argument's element set is kept across
+  * rows — in codegen as mutable state of the generated class (one
+  * instance per partition), interpreted in `@transient` fields of this
+  * node (each task deserializes its own expression tree). The state is a
+  * private copy of the last right-hand UnsafeArrayData plus the hash set
+  * built from that copy. A row whose right side is byte-equal to the
+  * copy (`UnsafeArrayData.equals`) only probes its own left elements;
+  * any other row copies its right side and rebuilds the set from the
+  * copy, never from row memory a later row may overwrite. A right side
+  * that is not an UnsafeArrayData is never reused. So a constant right
+  * side — the broadcast bench-gram array of Pipeline.broadcastDecontam —
+  * costs O(|left|) hash probes plus one byte compare per row, while a
+  * right side that changes every row (the dedup Jaccard verify) pays the
+  * copy and the set rebuild each row, as the stateless form did.
   */
 case class IntersectSize(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -151,47 +166,88 @@ case class IntersectSize(left: Expression, right: Expression)
   override def dataType: DataType = org.apache.spark.sql.types.IntegerType
   override def prettyName: String = "intersect_size"
 
+  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+    (left.dataType, right.dataType) match {
+      case (ArrayType(l, _), ArrayType(r, _)) if l == r =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+      case _ =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+          s"intersect_size expects two arrays of one element type, got " +
+            s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
+    }
+
+  private def elementType: DataType = left.dataType.asInstanceOf[ArrayType].elementType
+
+  @transient private lazy val elemAt =
+    org.apache.spark.sql.catalyst.InternalRow.getAccessor(elementType, nullable = true)
+  @transient private[this] var lastRight: UnsafeArrayData = _
+  @transient private[this] var rightSet: java.util.HashSet[Any] = _
+
   override protected def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
-    val et = left.dataType.asInstanceOf[ArrayType].elementType
-    val seen = new java.util.HashSet[Any]()
-    var i = 0
-    while (i < x.numElements()) { seen.add(x.get(i, et)); i += 1 }
+    if (lastRight == null || !lastRight.equals(y)) {
+      val src = y.copy()
+      lastRight = src match {
+        case u: UnsafeArrayData => u
+        case _ => null
+      }
+      rightSet = new java.util.HashSet[Any]()
+      var j = 0
+      while (j < src.numElements()) { rightSet.add(elemAt(src, j)); j += 1 }
+    }
     var cnt = 0
-    val matched = new java.util.HashSet[Any]()
-    var j = 0
-    while (j < y.numElements()) {
-      val v = y.get(j, et)
-      if (seen.contains(v) && matched.add(v)) cnt += 1
-      j += 1
+    var matched: java.util.HashSet[Any] = null
+    var i = 0
+    while (i < x.numElements()) {
+      val v = elemAt(x, i)
+      if (rightSet.contains(v)) {
+        if (matched == null) matched = new java.util.HashSet[Any]()
+        if (matched.add(v)) cnt += 1
+      }
+      i += 1
     }
     cnt
   }
 
-  // interpreted path only: this expression sits behind joins/aggregates in
-  // the dedup verify stage where per-row cost is dominated by the hash set
-  // anyway; codegen would inline the same loop.
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val et = left.dataType.asInstanceOf[ArrayType].elementType
-    val etRef = ctx.addReferenceObj("etype", et, classOf[DataType].getName)
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    val et = elementType
+    val uad = classOf[UnsafeArrayData].getName
+    val lastRight = ctx.addMutableState(uad, "isLastRight")
+    val rightSet = ctx.addMutableState("java.util.HashSet", "isRightSet")
+    // typed element read, boxed for the hash set; null elements read as null
+    def elem(arr: String, i: String): String = {
+      val v = CodeGenerator.getValue(arr, et, i)
+      val boxed =
+        if (CodeGenerator.isPrimitiveType(et)) s"${CodeGenerator.boxedType(et)}.valueOf($v)"
+        else v
+      s"($arr.isNullAt($i) ? null : (Object) $boxed)"
+    }
     nullSafeCodeGen(ctx, ev, (a, b) => {
-      val seen = ctx.freshName("seen")
+      val src = ctx.freshName("src")
       val matched = ctx.freshName("matched")
       val i = ctx.freshName("i")
       val j = ctx.freshName("j")
       val v = ctx.freshName("v")
       val cnt = ctx.freshName("cnt")
       s"""
-         |java.util.HashSet<Object> $seen = new java.util.HashSet<Object>();
-         |for (int $i = 0; $i < $a.numElements(); $i++) {
-         |  $seen.add($a.get($i, $etRef));
+         |if ($lastRight == null || !$lastRight.equals($b)) {
+         |  org.apache.spark.sql.catalyst.util.ArrayData $src = $b.copy();
+         |  $lastRight = $src instanceof $uad ? ($uad) $src : null;
+         |  $rightSet = new java.util.HashSet();
+         |  for (int $j = 0; $j < $src.numElements(); $j++) {
+         |    $rightSet.add(${elem(src, j)});
+         |  }
          |}
-         |java.util.HashSet<Object> $matched = new java.util.HashSet<Object>();
+         |java.util.HashSet $matched = null;
          |int $cnt = 0;
-         |for (int $j = 0; $j < $b.numElements(); $j++) {
-         |  Object $v = $b.get($j, $etRef);
-         |  if ($seen.contains($v) && $matched.add($v)) $cnt++;
+         |for (int $i = 0; $i < $a.numElements(); $i++) {
+         |  Object $v = ${elem(a, i)};
+         |  if ($rightSet.contains($v)) {
+         |    if ($matched == null) $matched = new java.util.HashSet();
+         |    if ($matched.add($v)) $cnt++;
+         |  }
          |}
          |${ev.value} = $cnt;
        """.stripMargin

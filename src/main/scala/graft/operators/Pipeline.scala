@@ -64,18 +64,16 @@ object Pipeline {
     * 4.5 s SINGLE-THREADED at sf0.1 (stage 262, 1 task), then the
     * projection re-evaluated them post-exchange (38 cpu-s). Counting
     * `\S+` runs is [[graft.functions.TextTokenCounts]].ws_tokens
-    * (FunctionsSpec pins the regex equality), and counting a 6-char
-    * class is `length - length(translate(...))` — one byte pass each,
-    * so even the pushed-down filter copy in the serial scan stage is
-    * noise. On a multi-split 100 TB table the pushdown is WELCOME
-    * (filter at the scan); only the expression cost was the bug.
+    * (FunctionsSpec pins the regex equality), and the same byte walk
+    * counts the 6-char punctuation class and the characters, so even the
+    * pushed-down filter copy in the serial scan stage is noise. On a
+    * multi-split 100 TB table the pushdown is WELCOME (filter at the
+    * scan); only the expression cost was the bug.
     */
   private def curateQuality(docs: DataFrame): DataFrame = {
-    val tokens = graft.functions.TokenCounts
-      .text_token_counts(col("text")).getField("ws_tokens")
-    val punctRatio =
-      (length(col("text")) - length(translate(col("text"), ".,;:!?", "")))
-        .cast("double") / length(col("text"))
+    val tc = graft.functions.TokenCounts.text_token_counts(col("text"))
+    val tokens = tc.getField("ws_tokens")
+    val punctRatio = tc.getField("punct").cast("double") / tc.getField("chars")
     docs
       .filter(length(col("text")) > 0)
       .select(col("doc_id"), col("lang"),
@@ -203,16 +201,20 @@ object Pipeline {
     *
     *   - At or below `broadcastMaxGrams` distinct benchmark grams (the
     *     real eval-set case — thousands of documents, a few MB of
-    *     n-grams), the gram set broadcasts as ONE array literal and every
-    *     training row scores via array_intersect inside the same
-    *     codegen'd scan that built its shingles — zero extra shuffle.
-    *   - Past the bound, the per-row intersect would rebuild an N-gram
-    *     hash set per TRAINING row (ArrayIntersect's lookup set is not
-    *     cached across rows for non-foldable inputs — a compute cliff at
-    *     1e9 docs), so the op switches to the posting-list equi-join the
-    *     dedup family uses: explode training grams, equi-join the
-    *     benchmark gram list on the gram key, count hits per doc, and
-    *     left-join the counts back so zero-overlap docs keep their row.
+    *     n-grams), the gram set broadcasts as ONE array and every
+    *     training row scores via `size(array_intersect(shingles, bg))`
+    *     inside the same codegen'd scan that built its shingles — zero
+    *     extra shuffle. The optimizer turns that into
+    *     [[graft.functions.IntersectSize]], which builds the hash set of
+    *     its right side `bg` once per task and probes it with each row's
+    *     own grams: O(row grams) per row plus one byte compare of `bg`.
+    *   - Past the bound, the one array is the problem: every task
+    *     receives the whole gram array and holds a set of all of it, and
+    *     that byte compare grows with it. So the op switches to the
+    *     posting-list equi-join the dedup family uses: explode training
+    *     grams, equi-join the benchmark gram list on the gram key, count
+    *     hits per doc, and left-join the counts back so zero-overlap docs
+    *     keep their row.
     *
     * The distinct-gram count that drives the decision is one keyed
     * aggregate over the EVAL side only (never the corpus), on a frame the
@@ -253,7 +255,9 @@ object Pipeline {
   /** [[decontaminate]]'s broadcast arm, shared with the streaming gate
     * (EventStreams.decontamStream): the [[benchGrams]] set as one
     * broadcast array, each `train` row scored by a per-row
-    * array_intersect.
+    * array_intersect. The broadcast array `bg` must stay its RIGHT
+    * argument: [[graft.functions.IntersectSize]] keeps the right side's
+    * set across rows (PipelineAdaptiveSpec and StreamingSpec pin it).
     */
   private[graft] def broadcastDecontam(train: DataFrame, grams: DataFrame,
       tau: Double): DataFrame = {

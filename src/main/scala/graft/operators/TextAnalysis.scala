@@ -200,26 +200,23 @@ object TextAnalysis {
       |    / length(regexp_extract_all(text, '\S+')) AS stopword_ratio
       |FROM documents WHERE length(text) > 0""".stripMargin,
   ) { (spark, dir) =>
-    // r17 kernel swap (the pipeline_curate r15 precedent): the r14 form
-    // ran FOUR regex engines per document, each materializing an array
-    // of every matched substring just to take its size. Counting `\S+`
-    // runs is TokenCounts.ws_tokens (FunctionsSpec pins the regex
-    // equality), and counting a single-char class is length −
-    // length(translate(...)) — one byte pass each; only the
+    // The r14 form ran FOUR regex engines per document, each
+    // materializing an array of every matched substring just to take its
+    // size. The length, `\S+`-run, punctuation and uppercase counts all
+    // come from one TokenCounts byte walk (FunctionsSpec pins their
+    // equality with length, the regex and the translate forms); only the
     // word-boundary stopword alternation keeps its regex engine.
-    val tokens = graft.functions.TokenCounts
-      .text_token_counts(col("text")).getField("ws_tokens")
-    val punct = length(col("text")) -
-      length(translate(col("text"), ".,;:!?", ""))
-    val uppers = length(col("text")) -
-      length(translate(col("text"), ('A' to 'Z').mkString, ""))
+    val tc = graft.functions.TokenCounts.text_token_counts(col("text"))
+    val tokens = tc.getField("ws_tokens")
+    val chars = tc.getField("chars")
+    val punct = tc.getField("punct")
     val stop = size(expr("regexp_extract_all(lower(text), '\\\\b(the|a|of|and|to|in|is)\\\\b', 0)")).cast("long")
     Tables.documents(spark, dir)
       .filter(length(col("text")) > 0)
-      .select(col("doc_id"), length(col("text")).cast("long").as("n"),
-        tokens.as("tokens"), punct.cast("long").as("punct"),
-        uppers.cast("long").as("uppers"), stop.as("stopwords"),
-        (punct.cast("double") / length(col("text"))).as("punct_ratio"),
+      .select(col("doc_id"), chars.as("n"),
+        tokens.as("tokens"), punct.as("punct"),
+        tc.getField("upper").as("uppers"), stop.as("stopwords"),
+        (punct.cast("double") / chars).as("punct_ratio"),
         (stop.cast("double") / tokens).as("stopword_ratio"))
   }
 

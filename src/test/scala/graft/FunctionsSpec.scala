@@ -25,25 +25,34 @@ class FunctionsSpec extends SparkSpec {
       "", " ", "abc", "abc123", "a.b", "..", "a,b;c 12.5%", "  lead trail  ",
       "déjà vu 文字 🎉 mixed, 42 tokens!", "tab\there\nnewline",
       "ünïcode-dashes—and: quotes \"here\"",
+      "ALL CAPS: YES!", "Éclair ÀÖ ＡＢ Zz", "?!;:,.", "𝔸𝔹 A😀Z",
     ) ++ (0 until 3000).map { _ =>
       val n = rng.nextInt(60)
-      (0 until n).map(_ => rng.nextInt(8) match {
+      (0 until n).map(_ => rng.nextInt(9) match {
+        case 8 => ('A' + rng.nextInt(26)).toChar.toString
         case 0 => " "
         case 1 => "語"
         case 2 => "é"
         case 3 => ('0' + rng.nextInt(10)).toChar.toString
-        case 4 => ",.;!?#".charAt(rng.nextInt(6)).toString
+        case 4 => ",.;:!?#".charAt(rng.nextInt(7)).toString
         case _ => ('a' + rng.nextInt(26)).toChar.toString
       }).mkString
     }
     val df = texts.toDF("text")
+    def translated(cs: String) =
+      (length(col("text")) - length(translate(col("text"), cs, ""))).cast("long")
     val bad = df
       .withColumn("tc", text_token_counts(col("text")))
       .select(col("tc.ws_tokens").as("fw"), col("tc.bpeish_tokens").as("fb"),
+        col("tc.chars").as("fc"), col("tc.punct").as("fp"), col("tc.upper").as("fu"),
         size(expr("regexp_extract_all(text, '\\\\S+', 0)")).cast("long").as("rw"),
         size(expr("regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\\\s]', 0)"))
-          .cast("long").as("rb"))
-      .filter(col("fw") =!= col("rw") || col("fb") =!= col("rb")).count()
+          .cast("long").as("rb"),
+        length(col("text")).cast("long").as("rc"),
+        translated(".,;:!?").as("rp"), translated(('A' to 'Z').mkString).as("ru"))
+      .filter(col("fw") =!= col("rw") || col("fb") =!= col("rb") ||
+        col("fc") =!= col("rc") || col("fp") =!= col("rp") || col("fu") =!= col("ru"))
+      .count()
     assert(bad == 0L)
     // null in, null out — like the regex forms
     val n = Seq[Option[String]](None).toDF("text")
@@ -187,17 +196,84 @@ class FunctionsSpec extends SparkSpec {
 
   test("intersect_size equals size(array_intersect)") {
     import spark.implicits._
-    val df = Seq(
-      (Seq("a", "b", "c"), Seq("b", "c", "d")),
-      (Seq("x"), Seq("y")),
-      (Seq.empty[String], Seq("y")),
-      (Seq("a", "a", "b"), Seq("a", "b", "b")),
-    ).toDF("a", "b")
-    val bad = df.select(
-      intersect_size(col("a"), col("b")).as("fast"),
-      size(array_intersect(col("a"), col("b"))).as("stock"))
-      .filter(col("fast") =!= col("stock")).count()
-    assert(bad == 0)
+    // The kernel keeps the right side's element set across consecutive
+    // rows, so the ROW ORDER is the test: one parquet file, one split,
+    // read back in file order. Elements are decimal strings so the same
+    // rows also run as array<bigint>.
+    val rng = new scala.util.Random(29)
+    val pool = (100 until 160).map(_.toString)
+    val fixed = pool.take(40)
+    def pick(n: Int): Seq[String] = Seq.fill(n)(pool(rng.nextInt(pool.size)))
+    val pairs: Seq[(Option[Seq[String]], Option[Seq[String]])] =
+      // one right side over many rows; the left side's length varies, so
+      // the right side's offset inside the row moves (reuse)
+      (0 until 200).map(_ => (Some(pick(rng.nextInt(30))), Some(fixed))) ++
+      // equal-length right sides differing in one element (rebuild)
+      (0 until 20).map(i => (Some(Seq("1", "2", "3", "4")),
+        Some(if (i % 2 == 0) Seq("1", "2", "3") else Seq("1", "2", "4")))) ++
+      Seq(
+        (Some(Seq(null, "1")), Some(Seq(null))), // null elements
+        (Some(Seq(null)), Some(Seq("1"))),
+        (Some(Seq(null, null, "1")), Some(Seq(null, "1", null))),
+        (Some(Seq("1")), Some(Seq(null, "2"))),
+        (Some(Seq.empty), Some(Seq("1"))), // empty sides
+        (Some(Seq("1")), Some(Seq.empty)),
+        (Some(Seq.empty), Some(Seq.empty)),
+        (Some(Seq("5", "5", "6")), Some(Seq("5", "6", "6"))), // duplicates
+        (None, Some(fixed)), // null arrays
+        (Some(Seq("100")), None),
+        // the many-row right side again: rebuilt once, then reused
+        (Some(pool.take(5)), Some(fixed)),
+        (Some(pool.drop(30)), Some(fixed)),
+        (Some(fixed ++ fixed), Some(fixed)))
+    def text(xs: Option[Seq[String]]): String =
+      xs.filterNot(_.contains(null)).map(_.mkString(" ")).orNull
+    def inter[T](a: Option[Seq[T]], b: Option[Seq[T]]): Option[Int] =
+      for (x <- a; y <- b) yield x.toSet.intersect(y.toSet).size
+    val want = pairs.zipWithIndex.map { case ((a, b), i) =>
+      val split = (t: Option[Seq[String]]) =>
+        Option(text(t)).map(_.split(" ", -1).toSeq)
+      (i.toLong, (inter(a, b), inter(split(a), split(b))))
+    }.toMap
+    val dir = tmpDir()
+    pairs.zipWithIndex.map { case ((a, b), i) => (i.toLong, a, b, text(a), text(b)) }
+      .toDF("id", "a", "b", "at", "bt")
+      .withColumn("la", expr("transform(a, x -> cast(x as bigint))"))
+      .withColumn("lb", expr("transform(b, x -> cast(x as bigint))"))
+      .coalesce(1).write.parquet(s"$dir/t.parquet")
+    // the right sides reach the kernel as UnsafeArrayData inside shuffle-
+    // read rows, whose buffer the next row overwrites; the split arrays
+    // come from the map side's projection
+    def run(codegen: Boolean): Unit = {
+      val df = spark.read.parquet(s"$dir/t.parquet")
+        .select(col("id"), col("a"), col("b"), col("la"), col("lb"),
+          split(col("at"), " ").as("sa"), split(col("bt"), " ").as("sb"))
+        .repartition(1, lit(0))
+        .select(col("id"),
+          intersect_size(col("a"), col("b")).as("s"),
+          intersect_size(col("la"), col("lb")).as("l"),
+          intersect_size(col("sa"), col("sb")).as("t"),
+          size(array_intersect(col("a"), col("b"))).as("stock"))
+      val got = df.collect().map { r =>
+        def opt(i: Int) = if (r.isNullAt(i)) None else Some(r.getInt(i))
+        (r.getLong(0), (opt(1), opt(2), opt(3), opt(4)))
+      }.toMap
+      val plan = df.queryExecution.executedPlan.toString
+      assert(raw"\*\(\d+\) Project \[.*intersect_size".r.findFirstIn(plan).isDefined == codegen,
+        plan)
+      assert(got.keySet == want.keySet)
+      want.foreach { case (id, (s, t)) =>
+        assert(got(id) == ((s, s, t, s)), s"row $id ${pairs(id.toInt)} codegen=$codegen")
+      }
+    }
+    run(codegen = true)
+    spark.conf.set("spark.sql.codegen.wholeStage", "false")
+    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    try run(codegen = false)
+    finally {
+      spark.conf.set("spark.sql.codegen.wholeStage", "true")
+      spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
+    }
   }
 
   test("optimizer rule rewrites size(array_intersect) into intersect_size") {

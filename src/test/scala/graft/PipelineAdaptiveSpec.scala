@@ -67,9 +67,9 @@ class PipelineAdaptiveSpec extends SparkSpec {
 
   test("decontaminate: posting-list join form ≡ broadcast-array form on a large benchmark") {
     // a benchmark that is a fifth of the corpus — thousands of distinct
-    // grams, the regime where the per-row array_intersect set rebuild
-    // is the r5-flagged compute cliff and the op must switch itself to
-    // the posting-list equi-join
+    // grams; past the broadcast bound the gram array is too large to ship
+    // to every task, so the op switches itself to the posting-list
+    // equi-join (here forced with broadcastMaxGrams = 0)
     val sh = graft.operators.Dedup.shingleDigests(Tables.documents(spark, highDupDir))
     val train = sh.filter(col("doc_id") % 5 =!= 0)
     val bench = sh.filter(col("doc_id") % 5 === 0)
@@ -84,6 +84,14 @@ class PipelineAdaptiveSpec extends SparkSpec {
       .queryExecution.executedPlan.toString
     CacheRegistry.drain()
     assert(!pJ.contains("array_intersect"), pJ)
+  }
+
+  test("decontam_ngram scores intersect_size(shingles, bg): the bench array is the right side") {
+    // intersect_size keeps its right side's set across rows; with the
+    // arguments swapped every training row would rebuild the bench set
+    val p = Pipeline.decontamNgram.fn(spark, sfTiny).queryExecution.optimizedPlan
+    CacheRegistry.drain()
+    assert(intersectSizeSides(p) == Seq((Set("shingles"), Set("bg"))), p.toString)
   }
 
   test("plan shape: broadcast joins below the threshold, shuffled joins above it") {

@@ -100,6 +100,17 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     logical(plan).distinct
   }
 
+  /** The distinct (left, right) column-name sets the `intersect_size`
+    * calls of a logical plan read. The kernel keeps its RIGHT side's element
+    * set across rows, so a constant array belongs on the right.
+    */
+  def intersectSizeSides(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
+      : Seq[(Set[String], Set[String])] =
+    plan.flatMap(_.expressions.flatMap(_.collect {
+      case i: graft.functions.IntersectSize =>
+        (i.left.references.map(_.name).toSet, i.right.references.map(_.name).toSet)
+    })).distinct
+
   /** Assert the `hit` scans exist in `df`'s plan and that none of them
     * crosses a ShuffleExchange before reaching its first join — the
     * bucketed/broadcast serve contract for persisted index state.

@@ -623,6 +623,10 @@ class StreamingSpec extends SparkSpec {
         org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
         .streamingQuery.lastExecution.optimizedPlan
       assert(lambdaNgramBuilders(batchPlan).isEmpty, batchPlan.toString)
+      // the broadcast bench array is intersect_size's right side, the one
+      // whose set the kernel keeps across rows
+      assert(intersectSizeSides(batchPlan) == Seq((Set("shingles"), Set("bg"))),
+        batchPlan.toString)
       val streamed = spark.table("decontam_stream").collect()
         .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("n_overlap"),
           r.getAs[Long]("contaminated"))).toSet
