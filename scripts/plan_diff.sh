@@ -16,7 +16,9 @@
 # persisted-table location shows up in the diff.
 #
 # Output: the names of the ops whose masked plans differ, one a line,
-# then the full diff. Exit 0 when identical, 1 otherwise.
+# each with its parent -> change counts of Exchange, BroadcastExchange,
+# Window, SortMergeJoin and `Scan parquet` nodes; then the full diff.
+# Exit 0 when identical, 1 otherwise.
 set -euo pipefail
 rev=${1:?usage: scripts/plan_diff.sh <parent-rev> [work-dir]}
 work=${2:-$(mktemp -d -t graft_plan_diff.XXXXXX)}
@@ -40,7 +42,37 @@ mask "$work/ex_parent.txt" > "$work/ex_parent.masked"
 mask "$work/ex_change.txt" > "$work/ex_change.masked"
 # the ops whose masked plans differ (or exist on one side only), one a line
 { diff <(by_op "$work/ex_parent.masked") <(by_op "$work/ex_change.masked") || true; } |
-  awk -F'\t' '/^[<>] / {print substr($1, 3)}' | sort -u
+  awk -F'\t' '/^[<>] / {print substr($1, 3)}' | sort -u > "$work/moved.txt"
+# per moved op, parent -> change counts of the plan nodes that name a
+# plan move, read from the formatted tree lines (the block after
+# `== Physical Plan ==`, up to the first blank line): a node is the
+# first word after the `+- ` / `:- ` tree marks and the `* ` codegen
+# mark; a scan is any `Scan parquet …` node
+shape() {
+  awk -v want="$2" '
+    /^========== .* ==========$/ {op = $2; tree = 0; next}
+    op != want {next}
+    /^== Physical Plan ==$/ {tree = 1; next}
+    /^ *$/ {tree = 0; next}
+    !tree {next}
+    {
+      line = $0
+      sub(/^[ :|+-]*/, "", line); sub(/^\* /, "", line)
+      if (line ~ /^Scan parquet/) n["Scan parquet"]++
+      split(line, w, " "); n[w[1]]++
+    }
+    END {
+      printf "%s %s %s %s %s", n["Exchange"] + 0, n["BroadcastExchange"] + 0,
+        n["Window"] + 0, n["SortMergeJoin"] + 0, n["Scan parquet"] + 0
+    }' "$1"
+}
+while read -r op; do
+  [ -n "$op" ] || continue
+  read -r e1 b1 w1 s1 p1 <<< "$(shape "$work/ex_parent.masked" "$op")"
+  read -r e2 b2 w2 s2 p2 <<< "$(shape "$work/ex_change.masked" "$op")"
+  echo "$op  Exchange $e1->$e2  BroadcastExchange $b1->$b2  Window $w1->$w2" \
+    " SortMergeJoin $s1->$s2  Scan parquet $p1->$p2"
+done < "$work/moved.txt"
 if diff "$work/ex_parent.masked" "$work/ex_change.masked"; then
   echo "plan_diff: identical ($work)"
 else

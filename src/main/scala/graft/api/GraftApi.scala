@@ -1314,10 +1314,10 @@ object GraftApi {
   // the embeddings table; ApiSpec pins the equivalence.
 
   /** Every vector split into its numSubs subvectors of subDim dims as
-    * (pid, part, emb) rows — the shared input of PQ training, encoding,
-    * and the query-side LUT. Cache the result if feeding several phases.
+    * (pid, part, emb) rows — the shared input of PQ training and
+    * encoding. Cache the result if feeding several phases.
     */
-  private def pqSplit(df: DataFrame, idCol: String, embCol: String,
+  private[graft] def pqSplit(df: DataFrame, idCol: String, embCol: String,
       numSubs: Int, subDim: Int): DataFrame =
     df.select(col(idCol).cast("long").as("pid"),
         expr(s"transform($embCol, x -> cast(x as double))").as("d"))
@@ -1369,11 +1369,7 @@ object GraftApi {
     import graft.operators.Similarity
     Similarity.assignTo(pqSplit(df, idCol, embCol, numSubs, subDim),
         codebooks, Similarity.L2)
-      .groupBy(col("pid"))
-      .agg(expr(
-        "transform(array_sort(collect_list(struct(part, a_cent))), s -> s.a_cent)")
-        .as("codes"))
-      .select(col("pid").as(idCol), col("codes"))
+      .groupBy(col("pid").as(idCol)).agg(Similarity.pqCodesAgg.as("codes"))
   }
 
   /** ADC top-k search over encoded codes: per query one exact
@@ -1388,15 +1384,21 @@ object GraftApi {
       idCol: String, embCol: String, numSubs: Int, subDim: Int,
       codebookSize: Int = 16, k: Int = 5): DataFrame = {
     import graft.operators.Similarity
-    val lut = Similarity.adcLut(pqSplit(queries, idCol, embCol, numSubs, subDim),
-      codebooks, codebookSize, "q_id")
-    val scored = codes.join(broadcast(lut), col(idCol) =!= col("q_id"))
-      .select(col("q_id"), col(idCol).as("cand_id"),
-        Similarity.adcSum(numSubs, codebookSize).as("adc_dist"))
-      .withColumn("neg_dist", -col("adc_dist"))
-    topKPerKey(scored, "q_id", "neg_dist", "cand_id", k)
+    val scored = Similarity.adcScores(pqLuts(codebooks, queries, idCol, embCol,
+      subDim, codebookSize), codes, idCol, numSubs, codebookSize)
+    topKPerKey(scored.withColumn("neg_dist", -col("adc_dist")),
+        "q_id", "neg_dist", "cand_id", k)
       .select("q_id", "cand_id", "adc_dist")
   }
+
+  /** [[pqSearchADC]]'s query side: (q_id, q_emb, lut) per query — L2
+    * distances need no norm, so zero vectors stay.
+    */
+  private[graft] def pqLuts(codebooks: DataFrame, queries: DataFrame,
+      idCol: String, embCol: String, subDim: Int, codebookSize: Int): DataFrame =
+    graft.operators.Similarity.withAdcLut(
+      queries.select(col(idCol).cast("long").as("q_id"), col(embCol).as("q_emb")),
+      codebooks, codebookSize, subDim)
 
   /** Lloyd-refined IVF cosine top-k over any (id, float-array) corpus and
     * query frames — see graft.operators.Similarity.ivfSearch (bounded
@@ -1436,9 +1438,10 @@ object GraftApi {
     * Both index parts are the library's existing machinery — the bounded
     * seed + fixed-point-Lloyd coarse cells of [[ivfTopK]] and the
     * per-subvector codebooks of [[pqCodebooks]] — so the composition is
-    * bit-exact against the composed oracle. The probe side (probes ⋈
-    * per-query LUTs) is broadcast; candidate codes join their cell
-    * assignment on the id key and the probe set on the cell key; ranking
+    * bit-exact against the composed oracle. The probe side (each
+    * query's LUT, once per probed cell) is broadcast; candidate codes
+    * join their cell assignment on the id key and the probe set on the
+    * cell key; ranking
     * through the bounded-heap TopKPerKey on (adc_dist asc, cand_id).
     * A mass-duplicated hot cell concentrates this join exactly like the
     * IVF list probe — serve from a persisted layout with the
@@ -1490,21 +1493,28 @@ object GraftApi {
       hotCellBound: Long = graft.operators.Similarity.hotCellBound,
       stats: Option[DataFrame] = None): DataFrame = {
     import graft.operators.Similarity
-    // zero-norm queries drop out with the probe set (queryVecs)
-    val probes = Similarity.rankProbes(Similarity.queryVecs(queries, idCol, embCol),
-      cents)(_.filter(col("rn") <= nprobe))
-    val lut = Similarity.adcLut(pqSplit(queries, idCol, embCol, numSubs, subDim),
-      codebooks, codebookSize, "l_qid")
-    val probeLut = broadcast(probes.join(lut, col("l_qid") === col("p_qid")))
-    def score(cand: DataFrame): DataFrame = cand
-      .join(probeLut,
-        col("cent_id") === col("p_cent") && col(idCol) =!= col("p_qid"))
-      .select(col("p_qid").as("q_id"), col(idCol).cast("long").as("cand_id"),
-        Similarity.adcSum(numSubs, codebookSize).as("adc_dist"))
-    val scored = Similarity.splitHotCells(codes, stats, idCol, hotCellBound)(score)
+    val probeLut = ivfPqProbeLuts(cents, codebooks, queries, idCol, embCol,
+      nprobe, subDim, codebookSize)
+    val scored = Similarity.splitHotCells(codes, stats, idCol, hotCellBound)(
+      Similarity.adcScores(probeLut, _, idCol, numSubs, codebookSize,
+        col("cent_id") === col("p_cent")))
     topKPerKey(scored.withColumn("neg_dist", -col("adc_dist")),
         "q_id", "neg_dist", "cand_id", k)
       .select("q_id", "cand_id", "adc_dist")
+  }
+
+  /** [[ivfPqSearchADCFromIndex]]'s query side: (q_id, lut, p_cent) per
+    * query and probed cell — the LUT is built once per query, BEFORE the
+    * probe explode duplicates the row; zero-norm queries drop out
+    * (Similarity.queryVecs).
+    */
+  private[graft] def ivfPqProbeLuts(cents: DataFrame, codebooks: DataFrame,
+      queries: DataFrame, idCol: String, embCol: String, nprobe: Int,
+      subDim: Int, codebookSize: Int): DataFrame = {
+    import graft.operators.Similarity
+    Similarity.probeCells(Similarity.withAdcLut(
+        Similarity.queryVecs(queries, idCol, embCol), codebooks, codebookSize, subDim),
+      cents, lit(nprobe)).select("q_id", "lut", "p_cent")
   }
 
   /** Exact re-rank of an ANN shortlist against the ORIGINAL vectors —
@@ -1536,12 +1546,9 @@ object GraftApi {
     // barrier pins the norm to its post-probe projection so only fetched
     // candidates are scored (r18; the Similarity.normed r17 idiom —
     // plans/r18/ann_ivfpq_refine_topk_{before,after}.txt).
-    val fetched = corpus
+    val fetched = graft.operators.Similarity.normed(corpus
       .select(col(idCol).cast("long").as("rc_id"), col(embCol).as("rc_emb"))
-      .join(broadcast(pairs), col("rc_id") === col("cand_id"))
-      .withColumn("rc_nrm", graft.functions.OptimizerBarrier.barrier(
-        sqrt(vec_dot(col("rc_emb"), col("rc_emb")))))
-      .filter(col("rc_nrm") > 0)
+      .join(broadcast(pairs), col("rc_id") === col("cand_id")), "rc_emb", "rc_nrm")
     val scored = fetched.join(broadcast(q), col("rq_id") === col("q_id"))
       .select(col("q_id"), col("cand_id"),
         (vec_dot(col("rq_emb"), col("rc_emb")) /
@@ -1562,26 +1569,9 @@ object GraftApi {
     */
   def knnClassify(corpus: DataFrame, queries: DataFrame, idCol: String,
       embCol: String, labelCol: String, k: Int = 10): DataFrame = {
-    import graft.functions.vec.vec_dot
     import org.apache.spark.sql.expressions.Window
-    // barrier: pins the full-width dot product to its projection so the
-    // `nrm > 0` gate reads the column instead of re-evaluating it
-    // (Similarity.normed's r17 note)
-    def nrmOf(c: Column) =
-      graft.functions.OptimizerBarrier.barrier(sqrt(vec_dot(c, c)))
-    val v = corpus.select(col(idCol).cast("long").as("c_id"),
-        col(embCol).as("c_emb"), col(labelCol).as("label"))
-      .withColumn("c_nrm", nrmOf(col("c_emb")))
-      .filter(col("c_nrm") > 0)
-    val q = queries.select(col(idCol).cast("long").as("q_id"),
-        col(embCol).as("q_emb"))
-      .withColumn("q_nrm", nrmOf(col("q_emb")))
-      .filter(col("q_nrm") > 0)
-    val scored = v.join(broadcast(q), col("q_id") =!= col("c_id"))
-      .select(col("q_id"), col("c_id").as("cand_id"), col("label"),
-        (vec_dot(col("q_emb"), col("c_emb")) /
-          (col("q_nrm") * col("c_nrm"))).as("cosine"))
-    val votes = topKPerKey(scored, "q_id", "cosine", "cand_id", k)
+    val votes = topKPerKey(labeledCosines(corpus, queries, idCol, embCol, labelCol),
+        "q_id", "cosine", "cand_id", k)
       .groupBy(col("q_id"), col("label")).agg(count(lit(1)).as("n"))
     votes
       // tie-break label order: NULLS LAST to match the DuckDB oracle's
@@ -1591,6 +1581,25 @@ object GraftApi {
         .orderBy(col("n").desc, col("label").asc_nulls_last)))
       .filter(col("rn") === 1)
       .select(col("q_id"), col("label").as("pred_label"), col("n").as("votes"))
+  }
+
+  /** [[knnClassify]]'s scored side: every (query, corpus row) pair as
+    * (q_id, cand_id, label, cosine), zero-norm rows of either side
+    * dropped (the barrier-pinned Similarity.normed gate). The queries are
+    * the broadcast side of one corpus scan.
+    */
+  private[graft] def labeledCosines(corpus: DataFrame, queries: DataFrame,
+      idCol: String, embCol: String, labelCol: String): DataFrame = {
+    import graft.functions.vec.vec_dot
+    import graft.operators.Similarity.normed
+    val v = normed(corpus.select(col(idCol).cast("long").as("c_id"),
+      col(embCol).as("c_emb"), col(labelCol).as("label")), "c_emb", "c_nrm")
+    val q = normed(queries.select(col(idCol).cast("long").as("q_id"),
+      col(embCol).as("q_emb")), "q_emb", "q_nrm")
+    v.join(broadcast(q), col("q_id") =!= col("c_id"))
+      .select(col("q_id"), col("c_id").as("cand_id"), col("label"),
+        (vec_dot(col("q_emb"), col("c_emb")) /
+          (col("q_nrm") * col("c_nrm"))).as("cosine"))
   }
 
   /** SimHash near-dup pairs over any (doc_id, text) frame through the

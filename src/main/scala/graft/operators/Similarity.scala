@@ -22,11 +22,12 @@ import org.apache.spark.sql.functions._
   * The ANN family's contract is its probe core, written once here and
   * composed by every IVF/IVF-PQ search (GraftApi's and AnnServe's
   * faces included): [[queryVecs]] (the zero-norm-gated query
-  * projection), [[rankProbes]] (per-query cell ranking by cosine desc,
-  * cent_id), [[autoNprobeCut]] (the occupancy-derived nprobe bound),
-  * [[splitHotCells]] / [[preSplitByOccupancy]] over [[hotCells]] (the
-  * hot-cell split at serve and build time, bounded by [[hotCellBound]]),
-  * [[adcLut]] / [[adcSum]] (the PQ lookup table and distance) and
+  * projection), [[probeCells]] (per-query cell ranking by cosine desc,
+  * cent_id, one sort per query row), [[autoNprobeCut]] (the
+  * occupancy-derived nprobe bound), [[splitHotCells]] /
+  * [[preSplitByOccupancy]] over [[hotCells]] (the hot-cell split at
+  * serve and build time, bounded by [[hotCellBound]]), [[withAdcLut]] /
+  * [[adcScores]] (the per-query PQ lookup table and distance) and
   * [[ivfPqCodes]] (the cell-keyed PQ codes).
   */
 object Similarity {
@@ -52,14 +53,14 @@ object Similarity {
     * guards its divisions. At 100 TB a zero embedding (a failed encoder
     * batch) is a certainty, not an edge case.
     */
-  private def normed(df: DataFrame): DataFrame =
-    // barrier: without it, pushdown clones the vec_dot(embedding,
-    // embedding) norm into the `nrm > 0` gate's condition and the scan
-    // stage runs the full-width dot product twice per vector
-    // (plans/r17 Condition audit, r17)
-    df.withColumn("nrm",
-        graft.functions.OptimizerBarrier.barrier(nrmOf(col("embedding"))))
-      .filter(col("nrm") > 0)
+  private[graft] def normed(df: DataFrame, emb: String = "embedding",
+      nrm: String = "nrm"): DataFrame =
+    // barrier: without it, pushdown clones the vec_dot(emb, emb) norm
+    // into the `nrm > 0` gate's condition and the scan stage runs the
+    // full-width dot product twice per vector (plans/r17 Condition
+    // audit, r17)
+    df.withColumn(nrm, graft.functions.OptimizerBarrier.barrier(nrmOf(col(emb))))
+      .filter(col(nrm) > 0)
   private val normedVSql =
     s"SELECT * FROM (SELECT vec_id, embedding, $normSql AS nrm FROM embeddings) WHERE nrm > 0"
 
@@ -479,7 +480,7 @@ object Similarity {
         .filter(col("vec_id") < 8))
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
         col("nrm").as("q_nrm"))
-    ivfProbeSearch(q, cents, assign, v, k = 5)(_.filter(col("rn") <= 2))
+    ivfProbeSearch(q, cents, assign, v, lit(2), k = 5)
   }
 
   /** Random-hyperplane LSH (the production form of the sign-sketch ops
@@ -550,12 +551,7 @@ object Similarity {
     // precedent (spread()'s repartition shuffled the full embedding
     // payload to parallelize per-row work a single split does in
     // milliseconds; multi-split corpora parallelize at the scan)
-    def sketched(base: DataFrame) = base
-      .crossJoin(broadcast(planes))
-      // barrier: corpus-side gate — see normed()'s r17 note
-      .withColumn("nrm",
-        graft.functions.OptimizerBarrier.barrier(nrmOf(col("embedding"))))
-      .filter(col("nrm") > 0)
+    def sketched(base: DataFrame) = normed(base.crossJoin(broadcast(planes)))
       .withColumn("sk", graft.functions.vec.vec_signs(col("embedding"), col("w")))
       .select("vec_id", "embedding", "nrm", "sk")
     val v = sketched(Tables.load(spark, dir, "embeddings"))
@@ -891,8 +887,11 @@ object Similarity {
   // Every IVF and IVF-PQ search decision, written once: the query
   // projection, the probe ranking, the occupancy-derived nprobe bound, the
   // hot-cell split, the ADC lookup table and sum, and the cell-keyed PQ
-  // codes. The batch searches here and in GraftApi compose them; the
-  // streaming faces (AnnServe) share the ADC sum.
+  // codes. The query side is per-query projections only — no window, no
+  // aggregate, no join back to the queries — so the batch searches here
+  // and in GraftApi and the streaming faces (AnnServe) run the same
+  // plan up to their top-k: TopKPerKey in batch, a bounded heap per
+  // micro-batch.
 
   /** Queries as (q_id, q_emb, q_nrm), zero-norm rows dropped — the
     * retrieval contract of [[normed]] (cosine against a zero vector is a
@@ -904,36 +903,52 @@ object Similarity {
       .withColumn("q_nrm", nrmOf(col("q_emb")))
       .filter(col("q_nrm") > 0)
 
-  /** The probe set (p_qid, p_cent): every query against the broadcast
-    * centroids (cent_id, c_emb, c_nrm), ranked per query by (cosine desc,
-    * cent_id) as `rn`; `cut` keeps the probed ranks (a literal nprobe or
-    * [[autoNprobeCut]]).
+  /** The probe set: each query row of `q` (q_id, q_emb, q_nrm, …) once
+    * per probed cell `p_cent` — its first `nprobe` cells (a literal, or
+    * the `np` column of [[autoNprobeCut]]) in (cosine desc, cent_id)
+    * order. The ranking is one array_sort over the [[packCents]] row of
+    * `cents` (cent_id, c_emb, c_nrm), the broadcast [[nearestCell]]
+    * packs; a zero norm on either side costs NaN, which sorts last,
+    * instead of an ANSI DIVIDE_BY_ZERO.
     */
-  private[graft] def rankProbes(q: DataFrame, cents: DataFrame)(
-      cut: DataFrame => DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val ranked = q.crossJoin(broadcast(cents))
-      .withColumn("rn", row_number().over(Window.partitionBy(col("q_id")).orderBy(
-        (vec_dot(col("q_emb"), col("c_emb")) / (col("q_nrm") * col("c_nrm"))).desc,
-        col("cent_id"))))
-    cut(ranked).select(col("q_id").as("p_qid"), col("cent_id").as("p_cent"))
+  private[graft] def probeCells(q: DataFrame, cents: DataFrame,
+      nprobe: Column): DataFrame = {
+    val ranked = expr("array_sort(transform(cbook, c -> struct(" +
+      "case when q_nrm * c.c_nrm = 0 then double('NaN')" +
+      " else -(vec_dot(q_emb, c.c_emb) / (q_nrm * c.c_nrm)) end as cost," +
+      " c.cent_id as cent_id)))")
+    q.withColumn("part", lit(0))
+      .join(broadcast(packCents(cents.withColumn("part", lit(0)))), "part")
+      .select(q.columns.map(col) :+
+        explode(slice(ranked, lit(1), nprobe.cast("int"))).as("p"): _*)
+      .select(q.columns.map(col) :+ col("p.cent_id").as("p_cent"): _*)
   }
+
+  /** Cosine candidates of a probe set `qp` ([[probeCells]]) in
+    * cell-keyed inverted lists `lists` (cent_id, vec_id, embedding, nrm):
+    * (q_id, cand_id, cosine), self-pairs excluded. The probe side is
+    * broadcast, so the lists scan never shuffles.
+    */
+  private[graft] def listCosines(qp: DataFrame, lists: DataFrame): DataFrame =
+    broadcast(qp)
+      .join(lists, col("cent_id") === col("p_cent") && col("vec_id") =!= col("q_id"))
+      .select(col("q_id"), col("vec_id").as("cand_id"),
+        (vec_dot(col("q_emb"), col("embedding")) / (col("q_nrm") * col("nrm")))
+          .as("cosine"))
 
   /** Per-cell occupancy (cell, cnt) of a cell-keyed frame. */
   private[graft] def cellOccupancy(keyed: DataFrame, cell: String = "cent_id"): DataFrame =
     keyed.groupBy(cell).agg(count(lit(1)).as("cnt"))
 
-  /** The auto-nprobe probe cut: nprobe = clamp(ceil(k·oversample·Σcnt /
+  /** The auto-nprobe probe count `np` = clamp(ceil(k·oversample·Σcnt /
     * Σcnt²), 1, cells) over the occupancy `occ` (see [[annIvfAutoprobe]]
     * for the derivation), computed plan-side as a one-row broadcast —
     * no driver action. `cells` is the upper clamp, an aggregate over
     * `occ`'s columns.
     */
   private def autoNprobeCut(occ: DataFrame, cells: Column, k: Int,
-      oversample: Int): DataFrame => DataFrame = {
-    val np = occ.agg(autoNprobe(cells, k, oversample).as("np"))
-    _.crossJoin(broadcast(np)).filter(col("rn") <= col("np"))
-  }
+      oversample: Int): DataFrame =
+    broadcast(occ.agg(autoNprobe(cells, k, oversample).as("np")))
 
   /** The auto-nprobe bound itself, an aggregate over an occupancy frame
     * (…, cnt): clamp(ceil(k·oversample·Σcnt / Σcnt²), 1, `cells`) —
@@ -985,22 +1000,33 @@ object Similarity {
           .repartition(parts, pmod(hash(col(idCol)), lit(parts)))))
     }
 
-  /** Per-query ADC lookup tables (`qid`, lut): the exact squared distance
-    * from each query subvector of `sub` (pid, part, emb) to each codeword
-    * of the broadcast `codebooks` (part, cent_id, c_emb), keyed
-    * part·codebookSize + code — injective for dense codes
-    * 0..codebookSize-1, and an exact-key map keeps the pick correct when
-    * a part has fewer live codewords.
+  /** `q` (…, q_emb) with each query row's ADC lookup table `lut`: the
+    * exact squared distance from each query subvector to each codeword of
+    * `codebooks` (part, cent_id, c_emb), keyed part·codebookSize + code —
+    * injective for dense codes 0..codebookSize-1, and an exact-key map
+    * keeps the pick correct when a part has fewer live codewords. One
+    * projection per query over a single broadcast row of the codebooks
+    * (numSubs·codebookSize entries): no aggregate, no join back.
     */
-  private[graft] def adcLut(sub: DataFrame, codebooks: DataFrame,
-      codebookSize: Int, qid: String): DataFrame =
-    sub.join(broadcast(codebooks), "part")
-      .select(col("pid").as(qid), col("part"), col("cent_id"),
-        graft.functions.vec.vec_distsq(col("emb"), col("c_emb")).as("dsq"))
-      .groupBy(col(qid))
-      .agg(expr(
-        s"map_from_entries(collect_list(struct(int(part * $codebookSize + cent_id), dsq)))")
-        .as("lut"))
+  private[graft] def withAdcLut(q: DataFrame, codebooks: DataFrame,
+      codebookSize: Int, subDim: Int): DataFrame =
+    q.crossJoin(broadcast(codebooks.groupBy().agg(
+        collect_list(struct(col("part"), col("cent_id"), col("c_emb"))).as("cbs"))))
+      .withColumn("lut", expr("map_from_entries(transform(cbs, c -> struct(" +
+        s"int(c.part * $codebookSize + c.cent_id), " +
+        s"vec_distsq(slice(q_emb, c.part * $subDim + 1, $subDim), c.c_emb))))"))
+      .drop("cbs")
+
+  /** ADC candidates of LUT-carrying queries `luts` (q_id, lut, …) in
+    * `codes` (<idCol>, codes, …) matched by `on`: (q_id, cand_id,
+    * adc_dist), self-pairs excluded. The query side is broadcast, so the
+    * codes scan never shuffles.
+    */
+  private[graft] def adcScores(luts: DataFrame, codes: DataFrame, idCol: String,
+      numSubs: Int, codebookSize: Int, on: Column = lit(true)): DataFrame =
+    broadcast(luts).join(codes, on && col(idCol) =!= col("q_id"))
+      .select(col("q_id"), col(idCol).cast("long").as("cand_id"),
+        adcSum(numSubs, codebookSize).as("adc_dist"))
 
   /** A candidate's ADC distance: its `codes`' numSubs LUT picks summed
     * left to right — unrolled into plain adds so the scan stays inside
@@ -1055,7 +1081,7 @@ object Similarity {
   }
 
   /** A corpus as (vec_id, embedding, nrm), ids cast to long. */
-  private def corpusVecs(corpus: DataFrame, idCol: String,
+  private[graft] def corpusVecs(corpus: DataFrame, idCol: String,
       embCol: String): DataFrame =
     corpus.select(col(idCol).cast("long").as("vec_id"), col(embCol).as("embedding"))
       .withColumn("nrm", nrmOf(col("embedding")))
@@ -1069,9 +1095,9 @@ object Similarity {
 
   /** Each vector of `v` (vec_id, embedding, nrm) assigned its nearest
     * centroid of `cents` (cent_id, c_emb, c_nrm) by cosine: (pid, part,
-    * a_cent, a_cost).
+    * emb, nrm, a_cent, a_cost).
     */
-  private def nearestCell(v: DataFrame, cents: DataFrame): DataFrame =
+  private[graft] def nearestCell(v: DataFrame, cents: DataFrame): DataFrame =
     assignTo(cellPoints(v), cents.withColumn("part", lit(0)), NegCos)
 
   /** The shared IVF index build: normalized corpus vectors, Lloyd-refined
@@ -1247,17 +1273,17 @@ object Similarity {
     * (TakeOrderedAndProject — map-side partial top-k, a BOUNDED cell
     * count, never a fraction of N), refined by `iters` fixed-point
     * Lloyd passes; assignment is the codegen'd broadcast argmin.
-    * Search: per query the top-`nprobe` refined cells (a |Q|·cells
-    * window over a broadcast — queries are the small side), candidates
-    * from the probed cells only, exact cosine re-rank through the
-    * bounded-heap TopKPerKey. Self-pairs excluded. Returns (q_id,
-    * cand_id, cosine).
+    * Search: per query the top-`nprobe` refined cells ([[probeCells]]:
+    * one sort of the packed centroid row per query, a projection — no
+    * window, no join back), candidates from the probed cells only, exact
+    * cosine re-rank through the bounded-heap TopKPerKey. Self-pairs
+    * excluded. Returns (q_id, cand_id, cosine).
     */
   def ivfSearch(corpus: DataFrame, queries: DataFrame, idCol: String,
       embCol: String, cells: Int, nprobe: Int, iters: Int, k: Int): DataFrame = {
     val (v, c1p, assign1) = ivfBuild(corpus, idCol, embCol, cells, iters)
     ivfProbeSearch(queryVecs(queries, idCol, embCol), c1p.drop("part"),
-      assign1, v, k)(_.filter(col("rn") <= nprobe))
+      assign1, v, lit(nprobe), k)
   }
 
   /** Batch serving off a PERSISTED [[ivfIndex]], nprobe auto-derived from
@@ -1267,9 +1293,15 @@ object Similarity {
     * scan per search — and it rides the plan as a one-row broadcast; the
     * candidate score joins the inverted lists ONCE on cent_id (no
     * assign⋈vectors re-join — the lists ARE the assignment with its
-    * vectors). A pre-split lists layout serves hot cells with zero
-    * runtime exchange (see [[splitHotCells]]) — the same shape the
-    * streaming face (AnnServe.ivfServeStreamAuto) serves per micro-batch.
+    * vectors). Candidates are scored through [[splitHotCells]]: in a
+    * template-heavy corpus mass-duplicated embeddings concentrate most
+    * of the corpus AND most probes into one cell, and the bucketed lists
+    * scan reads one task per bucket — unsplit, a cell holding 90% of the
+    * corpus scores hot_queries × hot_list candidates in a SINGLE task, a
+    * straggler that grows quadratically with duplication concentration.
+    * A pre-split lists layout serves hot cells with zero runtime
+    * exchange. The streaming face (AnnServe.ivfServeStreamAuto) runs the
+    * same [[probeCells]] ⋈ [[listCosines]] per micro-batch.
     */
   def ivfSearchAutoFromIndex(cents: DataFrame, lists: DataFrame,
       queries: DataFrame, idCol: String, embCol: String, k: Int,
@@ -1281,34 +1313,11 @@ object Similarity {
     // in-memory indexes)
     val occ = stats.getOrElse(cellOccupancy(lists))
       .crossJoin(broadcast(cents.agg(count(lit(1)).as("cells"))))
-    ivfIndexProbeSearch(cents, lists, queries, idCol, embCol, k, hotCellBound,
-      stats)(autoNprobeCut(occ, max(col("cells")), k, oversample))
-  }
-
-  /** The IVF probe for a persisted index: the [[rankProbes]] probe set,
-    * candidates straight from the (cent_id, vec_id, embedding, nrm)
-    * inverted lists — one keyed join, no assignment⋈vector re-join —
-    * scored through [[splitHotCells]]. That split answers template-heavy
-    * corpora, where mass-duplicated embeddings concentrate most of the
-    * corpus AND most probes into one cell: the bucketed lists scan reads
-    * one task per bucket, so unsplit a cell holding 90% of the corpus
-    * scores hot_queries × hot_list candidates in a SINGLE task — a
-    * straggler that grows quadratically with duplication concentration.
-    */
-  private def ivfIndexProbeSearch(cents: DataFrame, lists: DataFrame,
-      queries: DataFrame, idCol: String, embCol: String, k: Int,
-      hotCellBound: Long, stats: Option[DataFrame])(
-      cut: DataFrame => DataFrame): DataFrame = {
     val q = queryVecs(queries, idCol, embCol)
-    val qp = q.join(broadcast(rankProbes(q, cents)(cut)),
-      col("p_qid") === col("q_id"))
-    // the slice column, if any, is dropped by the projection
-    def score(cand: DataFrame): DataFrame = qp
-      .join(cand, col("cent_id") === col("p_cent") && col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id").as("cand_id"),
-        (vec_dot(col("q_emb"), col("embedding")) / (col("q_nrm") * col("nrm")))
-          .as("cosine"))
-    val scored = splitHotCells(lists, stats, "vec_id", hotCellBound)(score)
+      .crossJoin(autoNprobeCut(occ, max(col("cells")), k, oversample))
+    val qp = probeCells(q, cents, col("np")).drop("np")
+    val scored = splitHotCells(lists, stats, "vec_id", hotCellBound)(
+      listCosines(qp, _))
     graft.api.GraftApi.topKPerKey(scored, "q_id", "cosine", "cand_id", k)
       .select("q_id", "cand_id", "cosine")
   }
@@ -1330,21 +1339,22 @@ object Similarity {
     // per consumer — a second full corpus pass at scale. Cached it is
     // 2 longs/vector, the in-plan analog of the persisted ivfIndex lists.
     val assign1 = graft.CacheRegistry.track(rawAssign)
-    ivfProbeSearch(queryVecs(queries, idCol, embCol), c1p.drop("part"),
-      assign1, v, k)(autoNprobeCut(cellOccupancy(assign1, "a_cent"),
-        lit(cells.toLong), k, oversample))
+    ivfProbeSearch(queryVecs(queries, idCol, embCol).crossJoin(autoNprobeCut(
+        cellOccupancy(assign1, "a_cent"), lit(cells.toLong), k, oversample)),
+      c1p.drop("part"), assign1, v, col("np"), k)
   }
 
-  /** The IVF probe over an inline index: the [[rankProbes]] probe set of
-    * the queries `q` (q_id, q_emb, q_nrm) against `cents`, candidates
+  /** The IVF probe over an inline index: the [[probeCells]] probe set of
+    * the queries `q` (q_id, q_emb, q_nrm, …) against `cents`, candidates
     * from the probed cells' assignments `assign` (a_vec, a_cent) joined
     * back to their vectors `v` (vec_id, embedding, nrm), exact cosine
     * ranked through the bounded-heap TopKPerKey. Self-pairs excluded.
     */
   private def ivfProbeSearch(q: DataFrame, cents: DataFrame, assign: DataFrame,
-      v: DataFrame, k: Int)(cut: DataFrame => DataFrame): DataFrame = {
-    val scored = q
-      .join(broadcast(rankProbes(q, cents)(cut)), col("p_qid") === col("q_id"))
+      v: DataFrame, nprobe: Column, k: Int): DataFrame = {
+    // the probe set is |Q|·nprobe rows: broadcast, the assignment
+    // side never shuffles for it
+    val scored = broadcast(probeCells(q, cents, nprobe))
       .join(assign, col("a_cent") === col("p_cent"))
       .join(v, col("vec_id") === col("a_vec") && col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("cand_id"),
@@ -1401,18 +1411,17 @@ object Similarity {
     * ([[graft.functions.ArgminCost]]) — one input row, one output row,
     * no |N|·|cells| intermediate rows and no aggregate. Same result (and
     * tiebreak: lowest cent_id) as the previous min(struct(cost,
-    * cent_id)) collapse, bit for bit. Returns (pid, part, a_cent,
-    * a_cost).
+    * cent_id)) collapse, bit for bit. Returns the points' columns plus
+    * (a_cent, a_cost).
     */
   def assignTo(points: DataFrame, cents: DataFrame, kind: CostKind): DataFrame = {
     val nrmCol0 =
       if (kind == NegCos) col("nrm") else lit(0.0).cast("double")
+    val keep = points.columns.toSeq.map(col)
     points.join(broadcast(packCents(cents)), "part")
-      .select(col("pid"), col("part"),
-        graft.functions.vec.vec_argmin(col("emb"), nrmCol0, col("cbook"),
-          l2 = kind == L2).as("b"))
-      .select(col("pid"), col("part"),
-        col("b.cent_id").as("a_cent"), col("b.cost").as("a_cost"))
+      .select(keep :+ graft.functions.vec.vec_argmin(col("emb"), nrmCol0,
+        col("cbook"), l2 = kind == L2).as("b"): _*)
+      .select(keep ++ Seq(col("b.cent_id").as("a_cent"), col("b.cost").as("a_cost")): _*)
   }
 
   /** `iters` Lloyd iterations from `init`; returns the refined centroids
@@ -1521,31 +1530,25 @@ object Similarity {
       |    (acc, p) -> acc + p)) AS recon_err
       |FROM a1 GROUP BY vec_id""".stripMargin,
   ) { (spark, dir) =>
-    val pts = pqSubvectors(spark, dir)
+    val pts = graft.CacheRegistry.track(graft.api.GraftApi.pqSplit(
+      Tables.embeddings(spark, dir), "vec_id", "embedding", 4, 16))
     val c0 = pts.filter(col("pid") < 16)
       .select(col("pid").as("cent_id"), col("part"), col("emb").as("c_emb"))
     val c1 = lloyd(pts, c0, iters = 1, L2)
     assignTo(pts, c1, L2)
       .groupBy(col("pid").as("vec_id"))
-      .agg(
-        concat_ws("-", expr(
-          "transform(array_sort(collect_list(struct(part, a_cent))), s -> cast(s.a_cent as string))"))
-          .as("codes"),
+      .agg(pqCodesAgg.as("codes"),
         sqrt(expr(
           "aggregate(transform(array_sort(collect_list(struct(part, a_cost))), s -> s.a_cost)," +
             " cast(0.0 as double), (acc, p) -> acc + p)")).as("recon_err"))
+      .withColumn("codes", concat_ws("-", col("codes").cast("array<string>")))
   }
 
-  /** Every vector split into its 4 16-dim subvectors as (pid, part, emb)
-    * rows — the shared input of PQ training, encoding, and search.
+  /** The part-ordered PQ codes of each point's per-part assignments
+    * (part, a_cent) — an aggregate over one point's rows.
     */
-  private def pqSubvectors(spark: SparkSession, dir: String): DataFrame =
-    graft.CacheRegistry.track(
-      Tables.embeddings(spark, dir)
-        .select(col("vec_id"), expr("transform(embedding, x -> cast(x as double))").as("d"))
-        .select(col("vec_id").as("pid"), explode(expr(
-          "transform(sequence(0, 3), s -> struct(s as part, slice(d, 16*s+1, 16) as emb))")).as("p"))
-        .select(col("pid"), col("p.part"), col("p.emb")))
+  private[graft] val pqCodesAgg: Column =
+    expr("transform(array_sort(collect_list(struct(part, a_cent))), s -> s.a_cent)")
 
   /** ADC (asymmetric distance computation) top-k search over the PQ
     * codes — the query side that makes [[pqCodes]] an index, and the
@@ -1587,24 +1590,20 @@ object Similarity {
       |    ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY adc_dist, cand_id) AS rn
       |  FROM adc) WHERE rn <= 5""".stripMargin,
   ) { (spark, dir) =>
-    val pts = pqSubvectors(spark, dir)
+    val pts = graft.CacheRegistry.track(graft.api.GraftApi.pqSplit(
+      Tables.embeddings(spark, dir), "vec_id", "embedding", 4, 16))
     val c0 = pts.filter(col("pid") < 16)
       .select(col("pid").as("cent_id"), col("part"), col("emb").as("c_emb"))
     // referenced twice below (encoding + LUT) — keep one physical plan
     val c1 = graft.CacheRegistry.track(lloyd(pts, c0, iters = 1, L2))
     val codes = assignTo(pts, c1, L2)
-      .groupBy(col("pid"))
-      .agg(expr(
-        "transform(array_sort(collect_list(struct(part, a_cent))), s -> s.a_cent)")
-        .as("codes"))
+      .groupBy(col("pid").as("vec_id")).agg(pqCodesAgg.as("codes"))
     // 64 exact subvector→codeword distances per query (codes are init
-    // pids < 16, so the part*16+code key is injective)
-    val lut = adcLut(pts.filter(col("pid") < 8), c1, 16, "q_id")
-    val scored = codes.join(broadcast(lut), col("pid") =!= col("q_id"))
-      .select(col("q_id"), col("pid").as("cand_id"), adcSum(4, 16).as("adc_dist"))
-      .withColumn("neg_dist", -col("adc_dist"))
-    graft.api.GraftApi.topKPerKey(scored, "q_id", "neg_dist", "cand_id", k = 5)
-      .select("q_id", "cand_id", "adc_dist")
+    // pids < 16, so the part*16+code key is injective); the 8-row query
+    // sliver reads its own pushed-down scan
+    graft.api.GraftApi.pqSearchADC(codes, c1,
+      Tables.load(spark, dir, "embeddings").filter(col("vec_id") < 8),
+      "vec_id", "embedding", numSubs = 4, subDim = 16, codebookSize = 16, k = 5)
   }
 
   /** Int8 scalar quantization of the embedding column — the storage/
@@ -2104,10 +2103,7 @@ object Similarity {
     val cents = v.filter(col("vec_id") < 64)
       .select(col("vec_id").as("cent_id"), col("embedding").as("c_emb"),
         col("nrm").as("c_nrm"))
-    val assign = graft.CacheRegistry.track(assignTo(
-        v.select(col("vec_id").as("pid"), lit(0).as("part"),
-          col("embedding").as("emb"), col("nrm")),
-        cents.withColumn("part", lit(0)), NegCos)
+    val assign = graft.CacheRegistry.track(nearestCell(v, cents)
       .select(col("pid").as("vec_id"), col("a_cent").as("cent_id")))
     // cell sizes: a centroid-cardinality-sized frame (≤ 64 rows) — broadcast
     val cells = assign.groupBy("cent_id").agg(count(lit(1)).as("n"))

@@ -339,14 +339,15 @@ class ApiSpec extends SparkSpec {
     assert(toSet(composed) == full && full.nonEmpty)
     // the candidate join is KEYED (id to assignment, cell to probes) —
     // never the full-scan nested loop the exhaustive ADC op pays. The
-    // FINAL plan's only nested loop is the |Q|×cells probe-ranking
-    // crossJoin (16 broadcast centroid rows — every IVF op carries it);
-    // the codes path must contribute none. (Final section only: the AQE
-    // echo below it repeats the joins.)
+    // FINAL plan's only nested loops are the query projection's two
+    // one-row broadcasts: the packed centroid row the probe ranking
+    // sorts and the packed codebook row the LUT reads; the codes path
+    // must contribute none. (Final section only: the AQE echo below it
+    // repeats the joins.)
     val finalSection = composed.queryExecution.executedPlan.toString
       .split("== Initial Plan ==")(0)
     val nlj = "BroadcastNestedLoopJoin".r.findAllIn(finalSection).size
-    assert(nlj == 1, s"expected only the centroid-ranking nested loop, got $nlj")
+    assert(nlj == 2, s"expected only the two query-row nested loops, got $nlj")
     CacheRegistry.drain()
   }
 

@@ -255,13 +255,14 @@ class BucketingSpec extends SparkSpec {
         spark.table(s"$db.pq_codebooks"), queries,
         "vec_id", "embedding", numSubs = 4, subDim = 16)
       // the persisted-serving plan shuffles ONLY query-sized data: the
-      // LUT aggregate and the top-k re-rank. The codes corpus pays no
-      // exchange (broadcast LUT against one codes scan) — unlike the
-      // in-session build, whose encode groupBy shuffles the corpus once.
+      // top-k re-rank (each query's LUT is a projection over one packed
+      // codebook row, no aggregate). The codes corpus pays no exchange
+      // (broadcast LUT against one codes scan) — unlike the in-session
+      // build, whose encode groupBy shuffles the corpus once.
       val plan = served.queryExecution.executedPlan.toString
       val exchanges = "Exchange hashpartitioning".r.findAllIn(plan).size
-      assert(exchanges == 2,
-        s"expected 2 query-side exchanges (LUT agg + topK), got $exchanges:\n$plan")
+      assert(exchanges == 1,
+        s"expected 1 query-side exchange (topK), got $exchanges:\n$plan")
       assert(!plan.contains("hashpartitioning(vec_id"),
         s"codes corpus side shuffled:\n$plan")
       assert(toSet(served) == inSession && inSession.nonEmpty)

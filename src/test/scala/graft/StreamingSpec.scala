@@ -400,48 +400,6 @@ class StreamingSpec extends SparkSpec {
       merged.mkString(";"))
   }
 
-  test("streaming PQ serving equals batch pqSearchADC over the same persisted index") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    import graft.api.GraftApi
-    import graft.streaming.AnnServe
-    import org.apache.spark.sql.functions.col
-    // the static index a serving job reads: codebooks + codes, persisted
-    val emb = Tables.embeddings(spark, sfTiny)
-    val cbs = CacheRegistry.track(
-      GraftApi.pqCodebooks(emb, "vec_id", "embedding", numSubs = 4, subDim = 16))
-    val codes = CacheRegistry.track(
-      GraftApi.pqEncode(emb, "vec_id", "embedding", cbs, numSubs = 4, subDim = 16))
-    val queries = emb.filter(col("vec_id") < 8)
-    val qRows = queries.select(col("vec_id"), col("embedding"))
-      .as[(Long, Seq[Float])].collect()
-    val input = MemoryStream[(Long, Seq[Float])]
-    val served = AnnServe.pqServeStream(
-      input.toDF().toDF("vec_id", "embedding"), codes, cbs,
-      "vec_id", "embedding", numSubs = 4, subDim = 16)
-    val q = served.writeStream.format("memory").queryName("pq_serve")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      // two triggers: per-query results must be final within each batch
-      input.addData(qRows.take(4).toIndexedSeq)
-      q.processAllAvailable()
-      input.addData(qRows.drop(4).toIndexedSeq)
-      q.processAllAvailable()
-      val streamed = spark.table("pq_serve")
-        .as[AnnServe.AdcScore].collect()
-        .map(s => (s.q_id, s.cand_id, s.adc_dist)).toSet
-      val batch = GraftApi.pqSearchADC(codes, cbs, queries,
-          "vec_id", "embedding", numSubs = 4, subDim = 16,
-          codebookSize = 16, k = 5)
-        .collect().map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("cand_id"),
-          r.getAs[Double]("adc_dist"))).toSet
-      CacheRegistry.drain()
-      assert(streamed == batch,
-        s"stream-only=${streamed -- batch} batch-only=${batch -- streamed}")
-      assert(streamed.nonEmpty && streamed.map(_._1).size >= 8)
-    } finally q.stop()
-  }
-
   test("streaming funnel state machine converges to the batch funnel flags") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -652,130 +610,6 @@ class StreamingSpec extends SparkSpec {
     CacheRegistry.drain()
     assert(e.getMessage.contains("100000") && e.getMessage.contains("decontaminate"),
       e.getMessage)
-  }
-
-  test("streaming IVF serving equals batch ivfSearch over the same persisted index") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.AnnServe
-    import org.apache.spark.sql.functions.col
-    val emb = Tables.embeddings(spark, sfTiny)
-    // the persisted index: centroids + cent_id-keyed inverted lists —
-    // deterministic, so a fresh batch ivfSearch trains the identical one
-    val (cents, lists) = graft.operators.Similarity.ivfIndex(
-      emb, "vec_id", "embedding", cells = 256, iters = 1)
-    val centsC = CacheRegistry.track(cents)
-    val listsC = CacheRegistry.track(lists)
-    val queries = emb.filter(col("vec_id") < 8)
-    val qRows = queries.select(col("vec_id"), col("embedding"))
-      .as[(Long, Seq[Float])].collect()
-    val input = MemoryStream[(Long, Seq[Float])]
-    val served = AnnServe.ivfServeStream(
-      input.toDF().toDF("vec_id", "embedding"), centsC, listsC,
-      "vec_id", "embedding", nprobe = 2, k = 5)
-    val q = served.writeStream.format("memory").queryName("ivf_serve")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      input.addData(qRows.take(4).toIndexedSeq)
-      q.processAllAvailable()
-      input.addData(qRows.drop(4).toIndexedSeq)
-      q.processAllAvailable()
-      val streamed = spark.table("ivf_serve")
-        .as[AnnServe.CosScore].collect()
-        .map(s => (s.q_id, s.cand_id, s.cosine)).toSet
-      val batch = graft.operators.Similarity.ivfSearch(emb, queries,
-          "vec_id", "embedding", cells = 256, nprobe = 2, iters = 1, k = 5)
-        .collect().map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("cand_id"),
-          r.getAs[Double]("cosine"))).toSet
-      CacheRegistry.drain()
-      assert(streamed == batch,
-        s"stream-only=${streamed -- batch} batch-only=${batch -- streamed}")
-      assert(streamed.nonEmpty)
-    } finally q.stop()
-  }
-
-  test("auto-nprobe streaming IVF serving equals batch ivfSearchAuto") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.AnnServe
-    import org.apache.spark.sql.functions.col
-    val emb = Tables.embeddings(spark, sfTiny)
-    val (cents, lists) = graft.operators.Similarity.ivfIndex(
-      emb, "vec_id", "embedding", cells = 256, iters = 1)
-    val centsC = CacheRegistry.track(cents)
-    val listsC = CacheRegistry.track(lists)
-    val queries = emb.filter(col("vec_id") < 8)
-    val qRows = queries.select(col("vec_id"), col("embedding"))
-      .as[(Long, Seq[Float])].collect()
-    val input = MemoryStream[(Long, Seq[Float])]
-    val served = AnnServe.ivfServeStreamAuto(
-      input.toDF().toDF("vec_id", "embedding"), centsC, listsC,
-      "vec_id", "embedding", k = 5)
-    val q = served.writeStream.format("memory").queryName("ivf_serve_auto")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      input.addData(qRows.toIndexedSeq)
-      q.processAllAvailable()
-      val streamed = spark.table("ivf_serve_auto")
-        .as[AnnServe.CosScore].collect()
-        .map(s => (s.q_id, s.cand_id, s.cosine)).toSet
-      val batch = graft.operators.Similarity.ivfSearchAuto(emb, queries,
-          "vec_id", "embedding", cells = 256, iters = 1, k = 5)
-        .collect().map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("cand_id"),
-          r.getAs[Double]("cosine"))).toSet
-      CacheRegistry.drain()
-      assert(streamed == batch,
-        s"stream-only=${streamed -- batch} batch-only=${batch -- streamed}")
-      assert(streamed.nonEmpty)
-    } finally q.stop()
-  }
-
-  test("streaming IVFADC serving equals batch ivfPqSearchADCFromIndex over the same parts") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.AnnServe
-    import org.apache.spark.sql.functions.col
-    val emb = Tables.embeddings(spark, sfTiny)
-    // the persisted-IVFADC parts, constructed exactly as the registered
-    // op's index build: coarse cells (1 Lloyd pass), PQ codebooks, and
-    // codes carrying their cell assignment
-    val (_, c1p, assign1) = graft.operators.Similarity.ivfBuild(
-      emb, "vec_id", "embedding", cells = 16, iters = 1)
-    val cents = CacheRegistry.track(c1p.drop("part"))
-    val cbs = CacheRegistry.track(graft.api.GraftApi.pqCodebooks(
-      emb, "vec_id", "embedding", numSubs = 4, subDim = 16))
-    val codes = CacheRegistry.track(graft.api.GraftApi.pqEncode(
-        emb, "vec_id", "embedding", cbs, numSubs = 4, subDim = 16)
-      .join(assign1, col("vec_id") === col("a_vec"))
-      .select(col("vec_id"), col("codes"), col("a_cent").as("cent_id")))
-    val queries = emb.filter(col("vec_id") < 8)
-    val qRows = queries.select(col("vec_id"), col("embedding"))
-      .as[(Long, Seq[Float])].collect()
-    val input = MemoryStream[(Long, Seq[Float])]
-    val served = AnnServe.ivfPqServeStream(
-      input.toDF().toDF("vec_id", "embedding"), cents, cbs, codes,
-      "vec_id", "embedding", nprobe = 4, numSubs = 4, subDim = 16,
-      codebookSize = 16, k = 5)
-    val q = served.writeStream.format("memory").queryName("ivfpq_serve")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      input.addData(qRows.take(4).toIndexedSeq)
-      q.processAllAvailable()
-      input.addData(qRows.drop(4).toIndexedSeq)
-      q.processAllAvailable()
-      val streamed = spark.table("ivfpq_serve")
-        .as[AnnServe.AdcScore].collect()
-        .map(s => (s.q_id, s.cand_id, s.adc_dist)).toSet
-      val batch = graft.api.GraftApi.ivfPqSearchADCFromIndex(
-          cents, cbs, codes, queries, "vec_id", "embedding",
-          nprobe = 4, numSubs = 4, subDim = 16, codebookSize = 16, k = 5)
-        .collect().map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("cand_id"),
-          r.getAs[Double]("adc_dist"))).toSet
-      CacheRegistry.drain()
-      assert(streamed == batch,
-        s"stream-only=${(streamed -- batch).take(3)} batch-only=${(batch -- streamed).take(3)}")
-      assert(streamed.nonEmpty)
-    } finally q.stop()
   }
 
   test("ivfServeStreamAuto on an empty index fails fast, not NPE") {
@@ -1134,121 +968,184 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("streaming KNN classify equals batch knnClassify") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
+  /** One ANN serving face and its batch twin over the same static
+    * index parts: `build(corpus, queries)` tracks the parts and returns
+    * the face (over a stream of (vec_id, embedding) queries) and the
+    * batch result; `cols` name the (q_id, id, score) triple both emit;
+    * `bites` must hold on the batch result for the case to bite.
+    */
+  private case class AnnFace(name: String, cols: Seq[String],
+      build: (DataFrame, DataFrame) => (DataFrame => Dataset[_], DataFrame),
+      bites: Seq[(String, Set[(Long, Option[Long], Double)] => Boolean)])
+
+  /** The ANN faces' feed: the sfTiny embeddings plus crafted rows —
+    *   - a zero vector, a query and a corpus row (`zeroId`);
+    *   - five copies of one vector under ids -5..-1, the lowest ids, so
+    *     an index with no Lloyd pass seeds five equal centroids: query
+    *     -1 ranks them on a cosine tie, broken by cent_id across the
+    *     nprobe cut, and only cell -5 holds members;
+    *   - eleven copies of vector 0 above every other id: query 0's
+    *     cosine and ADC ties, broken by cand_id across the top-k cut;
+    *     the first five carry a null label, the rest label 7, so the
+    *     KNN vote (k = 10) ties 5–5 and the null label sorts last.
+    * Returns (corpus, queries: ids < 8 and the zero vector, zeroId,
+    * copy ids of vector 0).
+    */
+  private lazy val annFeed: (DataFrame, DataFrame, Long, Seq[Long]) = {
+    val sp = spark
+    import sp.implicits._
+    import org.apache.spark.sql.functions.{col, max}
+    val emb = Tables.embeddings(spark, sfTiny)
+    val maxId = emb.agg(max("vec_id")).head().getLong(0)
+    val v0 = emb.filter(col("vec_id") === 0L).select("embedding")
+      .as[Seq[Float]].head()
+    val p = (1 to 64).map(i => (i * 37 % 17 - 8).toFloat)
+    val zeroId = maxId + 1
+    val copies = (1 to 11).map(maxId + 1 + _)
+    val crafted = Seq((zeroId, Seq.fill(64)(0f), Option(0))) ++
+      (1 to 5).map(i => (-i.toLong, p, Option(3))) ++
+      copies.zipWithIndex.map { case (id, i) => (id, v0, if (i < 5) None else Some(7)) }
+    val corpus = emb.unionByName(crafted.toDF("vec_id", "embedding", "label"))
+    (corpus, corpus.filter(col("vec_id") < 8 || col("vec_id") === zeroId),
+      zeroId, copies)
+  }
+
+  private val annFaceNames = Seq(
+    "streaming PQ serving equals batch pqSearchADC over the same persisted index",
+    "streaming IVF serving equals batch ivfSearch over the same persisted index",
+    "auto-nprobe streaming IVF serving equals batch ivfSearchAuto",
+    "streaming IVFADC serving equals batch ivfPqSearchADCFromIndex over the same parts",
+    "streaming KNN classify equals batch knnClassify")
+
+  private lazy val annFaces: Seq[AnnFace] = {
+    import graft.api.GraftApi
+    import graft.operators.Similarity
     import graft.streaming.AnnServe
     import org.apache.spark.sql.functions.col
-    val emb = Tables.embeddings(spark, sfTiny)
-    val queries = emb.filter(col("vec_id") < 8)
+    val (_, _, zeroId, copies) = annFeed
+    type Out = Set[(Long, Option[Long], Double)]
+    def cands(o: Out, q: Long) = o.filter(_._1 == q).flatMap(_._2)
+    val candTie = "break query 0's tie on cand_id" -> ((o: Out) =>
+      cands(o, 0L).contains(copies.min) && !cands(o, 0L).contains(copies.max))
+    val probeTie = "break query -1's probe tie on cent_id" -> ((o: Out) =>
+      cands(o, -1L).nonEmpty)
+    val noZero = "drop the zero-norm query and corpus row" -> ((o: Out) =>
+      o.nonEmpty && !o.exists(t => t._1 == zeroId || t._2.contains(zeroId)))
+    def pqParts(corpus: DataFrame) = {
+      val cbs = CacheRegistry.track(
+        GraftApi.pqCodebooks(corpus, "vec_id", "embedding", numSubs = 4, subDim = 16))
+      (cbs, GraftApi.pqEncode(corpus, "vec_id", "embedding", cbs, numSubs = 4, subDim = 16))
+    }
+    def ivfParts(corpus: DataFrame) = {
+      val (cents, lists) = Similarity.ivfIndex(corpus, "vec_id", "embedding",
+        cells = 256, iters = 0)
+      (CacheRegistry.track(cents), CacheRegistry.track(lists))
+    }
+    Seq(
+      AnnFace(annFaceNames(0), Seq("q_id", "cand_id", "adc_dist"), { (corpus, queries) =>
+        val (cbs, raw) = pqParts(corpus)
+        val codes = CacheRegistry.track(raw)
+        (AnnServe.pqServeStream(_, codes, cbs, "vec_id", "embedding",
+          numSubs = 4, subDim = 16),
+          GraftApi.pqSearchADC(codes, cbs, queries, "vec_id", "embedding",
+            numSubs = 4, subDim = 16, codebookSize = 16, k = 5))
+      }, Seq(candTie, "keep the zero query (L2 needs no norm)" ->
+        ((o: Out) => o.exists(_._1 == zeroId)))),
+      AnnFace(annFaceNames(1), Seq("q_id", "cand_id", "cosine"), { (corpus, queries) =>
+        val (cents, lists) = ivfParts(corpus)
+        (AnnServe.ivfServeStream(_, cents, lists, "vec_id", "embedding",
+          nprobe = 2, k = 5),
+          Similarity.ivfSearch(corpus, queries, "vec_id", "embedding",
+            cells = 256, nprobe = 2, iters = 0, k = 5))
+      }, Seq(candTie, probeTie, noZero)),
+      AnnFace(annFaceNames(2), Seq("q_id", "cand_id", "cosine"), { (corpus, queries) =>
+        val (cents, lists) = ivfParts(corpus)
+        (AnnServe.ivfServeStreamAuto(_, cents, lists, "vec_id", "embedding", k = 5),
+          Similarity.ivfSearchAuto(corpus, queries, "vec_id", "embedding",
+            cells = 256, iters = 0, k = 5))
+      }, Seq(candTie, noZero)),
+      AnnFace(annFaceNames(3), Seq("q_id", "cand_id", "adc_dist"), { (corpus, queries) =>
+        val (_, c1p, assign1) = Similarity.ivfBuild(corpus, "vec_id", "embedding",
+          cells = 16, iters = 0)
+        val cents = CacheRegistry.track(c1p.drop("part"))
+        val (cbs, raw) = pqParts(corpus)
+        val codes = CacheRegistry.track(raw
+          .join(assign1, col("vec_id") === col("a_vec"))
+          .select(col("vec_id"), col("codes"), col("a_cent").as("cent_id")))
+        (AnnServe.ivfPqServeStream(_, cents, cbs, codes, "vec_id", "embedding",
+          nprobe = 4, numSubs = 4, subDim = 16, codebookSize = 16, k = 5),
+          GraftApi.ivfPqSearchADCFromIndex(cents, cbs, codes, queries,
+            "vec_id", "embedding", nprobe = 4, numSubs = 4, subDim = 16,
+            codebookSize = 16, k = 5))
+      }, Seq(candTie, probeTie, noZero)),
+      AnnFace(annFaceNames(4), Seq("q_id", "pred_label", "votes"), { (corpus, queries) =>
+        (AnnServe.knnClassifyStream(_, corpus, "vec_id", "embedding", "label", k = 10),
+          GraftApi.knnClassify(corpus, queries, "vec_id", "embedding", "label", k = 10))
+      }, Seq("vote query 0's 5–5 tie to label 7, the null label last" ->
+          ((o: Out) => o.contains((0L, Some(7L), 5.0))),
+        "drop the zero-norm query" -> ((o: Out) => !o.exists(_._1 == zeroId)))))
+  }
+
+  private val annRuns = scala.collection.mutable.Map
+    .empty[String, (Set[(Long, Option[Long], Double)], Set[(Long, Option[Long], Double)])]
+
+  /** (streamed, batch) of one face, run once per suite: the queries
+    * stream in two micro-batches (the zero vector in the second).
+    */
+  private def annRun(f: AnnFace) = annRuns.getOrElseUpdate(f.name, {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    import org.apache.spark.sql.functions.col
+    val (corpus, queries, zeroId, _) = annFeed
+    def triples(df: DataFrame) = df
+      .select(f.cols.zip(Seq("long", "long", "double"))
+        .map { case (c, t) => col(c).cast(t) }: _*)
+      .collect().map(r => (r.getLong(0),
+        if (r.isNullAt(1)) None else Some(r.getLong(1)), r.getDouble(2))).toSet
     val qRows = queries.select(col("vec_id"), col("embedding"))
-      .as[(Long, Seq[Float])].collect()
+      .as[(Long, Seq[Float])].collect().sortBy(_._1)
+    assert(qRows.last._1 == zeroId)
+    val (face, batch) = f.build(corpus, queries)
     val input = MemoryStream[(Long, Seq[Float])]
-    val served = AnnServe.knnClassifyStream(
-      input.toDF().toDF("vec_id", "embedding"), emb,
-      "vec_id", "embedding", "label", k = 10)
-    val q = served.writeStream.format("memory").queryName("knn_serve")
-      .outputMode(OutputMode.Append()).start()
+    val name = "ann_face_" + annFaceNames.indexOf(f.name)
+    val q = face(input.toDF().toDF("vec_id", "embedding")).writeStream
+      .format("memory").queryName(name).outputMode(OutputMode.Append()).start()
     try {
-      input.addData(qRows.take(3).toIndexedSeq)
+      input.addData(qRows.take(6).toIndexedSeq)
       q.processAllAvailable()
-      input.addData(qRows.drop(3).toIndexedSeq)
+      input.addData(qRows.drop(6).toIndexedSeq)
       q.processAllAvailable()
-      val streamed = spark.table("knn_serve").as[AnnServe.KnnVote].collect()
-        .map(s => (s.q_id, s.pred_label, s.votes)).toSet
-      val batch = graft.api.GraftApi.knnClassify(emb, queries,
-          "vec_id", "embedding", "label", k = 10)
-        .collect().map(r => (r.getAs[Long]("q_id"),
-          r.getAs[Number]("pred_label").longValue,
-          r.getAs[Long]("votes"))).toSet
+      val out = (triples(spark.table(name)), triples(batch))
       CacheRegistry.drain()
-      assert(streamed == batch,
-        s"stream-only=${(streamed -- batch).take(3)} " +
-          s"batch-only=${(batch -- streamed).take(3)}")
-      assert(streamed.size == 8)
+      out
     } finally q.stop()
+  })
+
+  annFaceNames.foreach { name =>
+    test(name) {
+      val f = annFaces.find(_.name == name).get
+      val (streamed, batch) = annRun(f)
+      f.bites.foreach { case (what, bites) =>
+        assert(bites(batch), s"the batch twin must $what for the case to bite")
+      }
+      assert(streamed == batch,
+        s"stream-only=${(streamed -- batch).take(3)} batch-only=${(batch -- streamed).take(3)}")
+    }
   }
 
   test("streaming IVF, IVFADC and KNN faces drop zero-norm vectors like batch") {
     // a zero vector has no direction: cosine against it is 0/0, a
-    // DIVIDE_BY_ZERO under ANSI. Batch drops zero-norm queries (and the
-    // KNN face zero-norm corpus rows); each streaming face must do the
-    // same instead of failing the micro-batch, so stream ≡ batch holds
-    // with one zero vector among the queries (and in the KNN corpus).
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.AnnServe
-    import org.apache.spark.sql.DataFrame
-    import org.apache.spark.sql.functions.{col, max}
-    val emb = Tables.embeddings(spark, sfTiny)
-    val zeroId = emb.agg(max("vec_id")).head().getLong(0) + 1
-    val zero = Seq((zeroId, Seq.fill(64)(0f), 0)).toDF("vec_id", "embedding", "label")
-    val queries = emb.filter(col("vec_id") < 8).unionByName(zero)
-    val qRows = queries.select(col("vec_id"), col("embedding"))
-      .as[(Long, Seq[Float])].collect().sortBy(_._1)
-    assert(qRows.last._1 == zeroId)
-    def triples(df: DataFrame, cols: String*) = df
-      .select(col(cols(0)).cast("long"), col(cols(1)).cast("long"),
-        col(cols(2)).cast("double"))
-      .as[(Long, Long, Double)].collect().toSet
-    // streams `qRows` in two micro-batches (the zero query in the second)
-    def served(name: String, cols: String*)(
-        face: DataFrame => org.apache.spark.sql.Dataset[_]) = {
-      val input = MemoryStream[(Long, Seq[Float])]
-      val q = face(input.toDF().toDF("vec_id", "embedding")).writeStream
-        .format("memory").queryName(name).outputMode(OutputMode.Append()).start()
-      try {
-        input.addData(qRows.take(4).toIndexedSeq)
-        q.processAllAvailable()
-        input.addData(qRows.drop(4).toIndexedSeq)
-        q.processAllAvailable()
-        triples(spark.table(name), cols: _*)
-      } finally q.stop()
+    // DIVIDE_BY_ZERO under ANSI. Batch drops zero-norm queries (and
+    // corpus rows); each cosine face must do the same instead of failing
+    // the micro-batch. The zero vector is a query and a corpus row of
+    // every face of the table.
+    val (_, _, zeroId, _) = annFeed
+    annFaces.drop(1).foreach { f =>
+      val (streamed, batch) = annRun(f)
+      assert(streamed == batch && batch.nonEmpty, f.name)
+      assert(!streamed.exists(t => t._1 == zeroId ||
+        (f.cols(1) == "cand_id" && t._2.contains(zeroId))), f.name)
     }
-    def check(streamed: Set[(Long, Long, Double)], batch: Set[(Long, Long, Double)]) = {
-      assert(streamed == batch,
-        s"stream-only=${(streamed -- batch).take(3)} " +
-          s"batch-only=${(batch -- streamed).take(3)}")
-      assert(streamed.nonEmpty && !streamed.exists(_._1 == zeroId))
-    }
-
-    val (cents, lists) = graft.operators.Similarity.ivfIndex(
-      emb, "vec_id", "embedding", cells = 256, iters = 1)
-    val (centsC, listsC) = (CacheRegistry.track(cents), CacheRegistry.track(lists))
-    check(
-      served("ivf_serve_zero", "q_id", "cand_id", "cosine")(AnnServe.ivfServeStream(
-        _, centsC, listsC, "vec_id", "embedding", nprobe = 2, k = 5)),
-      triples(graft.operators.Similarity.ivfSearch(emb, queries, "vec_id",
-        "embedding", cells = 256, nprobe = 2, iters = 1, k = 5),
-        "q_id", "cand_id", "cosine"))
-    CacheRegistry.drain()
-
-    val (_, c1p, assign1) = graft.operators.Similarity.ivfBuild(
-      emb, "vec_id", "embedding", cells = 16, iters = 1)
-    val pqCents = CacheRegistry.track(c1p.drop("part"))
-    val cbs = CacheRegistry.track(graft.api.GraftApi.pqCodebooks(
-      emb, "vec_id", "embedding", numSubs = 4, subDim = 16))
-    val codes = CacheRegistry.track(graft.api.GraftApi.pqEncode(
-        emb, "vec_id", "embedding", cbs, numSubs = 4, subDim = 16)
-      .join(assign1, col("vec_id") === col("a_vec"))
-      .select(col("vec_id"), col("codes"), col("a_cent").as("cent_id")))
-    check(
-      served("ivfpq_serve_zero", "q_id", "cand_id", "adc_dist")(
-        AnnServe.ivfPqServeStream(_, pqCents, cbs, codes, "vec_id", "embedding",
-          nprobe = 4, numSubs = 4, subDim = 16, codebookSize = 16, k = 5)),
-      triples(graft.api.GraftApi.ivfPqSearchADCFromIndex(pqCents, cbs, codes,
-        queries, "vec_id", "embedding", nprobe = 4, numSubs = 4, subDim = 16,
-        codebookSize = 16, k = 5), "q_id", "cand_id", "adc_dist"))
-    CacheRegistry.drain()
-
-    // the zero vector is a corpus row of the KNN face too
-    val corpus = emb.unionByName(zero)
-    check(
-      served("knn_serve_zero", "q_id", "pred_label", "votes")(
-        AnnServe.knnClassifyStream(_, corpus, "vec_id", "embedding", "label", k = 10)),
-      triples(graft.api.GraftApi.knnClassify(corpus, queries, "vec_id",
-        "embedding", "label", k = 10), "q_id", "pred_label", "votes"))
-    CacheRegistry.drain()
   }
 
   test("streaming semDedup decisions equal the registered batch pass") {
